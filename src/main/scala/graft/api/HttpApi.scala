@@ -61,18 +61,21 @@ final class HttpApi(
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** QueryService memoized per store state: twin/relationship mutations
-    * bump `currentSeq`, model create/delete changes the registry (which
-    * never advances seq), so the key is both. The pagination-snapshot
+    * bump `currentSeq`, a store fold replaces the snapshot (and deletes
+    * the journal files the old service's plans read) without advancing
+    * seq, and model create/delete changes the registry (which never
+    * advances seq either), so the key is all three. The pagination-snapshot
     * cache is OWNED HERE and shared across service generations: a token
     * issued before a write must keep serving its pinned snapshot after
     * the write retires the service that built it (the SDK's AsPages loop
     * with interleaved writers) — pin lifecycle is the cache's LRU +
     * deferred-free grace, not service retirement. */
-  private var cachedQs: Option[((Long, graft.dtdl.ModelRegistry), QueryService)] = None
+  private var cachedQs
+      : Option[((Long, Long, graft.dtdl.ModelRegistry), QueryService)] = None
   private val snapshotCache = new graft.adt.SnapshotCache()
 
   private def queryService(): QueryService = synchronized {
-    val key = (store.currentSeq, store.models)
+    val key = (store.currentSeq, store.snapshotGeneration, store.models)
     cachedQs match {
       case Some((k, qs)) if k == key => qs
       case _ =>

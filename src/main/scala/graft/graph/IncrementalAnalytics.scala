@@ -1,8 +1,9 @@
 package graft.graph
 
 import graft.core.Blocks.CompactCheckpointOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.Blocks
 
 /** Incremental maintenance of graph analytics over the store's CDC
@@ -230,35 +231,27 @@ object IncrementalAnalytics {
     * join-aggregate. */
   def refreshRanks(newRels: DataFrame, changedPairs: DataFrame,
       history: IndexedSeq[DataFrame]): DataFrame = {
-    val hist = refreshRanksHistory(newRels, changedPairs, history)
+    // needDirty=false: the dirty key sets would be discarded, so skip
+    // their per-iteration materialization jobs outright (r19)
+    val (hist, _) = refreshRanksHistoryParts(newRels, changedPairs,
+      history, needDirty = false)
     hist.dropRight(1).foreach(Blocks.free)
     hist.last
   }
 
   /** [[refreshRanks]] returning EVERY refreshed iteration (the new
-    * per-iteration history) — what a continuously-maintained PageRank
-    * needs to carry forward so the NEXT batch can splice against it. The
-    * caller owns the returned checkpoints. */
-  def refreshRanksHistory(newRels: DataFrame, changedPairs: DataFrame,
-      history: IndexedSeq[DataFrame]): IndexedSeq[DataFrame] = {
-    // needDirty=false: this entry point discards the dirty key sets, so
-    // skip their per-iteration materialization jobs outright (r19)
-    val (hist, _) = refreshRanksHistoryParts(newRels, changedPairs,
-      history, needDirty = false)
-    hist
-  }
-
-  /** [[refreshRanksHistory]] plus, per iteration, the key set whose rows
-    * can differ from the previous history — iteration i's affected cone
-    * plus the nodes the batch removed from the edge universe. A delta
-    * commit rewrites only the state buckets those keys hash into. Caller
-    * owns BOTH returned checkpoint sequences. */
+    * per-iteration history a continuously-maintained PageRank carries
+    * forward so the NEXT batch can splice against it) plus, per
+    * iteration, the key set whose rows can differ from the previous
+    * history — iteration i's affected cone plus the nodes the batch
+    * removed from the edge universe. A delta commit rewrites only the
+    * state buckets those keys hash into. Caller owns BOTH returned
+    * checkpoint sequences. */
   private[graft] def refreshRanksHistoryParts(newRels: DataFrame,
       changedPairs: DataFrame, history: IndexedSeq[DataFrame],
       needDirty: Boolean = true)
       : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
     require(history.nonEmpty, "need the previous run's per-iteration ranks")
-    val iterations = history.size
     val newPairs = pairs(newRels)
     val nodes = endpoints(newPairs).compactCheckpoint()
     val outdeg = newPairs.groupBy(col("source_id"))
@@ -275,7 +268,7 @@ object IncrementalAnalytics {
     // dropped edges and brand-new nodes) + out-neighbors of changed
     // sources (their out-degree shifted every surviving contribution);
     // intersected with the live universe so dropped nodes vanish
-    var affected = changed.select(col("source_id").as("node"))
+    val affected1 = changed.select(col("source_id").as("node"))
       .unionByName(changed.select(col("target_id").as("node")))
       .distinct()
       .join(nodes, Seq("node"), "left_semi")
@@ -283,10 +276,42 @@ object IncrementalAnalytics {
         changed.select(col("source_id").as("node")).distinct()))
       .distinct()
       .compactCheckpoint()
+    // r⁰ is the constant init — exact for every node, including new ones
+    val init = nodes.withColumn("rank_m", lit(1000000L))
+      .compactCheckpoint()
+    val out = spliceRounds(history, nodes, changed, affected1, init,
+      needDirty)((affected, blend) => {
+        val contribs = e
+          .join(affected.select(col("node").as("target_id")),
+            Seq("target_id"), "left_semi")
+          .join(blend.select(col("node").as("source_id"), col("rank_m")),
+            Seq("source_id"))
+          .select(col("target_id").as("node"),
+            expr("rank_m div outdeg").as("c"))
+          .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
+        affected.join(contribs, Seq("node"), "left_outer")
+          .select(col("node"),
+            (lit(150000L) + expr("(85 * coalesce(contrib, 0L)) div 100"))
+              .as("rank_m"))
+      }, outNeighbors)
+    Blocks.free(e); Blocks.free(nodes)
+    out
+  }
 
-    // nodes the batch dropped from the edge universe: their history rows
-    // vanish via the semi-join below, so their buckets are dirty too.
-    // Only materialized when the caller keeps the dirty sets.
+  /** The per-round splice both history refreshes share: round i
+    * recomputes only the `affected` rows over the previous blended round
+    * (`recompute(affected, blend)`, from the r⁰ `init`), splices every
+    * other live (`nodes`) row from `history(i - 1)`, and grows `affected`
+    * by one `nbrs` hop. With `needDirty`, round i's dirty keys are its
+    * affected set plus the nodes the batch dropped from the edge universe
+    * (their history rows vanish via the semi-join, so their buckets are
+    * dirty too). Frees `changed`, `affected` and `init`; the caller owns
+    * `nodes` and both returned checkpoint sequences. */
+  private def spliceRounds(history: IndexedSeq[DataFrame], nodes: DataFrame,
+      changed: DataFrame, affected1: DataFrame, init: DataFrame,
+      needDirty: Boolean)(recompute: (DataFrame, DataFrame) => DataFrame,
+      nbrs: DataFrame => DataFrame)
+      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
     val removed =
       if (!needDirty) null
       else changed
@@ -294,28 +319,15 @@ object IncrementalAnalytics {
         .distinct()
         .join(nodes, Seq("node"), "left_anti")
         .compactCheckpoint()
-    // r⁰ is the constant init — exact for every node, including new ones
-    var blend = nodes.withColumn("rank_m", lit(1000000L))
-      .compactCheckpoint()
+    var affected = affected1
+    var blend = init
     val outHist = IndexedSeq.newBuilder[DataFrame]
     val outDirty = IndexedSeq.newBuilder[DataFrame]
-    for (i <- 1 to iterations) {
-      val contribs = e
-        .join(affected.select(col("node").as("target_id")),
-          Seq("target_id"), "left_semi")
-        .join(blend.select(col("node").as("source_id"), col("rank_m")),
-          Seq("source_id"))
-        .select(col("target_id").as("node"),
-          expr("rank_m div outdeg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      val recomputed = affected.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(150000L) + expr("(85 * coalesce(contrib, 0L)) div 100"))
-            .as("rank_m"))
+    for (i <- 1 to history.size) {
       val spliced = history(i - 1)
         .join(nodes, Seq("node"), "left_semi")   // drop removed nodes
         .join(affected, Seq("node"), "left_anti") // affected: recomputed
-        .unionByName(recomputed)
+        .unionByName(recompute(affected, blend))
         .compactCheckpoint()
       if (i == 1) Blocks.free(blend) // the r⁰ init; later blends ARE history
       blend = spliced
@@ -323,15 +335,14 @@ object IncrementalAnalytics {
       if (needDirty)
         outDirty += affected.unionByName(removed).distinct()
           .compactCheckpoint()
-      if (i < iterations) {
-        val grown = affected.unionByName(outNeighbors(affected)).distinct()
+      if (i < history.size) {
+        val grown = affected.unionByName(nbrs(affected)).distinct()
           .compactCheckpoint()
         Blocks.free(affected)
         affected = grown
       }
     }
-    Blocks.free(affected); Blocks.free(e); Blocks.free(nodes)
-    Blocks.free(changed)
+    Blocks.free(affected); Blocks.free(changed)
     if (removed != null) Blocks.free(removed)
     (outHist.result(), outDirty.result())
   }
@@ -425,11 +436,22 @@ object IncrementalAnalytics {
   private val RelsCols =
     Seq("relationship_id", "source_id", "target_id", "relationship_name")
 
-  /** Initialize a maintainer state: every table lands fully at v0,
-    * hash-bucketed by its first key column ([[StateStore]]), with the
-    * manifest, schema + key sidecars, bucket count, and the v0 pointer. */
-  private def initState(stateDir: String, buckets: Int,
-      tables: Seq[(String, DataFrame, Seq[String])]): Unit = {
+  /** Initialize `op`'s maintenance state: version 0 holds the base
+    * relationship table (4 analytic columns) and `state`, one frame per
+    * `op.tables` entry, every table landing fully at v0, hash-bucketed by
+    * its first key column ([[StateStore]]), with the manifest, schema +
+    * key sidecars, bucket count, and the v0 pointer.
+    * @param buckets state hash-bucket count, fixed for the state's life.
+    *   The default keeps fixture overheads tiny; size it on a real
+    *   deployment so ONE bucket's rewrite is a comfortable task fan-out. */
+  private[graft] def initState(stateDir: String, op: Maintainer,
+      baseRels: DataFrame, state: Seq[DataFrame],
+      buckets: Int = StateStore.DefaultBuckets): Unit = {
+    require(state.size == op.tables.size,
+      s"need one frame per state table ${op.tables.map(_._1)}")
+    val tables = ("rels", baseRels.select(RelsCols.map(col): _*),
+      Seq("source_id", "relationship_id")) +:
+      op.tables.zip(state).map { case ((t, keys), df) => (t, df, keys) }
     StateStore.writeBucketCount(stateDir, buckets)
     StateStore.clearVersion(stateDir, 0L)
     val man = tables.map { case (t, df, keys) =>
@@ -443,18 +465,14 @@ object IncrementalAnalytics {
     StateStore.writePointer(stateDir, 0L)
   }
 
-  /** Initialize the at-rest maintenance state: version 0 holds the base
-    * relationship table (4 analytic columns) and its degrees.
-    * @param buckets state hash-bucket count, fixed for the state's life.
-    *   The default keeps fixture overheads tiny; size it on a real
-    *   deployment so ONE bucket's rewrite is a comfortable task fan-out. */
-  def initDegreesState(stateDir: String, baseDegrees: DataFrame,
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets, Seq(
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")),
-      ("degrees", baseDegrees, Seq("dt_id"))))
+  /** A maintained table as of the last committed batch. */
+  def current(spark: SparkSession, stateDir: String, table: String)
+      : DataFrame =
+    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
+      table)
+
+  /** One state table's delta for a batch: (table, upserts, tombstone keys). */
+  private[graft] type Delta = (String, DataFrame, DataFrame)
 
   /** One maintainer micro-batch commit over the delta-encoded state
     * ([[StateStore]]): read tables (chain-folded) as of the committed
@@ -462,12 +480,12 @@ object IncrementalAnalytics {
     * tombstones, O(dirty rows) — never a function of state size) or
     * carry-forwards at `target`, then commit = manifest + small-file
     * compaction + atomic pointer move + manifest-aware retention. When a
-    * table's chain reaches `spark.graft.state.maxchain` (default 8), the
-    * commit folds it back into the hash-bucketed base, rewriting only
-    * the buckets the chain's keys touch. Construction clears any torn
-    * `v{target}` a crashed prior attempt left (the pointer never moved,
-    * so it is garbage and the recompute is deterministic). */
-  private final class StateCommit(spark: org.apache.spark.sql.SparkSession,
+    * table's chain reaches [[StateCommit.MaxChain]], the commit folds it
+    * back into the hash-bucketed base, rewriting only the buckets the
+    * chain's keys touch. Construction clears any torn `v{target}` a
+    * crashed prior attempt left (the pointer never moved, so it is
+    * garbage and the recompute is deterministic). */
+  private[graft] final class StateCommit(spark: SparkSession,
       stateDir: String, target: Long) {
     val v: Long = StateStore.readPointer(stateDir)
     val k: Int = StateStore.bucketCount(stateDir)
@@ -481,17 +499,10 @@ object IncrementalAnalytics {
     // the session close reaps the last.
     StateCommit.pendingFree.synchronized {
       StateCommit.pendingFree.remove(stateDir)
-    }.foreach(_.foreach(graft.core.Blocks.free))
+    }.foreach(_.foreach(Blocks.free))
     private val prev = StateStore.readManifest(stateDir, v)
     private val next =
       scala.collection.mutable.Map[String, StateStore.TableState]()
-    // Default 8: the chain fold on reads is cheap (deltas are cone-sized)
-    // while every compaction pays a rewrite of all chain-touched buckets,
-    // so a longer chain amortizes the spike better. Measured at sf1
-    // (SCALING.md r19): maxchain 4 put an all-bucket rewrite in every 4th
-    // batch of a 200-scattered-key feed; 8 halves that share.
-    private val maxChain =
-      spark.conf.get("spark.graft.state.maxchain", "8").toInt
     StateStore.clearVersion(stateDir, target)
     // Memoized EAGER materialization of chain-folded reads: the splice
     // recompute touches each state table in many downstream actions, and
@@ -501,6 +512,7 @@ object IncrementalAnalytics {
     // per table per batch pays the fold once; commit() parks the blocks
     // for the NEXT batch's StateCommit to free (constructor note).
     private val folded = scala.collection.mutable.Map[String, DataFrame]()
+    private val owned = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def table(name: String): DataFrame =
       folded.getOrElseUpdate(name,
         StateStore.readTable(spark, stateDir, v, name)
@@ -509,14 +521,22 @@ object IncrementalAnalytics {
       StateStore.readTableBuckets(spark, stateDir, v, name, buckets)
     def dirty(keys: DataFrame, keyCol: String): Seq[Int] =
       StateStore.dirtyBuckets(keys, col(keyCol), k)
+    /** Hand a batch checkpoint to [[release]]; returns it. */
+    def own(df: DataFrame): DataFrame = { owned += df; df }
+    /** `name`'s splice delta: upsert `up`, tombstone every `dirty` key (a
+      * frame of the table's key columns) that `up` has no row for. */
+    def splice(name: String, up: DataFrame, dirty: DataFrame): Delta = {
+      val keys = StateStore.tableKeys(stateDir, name)
+      (name, up, dirty.join(up.select(keys.map(col): _*), keys, "left_anti"))
+    }
     /** Append `upserts` + `tombstoneKeys` as this table's delta (zero
       * delta rows → pure carry, decided from the written footers, not
       * from two extra isEmpty jobs); fold the chain into buckets when it
-      * reaches maxChain OR when this delta alone is a large fraction of
-      * the base (`spark.graft.state.compactfrac`, default 0.3): a
-      * state-sized cone (the WCC hub shape) gains nothing from chaining
-      * — it would pay the old full-rewrite cost AND make every read fold
-      * chain rows comparable to the state. Point cones stay pure-delta. */
+      * reaches [[StateCommit.MaxChain]] OR when this delta alone is at
+      * least [[StateCommit.CompactFrac]] of the base: a state-sized cone
+      * (the WCC hub shape) gains nothing from chaining — it would pay the
+      * old full-rewrite cost AND make every read fold chain rows
+      * comparable to the state. Point cones stay pure-delta. */
     def chainDelta(name: String, upserts: DataFrame,
         tombstoneKeys: DataFrame): Unit = {
       val keys = StateStore.tableKeys(stateDir, name)
@@ -524,11 +544,9 @@ object IncrementalAnalytics {
         name, upserts, tombstoneKeys, keys, prev(name)) match {
         case None => carry(name)
         case Some((appended, deltaRows)) =>
-          val frac = spark.conf
-            .get("spark.graft.state.compactfrac", "0.3").toDouble
           next(name) =
-            if (appended.chain.size >= maxChain ||
-                deltaRows >= frac * math.max(
+            if (appended.chain.size >= StateCommit.MaxChain ||
+                deltaRows >= StateCommit.CompactFrac * math.max(
                   StateStore.baseRowCount(spark, stateDir, v, name), 1L))
               StateStore.compactIntoBuckets(spark, stateDir, v, target,
                 name, k, appended)
@@ -549,9 +567,24 @@ object IncrementalAnalytics {
       }
       folded.clear()
     }
+    /** Free the owned frames, and — when the batch never committed — its
+      * folded reads too (a committed batch parked them above). */
+    def release(): Unit = {
+      (owned ++ folded.values).foreach(Blocks.free)
+      owned.clear(); folded.clear()
+    }
   }
 
   private object StateCommit {
+    /** Chain length at which a table's deltas fold back into its buckets.
+      * The chain fold on reads is cheap (deltas are cone-sized) while
+      * every compaction pays a rewrite of all chain-touched buckets, so a
+      * longer chain amortizes the spike better. Measured at sf1
+      * (SCALING.md r19): 4 put an all-bucket rewrite in every 4th batch
+      * of a 200-scattered-key feed; 8 halves that share. */
+    val MaxChain = 8
+    /** Delta-to-base row ratio at which a delta compacts at once. */
+    val CompactFrac = 0.3
     /** Folded-table blocks parked at commit, freed by the NEXT commit on
       * the same state dir (see the constructor note on zombie AQE
       * sub-jobs). Keyed by state dir: concurrent maintainers on different
@@ -582,8 +615,7 @@ object IncrementalAnalytics {
     * yet, so a crash anywhere in the rewrite/swap is repaired by the
     * idempotent batch replay (recompute + overwrite of the whole
     * uncommitted version). */
-  private[graft] def compactVersion(
-      spark: org.apache.spark.sql.SparkSession, versionDir: String,
+  private[graft] def compactVersion(spark: SparkSession, versionDir: String,
       targetBytes: Long = 128L << 20, maxSmallFiles: Int = 4): Unit = {
     def leafTables(f: java.io.File): Seq[java.io.File] = {
       val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
@@ -611,69 +643,114 @@ object IncrementalAnalytics {
     }
   }
 
-  /** The maintained degrees table as of the last committed batch. */
-  def currentDegrees(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      "degrees")
+  /** An incremental maintainer: what one analytic adds to the shared
+    * stream driver ([[maintainStream]]).
+    *  - `tables`: its state tables besides the carried `rels`, as (name,
+    *    key columns); the first key column picks the hash bucket.
+    *  - `fold`: one batch `(c, m, latest)` → per-table deltas, where `m`
+    *    is the checkpointed batch and `latest` its checkpointed
+    *    [[latestRelMutations]]. It reads state through `c` exactly as it
+    *    needs — `c.table` for an eager fold, `c.tableBuckets` for a
+    *    pruned probe — and a table missing from the result is carried
+    *    forward by reference (an empty result carries them all).
+    *  - the frames it wants freed: every checkpoint it makes is handed to
+    *    `c.own` as it is made, so the driver frees it even if the fold
+    *    throws. */
+  private[graft] final class Maintainer(val tables: Seq[(String, Seq[String])])(
+      val fold: (StateCommit, DataFrame, DataFrame) => Seq[Delta])
 
-  /** Continuously-maintained degrees over the mutation-log STREAM (A9):
-    * `foreachBatch` folds each micro-batch of CDC rows into the at-rest
-    * state — refreshDegrees for the analytics, applyRelationshipMutations
-    * for the carried relationship table — written as version v(batch+1)
-    * and committed by an atomic pointer move. Crash contract: a batch
-    * replayed after a crash either finds the pointer still at its
-    * predecessor (recompute, same deterministic output, overwrite) or
+  /** The one stream driver every maintainer runs on: `foreachBatch` over
+    * the mutation-log STREAM (A9) folds each micro-batch of CDC rows into
+    * the at-rest state — `op.fold` for the analytic, [[relsDelta]] for
+    * the carried relationship table — written as version v(batch+1) and
+    * committed by an atomic pointer move ([[StateCommit]]).
+    *
+    * Crash contract: a batch replayed after a crash either finds the
+    * pointer still at its predecessor (recompute: the same deterministic
+    * output overwrites the torn `v{target}` the failed attempt left) or
     * already advanced (skip — the fold is NOT applied twice). Restart
     * resumes from the streaming checkpoint; state versions are keyed by
-    * batch id, so resume and replay compose. */
-  def maintainDegreesStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+    * batch id, so resume and replay compose. The batch's checkpoints —
+    * `m`, `latest`, the fold's owned frames and, when the batch never
+    * commits, its folded state reads — are freed in a `finally`, so a
+    * fold that throws leaks nothing. */
+  private[graft] def maintainStream(spark: SparkSession, mutationsDir: String,
+      stateDir: String, checkpointDir: String, op: Maintainer,
+      readOptions: Map[String, String] = Map.empty): StreamingQuery =
     spark.readStream.schema(graft.core.Tables.mutationsSchema)
+      .options(readOptions)
       .parquet(mutationsDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val target = batchId + 1
         if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          // every touched key's rows live in its source bucket, so the
-          // bucket-pruned probe is the complete old-row set
-          val relsProbe = c.tableBuckets("rels",
-            c.dirty(latest.select(col("source_id")), "source_id"))
-          val twinDelta = latestTwinMutations(m)
-          val oldRows = relsProbe
-            .select(col("source_id"), col("relationship_id"),
-              col("target_id"))
-            .join(latest.select(RelKey.map(col): _*), RelKey, "left_semi")
-          def ends(df: DataFrame): DataFrame = df.select(
-            explode(array(col("source_id"), col("target_id"))).as("dt_id"))
-          val dirtyNodes = ends(oldRows)
-            .unionByName(ends(latest.filter(col("alive"))))
-            .unionByName(twinDelta.select(col("dt_id")))
-            .distinct().compactCheckpoint()
-          // per-node locality: refreshDegrees over the base RESTRICTED to
-          // the dirty keys yields exactly their new rows (the upserts);
-          // dirty keys it drops (dead twins) are the tombstones
-          val up = refreshDegrees(
-            c.table("degrees").join(dirtyNodes, Seq("dt_id"), "left_semi"),
-            relsProbe, m).compactCheckpoint()
-          val tomb = dirtyNodes
-            .join(up.select(col("dt_id")), Seq("dt_id"), "left_anti")
-          c.chainDelta("degrees", up, tomb)
-          relsDelta(c, latest)
-          graft.core.Blocks.free(m); graft.core.Blocks.free(latest)
-          graft.core.Blocks.free(dirtyNodes); graft.core.Blocks.free(up)
-          c.commit()
+          val c = new StateCommit(batch.sparkSession, stateDir, target)
+          try {
+            val m = c.own(batch.compactCheckpoint())
+            val latest = c.own(latestRelMutations(m).compactCheckpoint())
+            val deltas = op.fold(c, m, latest)
+            deltas.foreach { case (t, up, tomb) => c.chainDelta(t, up, tomb) }
+            op.tables.map(_._1).diff(deltas.map(_._1)).foreach(c.carry)
+            relsDelta(c, latest)
+            c.commit()
+          } finally c.release()
         }
       }
       .start()
-  }
+
+  /** The bucket-pruned `rels` probe of a batch: every touched key's rows
+    * live in its source bucket, so this is the complete old-row set. */
+  private def touchedRels(c: StateCommit, latest: DataFrame): DataFrame =
+    c.tableBuckets("rels",
+      c.dirty(latest.select(col("source_id")), "source_id"))
+
+  def initDegreesState(stateDir: String, baseDegrees: DataFrame,
+      baseRels: DataFrame, buckets: Int = StateStore.DefaultBuckets): Unit =
+    initState(stateDir, Maintainer.degrees, baseRels, Seq(baseDegrees), buckets)
+  def maintainDegreesStream(spark: SparkSession, mutationsDir: String,
+      stateDir: String, checkpointDir: String): StreamingQuery =
+    maintainStream(spark, mutationsDir, stateDir, checkpointDir,
+      Maintainer.degrees)
+  def currentDegrees(spark: SparkSession, stateDir: String): DataFrame =
+    current(spark, stateDir, "degrees")
+
+  def initComponentsState(stateDir: String, baseComponents: DataFrame,
+      baseRels: DataFrame, buckets: Int = StateStore.DefaultBuckets): Unit =
+    initState(stateDir, Maintainer.components, baseRels,
+      Seq(baseComponents), buckets)
+  def maintainComponentsStream(spark: SparkSession, mutationsDir: String,
+      stateDir: String, checkpointDir: String,
+      readOptions: Map[String, String] = Map.empty): StreamingQuery =
+    maintainStream(spark, mutationsDir, stateDir, checkpointDir,
+      Maintainer.components, readOptions)
+  def currentComponents(spark: SparkSession, stateDir: String): DataFrame =
+    current(spark, stateDir, "components")
+
+  /** `history` is the per-iteration ranks of the last full run
+    * ([[PageRank.ranksHistory]]). */
+  def initRanksState(stateDir: String, history: IndexedSeq[DataFrame],
+      baseRels: DataFrame, buckets: Int = StateStore.DefaultBuckets): Unit =
+    initState(stateDir, Maintainer.ranks(history.size), baseRels, history,
+      buckets)
+  def maintainRanksStream(spark: SparkSession, mutationsDir: String,
+      stateDir: String, checkpointDir: String, iterations: Int,
+      readOptions: Map[String, String] = Map.empty): StreamingQuery =
+    maintainStream(spark, mutationsDir, stateDir, checkpointDir,
+      Maintainer.ranks(iterations), readOptions)
+
+  def initKcoreState(stateDir: String, baseCore: DataFrame,
+      baseRels: DataFrame, buckets: Int = StateStore.DefaultBuckets): Unit =
+    // k does not shape the state, only the fold
+    initState(stateDir, Maintainer.kcore(k = 0), baseRels, Seq(baseCore),
+      buckets)
+  def maintainKcoreStream(spark: SparkSession, mutationsDir: String,
+      stateDir: String, checkpointDir: String, k: Int): StreamingQuery =
+    maintainStream(spark, mutationsDir, stateDir, checkpointDir,
+      Maintainer.kcore(k))
+  def currentKcore(spark: SparkSession, stateDir: String): DataFrame =
+    current(spark, stateDir, "kcore")
 
   /** Affected-cone refresh of [[Triangles.perNode]]: a mutation batch can
     * change the triangle count ONLY of (a) endpoints of changed pairs and
@@ -742,140 +819,6 @@ object IncrementalAnalytics {
     NodeSpliceParts(affected, recomputed)
   }
 
-  /** Initialize the components maintenance state: version 0 holds the
-    * base relationship table and its WCC labels. */
-  def initComponentsState(stateDir: String, baseComponents: DataFrame,
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets, Seq(
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")),
-      ("components", baseComponents, Seq("dt_id"))))
-
-  /** The maintained component labeling as of the last committed batch. */
-  def currentComponents(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      "components")
-
-  /** Continuously-maintained WCC labels over the mutation-log STREAM —
-    * the [[maintainDegreesStream]] machinery with [[refreshComponents]]
-    * as the fold: each micro-batch recomputes only its affected
-    * components against the carried state, commits v(batch+1) via the
-    * same atomic pointer move, and replays idempotently after a crash
-    * (pointer behind → deterministic recompute; ahead → skip). */
-  def maintainComponentsStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String,
-      readOptions: Map[String, String] = Map.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .options(readOptions)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val baseComp = c.table("components")
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          val p = componentsParts(baseComp, baseRels, m)
-          // upserts = the recomputed labels (they cover every surviving
-          // member of an affected component plus every new node);
-          // tombstones = affected-component members with no recomputed
-          // row — the batch's dead twins
-          val recomputed = p.recomputed.compactCheckpoint()
-          val tomb = baseComp
-            .join(p.affected, Seq("component"), "left_semi")
-            .select(col("dt_id"))
-            .join(recomputed.select(col("dt_id")), Seq("dt_id"),
-              "left_anti")
-          c.chainDelta("components", recomputed, tomb)
-          relsDelta(c, latest)
-          graft.core.Blocks.free(m); graft.core.Blocks.free(recomputed)
-          graft.core.Blocks.free(latest)
-          c.commit()
-        }
-      }
-      .start()
-  }
-
-  /** Initialize the PageRank maintenance state: version 0 holds the base
-    * relationship table and the per-iteration rank history of the last
-    * full run ([[PageRank.ranksHistory]]). */
-  def initRanksState(stateDir: String, history: IndexedSeq[DataFrame],
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets,
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")) +:
-        history.zipWithIndex.map { case (h, i) =>
-          (s"hist/i=$i", h, Seq("node"))
-        })
-
-  /** The maintained final ranks as of the last committed batch. */
-  def currentRanks(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, iterations: Int): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      s"hist/i=${iterations - 1}")
-
-  /** Continuously-maintained fixed-K PageRank over the mutation-log
-    * STREAM — the affected-cone refresh ([[refreshRanksHistory]]) as the
-    * per-batch fold, carrying the full per-iteration history forward so
-    * every batch splices against its predecessor exactly the way the
-    * batch operator would recompute. Same versioned-state + atomic
-    * pointer machinery as [[maintainDegreesStream]]; crash replay is
-    * idempotent. */
-  def maintainRanksStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String,
-      iterations: Int, readOptions: Map[String, String] = Map.empty)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .options(readOptions)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val hist = (0 until iterations).map(i => c.table(s"hist/i=$i"))
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          val newRels = applyRelationshipMutations(baseRels, m)
-            .compactCheckpoint()
-          // the changed-pair probe only touches rows of touched keys, all
-          // of which live in the dirty source buckets — pruned probe
-          val changed = changedPairs(c.tableBuckets("rels",
-            c.dirty(latest.select(col("source_id")), "source_id")), m)
-          val (newHist, dirtyKeys) =
-            refreshRanksHistoryParts(newRels, changed, hist)
-          newHist.zipWithIndex.foreach { case (h, i) =>
-            // h is checkpointed in memory: the key-restricted upsert scan
-            // reads the cache; the parquet WRITE is cone-sized
-            val up = h.join(dirtyKeys(i), Seq("node"), "left_semi")
-            val tomb = dirtyKeys(i)
-              .join(h.select(col("node")), Seq("node"), "left_anti")
-            c.chainDelta(s"hist/i=$i", up, tomb)
-          }
-          relsDelta(c, latest)
-          newHist.foreach(graft.core.Blocks.free)
-          dirtyKeys.foreach(graft.core.Blocks.free)
-          graft.core.Blocks.free(newRels); graft.core.Blocks.free(m)
-          graft.core.Blocks.free(latest)
-          c.commit()
-        }
-      }
-      .start()
-  }
-
   /** Affected-cone refresh of [[LabelPropagation.communities]]: round-1
     * perturbation reaches only changed-pair endpoints (the r⁰ labels are
     * pure node-id functions, exact for every node including new ones);
@@ -886,7 +829,10 @@ object IncrementalAnalytics {
     * deterministic argmax. */
   def refreshCommunities(newRels: DataFrame, changedPairs: DataFrame,
       history: IndexedSeq[DataFrame]): DataFrame = {
-    val hist = refreshCommunitiesHistory(newRels, changedPairs, history)
+    // needDirty=false: the dirty key sets would be freed unread — skip
+    // their per-round materialization jobs (r19)
+    val (hist, _) = refreshCommunitiesHistoryParts(newRels, changedPairs,
+      history, needDirty = false)
     val out = hist.last.select(col("node"), col("lab").as("community"))
       .compactCheckpoint()
     hist.foreach(Blocks.free)
@@ -895,17 +841,7 @@ object IncrementalAnalytics {
 
   /** [[refreshCommunities]] returning EVERY refreshed round's (node, lab)
     * table — the new history a continuously-maintained LPA carries
-    * forward. Caller owns the returned checkpoints. */
-  def refreshCommunitiesHistory(newRels: DataFrame, changedPairs: DataFrame,
-      history: IndexedSeq[DataFrame]): IndexedSeq[DataFrame] = {
-    // needDirty=false: the dirty key sets would be freed unread — skip
-    // their per-round materialization jobs (r19)
-    val (hist, _) = refreshCommunitiesHistoryParts(newRels, changedPairs,
-      history, needDirty = false)
-    hist
-  }
-
-  /** [[refreshCommunitiesHistory]] plus per-round dirty key sets, the
+    * forward — plus per-round dirty key sets, the
     * [[refreshRanksHistoryParts]] contract at label granularity. Caller
     * owns both returned checkpoint sequences. */
   private[graft] def refreshCommunitiesHistoryParts(newRels: DataFrame,
@@ -913,7 +849,6 @@ object IncrementalAnalytics {
       needDirty: Boolean = true)
       : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
     require(history.nonEmpty, "need the previous run's per-round labels")
-    val rounds = history.size
     val fwd = newRels.select(col("source_id").as("node"),
       col("target_id").as("nbr"))
     val edges = fwd
@@ -926,174 +861,25 @@ object IncrementalAnalytics {
         .select(col("node")).distinct()
     val changed = changedPairs.select(col("source_id"), col("target_id"))
       .distinct().compactCheckpoint()
-    var affected = changed
+    val affected1 = changed
       .select(explode(array(col("source_id"), col("target_id"))).as("node"))
       .distinct()
       .join(nodes, Seq("node"), "left_semi")
       .compactCheckpoint()
-    // nodes the batch dropped from the edge universe (dirty: their rows
-    // vanish from every round via the semi-join); materialized only when
-    // the caller keeps the dirty sets
-    val removed =
-      if (!needDirty) null
-      else changed
-        .select(explode(array(col("source_id"), col("target_id"))).as("node"))
-        .distinct()
-        .join(nodes, Seq("node"), "left_anti")
-        .compactCheckpoint()
-    var blend = nodes
+    val init = nodes
       .select(col("node"),
         graft.pipeline.TextAnalysis.stableId(col("node")).as("lab"))
       .compactCheckpoint()
-    val outHist = IndexedSeq.newBuilder[DataFrame]
-    val outDirty = IndexedSeq.newBuilder[DataFrame]
-    for (i <- 1 to rounds) {
-      val votes = edges
+    val out = spliceRounds(history, nodes, changed, affected1, init,
+      needDirty)((affected, blend) => edges
         .join(affected, Seq("node"), "left_semi")
         .join(blend.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
         .groupBy(col("node"), col("lab")).agg(count(lit(1)).as("c"))
-      val recomputed = votes.groupBy(col("node"))
+        .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("m"))
-        .select(col("node"), col("m.lab").as("lab"))
-      val spliced = history(i - 1)
-        .join(nodes, Seq("node"), "left_semi")
-        .join(affected, Seq("node"), "left_anti")
-        .unionByName(recomputed)
-        .compactCheckpoint()
-      if (i == 1) Blocks.free(blend) // the r⁰ init; later blends ARE history
-      blend = spliced
-      outHist += spliced
-      if (needDirty)
-        outDirty += affected.unionByName(removed).distinct()
-          .compactCheckpoint()
-      if (i < rounds) {
-        val grown = affected.unionByName(nbrsOf(affected)).distinct()
-          .compactCheckpoint()
-        Blocks.free(affected)
-        affected = grown
-      }
-    }
-    Blocks.free(affected)
-    Blocks.free(edges); Blocks.free(nodes); Blocks.free(changed)
-    if (removed != null) Blocks.free(removed)
-    (outHist.result(), outDirty.result())
-  }
-
-  /** Initialize the triangle maintenance state: version 0 holds the base
-    * relationship table and its per-node triangle counts. */
-  def initTrianglesState(stateDir: String, baseTriangles: DataFrame,
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets, Seq(
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")),
-      ("triangles", baseTriangles, Seq("node"))))
-
-  /** The maintained triangle counts as of the last committed batch. */
-  def currentTriangles(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      "triangles")
-
-  /** Continuously-maintained per-node triangle counts over the
-    * mutation-log STREAM — [[refreshTriangles]] as the per-batch fold on
-    * the shared versioned-state + atomic-pointer machinery; crash replay
-    * is idempotent like the other maintainers. */
-  def maintainTrianglesStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          val p = trianglesParts(baseRels, m)
-          // upserts = recomputed counts (they cover every affected node
-          // still in the edge universe); tombstones = affected nodes the
-          // cone recompute no longer sees (left the universe)
-          val rec = p.recomputed.compactCheckpoint()
-          val tomb = p.affected
-            .join(rec.select(col("node")), Seq("node"), "left_anti")
-          c.chainDelta("triangles", rec, tomb)
-          relsDelta(c, latest)
-          graft.core.Blocks.free(m); graft.core.Blocks.free(rec)
-          graft.core.Blocks.free(latest)
-          c.commit()
-        }
-      }
-      .start()
-  }
-
-  /** Initialize the LPA maintenance state: version 0 holds the base
-    * relationship table and the per-round label history. */
-  def initCommunitiesState(stateDir: String, history: IndexedSeq[DataFrame],
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets,
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")) +:
-        history.zipWithIndex.map { case (h, i) =>
-          (s"lpa/i=$i", h, Seq("node"))
-        })
-
-  /** The maintained community labels as of the last committed batch. */
-  def currentCommunities(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, rounds: Int): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-        s"lpa/i=${rounds - 1}")
-      .select(col("node"), col("lab").as("community"))
-
-  /** Continuously-maintained LPA communities over the mutation-log
-    * STREAM — [[refreshCommunities]] needs the NEW per-round history to
-    * carry forward, so the fold recomputes each round's spliced label
-    * table and persists all of them per version (the
-    * [[maintainRanksStream]] shape). Crash replay idempotent. */
-  def maintainCommunitiesStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String,
-      rounds: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val hist = (0 until rounds).map(i => c.table(s"lpa/i=$i"))
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          val newRels = applyRelationshipMutations(baseRels, m)
-            .compactCheckpoint()
-          val changed = changedPairs(c.tableBuckets("rels",
-            c.dirty(latest.select(col("source_id")), "source_id")), m)
-          val (newHist, dirtyKeys) =
-            refreshCommunitiesHistoryParts(newRels, changed, hist)
-          newHist.zipWithIndex.foreach { case (h, i) =>
-            val up = h.join(dirtyKeys(i), Seq("node"), "left_semi")
-            val tomb = dirtyKeys(i)
-              .join(h.select(col("node")), Seq("node"), "left_anti")
-            c.chainDelta(s"lpa/i=$i", up, tomb)
-          }
-          relsDelta(c, latest)
-          newHist.foreach(graft.core.Blocks.free)
-          dirtyKeys.foreach(graft.core.Blocks.free)
-          graft.core.Blocks.free(newRels); graft.core.Blocks.free(m)
-          graft.core.Blocks.free(latest)
-          c.commit()
-        }
-      }
-      .start()
+        .select(col("node"), col("m.lab").as("lab")), nbrsOf)
+    Blocks.free(edges); Blocks.free(nodes)
+    out
   }
 
   /** The changed (source,target) pair set a mutation batch induces,
@@ -1177,11 +963,14 @@ object IncrementalAnalytics {
     *                  diameter); a frontier still alive past it throws —
     *                  a truncated region could splice stale labels. */
   def refreshScc(baseScc: DataFrame, baseRels: DataFrame,
-      mutations: DataFrame, maxRounds: Int = 200): DataFrame = {
-    val p = sccParts(baseScc, baseRels, mutations, maxRounds)
-    // splice: base labels for clean out-of-region nodes still in the edge
-    // universe; recomputed labels for region nodes; fresh singletons for
-    // first-edge nodes the region didn't touch
+      mutations: DataFrame, maxRounds: Int = 200): DataFrame =
+    sccSplice(baseScc, sccParts(baseScc, baseRels, mutations, maxRounds))
+
+  /** The new labeling from [[sccParts]]: base labels for clean
+    * out-of-region nodes still in the edge universe; recomputed labels
+    * for region nodes; fresh singletons for first-edge nodes the region
+    * didn't touch. */
+  private def sccSplice(baseScc: DataFrame, p: SccParts): DataFrame =
     baseScc
       .join(p.universe, Seq("node"), "left_semi")
       .join(p.regionNodes.select(col("node")), Seq("node"), "left_anti")
@@ -1194,7 +983,6 @@ object IncrementalAnalytics {
         .join(baseScc, Seq("node"), "left_anti")
         .join(p.regionNodes.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), col("node").as("scc")))
-  }
 
   /** [[refreshScc]]'s splice ingredients. Every node whose row can differ
     * from the base labeling is in `regionNodes` ∪ `deltaEnds`: region
@@ -1329,7 +1117,19 @@ object IncrementalAnalytics {
     * pair): affected = the component-closed region, recomputed = the batch
     * k-core of the region-induced new edges. */
   private[graft] def kcoreParts(baseRels: DataFrame, mutations: DataFrame,
-      k: Int, maxRounds: Int = 200): Option[NodeSpliceParts] = {
+      k: Int, maxRounds: Int = 200): Option[NodeSpliceParts] =
+    regionParts(baseRels, mutations, maxRounds, "k-core region")(
+      KCore.kcore(_, "source_id", "target_id", k))
+
+  /** The region splice both peeling maintainers share (None when the
+    * batch changes no pair): the region is the undirected reach of the
+    * changed pairs' endpoints over old ∪ new edges, and `recompute` runs
+    * the batch operator on the region-induced NEW (source_id, target_id)
+    * rels. `recompute` must materialize eagerly (the peels checkpoint
+    * internally): its input's checkpoint is freed once it returns. */
+  private def regionParts(baseRels: DataFrame, mutations: DataFrame,
+      maxRounds: Int, what: String)(recompute: DataFrame => DataFrame)
+      : Option[NodeSpliceParts] = {
     val newRels = applyRelationshipMutations(baseRels, mutations)
       .compactCheckpoint()
     val touched = changedPairs(baseRels, mutations)
@@ -1347,7 +1147,7 @@ object IncrementalAnalytics {
         col("source_id").as("v")))
       .filter(col("u") =!= col("v"))
       .compactCheckpoint()
-    val region = reachClosure(e, touched, maxRounds, "k-core region")
+    val region = reachClosure(e, touched, maxRounds, what)
     Blocks.free(touched)
     // region is component-closed in the new graph, so restricting the
     // source endpoint restricts both — keep both semi-joins for shape
@@ -1356,65 +1156,9 @@ object IncrementalAnalytics {
         Seq("source_id"), "left_semi")
       .join(region.withColumnRenamed("node", "target_id"),
         Seq("target_id"), "left_semi")
-    // KCore.kcore materializes eagerly (internal checkpoints), so the
-    // newRels input is safe to free once it returns
-    val recomputed = KCore.kcore(regionEdges, "source_id", "target_id", k)
+    val recomputed = recompute(regionEdges)
     Blocks.free(newRels); Blocks.free(e)
     Some(NodeSpliceParts(region, recomputed))
-  }
-
-  /** Initialize the k-core maintenance state: version 0 holds the base
-    * relationship table and the k-core survivor set. */
-  def initKcoreState(stateDir: String, baseCore: DataFrame,
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets, Seq(
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")),
-      ("kcore", baseCore, Seq("node"))))
-
-  /** The maintained k-core survivor set as of the last committed batch. */
-  def currentKcore(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      "kcore")
-
-  /** Continuously-maintained k-core over the mutation-log STREAM — the
-    * [[maintainComponentsStream]] machinery with [[refreshKcore]] as the
-    * fold. */
-  def maintainKcoreStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String,
-      k: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          kcoreParts(baseRels, m, k) match {
-            case None => c.carry("kcore")
-            case Some(p) =>
-              // upserts = the region's recomputed survivors; tombstones =
-              // region nodes peeled out of the core
-              val rec = p.recomputed.compactCheckpoint()
-              val tomb = p.affected
-                .join(rec.select(col("node")), Seq("node"), "left_anti")
-              c.chainDelta("kcore", rec, tomb)
-              graft.core.Blocks.free(rec)
-          }
-          relsDelta(c, latest)
-          graft.core.Blocks.free(m); graft.core.Blocks.free(latest)
-          c.commit()
-        }
-      }
-      .start()
   }
 
   // ---------------- incremental k-truss ----------------
@@ -1460,170 +1204,131 @@ object IncrementalAnalytics {
     * region-induced new edges. */
   private[graft] def ktrussParts(baseRels: DataFrame, mutations: DataFrame,
       k: Int, rounds: Int,
-      maxReachRounds: Int = 200): Option[NodeSpliceParts] = {
-    val newRels = applyRelationshipMutations(baseRels, mutations)
-      .compactCheckpoint()
-    val touched = changedPairs(baseRels, mutations)
-      .select(explode(array(col("source_id"), col("target_id"))).as("node"))
-      .distinct().compactCheckpoint()
-    if (touched.count() == 0) {
-      Blocks.free(newRels); Blocks.free(touched)
-      return None
+      maxReachRounds: Int = 200): Option[NodeSpliceParts] =
+    regionParts(baseRels, mutations, maxReachRounds, "k-truss region")(re =>
+      KTruss.peel(re.select(col("source_id").as("src"),
+        col("target_id").as("dst")), k, rounds))
+
+  // ---------------- the eight maintainers ----------------
+
+  private[graft] object Maintainer {
+
+    /** Degrees, by per-node locality: [[refreshDegrees]] over the base
+      * RESTRICTED to the dirty keys yields exactly their new rows (the
+      * upserts); dirty keys it drops (dead twins) are the tombstones.
+      * `rels` is only probed, never folded. */
+    val degrees = new Maintainer(Seq("degrees" -> Seq("dt_id")))(
+      (c, m, latest) => {
+        val relsProbe = touchedRels(c, latest)
+        val oldRows = relsProbe
+          .select(col("source_id"), col("relationship_id"), col("target_id"))
+          .join(latest.select(RelKey.map(col): _*), RelKey, "left_semi")
+        def ends(df: DataFrame): DataFrame = df.select(
+          explode(array(col("source_id"), col("target_id"))).as("dt_id"))
+        val dirtyNodes = c.own(ends(oldRows)
+          .unionByName(ends(latest.filter(col("alive"))))
+          .unionByName(latestTwinMutations(m).select(col("dt_id")))
+          .distinct().compactCheckpoint())
+        val up = c.own(refreshDegrees(
+          c.table("degrees").join(dirtyNodes, Seq("dt_id"), "left_semi"),
+          relsProbe, m).compactCheckpoint())
+        Seq(c.splice("degrees", up, dirtyNodes))
+      })
+
+    /** WCC labels ([[refreshComponents]]): upserts = the recomputed labels
+      * (every surviving member of an affected component plus every new
+      * node); tombstones = affected-component members with no recomputed
+      * row — the batch's dead twins. */
+    val components = new Maintainer(Seq("components" -> Seq("dt_id")))(
+      (c, m, _) => {
+        val baseRels = c.table("rels")
+        val baseComp = c.table("components")
+        val p = componentsParts(baseComp, baseRels, m)
+        Seq(c.splice("components", c.own(p.recomputed.compactCheckpoint()),
+          baseComp.join(p.affected, Seq("component"), "left_semi")
+            .select(col("dt_id"))))
+      })
+
+    /** Fixed-K PageRank ([[refreshRanksHistoryParts]]), carrying the full
+      * per-iteration history forward as `hist/i=N`. */
+    def ranks(iterations: Int): Maintainer =
+      history("hist", iterations)(refreshRanksHistoryParts(_, _, _))
+
+    /** LPA communities ([[refreshCommunitiesHistoryParts]]), carrying the
+      * per-round labels forward as `lpa/i=N`. */
+    def communities(rounds: Int): Maintainer =
+      history("lpa", rounds)(refreshCommunitiesHistoryParts(_, _, _))
+
+    /** A per-round history maintainer: each batch splices every round's
+      * table against its predecessor exactly the way the batch operator
+      * would recompute. A refreshed round is checkpointed in memory, so
+      * its key-restricted upsert scan reads the cache and only the
+      * parquet WRITE is cone-sized. */
+    private def history(prefix: String, rounds: Int)(
+        refresh: (DataFrame, DataFrame, IndexedSeq[DataFrame])
+          => (IndexedSeq[DataFrame], IndexedSeq[DataFrame])): Maintainer = {
+      val names = (0 until rounds).map(i => s"$prefix/i=$i")
+      new Maintainer(names.map(_ -> Seq("node")))((c, m, latest) => {
+        val baseRels = c.table("rels")
+        val hist = names.map(c.table)
+        val newRels = c.own(applyRelationshipMutations(baseRels, m)
+          .compactCheckpoint())
+        val (newHist, dirtyKeys) = refresh(newRels,
+          changedPairs(touchedRels(c, latest), m), hist)
+        (newHist ++ dirtyKeys).foreach(c.own)
+        names.indices.map(i => c.splice(names(i),
+          newHist(i).join(dirtyKeys(i), Seq("node"), "left_semi"),
+          dirtyKeys(i)))
+      })
     }
-    val unionPairs = pairs(baseRels).unionByName(pairs(newRels)).distinct()
-    val e = unionPairs
-      .select(col("source_id").as("u"), col("target_id").as("v"))
-      .unionByName(unionPairs.select(col("target_id").as("u"),
-        col("source_id").as("v")))
-      .filter(col("u") =!= col("v"))
-      .compactCheckpoint()
-    val region = reachClosure(e, touched, maxReachRounds, "k-truss region")
-    Blocks.free(touched)
-    val regionEdges = newRels
-      .join(region.withColumnRenamed("node", "source_id"),
-        Seq("source_id"), "left_semi")
-      .join(region.withColumnRenamed("node", "target_id"),
-        Seq("target_id"), "left_semi")
-      .select(col("source_id").as("src"), col("target_id").as("dst"))
-    // KTruss.peel materializes eagerly (internal checkpoints), so the
-    // newRels input is safe to free once it returns
-    val recomputed = KTruss.peel(regionEdges, k, rounds)
-    Blocks.free(newRels); Blocks.free(e)
-    Some(NodeSpliceParts(region, recomputed))
-  }
 
-  /** Initialize the k-truss maintenance state: version 0 holds the base
-    * relationship table and the k-truss edge set. */
-  def initKtrussState(stateDir: String, baseTruss: DataFrame,
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets, Seq(
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")),
-      // truss edges are canonical (a < b); a's bucket is the edge's home
-      ("ktruss", baseTruss, Seq("a", "b"))))
+    /** Per-node triangle counts ([[refreshTriangles]]): upserts = the
+      * recomputed counts (every affected node still in the edge universe);
+      * tombstones = affected nodes that left it. */
+    val triangles = new Maintainer(Seq("triangles" -> Seq("node")))(
+      (c, m, _) => {
+        val p = trianglesParts(c.table("rels"), m)
+        Seq(c.splice("triangles", c.own(p.recomputed.compactCheckpoint()),
+          p.affected))
+      })
 
-  /** The maintained k-truss edge set as of the last committed batch. */
-  def currentKtruss(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      "ktruss")
+    /** The k-core survivor set ([[refreshKcore]]): upserts = the region's
+      * recomputed survivors; tombstones = region nodes peeled out. */
+    def kcore(k: Int): Maintainer =
+      new Maintainer(Seq("kcore" -> Seq("node")))((c, m, _) =>
+        kcoreParts(c.table("rels"), m, k).toSeq.map(p => c.splice("kcore",
+          c.own(p.recomputed.compactCheckpoint()), p.affected)))
 
-  /** Continuously-maintained k-truss over the mutation-log STREAM — the
-    * [[maintainKcoreStream]] machinery with [[refreshKtruss]] as the
-    * fold: versioned at-rest state, atomic pointer commit, idempotent
-    * crash replay, post-commit version pruning. */
-  def maintainKtrussStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String,
-      k: Int, rounds: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          ktrussParts(baseRels, m, k, rounds) match {
-            case None => c.carry("ktruss")
-            case Some(p) =>
-              // upserts = the region's recomputed truss edges; tombstones
-              // = base truss edges inside the region that did not survive
-              // the re-peel. Region nodes bucket exactly like the
-              // canonical `a` endpoints, so the probe is bucket-pruned.
-              val rec = p.recomputed.compactCheckpoint()
-              val tomb = c.tableBuckets("ktruss", c.dirty(p.affected, "node"))
-                .join(p.affected.withColumnRenamed("node", "a"),
-                  Seq("a"), "left_semi")
-                .select(col("a"), col("b"))
-                .join(rec.select(col("a"), col("b")), Seq("a", "b"),
-                  "left_anti")
-              c.chainDelta("ktruss", rec, tomb)
-              graft.core.Blocks.free(rec)
-          }
-          relsDelta(c, latest)
-          graft.core.Blocks.free(m); graft.core.Blocks.free(latest)
-          c.commit()
-        }
-      }
-      .start()
-  }
+    /** The k-truss edge set ([[refreshKtruss]]); truss edges are canonical
+      * (a < b) and a's bucket is the edge's home. Upserts = the region's
+      * recomputed truss edges; tombstones = base truss edges inside the
+      * region that did not survive the re-peel. Region nodes bucket
+      * exactly like the `a` endpoints, so the probe is bucket-pruned. */
+    def ktruss(k: Int, rounds: Int): Maintainer =
+      new Maintainer(Seq("ktruss" -> Seq("a", "b")))((c, m, _) =>
+        ktrussParts(c.table("rels"), m, k, rounds).toSeq.map { p =>
+          val rec = c.own(p.recomputed.compactCheckpoint())
+          c.splice("ktruss", rec,
+            c.tableBuckets("ktruss", c.dirty(p.affected, "node"))
+              .join(p.affected.withColumnRenamed("node", "a"), Seq("a"),
+                "left_semi")
+              .select(col("a"), col("b")))
+        })
 
-  /** Initialize the SCC maintenance state: version 0 holds the base
-    * relationship table and its SCC labeling. */
-  def initSccState(stateDir: String, baseScc: DataFrame,
-      baseRels: DataFrame,
-      buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, buckets, Seq(
-      ("rels", baseRels.select(RelsCols.map(col): _*),
-        Seq("source_id", "relationship_id")),
-      ("scc", baseScc, Seq("node"))))
-
-  /** The maintained SCC labeling as of the last committed batch. */
-  def currentScc(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    StateStore.readTable(spark, stateDir, StateStore.readPointer(stateDir),
-      "scc")
-
-  /** Continuously-maintained SCC labels over the mutation-log STREAM —
-    * the [[maintainComponentsStream]] machinery with [[refreshScc]] as
-    * the fold: same versioned at-rest state, atomic pointer commit,
-    * idempotent crash replay, post-commit version pruning. */
-  def maintainSccStream(spark: org.apache.spark.sql.SparkSession,
-      mutationsDir: String, stateDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(graft.core.Tables.mutationsSchema)
-      .parquet(mutationsDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val spark2 = batch.sparkSession
-          val c = new StateCommit(spark2, stateDir, target)
-          val baseRels = c.table("rels")
-          val baseScc = c.table("scc")
-          val m = batch.compactCheckpoint()
-          val latest = latestRelMutations(m).compactCheckpoint()
-          val p = sccParts(baseScc, baseRels, m)
-          // every row that can change: region members get recomputed
-          // labels; universe entries/exits (first-edge singletons, drops)
-          // are endpoints of changed pairs. Upserts = the full splice
-          // restricted to those keys (unchanged delta-end rows ride along
-          // harmlessly); tombstones = dirty keys the splice dropped.
-          val dirtyNodes = p.regionNodes.select(col("node"))
-            .unionByName(p.deltaEnds).distinct().compactCheckpoint()
-          val newTable = baseScc
-            .join(p.universe, Seq("node"), "left_semi")
-            .join(p.regionNodes.select(col("node")), Seq("node"),
-              "left_anti")
-            .select(col("node"), col("scc"))
-            .unionByName(p.regionNodes
-              .join(p.universe, Seq("node"), "left_semi")
-              .join(p.regionLabels, Seq("grp"))
-              .select(col("node"), col("scc")))
-            .unionByName(p.universe
-              .join(baseScc, Seq("node"), "left_anti")
-              .join(p.regionNodes.select(col("node")), Seq("node"),
-                "left_anti")
-              .select(col("node"), col("node").as("scc")))
-          val up = newTable.join(dirtyNodes, Seq("node"), "left_semi")
-            .compactCheckpoint()
-          val tomb = dirtyNodes
-            .join(up.select(col("node")), Seq("node"), "left_anti")
-          c.chainDelta("scc", up, tomb)
-          relsDelta(c, latest)
-          graft.core.Blocks.free(m); graft.core.Blocks.free(latest)
-          graft.core.Blocks.free(dirtyNodes); graft.core.Blocks.free(up)
-          c.commit()
-        }
-      }
-      .start()
+    /** SCC labels ([[refreshScc]]): every row that can change is a region
+      * member (recomputed label) or a changed pair's endpoint (universe
+      * entries/exits). Upserts = the splice restricted to those keys
+      * (unchanged delta-end rows ride along harmlessly); tombstones =
+      * those keys the splice dropped. */
+    val scc = new Maintainer(Seq("scc" -> Seq("node")))((c, m, _) => {
+      val baseRels = c.table("rels")
+      val baseScc = c.table("scc")
+      val p = sccParts(baseScc, baseRels, m)
+      val dirtyNodes = c.own(p.regionNodes.select(col("node"))
+        .unionByName(p.deltaEnds).distinct().compactCheckpoint())
+      val up = c.own(sccSplice(baseScc, p)
+        .join(dirtyNodes, Seq("node"), "left_semi").compactCheckpoint())
+      Seq(c.splice("scc", up, dirtyNodes))
+    })
   }
 }

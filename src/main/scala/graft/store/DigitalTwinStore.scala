@@ -53,6 +53,11 @@ trait DigitalTwinStore {
   def publishTelemetry(dtId: String, payload: String,
       componentName: Option[String] = None): Unit
   def currentSeq: Long
+  /** Bumped whenever the at-rest snapshot behind [[toGraph]] is replaced
+    * (a fold or an import). A fold can delete the files a built graph
+    * reads without moving [[currentSeq]], so anything memoized on a
+    * graph must key on both. Driver-resident stores have no snapshot. */
+  def snapshotGeneration: Long = 0L
   def toGraph(spark: SparkSession): TwinGraph
   def graphAt(spark: SparkSession, asOfSeq: Long): TwinGraph
   // ---- enumeration (job surface: delete-all sweeps) ----

@@ -326,6 +326,7 @@ final class TableTwinStore private (
   /** Latest mutation seq — the store version a pagination pins against
     * ([[graft.adt.VersionedGraphSource]] over [[graphAt]]). */
   def currentSeq: Long = mem.currentSeq
+  override def snapshotGeneration: Long = version
 
   /** Id enumeration. Lazy opens answer from the folded table (an
     * ids-only distributed scan — enumerating every id IS a corpus scan;

@@ -266,6 +266,52 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     assert(relsNow.toSeq == Seq("r3", "r4", "r5"))
   }
 
+  test("a fold that throws after writing a delta leaves the pointer, leaks nothing, and replays") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-incr-torn").toString
+    val mutDir = s"$dir/mutations"
+    val stateDir = s"$dir/state"
+    val cpDir = s"$dir/cp"
+    new java.io.File(stateDir).mkdirs()
+    val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "c", "a"))
+    IncrementalAnalytics.initDegreesState(stateDir, batchDegrees(base), base)
+    val batch = muts((1L, "D", "r2", "b", "c"), (2L, "C", "r4", "a", "c"),
+      (3L, "C", "r5", "c", "b"))
+    batch.write.mode("append").parquet(mutDir)
+    // the real degrees fold, but the batch dies after ONE table's delta
+    // landed in v1 and before the commit
+    val degrees = IncrementalAnalytics.Maintainer.degrees
+    val torn = new IncrementalAnalytics.Maintainer(degrees.tables)(
+      (c, m, latest) => {
+        val (t, up, tomb) = degrees.fold(c, m, latest).head
+        c.chainDelta(t, up, tomb)
+        throw new IllegalStateException("injected fold failure")
+      })
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val q1 = IncrementalAnalytics.maintainStream(spark, mutDir, stateDir,
+      cpDir, torn)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.awaitTermination(60000))
+    assert(err.getMessage.contains("injected fold failure"), err.getMessage)
+    assert(StateStore.readPointer(stateDir) == 0L)
+    assert(new java.io.File(s"$stateDir/v1/degrees").isDirectory,
+      "the failed attempt should have left a torn v1 behind")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still registered after the failed batch: $leaked")
+    // restart with the real fold: batch 0 replays over the torn v1
+    val q2 = IncrementalAnalytics.maintainDegreesStream(
+      spark, mutDir, stateDir, cpDir)
+    q2.awaitTermination(60000)
+    assert(q2.exception.isEmpty)
+    assert(StateStore.readPointer(stateDir) == 1L)
+    val expect = batchDegrees(
+        IncrementalAnalytics.applyRelationshipMutations(base, batch)
+          .localCheckpoint(true))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val got = IncrementalAnalytics.currentDegrees(spark, stateDir)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == expect, s"replay != batch recompute\ngot:    $got\nexpect: $expect")
+  }
+
   test("refreshRanks restricts the contribution join to the affected cone") {
     val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "x", "y"))
     val m = muts((1L, "C", "r5", "c", "a"))
@@ -421,7 +467,7 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
       .write.mode("append").parquet(mutDir)
     IncrementalAnalytics.maintainRanksStream(
       spark, mutDir, stateDir, cpDir, iterations = 3).awaitTermination(60000)
-    val got = ranksMap(IncrementalAnalytics.currentRanks(spark, stateDir, 3))
+    val got = ranksMap(IncrementalAnalytics.current(spark, stateDir, "hist/i=2"))
     val all = muts((1L, "D", "r2", "b", "c"), (2L, "C", "r5", "a", "c"),
       (3L, "C", "r6", "y", "a"), (4L, "D", "r4", "x", "y"))
     val finalRels = IncrementalAnalytics.applyRelationshipMutations(base, all)
@@ -498,20 +544,21 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     new java.io.File(stateDir).mkdirs()
     val base = rels(("r1", "a", "b"), ("r2", "b", "c"),
       ("r3", "x", "y"), ("r4", "y", "z"), ("r5", "z", "x"))
-    IncrementalAnalytics.initTrianglesState(stateDir,
-      Triangles.perNode(base, "source_id", "target_id"), base)
+    IncrementalAnalytics.initState(stateDir,
+      IncrementalAnalytics.Maintainer.triangles, base,
+      Seq(Triangles.perNode(base, "source_id", "target_id")))
     // batch 1: close the a-b-c triangle
     muts((1L, "C", "r9", "c", "a")).write.mode("append").parquet(mutDir)
-    IncrementalAnalytics.maintainTrianglesStream(
-      spark, mutDir, stateDir, cpDir).awaitTermination(60000)
-    val mid = triMap(IncrementalAnalytics.currentTriangles(spark, stateDir))
+    IncrementalAnalytics.maintainStream(spark, mutDir, stateDir, cpDir,
+      IncrementalAnalytics.Maintainer.triangles).awaitTermination(60000)
+    val mid = triMap(IncrementalAnalytics.current(spark, stateDir, "triangles"))
     assert(mid == Map("a" -> 1L, "b" -> 1L, "c" -> 1L,
       "x" -> 1L, "y" -> 1L, "z" -> 1L), s"after close: $mid")
     // batch 2 lands while down: open the x-y-z triangle
     muts((2L, "D", "r4", "y", "z")).write.mode("append").parquet(mutDir)
-    IncrementalAnalytics.maintainTrianglesStream(
-      spark, mutDir, stateDir, cpDir).awaitTermination(60000)
-    val fin = triMap(IncrementalAnalytics.currentTriangles(spark, stateDir))
+    IncrementalAnalytics.maintainStream(spark, mutDir, stateDir, cpDir,
+      IncrementalAnalytics.Maintainer.triangles).awaitTermination(60000)
+    val fin = triMap(IncrementalAnalytics.current(spark, stateDir, "triangles"))
     assert(fin == Map("a" -> 1L, "b" -> 1L, "c" -> 1L,
       "x" -> 0L, "y" -> 0L, "z" -> 0L), s"after open: $fin")
   }
@@ -560,17 +607,19 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "c", "d"),
       ("r4", "d", "a"), ("r5", "x", "y"))
     val hist0 = LabelPropagation.communitiesHistory(base, 3)
-    IncrementalAnalytics.initCommunitiesState(stateDir, hist0, base)
+    IncrementalAnalytics.initState(stateDir,
+      IncrementalAnalytics.Maintainer.communities(3), base, hist0)
     hist0.foreach(graft.core.Blocks.free)
     muts((1L, "C", "r9", "a", "c")).write.mode("append").parquet(mutDir)
-    IncrementalAnalytics.maintainCommunitiesStream(
-      spark, mutDir, stateDir, cpDir, rounds = 3).awaitTermination(60000)
+    IncrementalAnalytics.maintainStream(spark, mutDir, stateDir, cpDir,
+      IncrementalAnalytics.Maintainer.communities(3)).awaitTermination(60000)
     muts((2L, "D", "r5", "x", "y"), (3L, "C", "r6", "y", "d"))
       .write.mode("append").parquet(mutDir)
-    IncrementalAnalytics.maintainCommunitiesStream(
-      spark, mutDir, stateDir, cpDir, rounds = 3).awaitTermination(60000)
+    IncrementalAnalytics.maintainStream(spark, mutDir, stateDir, cpDir,
+      IncrementalAnalytics.Maintainer.communities(3)).awaitTermination(60000)
     val got = compMap2(
-      IncrementalAnalytics.currentCommunities(spark, stateDir, 3))
+      IncrementalAnalytics.current(spark, stateDir, "lpa/i=2")
+        .select(col("node"), col("lab").as("community")))
     val all = muts((1L, "C", "r9", "a", "c"), (2L, "D", "r5", "x", "y"),
       (3L, "C", "r6", "y", "d"))
     val finalRels = IncrementalAnalytics.applyRelationshipMutations(base, all)
@@ -857,23 +906,24 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     new java.io.File(stateDir).mkdirs()
     val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "c", "a"),
       ("r5", "x", "y"))
-    IncrementalAnalytics.initKtrussState(stateDir,
-      KTruss.peel(base.select(col("source_id").as("src"),
-        col("target_id").as("dst")), 3, 2), base)
+    IncrementalAnalytics.initState(stateDir,
+      IncrementalAnalytics.Maintainer.ktruss(3, 2), base,
+      Seq(KTruss.peel(base.select(col("source_id").as("src"),
+        col("target_id").as("dst")), 3, 2)))
     // batch 1: cut the triangle — the 3-truss empties
     muts((1L, "D", "r2", "b", "c")).write.mode("append").parquet(mutDir)
-    val q1 = IncrementalAnalytics.maintainKtrussStream(
-      spark, mutDir, stateDir, cpDir, k = 3, rounds = 2)
+    val q1 = IncrementalAnalytics.maintainStream(spark, mutDir, stateDir,
+      cpDir, IncrementalAnalytics.Maintainer.ktruss(k = 3, rounds = 2))
     q1.awaitTermination(60000)
-    assert(IncrementalAnalytics.currentKtruss(spark, stateDir).count() == 0)
+    assert(IncrementalAnalytics.current(spark, stateDir, "ktruss").count() == 0)
     // batch 2 lands while the maintainer is down: close triangle b-x-y —
     // folded on restart through the streaming checkpoint
     muts((2L, "C", "r8", "b", "x"), (3L, "C", "r9", "y", "b"))
       .write.mode("append").parquet(mutDir)
-    val q2 = IncrementalAnalytics.maintainKtrussStream(
-      spark, mutDir, stateDir, cpDir, k = 3, rounds = 2)
+    val q2 = IncrementalAnalytics.maintainStream(spark, mutDir, stateDir,
+      cpDir, IncrementalAnalytics.Maintainer.ktruss(k = 3, rounds = 2))
     q2.awaitTermination(60000)
-    val fin = edgeSet(IncrementalAnalytics.currentKtruss(spark, stateDir))
+    val fin = edgeSet(IncrementalAnalytics.current(spark, stateDir, "ktruss"))
     assert(fin == Set(("b", "x"), ("b", "y"), ("x", "y")), s"after rebuild: $fin")
     // retention: every surviving version/bucket is manifest-referenced
     assertRetention(stateDir)
@@ -888,22 +938,23 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     // two 2-cycles joined by a condensation edge
     val base = rels(("r1", "a", "b"), ("r2", "b", "a"),
       ("r3", "c", "d"), ("r4", "d", "c"), ("r5", "b", "c"))
-    IncrementalAnalytics.initSccState(stateDir, batchScc(base), base)
+    IncrementalAnalytics.initState(stateDir,
+      IncrementalAnalytics.Maintainer.scc, base, Seq(batchScc(base)))
     // batch 1: cut {a,b} — a and b become singletons (a SPLIT)
     muts((1L, "D", "r2", "b", "a")).write.mode("append").parquet(mutDir)
-    val q1 = IncrementalAnalytics.maintainSccStream(
-      spark, mutDir, stateDir, cpDir)
+    val q1 = IncrementalAnalytics.maintainStream(
+      spark, mutDir, stateDir, cpDir, IncrementalAnalytics.Maintainer.scc)
     q1.awaitTermination(60000)
-    val mid = sccMap(IncrementalAnalytics.currentScc(spark, stateDir))
+    val mid = sccMap(IncrementalAnalytics.current(spark, stateDir, "scc"))
     assert(mid == Map("a" -> "a", "b" -> "b", "c" -> "c", "d" -> "c"),
       s"after split: $mid")
     // batch 2 lands while the maintainer is down: d→a closes the big
     // cycle a→b→c→d→a — a MERGE of everything, folded on restart
     muts((2L, "C", "r9", "d", "a")).write.mode("append").parquet(mutDir)
-    val q2 = IncrementalAnalytics.maintainSccStream(
-      spark, mutDir, stateDir, cpDir)
+    val q2 = IncrementalAnalytics.maintainStream(
+      spark, mutDir, stateDir, cpDir, IncrementalAnalytics.Maintainer.scc)
     q2.awaitTermination(60000)
-    val fin = sccMap(IncrementalAnalytics.currentScc(spark, stateDir))
+    val fin = sccMap(IncrementalAnalytics.current(spark, stateDir, "scc"))
     assert(fin == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"),
       s"after merge: $fin")
     // retention: every surviving version/bucket is manifest-referenced
