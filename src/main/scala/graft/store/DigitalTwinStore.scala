@@ -58,6 +58,13 @@ trait DigitalTwinStore {
     * reads without moving [[currentSeq]], so anything memoized on a
     * graph must key on both. Driver-resident stores have no snapshot. */
   def snapshotGeneration: Long = 0L
+  /** The current state as the columnar tables every query operator runs
+    * on, consistent with the last CRUD call. The driver-resident store
+    * projects its maps; the table-backed store returns its at-rest
+    * snapshot with the driver-held journal-tail overlay applied (the
+    * latest event per key since the last fold, bounded by the fold
+    * cadence), so building it after a write runs no Spark job and the
+    * resulting plans never re-read the journal. */
   def toGraph(spark: SparkSession): TwinGraph
   def graphAt(spark: SparkSession, asOfSeq: Long): TwinGraph
   // ---- enumeration (job surface: delete-all sweeps) ----

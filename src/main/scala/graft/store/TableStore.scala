@@ -3,9 +3,10 @@ package graft.store
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.Tables
 import graft.dtdl.ModelRegistry
 import graft.graph.TwinGraph
@@ -35,13 +36,25 @@ import scala.jdk.CollectionConverters._
   * scheme (file:, s3a:, abfs:, gs:) — the blob-storage surface of SURVEY
   * §2 A8.
   *
-  * Scale posture: queries ([[graph]]) and snapshot folding are pure
-  * DataFrame plans — no driver materialization, any corpus size.
-  * Interactive CRUD faults its per-key working set in LAZILY ([[open]]):
-  * a point operation on an unseen key runs one dt_id-filtered read
-  * against the snapshot (sorted files → row-group skipping) plus the
-  * journal tail, so a write-reopen touches O(touched keys), never
-  * O(corpus) — the reopen cost that matters when the store holds 100 TB.
+  * Scale posture: the journal tail since the last fold lives on the
+  * driver as a TAIL OVERLAY — the latest event per key (a document or a
+  * tombstone per `dt_id` and per `(source_id, relationship_id)`). A full
+  * open seeds it with one read of the on-disk tail; every mutation of
+  * this store is folded in on the driver from the in-memory log, so a
+  * refresh after a write costs no Spark job; a fold or import empties it.
+  * A query-only open has no log of its own and re-reads the on-disk tail
+  * whenever the `mutations/` listing changes (one `FileSystem` call), so
+  * it still sees other writers' appends. Its size is bounded by the
+  * checkpoint cadence (events since the last snapshot), not by the
+  * corpus. Queries ([[graph]]) are the snapshot minus the overlay's keys
+  * (a `NOT IN` key-set filter) plus its upserts (a local relation): no
+  * journal scan, no window, no exchange on the read path; snapshot
+  * folding writes that same graph. Interactive CRUD faults its per-key
+  * working set in LAZILY ([[open]]): a point operation on an unseen key
+  * resolves from the overlay, else from one dt_id-filtered read against
+  * the snapshot (sorted files → row-group skipping), so a write-reopen
+  * touches O(touched keys), never O(corpus) — the reopen cost that
+  * matters when the store holds 100 TB.
   * [[TableTwinStore.openEager]] preserves the restore-everything mode for
   * working sets that are known to be small and hot. Bulk ingest at
   * beyond-RAM scale goes through [[importGraph]], which merges whole
@@ -56,7 +69,7 @@ final class TableTwinStore private (
   private val mem = new TwinStore(clock)
   private var version = 0
   private var appliedSeq = 0L
-  private var journaledCount = 0 // prefix of mem.mutations already on disk
+  private var journaledCount = 0 // prefix of mem's log already on disk
   // Retained checkpoints for time travel: (snapshot version, appliedSeq at
   // its fold). Persisted in meta.json; empty until the first
   // checkpoint(retain = true).
@@ -106,64 +119,134 @@ final class TableTwinStore private (
     val r = f; saveModels(); r
   }
 
-  // ---------------- lazy per-key working set ----------------
+  // ---------------- journal-tail overlay ----------------
 
-  // Journal-tail high-water mark at open. Rows with seq in
-  // (appliedSeq, tailMaxAtOpen] are PRE-SESSION state a fault must fold.
-  // Rows beyond it were journaled by THIS session, whose keys are always
-  // already marked faulted (every CRUD wrapper faults before mutating),
-  // so no fault ever needs them — which is what lets faults skip the
-  // journal entirely on a store with no pre-session tail.
-  private var tailMaxAtOpen = 0L
-  private def hasPreSessionTail: Boolean = tailMaxAtOpen > appliedSeq
+  // Latest event per key with seq > appliedSeq: Some(row in the snapshot
+  // table's schema) for an upsert, None for a tombstone.
+  private val tailTwins = collection.mutable.HashMap[String, Option[Row]]()
+  private val tailRels =
+    collection.mutable.HashMap[(String, String), Option[Row]]()
+  private var tailMaxSeq = 0L   // highest seq read from the on-disk tail
+  private var foldedCount = 0   // prefix of mem's log folded into the overlay
+  // Query-only opens: the `mutations/` listing the overlay was read from
+  // (None = read it on next use).
+  private var tailListing: Option[Seq[String]] = None
+  // Whether state predating this session exists on disk beyond the
+  // snapshot — the twin-delete edge guard needs the table only then.
+  private var hasPreSessionTail = false
+  // [[graph]]'s (snapshot version, twins, relationships), built once per
+  // overlay state.
+  private var graphFrames: Option[(Int, DataFrame, DataFrame)] = None
 
-  /** The pre-session journal tail, read ONCE on first fault and grouped by
-    * key in seq order. Bounded by checkpoint cadence (events since the
-    * last snapshot), NOT by corpus size — the same bound the old
-    * restore-everything replay had — so a driver-resident map is the right
-    * shape: after this one read, per-key faults cost zero journal jobs.
-    * Values are (seq, event_type, new_json). */
-  private lazy val preSessionTail
-      : (Map[String, Seq[(Long, String, String)]],
-         Map[(String, String), Seq[(Long, String, String)]]) =
-    if (!hasPreSessionTail) (Map.empty, Map.empty)
-    else {
-      val rows = mutationsDf
-        .filter(col("seq") > appliedSeq && col("seq") <= tailMaxAtOpen)
-        .select(col("seq"), col("entity_kind"), col("event_type"),
-          col("new_json"), col("old_json"))
-        .collect()
-      val twins = collection.mutable.Map[String, List[(Long, String, String)]]()
-      val rels = collection.mutable.Map[(String, String), List[(Long, String, String)]]()
-      rows.foreach { r =>
-        val doc = Option(r.getString(3)).getOrElse(r.getString(4))
-        Json.tryParse(doc).foreach { n =>
-          val ev = (r.getLong(0), r.getString(2), r.getString(3))
-          r.getString(1) match {
-            case "Twin" =>
-              Json.get(n, "/$dtId").map(_.asText()).foreach { id =>
-                twins(id) = ev :: twins.getOrElse(id, Nil)
-              }
-            case "Relationship" =>
-              for {
-                s0 <- Json.get(n, "/$sourceId").map(_.asText())
-                r0 <- Json.get(n, "/$relationshipId").map(_.asText())
-              } rels((s0, r0)) = ev :: rels.getOrElse((s0, r0), Nil)
-            case _ => ()
-          }
-        }
+  private def emptyOverlay(): Unit = {
+    tailTwins.clear(); tailRels.clear(); graphFrames = None
+  }
+
+  /** A JSON field as `get_json_object` returns it: text unquoted, any
+    * other value rendered, missing or null as null. */
+  private def field(doc: JsonNode, ptr: String): String =
+    Json.get(doc, ptr).filterNot(_.isNull)
+      .map(n => if (n.isTextual) n.asText() else Json.render(n)).orNull
+
+  /** Fold one journal event into the overlay (telemetry carries no state). */
+  private def foldEvent(eventType: String, oldJson: String, newJson: String): Unit = {
+    val upsert = !eventType.endsWith("Delete")
+    lazy val doc = Json.parse(if (newJson != null) newJson else oldJson)
+    if (eventType.startsWith("Twin")) {
+      val id = field(doc, "/$dtId")
+      tailTwins(id) =
+        if (upsert) Some(Row(id, field(doc, "/$metadata/$model"),
+          field(doc, "/$etag"), field(doc, "/$metadata/$lastUpdateTime"),
+          newJson))
+        else None
+    } else if (eventType.startsWith("Relationship")) {
+      val (src, rid) = (field(doc, "/$sourceId"), field(doc, "/$relationshipId"))
+      tailRels((src, rid)) =
+        if (upsert) Some(Row(rid, src, field(doc, "/$targetId"),
+          field(doc, "/$relationshipName"), field(doc, "/$etag"), newJson))
+        else None
+    }
+    graphFrames = None
+  }
+
+  /** Seed the overlay from the on-disk tail: ONE journal read, and none
+    * when the `mutations/` listing holds no data file. */
+  private def readTail(listing: Seq[String]): Unit = {
+    val rows =
+      if (listing.forall(n => n.startsWith(".") || n.startsWith("_")))
+        Array.empty[Row]
+      else mutationsDf.filter(col("seq") > appliedSeq)
+        .select(col("seq"), col("event_type"), col("old_json"), col("new_json"))
+        .collect().sortBy(_.getLong(0))
+    rows.foreach(r => foldEvent(r.getString(1), r.getString(2), r.getString(3)))
+    tailMaxSeq = rows.lastOption.map(_.getLong(0)).getOrElse(appliedSeq)
+    hasPreSessionTail = tailTwins.nonEmpty || tailRels.nonEmpty
+  }
+
+  private def journalFiles(): Seq[Path] = {
+    val p = new Path(mutationsPath)
+    if (fs.exists(p)) fs.listStatus(p).toSeq.map(_.getPath) else Nil
+  }
+
+  /** Bring the overlay up to the store's current state: this store's own
+    * unfolded mutations (no Spark job), or — on a query-only open, which
+    * has none — a re-read of the on-disk tail when its listing moved. */
+  private def syncOverlay(): Unit =
+    if (queryOnly) {
+      val listing = journalFiles().map(_.getName).sorted
+      if (!tailListing.contains(listing)) {
+        emptyOverlay(); readTail(listing); tailListing = Some(listing)
       }
-      (twins.view.mapValues(_.sortBy(_._1).toSeq).toMap,
-       rels.view.mapValues(_.sortBy(_._1).toSeq).toMap)
+    } else {
+      val evs = mem.mutationsFrom(foldedCount)
+      evs.foreach(m => foldEvent(m.eventType, m.oldJson, m.newJson))
+      foldedCount += evs.size
     }
 
-  // One snapshot listing per (reopen, version): per-key point probes reuse
-  // the frame instead of re-listing parquet files every fault.
+  /** The snapshot minus every key the tail touched, plus the tail's
+    * upserts (local relations). The keys go in as a `NOT IN` set, not an
+    * anti-join: broadcasting even a local relation costs a Spark job per
+    * table reference in every query plan. */
+  private def currentFrames(): (DataFrame, DataFrame) = {
+    syncOverlay()
+    graphFrames match {
+      case Some((v, t, r)) if v == version => (t, r)
+      case _ =>
+        val snap = snapshotGraph()
+        def overlay(base: DataFrame, key: Column, keys: Iterable[Column],
+            upserts: Iterable[Row], schema: StructType) =
+          if (keys.isEmpty) base
+          else base.filter(!key.isin(keys.toSeq: _*))
+            .unionByName(spark.createDataFrame(upserts.toSeq.asJava, schema))
+        val twins = overlay(snap.twins, col("dt_id"), tailTwins.keys.map(lit),
+          tailTwins.values.flatten, Tables.twinsSchema)
+        val rels = overlay(snap.relationships,
+          struct(col("source_id").as("_1"), col("relationship_id").as("_2")),
+          tailRels.keys.map(typedLit(_)), tailRels.values.flatten,
+          Tables.relationshipsSchema)
+        graphFrames = Some((version, twins, rels)); (twins, rels)
+    }
+  }
+
+  /** The overlay's word on a key: Some(latest doc, None when deleted)
+    * when the tail touched it, None when only the snapshot knows. */
+  private def tailTwinDoc(dtId: String): Option[Option[String]] = {
+    syncOverlay(); tailTwins.get(dtId).map(_.map(_.getString(4)))
+  }
+  private def tailRelDoc(key: (String, String)): Option[Option[String]] = {
+    syncOverlay(); tailRels.get(key).map(_.map(_.getString(5)))
+  }
+
+  // One snapshot listing per (reopen, version): the graph, point probes
+  // and the fold reuse the frame instead of re-listing parquet files.
   private var snapCache: Option[(Int, TwinGraph)] = None
   private def snapshotGraph(): TwinGraph = snapCache match {
     case Some((v, g)) if v == version => g
     case _ =>
-      val g = GraphStore.read(spark, snapshotPath(version))
+      val g =
+        if (version == 0) TwinGraph(emptyDf(Tables.twinsSchema),
+          emptyDf(Tables.relationshipsSchema), emptyDf(Tables.modelsSchema))
+        else GraphStore.read(spark, snapshotPath(version))
       snapCache = Some((version, g)); g
   }
 
@@ -245,76 +328,67 @@ final class TableTwinStore private (
       .select(col("properties"))
       .collect().headOption.map(_.getString(0))
 
-  private def foldTwinEvents(init: Option[String],
-      evs: Seq[(Long, String, String)]): Option[String] =
-    evs.foldLeft(init) { case (doc, (_, et, newJson)) =>
-      et match {
-        case "TwinCreate" | "TwinUpdate" => Some(newJson)
-        case "TwinDelete" => None
-        case _ => doc
-      }
-    }
+  private def restoreTwinDoc(doc: Option[String]): Unit =
+    doc.foreach(d => mem.restoreTwin(Json.parse(d).asInstanceOf[ObjectNode]))
+  private def restoreRelDoc(doc: Option[String]): Unit =
+    doc.foreach(d => mem.restoreRelationship(Json.parse(d).asInstanceOf[ObjectNode]))
 
-  private def foldRelEvents(init: Option[String],
-      evs: Seq[(Long, String, String)]): Option[String] =
-    evs.foldLeft(init) { case (doc, (_, et, newJson)) =>
-      et match {
-        case "RelationshipCreate" | "RelationshipUpdate" => Some(newJson)
-        case "RelationshipDelete" => None
-        case _ => doc
-      }
-    }
-
-  /** Resolve one twin's current state into `mem`: the snapshot's single
-    * dt_id row (pushed-down point filter — sorted files → parquet min/max
-    * row-group skipping; a partitioned deployment prunes to one file
-    * slice) folded with this key's pre-session tail events. O(one key),
-    * not O(corpus); zero Spark jobs on a fresh store. */
+  /** Resolve one twin's current state into `mem`: the overlay's latest
+    * tail event when the tail touched the key, else the snapshot's single
+    * dt_id row (driver-side point reader over sorted files → page-index
+    * skipping). O(one key), not O(corpus); zero Spark jobs. */
   private def faultTwin(dtId: String): Unit = {
     if (!lazyLoad || faultedTwins.contains(dtId)) return
-    val snap: Option[String] = snapTwinDoc(dtId)
-    foldTwinEvents(snap, preSessionTail._1.getOrElse(dtId, Nil))
-      .foreach(d => mem.restoreTwin(Json.parse(d).asInstanceOf[ObjectNode]))
+    restoreTwinDoc(tailTwinDoc(dtId).getOrElse(snapTwinDoc(dtId)))
     faultedTwins.add(dtId): Unit
   }
 
-  /** Batch fault (D5 path): all unseen keys resolve in ONE snapshot probe
-    * (`dt_id IN (...)`) instead of a Spark job per key. */
+  /** Batch fault (D5 path): the keys the tail did not touch resolve in
+    * ONE snapshot probe (`dt_id IN (...)`) instead of a Spark job per key. */
   private def faultTwins(dtIds: Seq[String]): Unit = {
     if (!lazyLoad) return
     val todo = dtIds.distinct.filterNot(faultedTwins.contains)
     if (todo.isEmpty) return
+    val (inTail, rest) = todo.partition(tailTwinDoc(_).isDefined)
     val snap: Map[String, String] =
-      if (version == 0) Map.empty
+      if (version == 0 || rest.isEmpty) Map.empty
       else if (usePointReader)
         // per-key footer-index reads (no Spark job); batches are capped
         // at 100 (D5), so this stays under the one IN-probe job's latency
-        withReaders(rs => todo.flatMap(id => rs._1.lookup(Seq(id))
+        withReaders(rs => rest.flatMap(id => rs._1.lookup(Seq(id))
           .headOption.map(id -> _)).toMap)
       else snapshotGraph().twins
-        .filter(col("dt_id").isin(todo: _*))
+        .filter(col("dt_id").isin(rest: _*))
         .select(col("dt_id"), col("properties"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    todo.foreach { id =>
-      foldTwinEvents(snap.get(id), preSessionTail._1.getOrElse(id, Nil))
-        .foreach(d => mem.restoreTwin(Json.parse(d).asInstanceOf[ObjectNode]))
-      faultedTwins.add(id): Unit
-    }
+    inTail.foreach(id => restoreTwinDoc(tailTwinDoc(id).get))
+    rest.foreach(id => restoreTwinDoc(snap.get(id)))
+    faultedTwins ++= todo
   }
 
   /** Same per-key fault for one relationship, keyed
     * (source_id, relationship_id). */
   private def faultRel(sourceId: String, relId: String): Unit = {
     if (!lazyLoad || faultedRels.contains((sourceId, relId))) return
-    val snap: Option[String] = snapRelDoc(sourceId, relId)
-    foldRelEvents(snap, preSessionTail._2.getOrElse((sourceId, relId), Nil))
-      .foreach(d => mem.restoreRelationship(Json.parse(d).asInstanceOf[ObjectNode]))
+    restoreRelDoc(tailRelDoc((sourceId, relId))
+      .getOrElse(snapRelDoc(sourceId, relId)))
     faultedRels.add((sourceId, relId)): Unit
   }
 
+  /** Fault the relationships a listing found: each unseen key resolves
+    * through the overlay first, then the snapshot document the listing
+    * read for it. */
+  private def faultRelsFound(snapByKey: Map[(String, String), String],
+      tailKeys: Iterable[(String, String)]): Unit =
+    (snapByKey.keys ++ tailKeys).toSeq.distinct
+      .filterNot(faultedRels.contains).foreach { k =>
+        restoreRelDoc(tailRelDoc(k).getOrElse(snapByKey.get(k)))
+        faultedRels.add(k): Unit
+      }
+
   /** `mem`'s edge scan only sees the faulted working set; in lazy mode the
-    * delete-twin guard must consult the whole table (folded snapshot +
-    * journal) — but only when pre-session state exists at all: on a store
+    * delete-twin guard must consult the whole table (snapshot + tail
+    * overlay) — but only when pre-session state exists at all: on a store
     * built entirely this session, `mem` has seen every relationship and
     * its own guard suffices (no Spark job). */
   private def hasAnyEdge(dtId: String): Boolean =
@@ -342,16 +416,15 @@ final class TableTwinStore private (
   /** Cursor enumeration (r18, D14): merge the key-sorted SNAPSHOT stream
     * (point-reader pages, zero Spark jobs; Spark `orderBy.limit(n)` with
     * the reader disabled — also ≤ n collected rows) with the bounded
-    * driver-resident extras (session working set + pre-session tail keys),
+    * driver-resident extras (session working set + tail overlay keys),
     * filtering liveness through the fault machinery. Driver traffic per
     * call is O(n + working set), never the id universe — the full
     * `collect()` per batch was the r17 judge's one weak component. */
   override def twinIdsAfter(after: Option[String], n: Int): Seq[String] = {
     if (!lazyLoad) return super.twinIdsAfter(after, n)
     def live(id: String): Boolean = { faultTwin(id); mem.hasTwin(id) }
-    val extras = (mem.twinIds ++
-        (if (hasPreSessionTail) preSessionTail._1.keys.toSeq else Nil))
-      .distinct
+    syncOverlay()
+    val extras = (mem.twinIds ++ tailTwins.keys).distinct
       .filter(id => after.forall(a => Key.cmp(id, a) > 0) && live(id))
     val snap = collection.mutable.ArrayBuffer[String]()
     if (version > 0) {
@@ -368,14 +441,10 @@ final class TableTwinStore private (
         if (chunk.isEmpty) exhausted = true
         else {
           cur = Some(chunk.last)
-          // keys the working set or tail resolves are carried by `extras`;
-          // the tail exclusion MUST mirror the extras gate (r18 advice): if
-          // the forced tail map outlives hasPreSessionTail (a checkpoint
-          // advanced appliedSeq past tailMaxAtOpen), extras stops adding
-          // tail keys — excluding them here too would silently skip live
-          // entities from cursor enumeration.
-          snap ++= chunk.filter(id => !faultedTwins.contains(id) &&
-            !(hasPreSessionTail && preSessionTail._1.contains(id)))
+          // keys the working set or the overlay resolves are carried by
+          // `extras` (both read the same overlay, so no live key is skipped)
+          snap ++= chunk.filter(id =>
+            !faultedTwins.contains(id) && !tailTwins.contains(id))
           if (chunk.size < n) exhausted = true
         }
       }
@@ -389,9 +458,8 @@ final class TableTwinStore private (
     def live(k: (String, String)): Boolean = {
       faultRel(k._1, k._2); mem.hasRelationship(k._1, k._2)
     }
-    val extras = (mem.relationshipKeys ++
-        (if (hasPreSessionTail) preSessionTail._2.keys.toSeq else Nil))
-      .distinct
+    syncOverlay()
+    val extras = (mem.relationshipKeys ++ tailRels.keys).distinct
       .filter(k => after.forall(a => Key.cmpPair(k, a) > 0) && live(k))
     val snap = collection.mutable.ArrayBuffer[(String, String)]()
     if (version > 0) {
@@ -414,8 +482,8 @@ final class TableTwinStore private (
         if (chunk.isEmpty) exhausted = true
         else {
           cur = Some(chunk.last)
-          snap ++= chunk.filter(k => !faultedRels.contains(k) &&
-            !(hasPreSessionTail && preSessionTail._2.contains(k)))
+          snap ++= chunk.filter(k =>
+            !faultedRels.contains(k) && !tailRels.contains(k))
           if (chunk.size < n) exhausted = true
         }
       }
@@ -474,15 +542,11 @@ final class TableTwinStore private (
         .map(_.asInstanceOf[Long]).getOrElse(base)
       mem.advanceSeq(newMax)
       mem.clearEntities()
-      checkpoint()
-      // an already-materialized pre-session tail predates the truncate;
-      // replaying it onto the now-empty snapshot could resurrect an
-      // entity, so mark its keys resolved — `mem` (empty) is
-      // authoritative. (If the lazy tail was never forced, forcing it
-      // here evaluates AFTER the checkpoint advanced appliedSeq, so it is
-      // empty and this marks nothing.)
-      faultedTwins ++= preSessionTail._1.keys
-      faultedRels ++= preSessionTail._2.keys
+      // the bulk deletes bypass the in-memory log, so the overlay never
+      // sees them: fold straight to an EMPTY snapshot instead of `graph`
+      commitSnapshot(journalFiles(), TwinGraph(emptyDf(Tables.twinsSchema),
+        emptyDf(Tables.relationshipsSchema), TwinStore.modelsDf(spark, mem.models)),
+        retain = false)
     }
     (twinCount, relCount)
   }
@@ -588,7 +652,7 @@ final class TableTwinStore private (
 
   /** Fault in EVERY relationship of one source: prefix scan of the sorted
     * snapshot (driver-side footer reader — no Spark job) merged with the
-    * pre-session journal tail's keys for that source. */
+    * overlay's keys for that source. */
   private def faultRelsOf(sourceId: String): Unit = {
     if (!lazyLoad) return
     val snapDocs: Seq[String] =
@@ -601,14 +665,8 @@ final class TableTwinStore private (
       Json.tryParse(d).flatMap(n => Json.get(n, "/$relationshipId")
         .map(rid => ((sourceId, rid.asText()), d)))
     }.toMap
-    val tailKeys = preSessionTail._2.keys.filter(_._1 == sourceId)
-    (snapByKey.keys ++ tailKeys).toSeq.distinct
-      .filterNot(faultedRels.contains).foreach { k =>
-        foldRelEvents(snapByKey.get(k), preSessionTail._2.getOrElse(k, Nil))
-          .foreach(d =>
-            mem.restoreRelationship(Json.parse(d).asInstanceOf[ObjectNode]))
-        faultedRels.add(k): Unit
-      }
+    syncOverlay()
+    faultRelsFound(snapByKey, tailRels.keys.filter(_._1 == sourceId))
   }
 
   def listRelationships(sourceId: String,
@@ -622,7 +680,8 @@ final class TableTwinStore private (
   /** Incoming listing faults by TARGET — not the sorted key, so the
     * snapshot side is one target-filtered Spark read (the layout favors
     * the hot outgoing direction, like the reference's source-leading
-    * btree); the journal tail is searched by parsing each event's doc. */
+    * btree); the overlay contributes the keys whose latest document
+    * points at the target. */
   def listIncomingRelationships(targetId: String): Seq[JsonNode] = {
     requireFullOpen("relationship listing")
     faultTwin(targetId)
@@ -640,19 +699,10 @@ final class TableTwinStore private (
           } yield ((s0, r0), d)
         }
       }.toMap
-      val tailKeys = preSessionTail._2.collect {
-        case (k, evs) if evs.exists { case (_, _, nj) =>
-          Option(nj).flatMap(Json.tryParse)
-            .flatMap(n => Json.get(n, "/$targetId"))
-            .exists(_.asText() == targetId) } => k
-      }
-      (snapByKey.keys ++ tailKeys).toSeq.distinct
-        .filterNot(faultedRels.contains).foreach { k =>
-          foldRelEvents(snapByKey.get(k), preSessionTail._2.getOrElse(k, Nil))
-            .foreach(d =>
-              mem.restoreRelationship(Json.parse(d).asInstanceOf[ObjectNode]))
-          faultedRels.add(k): Unit
-        }
+      syncOverlay()
+      faultRelsFound(snapByKey, tailRels.collect {
+        case (k, Some(r)) if r.getString(2) == targetId => k
+      })
     }
     mem.listIncomingRelationships(targetId)
   }
@@ -679,9 +729,8 @@ final class TableTwinStore private (
   private def snapshotPath(v: Int) = s"$dir/v$v"
 
   private def flushJournal(): Unit = {
-    val all = mem.mutations
-    if (all.size > journaledCount) {
-      val batch = all.drop(journaledCount)
+    val batch = mem.mutationsFrom(journaledCount)
+    if (batch.nonEmpty) {
       // Small appends write their parquet file DRIVER-SIDE (r19): a CRUD
       // batch's journal flush is a latency-critical handful of rows, and
       // routing it through a Spark write job pays ~0.2-0.4 s of pure
@@ -697,7 +746,7 @@ final class TableTwinStore private (
       else TwinStore.mutationsDf(spark, batch)
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(mutationsPath)
-      journaledCount = all.size
+      journaledCount += batch.size
     }
   }
 
@@ -829,35 +878,23 @@ final class TableTwinStore private (
     else spark.createDataFrame(
       java.util.List.of[org.apache.spark.sql.Row](), Tables.mutationsSchema)
 
-  /** Current columnar snapshot + journal tail folded in — reads are always
-    * consistent with the last CRUD call without requiring a checkpoint.
-    * Inside a [[batch]] block applied ops are deferred off disk, so the
-    * in-memory mutation tail beyond `journaledCount` is folded in too. */
+  /** Current columnar snapshot with the tail overlay applied — reads are
+    * always consistent with the last CRUD call (including ops a [[batch]]
+    * block has not flushed yet) without requiring a checkpoint: the
+    * snapshot minus every key the tail touched, plus the tail's upserts,
+    * both held on the driver, so the plan reads no journal file and runs
+    * no window, exchange or extra job for the tail. */
   def graph: TwinGraph = {
-    val (t0, r0) = snapshotFrames
-    val memTail = mem.mutations.drop(journaledCount)
-    val journal =
-      if (memTail.isEmpty) mutationsDf
-      else mutationsDf.unionByName(TwinStore.mutationsDf(spark, memTail))
-    val pend = journal.filter(col("seq") > appliedSeq)
-    TwinGraph(
-      foldTwinMutations(t0, pend),
-      foldRelMutations(r0, pend),
-      TwinStore.modelsDf(spark, mem.models))
+    val (twins, rels) = currentFrames()
+    TwinGraph(twins, rels, TwinStore.modelsDf(spark, mem.models))
   }
-
-  private def snapshotFrames: (DataFrame, DataFrame) =
-    if (version == 0) (emptyDf(Tables.twinsSchema), emptyDf(Tables.relationshipsSchema))
-    else {
-      val g = GraphStore.read(spark, snapshotPath(version))
-      (g.twins, g.relationships)
-    }
 
   private def emptyDf(schema: org.apache.spark.sql.types.StructType) =
     spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
 
   /** Latest pending event per key; `key` columns must be derivable from the
-    * event docs. Set-wise: one window, no driver loop. */
+    * event docs. Set-wise: one window, no driver loop. Only [[graphAt]]
+    * folds the journal this way; the current state is the overlay. */
   private def latestPerKey(pend: DataFrame, kind: String, keyCols: Seq[(String, String)])
       : DataFrame = {
     val base = pend.filter(col("entity_kind") === kind)
@@ -899,8 +936,9 @@ final class TableTwinStore private (
   }
 
   /** Fold the journal tail into a new snapshot version and flip `meta.json`
-    * to it. One twin merge + one relationship merge regardless of how many
-    * operations are pending. Folded journal files are PRUNED once the meta
+    * to it: the new version is [[graph]] written out (the snapshot with the
+    * tail overlay applied), whatever number of operations is pending.
+    * Folded journal files are PRUNED once the meta
     * flip makes them dead for recovery (`seq <= appliedSeq` is filtered
     * everywhere) — like a WAL truncated past the confirmed LSN — so the
     * journal directory stays bounded no matter how long the store serves
@@ -915,25 +953,26 @@ final class TableTwinStore private (
     * (like any time-travel log) grows with write volume. */
   def checkpoint(retain: Boolean = false): Unit = {
     flushJournal()
+    // listed BEFORE the overlay syncs: a file another writer appends in
+    // between is folded but kept, and its rows are then at or below the
+    // new appliedSeq, which every reader skips
+    val files = journalFiles()
+    commitSnapshot(files, graph, retain)
+  }
+
+  /** Write `g` as the next snapshot version at the tail's high-water mark,
+    * flip the meta, prune (or archive) the folded `files`, and empty the
+    * overlay and the folded prefix of the in-memory log. */
+  private def commitSnapshot(files: Seq[Path], g: TwinGraph,
+      retain: Boolean): Unit = {
     // The fold horizon must advance past EVERY journal row being folded —
     // on a query-only open the in-memory counter never advanced, and an
     // appliedSeq that lags the folded tail would let the next full open
     // restart seq numbering inside the folded range, re-issuing seqs that
     // downstream CloudEvent ids were already minted from.
-    val tailMaxSeq = Option(mutationsDf.agg(max(col("seq"))).first().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
     val curSeq = Seq(mem.currentSeq, appliedSeq, tailMaxSeq).max
-    val mutPath = new Path(mutationsPath)
-    val journalFiles: Seq[Path] =
-      if (fs.exists(mutPath)) fs.listStatus(mutPath).toSeq.map(_.getPath)
-      else Nil
-    val (t0, r0) = snapshotFrames
-    val pend = mutationsDf.filter(col("seq") > appliedSeq)
     val newVersion = version + 1
-    GraphStore.write(
-      TwinGraph(foldTwinMutations(t0, pend), foldRelMutations(r0, pend),
-        TwinStore.modelsDf(spark, mem.models)),
-      snapshotPath(newVersion))
+    GraphStore.write(g, snapshotPath(newVersion))
     val oldVersion = version
     val priorApplied = appliedSeq
     version = newVersion
@@ -951,11 +990,17 @@ final class TableTwinStore private (
     if (history.nonEmpty) {
       // archive, don't prune: time travel needs the folded rows
       val arch = new Path(archivePath)
-      if (journalFiles.nonEmpty && !fs.exists(arch)) fs.mkdirs(arch)
-      journalFiles.foreach(p => fs.rename(p, new Path(arch, p.getName)))
-    } else journalFiles.foreach(p => fs.delete(p, true))
+      if (files.nonEmpty && !fs.exists(arch)) fs.mkdirs(arch)
+      files.foreach(p => fs.rename(p, new Path(arch, p.getName)))
+    } else files.foreach(p => fs.delete(p, true))
     if (oldVersion > 0 && !history.exists(_._1 == oldVersion))
       fs.delete(new Path(snapshotPath(oldVersion)), true)
+    emptyOverlay()
+    tailListing = None
+    // callers flush first, so every logged op is journaled and folded
+    mem.dropMutations(journaledCount)
+    journaledCount = 0
+    foldedCount = 0
   }
 
   private def archivePath = s"$dir/journal-archive"
@@ -1126,12 +1171,12 @@ final class TableTwinStore private (
             "first")
       }
     checkpoint() // journal tail first, so the bulk merge sees current state
-    val (t0, r0) = snapshotFrames
+    val snap = snapshotGraph()
     val newVersion = version + 1
     GraphStore.write(
       TwinGraph(
-        GraphStore.mergeTwins(t0, twins),
-        GraphStore.mergeRelationships(r0, relationships),
+        GraphStore.mergeTwins(snap.twins, twins),
+        GraphStore.mergeRelationships(snap.relationships, relationships),
         TwinStore.modelsDf(spark, mem.models)),
       snapshotPath(newVersion))
     val oldVersion = version
@@ -1175,72 +1220,45 @@ final class TableTwinStore private (
       val raws = arr.elements().asScala.map(Json.render).toSeq
       if (raws.nonEmpty) mem.createModels(raws)
     }
-    // Query-only open: [[graph]] folds the snapshot + on-disk journal tail
-    // as DataFrames — no working set to restore, no journal replay. Reopen
-    // cost is O(meta + models), not O(corpus) through the driver.
+    // Query-only open: [[graph]] reads the on-disk journal tail into the
+    // overlay on first use — no working set to restore, no journal replay.
+    // Reopen cost is O(meta + models), not O(corpus) through the driver.
     if (queryOnly) return
-    // Lazy open (the default): no corpus restore, no journal replay — CRUD
-    // faults keys on demand. Only the seq high-water mark is needed up
-    // front so new mutations continue the numbering past everything ever
-    // journaled (CloudEvent ids are minted from it): max of the meta's
-    // nextSeq and the journal tail's max(seq), one scalar aggregate.
-    if (lazyLoad) {
-      val tailMax = Option(mutationsDf.agg(max(col("seq"))).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      tailMaxAtOpen = tailMax
-      mem.restoreSeq(Seq(metaNextSeq, tailMax, appliedSeq).max)
-      journaledCount = 0
-      return
-    }
-    // snapshot into the driver-resident CRUD working set
+    // Full opens read the journal tail ONCE into the overlay; new
+    // mutations continue the numbering past everything ever journaled
+    // (CloudEvent ids are minted from it).
+    readTail(journalFiles().map(_.getName))
+    mem.restoreSeq(Seq(metaNextSeq, tailMaxSeq, appliedSeq).max)
+    // Lazy open (the default): no corpus restore — CRUD faults keys on
+    // demand from the overlay and the snapshot.
+    if (lazyLoad) return
+    // Eager open: the snapshot into the driver-resident CRUD working set,
+    // then the tail's latest state per key over it
     if (version > 0) {
-      val g = GraphStore.read(spark, snapshotPath(version))
-      g.twins.select(col("properties")).toLocalIterator().asScala.foreach { r =>
-        mem.restoreTwin(Json.parse(r.getString(0)).asInstanceOf[ObjectNode])
-      }
-      g.relationships.select(col("properties")).toLocalIterator().asScala.foreach { r =>
-        mem.restoreRelationship(Json.parse(r.getString(0)).asInstanceOf[ObjectNode])
-      }
+      val g = snapshotGraph()
+      g.twins.select(col("properties")).toLocalIterator().asScala
+        .foreach(r => restoreTwinDoc(Some(r.getString(0))))
+      g.relationships.select(col("properties")).toLocalIterator().asScala
+        .foreach(r => restoreRelDoc(Some(r.getString(0))))
     }
-    // replay the journal tail (ops after the last checkpoint)
-    val tail = mutationsDf.filter(col("seq") > appliedSeq)
-      .orderBy(col("seq"))
-      .collect()
-    var maxSeq = appliedSeq
-    tail.foreach { r =>
-      val eventType = r.getAs[String]("event_type")
-      val oldJson = r.getAs[String]("old_json")
-      val newJson = r.getAs[String]("new_json")
-      eventType match {
-        case "TwinCreate" | "TwinUpdate" =>
-          mem.restoreTwin(Json.parse(newJson).asInstanceOf[ObjectNode])
-        case "TwinDelete" =>
-          removeTwinQuiet(Json.get(Json.parse(oldJson), "/$dtId").get.asText())
-        case "RelationshipCreate" | "RelationshipUpdate" =>
-          mem.restoreRelationship(Json.parse(newJson).asInstanceOf[ObjectNode])
-        case "RelationshipDelete" =>
-          val d = Json.parse(oldJson)
-          removeRelQuiet(Json.get(d, "/$sourceId").get.asText(),
-            Json.get(d, "/$relationshipId").get.asText())
-        case _ => // Telemetry: not stored
-      }
-      maxSeq = math.max(maxSeq, r.getAs[Long]("seq"))
+    tailTwins.foreach {
+      case (_, Some(r)) => restoreTwinDoc(Some(r.getString(4)))
+      case (id, None) => mem.deleteTwinUnlogged(id)
     }
-    mem.restoreSeq(maxSeq)
-    journaledCount = 0 // replayed rows are already on disk; mem log is empty
+    tailRels.foreach {
+      case (_, Some(r)) => restoreRelDoc(Some(r.getString(5)))
+      case ((src, rid), None) => mem.deleteRelationshipUnlogged(src, rid)
+    }
   }
-
-  private def removeTwinQuiet(id: String): Unit = mem.deleteTwinUnlogged(id)
-  private def removeRelQuiet(src: String, rid: String): Unit =
-    mem.deleteRelationshipUnlogged(src, rid)
 }
 
 object TableTwinStore {
 
-  /** Open (or initialize) a table-backed store at `dir`. Restores models
-    * and the seq high-water mark — O(meta + models + one aggregate), never
-    * O(corpus). Point CRUD faults each touched key's state on first use
-    * (snapshot point read + journal-tail fold); bulk reads go through
+  /** Open (or initialize) a table-backed store at `dir`. Restores models,
+    * the journal-tail overlay and the seq high-water mark — O(meta +
+    * models + one read of the tail since the last fold), never O(corpus).
+    * Point CRUD faults each touched key's state on first use (overlay,
+    * else snapshot point read); bulk reads go through
     * [[TableTwinStore.graph]]. */
   def open(spark: SparkSession, dir: String,
       clock: () => String = () => java.time.Instant.now().toString): TableTwinStore = {

@@ -52,6 +52,9 @@ final class TwinStore(
 
   def models: ModelRegistry = registry
   def mutations: Seq[MutationEvent] = mutationLog.toSeq
+  /** The log from index `from` on — O(tail), the prefix is not copied. */
+  def mutationsFrom(from: Int): Seq[MutationEvent] =
+    mutationLog.view.drop(from).toSeq
   def twinIds: Seq[String] = twins.keys.toSeq
   def relationshipKeys: Seq[(String, String)] = rels.keys.toSeq
   def hasTwin(dtId: String): Boolean = twins.contains(dtId)
@@ -64,6 +67,9 @@ final class TwinStore(
     * the seq counter past the bulk rows so later ops stay ordered. */
   private[store] def clearEntities(): Unit = { twins.clear(); rels.clear() }
   private[store] def advanceSeq(to: Long): Unit = if (to > seq) seq = to
+  /** Table-store fold hook: forget the first `n` log entries once they are
+    * journaled and folded into a snapshot. */
+  private[store] def dropMutations(n: Int): Unit = mutationLog.remove(0, n)
 
   // ---- restore hooks (table-backed mode): rebuild state from a snapshot
   // without validation, stamping or mutation-logging — the docs were

@@ -694,4 +694,59 @@ class HttpApiSpec extends AnyFunSuite {
       assert(rows.get(0).get("t").asDouble() == 21.5)
     } finally api.stop()
   }
+
+  test("a point query after a PATCH returns the patched value and runs only its own jobs") {
+    val dir = Files.createTempDirectory("graft-http-overlay").toString
+    val store = graft.store.TableTwinStore.open(spark, dir,
+      () => "2026-01-01T00:00:00Z")
+    store.createModels(Seq(model))
+    store.batch {
+      (1 to 20).foreach(i => store.createOrReplaceTwin(f"room$i%02d",
+        s"""{"$$metadata":{"$$model":"dtmi:api:Room;1"},"temperature":$i}"""))
+    }
+    store.checkpoint()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    def counted[T](f: => T): (T, Int) = { // listener delivery is async
+      jobs.set(0)
+      val r = f
+      var last = -1
+      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(200) }
+      (r, last)
+    }
+    val api = new HttpApi(store, () => spark)
+    api.start()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val base = s"http://127.0.0.1:${api.port}"
+      def temperature(): (Double, Int) = counted {
+        val resp = send(req(base, "/query").POST(HttpRequest.BodyPublishers.ofString(
+          """{"query":"SELECT T.temperature AS t FROM DIGITALTWINS T WHERE T.$dtId = 'room07'"}""")).build())
+        assert(resp.statusCode() == 200, resp.body())
+        val rows = Json.parse(resp.body()).get("value")
+        assert(rows.size() == 1, resp.body())
+        rows.get(0).get("t").asDouble()
+      }
+      val (before, jobsFolded) = temperature()
+      assert(before == 7.0)
+      val etag = send(req(base, "/digitaltwins/room07").GET().build())
+        .headers().firstValue("ETag").orElseThrow()
+      val patch = send(req(base, "/digitaltwins/room07").header("If-Match", etag)
+        .method("PATCH", HttpRequest.BodyPublishers.ofString(
+          """[{"op":"replace","path":"/temperature","value":70.5}]""")).build())
+      assert(patch.statusCode() == 204, patch.body())
+      // the journal tail adds no job to the query: it is served from the
+      // driver-resident overlay, not re-folded inside the plan
+      val (after, jobsWithTail) = temperature()
+      assert(after == 70.5)
+      assert(jobsWithTail <= jobsFolded,
+        s"query over a journal tail ran $jobsWithTail jobs, $jobsFolded without one")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      api.stop()
+    }
+  }
 }

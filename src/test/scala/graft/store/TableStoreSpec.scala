@@ -580,4 +580,190 @@ class TableStoreSpec extends AnyFunSuite {
       "lookup after a failed reader build deadlocked")
     assert(temp == 20.0)
   }
+
+  // ---------------- journal-tail overlay ----------------
+
+  private val linkModel =
+    """{"@id":"dtmi:com:adt:dtsample:node;1","@type":"Interface",
+      |"@context":"dtmi:dtdl:context;3","contents":[
+      |{"@type":"Property","name":"temperature","schema":"double"},
+      |{"@type":"Relationship","name":"feeds","properties":[
+      |  {"@type":"Property","name":"weight","schema":"integer"}]}]}""".stripMargin
+  private def nodeDoc(id: String, temp: Double) =
+    s"""{"$$dtId":"$id","$$metadata":{"$$model":"dtmi:com:adt:dtsample:node;1"},
+       |"temperature":$temp}""".stripMargin
+  private def feeds(target: String, weight: Int) =
+    s"""{"$$relationshipName":"feeds","$$targetId":"$target","weight":$weight}"""
+  private def setTemp(t: Double) =
+    s"""[{"op":"replace","path":"/temperature","value":$t}]"""
+
+  /** Every column of every row, sorted — equal graphs compare equal. */
+  private def graphRows(g: graft.graph.TwinGraph): (Seq[String], Seq[String]) = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col).toSeq: _*).collect()
+        .map(_.mkString("|")).toSeq.sorted
+    (rows(g.twins), rows(g.relationships))
+  }
+
+  /** Spark jobs started while `f` runs (listener events are delivered
+    * asynchronously, so wait for the count to settle). */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      var last = -1
+      while (n.get() != last) { last = n.get(); Thread.sleep(200) }
+      (r, last)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("overlay parity: graph equals the checkpointed, query-only and journal-folded graphs") {
+    val dir = tempDir()
+    val s1 = TableTwinStore.open(spark, dir, fixedClock())
+    s1.createModels(Seq(linkModel))
+    s1.batch((1 to 6).foreach(i => s1.createOrReplaceTwin(s"n$i", nodeDoc(s"n$i", i))))
+    s1.createOrReplaceRelationship("n1", "e1", feeds("n2", 1))
+    s1.createOrReplaceRelationship("n1", "e2", feeds("n3", 2))
+    s1.createOrReplaceRelationship("n2", "e3", feeds("n3", 3))
+    s1.checkpoint()
+    // pre-session tail for the reopen: twin and relationship
+    // create/patch/delete, and a key deleted then re-created in the tail
+    s1.patchTwin("n2", setTemp(50))
+    s1.patchRelationship("n2", "e3", """[{"op":"replace","path":"/weight","value":30}]""")
+    s1.deleteRelationship("n1", "e2")
+    s1.deleteTwin("n6")
+    s1.createOrReplaceTwin("n7", nodeDoc("n7", 7))
+    s1.deleteTwin("n7")
+    s1.createOrReplaceTwin("n7", nodeDoc("n7", 77))
+    s1.createOrReplaceRelationship("n3", "e4", feeds("n1", 4))
+
+    // reopen with that tail, then session writes on top of it
+    val s2 = TableTwinStore.open(spark, dir, fixedClock())
+    s2.patchTwin("n3", setTemp(33))
+    s2.deleteTwin("n5")
+    s2.createOrReplaceTwin("n5", nodeDoc("n5", 55))
+    s2.deleteRelationship("n1", "e1")
+    s2.createOrReplaceRelationship("n1", "e1", feeds("n4", 11))
+    s2.deleteRelationship("n3", "e4")
+    // an unflushed batch tail is visible to graph before it reaches disk
+    s2.batch {
+      s2.createOrReplaceTwin("n8", nodeDoc("n8", 8))
+      s2.patchTwin("n7", setTemp(70))
+      val g = s2.graph
+      val temps = g.twins.select(col("dt_id"),
+          get_json_object(col("properties"), "$.temperature").cast("double"))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(temps == Map("n1" -> 1.0, "n2" -> 50.0, "n3" -> 33.0, "n4" -> 4.0,
+        "n5" -> 55.0, "n7" -> 70.0, "n8" -> 8.0))
+    }
+    val live = graphRows(s2.graph)
+    assert(live._2.size == 2 && live._2.exists(_.contains("|e1|")) &&
+      live._2.exists(r => r.contains("|e3|") && r.contains("\"weight\":30")), live._2)
+    // the windowed journal fold time travel still uses is the reference
+    assert(graphRows(s2.graphAt(Long.MaxValue)) == live)
+    assert(graphRows(TableTwinStore.openQueryOnly(spark, dir, fixedClock()).graph) == live)
+    s2.checkpoint()
+    assert(graphRows(s2.graph) == live)
+    assert(graphRows(TableTwinStore.openQueryOnly(spark, dir, fixedClock()).graph) == live)
+    assert(graphRows(TableTwinStore.open(spark, dir, fixedClock()).graph) == live)
+  }
+
+  test("query-only open sees rows another store appended after it opened") {
+    val dir = tempDir()
+    val w = TableTwinStore.open(spark, dir, fixedClock())
+    w.createModels(Seq(linkModel))
+    w.createOrReplaceTwin("n1", nodeDoc("n1", 1))
+    w.checkpoint()
+    w.createOrReplaceTwin("n2", nodeDoc("n2", 2))
+    val q = TableTwinStore.openQueryOnly(spark, dir, fixedClock())
+    def ids() = q.graph.twins.select("dt_id").collect().map(_.getString(0)).toSet
+    assert(ids() == Set("n1", "n2"))
+    // an unchanged journal listing re-reads nothing
+    assert(jobsOf(q.graph)._2 == 0)
+    // a second writer instance appends after the query-only open
+    val w2 = TableTwinStore.open(spark, dir, fixedClock())
+    w2.createOrReplaceTwin("n3", nodeDoc("n3", 3))
+    w2.deleteTwin("n1")
+    w2.createOrReplaceRelationship("n2", "e1", feeds("n3", 1))
+    assert(ids() == Set("n2", "n3"))
+    assert(q.graph.relationships.count() == 1)
+  }
+
+  test("faults resolve keys whose latest pre-session event is an update or a delete") {
+    val dir = tempDir()
+    val s1 = TableTwinStore.open(spark, dir, fixedClock())
+    s1.createModels(Seq(linkModel))
+    s1.batch((1 to 4).foreach(i => s1.createOrReplaceTwin(s"n$i", nodeDoc(s"n$i", i))))
+    s1.createOrReplaceRelationship("n1", "e1", feeds("n2", 1))
+    s1.createOrReplaceRelationship("n1", "e2", feeds("n3", 2))
+    s1.createOrReplaceRelationship("n4", "e3", feeds("n3", 3))
+    s1.checkpoint()
+    s1.patchTwin("n1", setTemp(10))
+    s1.patchRelationship("n1", "e2", """[{"op":"replace","path":"/weight","value":20}]""")
+    s1.deleteRelationship("n1", "e1")
+    s1.deleteTwin("n2")
+    s1.deleteRelationship("n4", "e3")
+    s1.createOrReplaceTwin("n5", nodeDoc("n5", 5))
+
+    val s2 = TableTwinStore.open(spark, dir, fixedClock())
+    assert(Json.get(s2.getTwin("n1"), "/temperature").get.asDouble() == 10.0)
+    assert(intercept[StoreException](s2.getTwin("n2")).status == 404)
+    assert(Json.get(s2.getTwin("n5"), "/temperature").get.asDouble() == 5.0)
+    assert(Json.get(s2.getRelationship("n1", "e2"), "/weight").get.asInt() == 20)
+    assert(intercept[StoreException](s2.getRelationship("n1", "e1")).status == 404)
+    assert(s2.listRelationships("n1", None).map(_.get("$relationshipId").asText()) == Seq("e2"))
+    assert(s2.listIncomingRelationships("n3").map(_.get("$relationshipId").asText()) == Seq("e2"))
+    // the batch fault takes the same route: a tail-deleted key is free to
+    // create, a tail-updated one keeps its patched state
+    val res = s2.createOrReplaceTwins(Seq(nodeDoc("n2", 22)))
+    assert(res.forall(_.isRight), res)
+    assert(s2.twinIdsAfter(None, 10) == Seq("n1", "n2", "n3", "n4", "n5"))
+  }
+
+  test("after a write the graph plans read no journal file and run no window, at no job cost") {
+    val dir = tempDir()
+    val s = TableTwinStore.open(spark, dir, fixedClock())
+    s.createModels(Seq(linkModel))
+    s.batch((1 to 4).foreach(i => s.createOrReplaceTwin(s"n$i", nodeDoc(s"n$i", i))))
+    s.createOrReplaceRelationship("n1", "e1", feeds("n2", 1))
+    s.checkpoint()
+    s.graph // snapshot listing and point readers warm
+    s.patchTwin("n1", setTemp(10))
+    s.createOrReplaceRelationship("n2", "e2", feeds("n3", 2))
+    val (g, jobs) = jobsOf(s.graph)
+    assert(jobs == 0, s"graph refresh after a write ran $jobs Spark jobs")
+    for (df <- Seq(g.twins, g.relationships)) {
+      val plan = df.queryExecution.analyzed
+      assert(plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+        .isEmpty, plan)
+      assert(!df.inputFiles.exists(_.contains("/mutations/")), df.inputFiles.toSeq)
+    }
+    assert(g.twins.filter(col("dt_id") === "n1")
+      .select(get_json_object(col("properties"), "$.temperature").cast("double"))
+      .head().getDouble(0) == 10.0)
+    assert(g.relationships.count() == 2)
+  }
+
+  test("writes after a log-trimming checkpoint are journaled exactly once") {
+    val dir = tempDir()
+    val s = TableTwinStore.open(spark, dir, fixedClock())
+    s.createModels(Seq(linkModel))
+    (1 to 3).foreach(i => s.createOrReplaceTwin(s"n$i", nodeDoc(s"n$i", i)))
+    s.checkpoint()
+    s.patchTwin("n1", setTemp(10))
+    s.checkpoint()
+    s.patchTwin("n2", setTemp(20))
+    // the folds dropped the log prefix: the op since the last fold lands
+    // once, and the overlay still sees it
+    assert(s.mutationsDf.select("seq").collect().map(_.getLong(0)).toSeq == Seq(5L))
+    assert(s.currentSeq == 5L)
+    assert(s.graph.twins.filter(col("dt_id") === "n2")
+      .select(get_json_object(col("properties"), "$.temperature").cast("double"))
+      .head().getDouble(0) == 20.0)
+  }
 }
