@@ -66,13 +66,6 @@ object Blocks {
         .flatMap(s => scala.util.Try(s.toLong).toOption)
         .getOrElse(targetBytes)
     if (target <= 0) return df.localCheckpoint(eager = true)
-    if (sys.env.get("SPARK_GRAFT_CKPT_TRACE").contains("1")) {
-      val t0 = System.nanoTime()
-      val nodes = df.queryExecution.optimizedPlan.collect { case p => p }.size
-      val st = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      println(f"[ckpt-trace] nodes=$nodes bits=${st.bitLength} " +
-        f"statsMs=${(System.nanoTime() - t0) / 1e6}%.1f")
-    }
     val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val sentinel = BigInt(spark.sessionState.conf.defaultSizeInBytes)
     import org.apache.spark.sql.graftbridge.CheckpointStats
@@ -103,8 +96,6 @@ object Blocks {
     CheckpointStats.materializedInfo(ck) match {
       case Some((bytes, cur)) =>
         val parts = math.max(1L, (bytes + target - 1) / target).toInt
-        if (sys.env.get("SPARK_GRAFT_CKPT_TRACE").contains("1"))
-          println(s"[ckpt-trace]   post-hoc bytes=$bytes cur=$cur parts=$parts")
         if (parts.toLong * 2 <= cur) {
           val ck2 = CheckpointStats.withMaterializedStats(
             ck.coalesce(parts).localCheckpoint(eager = true))

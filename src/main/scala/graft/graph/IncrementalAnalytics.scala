@@ -1,8 +1,9 @@
 package graft.graph
 
 import graft.core.Blocks.CompactCheckpointOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.Blocks
 
@@ -485,8 +486,8 @@ object IncrementalAnalytics {
     * chain's keys touch. Construction clears any torn `v{target}` a
     * crashed prior attempt left (the pointer never moved, so it is
     * garbage and the recompute is deterministic). */
-  private[graft] final class StateCommit(spark: SparkSession,
-      stateDir: String, target: Long) {
+  private[graft] final class StateCommit(val spark: SparkSession,
+      val stateDir: String, target: Long) {
     val v: Long = StateStore.readPointer(stateDir)
     val k: Int = StateStore.bucketCount(stateDir)
     // free the PREVIOUS batch's folded blocks now, not at its commit: a
@@ -575,7 +576,7 @@ object IncrementalAnalytics {
     }
   }
 
-  private object StateCommit {
+  private[graft] object StateCommit {
     /** Chain length at which a table's deltas fold back into its buckets.
       * The chain fold on reads is cheap (deltas are cone-sized) while
       * every compaction pays a rewrite of all chain-touched buckets, so a
@@ -655,25 +656,18 @@ object IncrementalAnalytics {
     *    forward by reference (an empty result carries them all).
     *  - the frames it wants freed: every checkpoint it makes is handed to
     *    `c.own` as it is made, so the driver frees it even if the fold
-    *    throws. */
-  private[graft] final class Maintainer(val tables: Seq[(String, Seq[String])])(
+    *    throws.
+    *  - `local`: the optional driver-side fold of a batch under the size
+    *    class ([[LocalCommit]]), with the same deltas as `fold`; None
+    *    from it declines, and `fold` runs instead. */
+  private[graft] final class Maintainer(val tables: Seq[(String, Seq[String])],
+      val local: Option[LocalFold] = None)(
       val fold: (StateCommit, DataFrame, DataFrame) => Seq[Delta])
 
   /** The one stream driver every maintainer runs on: `foreachBatch` over
     * the mutation-log STREAM (A9) folds each micro-batch of CDC rows into
-    * the at-rest state — `op.fold` for the analytic, [[relsDelta]] for
-    * the carried relationship table — written as version v(batch+1) and
-    * committed by an atomic pointer move ([[StateCommit]]).
-    *
-    * Crash contract: a batch replayed after a crash either finds the
-    * pointer still at its predecessor (recompute: the same deterministic
-    * output overwrites the torn `v{target}` the failed attempt left) or
-    * already advanced (skip — the fold is NOT applied twice). Restart
-    * resumes from the streaming checkpoint; state versions are keyed by
-    * batch id, so resume and replay compose. The batch's checkpoints —
-    * `m`, `latest`, the fold's owned frames and, when the batch never
-    * commits, its folded state reads — are freed in a `finally`, so a
-    * fold that throws leaks nothing. */
+    * the at-rest state ([[foldBatch]]), written as version v(batch+1) and
+    * committed by an atomic pointer move ([[StateCommit]]). */
   private[graft] def maintainStream(spark: SparkSession, mutationsDir: String,
       stateDir: String, checkpointDir: String, op: Maintainer,
       readOptions: Map[String, String] = Map.empty): StreamingQuery =
@@ -684,21 +678,195 @@ object IncrementalAnalytics {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = batchId + 1
-        if (StateStore.readPointer(stateDir) < target) {
-          val c = new StateCommit(batch.sparkSession, stateDir, target)
-          try {
+        foldBatch(stateDir, op, batch, batchId)
+      }
+      .start()
+
+  /** One micro-batch of [[maintainStream]]: `op`'s deltas for its tables
+    * and [[relsDelta]] for the carried relationship table, committed as
+    * version `batchId + 1`.
+    *
+    * Size class: when `op` has a local fold and the batch is at most
+    * [[LocalGraph.maxEdges]] rows, the batch is collected once
+    * ([[LocalBatch]]) and folded on the driver; every state read of the
+    * local fold is a bounded collect under the same cutoff, and over it
+    * the fold declines before writing anything. A declined or over-cutoff
+    * batch, and a maintainer without a local fold, take the distributed
+    * fold over the checkpointed batch. Both paths write the same delta
+    * rows through the same [[StateCommit]].
+    *
+    * Crash contract (both paths): a batch replayed after a crash either
+    * finds the pointer still at its predecessor (recompute: the same
+    * deterministic output overwrites the torn `v{target}` the failed
+    * attempt left) or already advanced (skip — the fold is NOT applied
+    * twice). Restart resumes from the streaming checkpoint; state
+    * versions are keyed by batch id, so resume and replay compose. The
+    * distributed path's checkpoints — `m`, `latest`, the fold's owned
+    * frames and, when the batch never commits, its folded state reads —
+    * are freed in a `finally`, so a fold that throws leaks nothing; the
+    * local path makes none. */
+  private[graft] def foldBatch(stateDir: String, op: Maintainer,
+      batch: DataFrame, batchId: Long): Unit = {
+    val target = batchId + 1
+    if (StateStore.readPointer(stateDir) < target) {
+      val c = new StateCommit(batch.sparkSession, stateDir, target)
+      try {
+        val lc = new LocalCommit(c)
+        val local = for {
+          f <- op.local
+          b <- LocalBatch.collect(batch, lc.cutoff)
+          deltas <- f(lc, b)
+        } yield deltas :+ b.relsDelta
+        local match {
+          case Some(deltas) =>
+            deltas.foreach(lc.write)
+            op.tables.map(_._1).diff(deltas.map(_.table)).foreach(c.carry)
+          case None =>
             val m = c.own(batch.compactCheckpoint())
             val latest = c.own(latestRelMutations(m).compactCheckpoint())
             val deltas = op.fold(c, m, latest)
             deltas.foreach { case (t, up, tomb) => c.chainDelta(t, up, tomb) }
             op.tables.map(_._1).diff(deltas.map(_._1)).foreach(c.carry)
             relsDelta(c, latest)
-            c.commit()
-          } finally c.release()
         }
+        c.commit()
+      } finally c.release()
+    }
+  }
+
+  // ---------------- the driver-local batch path ----------------
+
+  /** A relationship row: a relationship state row (`alive`), or the final
+    * state of a key a batch touched ([[LocalBatch]]). */
+  private[graft] final case class Rel(source: String, id: String,
+      target: String, name: String, alive: Boolean) {
+    def key: (String, String) = (source, id)
+    def pair: (String, String) = (source, target)
+  }
+
+  private def ends(pairs: Iterable[(String, String)]): Set[String] =
+    pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+
+  private val RelsSchema = StructType(RelsCols.map(StructField(_, StringType)))
+
+  /** A micro-batch on the driver: [[latestRelMutations]] keyed by
+    * (source_id, relationship_id) and [[latestTwinMutations]] keyed by
+    * dt_id, the same last-writer-wins folds. */
+  private[graft] final case class LocalBatch(rels: Map[(String, String), Rel],
+      twins: Map[String, Boolean]) {
+    def alive: Iterable[Rel] = rels.values.filter(_.alive)
+    /** Is `r`'s key one the batch touched (so its state row is stale)? */
+    def touches(r: Rel): Boolean = rels.contains(r.key)
+    def sources: Set[String] = rels.keySet.map(_._1)
+    def born: Set[String] = twins.collect { case (t, true) => t }.toSet
+    def dead: Set[String] = twins.collect { case (t, false) => t }.toSet
+    /** [[relsDelta]] of the batch. */
+    def relsDelta: LocalDelta = LocalDelta("rels", RelsSchema,
+      alive.map(r => Row(r.id, r.source, r.target, r.name)).toSeq,
+      rels.values.filterNot(_.alive).map(r => Row(r.source, r.id)).toSeq)
+  }
+
+  private[graft] object LocalBatch {
+    /** Collect `batch` (one bounded collect, the JSON fields extracted by
+      * the same `get_json_object` paths as [[latestRelMutations]]) and
+      * fold it. None over the cutoff, and for a row with a null key,
+      * endpoint, sequence or event type: those keep the distributed
+      * path's null semantics. */
+    def collect(batch: DataFrame, cutoff: Long): Option[LocalBatch] = {
+      val doc = coalesce(col("new_json"), col("old_json"))
+      def field(f: String) = get_json_object(doc, s"$$['$$$f']")
+      LocalGraph.collectBounded(batch
+        .filter(col("entity_kind").isin("Relationship", "Twin"))
+        .select(col("seq"), col("entity_kind"), col("entity_id"),
+          col("event_type"), field("sourceId"), field("relationshipId"),
+          field("targetId"), field("relationshipName"))
+        .coalesce(1), cutoff).flatMap { rows =>
+        val (rs, ts) = rows.partition(_.getString(1) == "Relationship")
+        if (rs.exists(r => (Seq(0, 3) ++ (4 to 7)).exists(r.isNullAt)) ||
+            ts.exists(r => Seq(0, 2, 3).exists(r.isNullAt))) None
+        else Some(LocalBatch(
+          rs.groupBy(r => (r.getString(4), r.getString(5))).map {
+            case (k, g) =>
+              val r = g.maxBy(_.getLong(0))
+              k -> Rel(r.getString(4), r.getString(5), r.getString(6),
+                r.getString(7), r.getString(3) != "RelationshipDelete")
+          },
+          ts.groupBy(_.getString(2)).map { case (t, g) =>
+            t -> (g.maxBy(_.getLong(0)).getString(3) != "TwinDelete")
+          }))
       }
-      .start()
+    }
+  }
+
+  /** One state table's delta from a local fold: upsert rows in `schema`'s
+    * field order and tombstone rows of the table's key columns. */
+  private[graft] final case class LocalDelta(table: String,
+      schema: StructType, upserts: Seq[Row], tombstones: Seq[Row])
+
+  private[graft] type LocalFold =
+    (LocalCommit, LocalBatch) => Option[Seq[LocalDelta]]
+
+  /** The driver-side view of a [[StateCommit]] a local fold works
+    * through: bounded, chain-folded reads of state rows and the delta
+    * write. Reads bucket-prune on the key column with the driver-side
+    * [[StateStore.bucketOfKey]]; a table's delta chain rides along with
+    * its first read and is folded here (newest version per key wins). */
+  private[graft] final class LocalCommit(state: StateCommit) {
+    val cutoff: Long = LocalGraph.maxEdges(state.spark)
+    private val chains =
+      scala.collection.mutable.Map[String, Map[Seq[Any], Option[Row]]]()
+
+    /** `table`'s rows whose value in any of `cols` (string columns) is in
+      * `values`, projected to `schema`'s fields. None — decline — over the
+      * cutoff, or when a row holds a null. */
+    def rows(table: String, schema: StructType, cols: Seq[String],
+        values: Set[String]): Option[Seq[Row]] = {
+      val stored = StateStore.tableSchema(state.stateDir, table)
+      val keys = StateStore.tableKeys(state.stateDir, table)
+      val fresh = !chains.contains(table)
+      if (values.isEmpty) Some(Nil)
+      else StateStore.collectRows(state.spark, state.stateDir, state.v,
+        table,
+        if (cols != keys.take(1)) 0 until state.k
+        else values.toSeq.map(StateStore.bucketOfKey(_, state.k)),
+        cols.map(c => col(c).isin(values.toSeq: _*)).reduce(_ || _),
+        fresh, cutoff).flatMap { raw =>
+        val tomb = stored.size
+        def key(r: Row) = keys.map(k => r.get(stored.fieldIndex(k)))
+        val (base, chainRows) = raw.partition(_.getLong(tomb + 1) < 0)
+        if (fresh) chains(table) = chainRows.groupBy(key).map { case (k, g) =>
+          val last = g.maxBy(_.getLong(tomb + 1))
+          k -> (if (last.getBoolean(tomb)) None else Some(last))
+        }
+        val chain = chains(table)
+        val hit = cols.map(stored.fieldIndex)
+        val out = (base.iterator.filterNot(r => chain.contains(key(r))) ++
+            chain.valuesIterator.flatten.filter(r =>
+              hit.exists(i => values.contains(r.getString(i)))))
+          .map(r => Row.fromSeq(schema.fieldNames.toSeq
+            .map(f => r.get(stored.fieldIndex(f)))))
+          .toSeq
+        if (out.exists(r => (0 until r.length).exists(r.isNullAt))) None
+        else Some(out)
+      }
+    }
+
+    def rels(cols: Seq[String], values: Set[String]): Option[Seq[Rel]] =
+      rows("rels", RelsSchema, cols, values).map(_.map(r =>
+        Rel(r.getString(1), r.getString(0), r.getString(2), r.getString(3),
+          alive = true)))
+
+    /** Write `d` through [[StateCommit.chainDelta]]; no rows is a carry. */
+    def write(d: LocalDelta): Unit =
+      if (d.upserts.isEmpty && d.tombstones.isEmpty) state.carry(d.table)
+      else {
+        val keys = StateStore.tableKeys(state.stateDir, d.table)
+        def frame(rows: Seq[Row], schema: StructType) =
+          state.spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        state.chainDelta(d.table, frame(d.upserts, d.schema),
+          frame(d.tombstones, StructType(keys.map(d.schema(_)))))
+      }
+  }
 
   /** The bucket-pruned `rels` probe of a batch: every touched key's rows
     * live in its source bucket, so this is the complete old-row set. */
@@ -1209,6 +1377,127 @@ object IncrementalAnalytics {
       KTruss.peel(re.select(col("source_id").as("src"),
         col("target_id").as("dst")), k, rounds))
 
+  // ---------------- local folds (degrees, components, k-core) ----------
+
+  private val DegreesSchema = StructType(StructField("dt_id", StringType) +:
+    Seq("out_degree", "in_degree", "degree").map(StructField(_, LongType)))
+  private val ComponentsSchema = StructType(
+    Seq("dt_id", "component").map(StructField(_, StringType)))
+  private val KcoreSchema = StructType(Seq(StructField("node", StringType)))
+
+  /** [[Maintainer.degrees]] on the driver: the touched keys' old rows from
+    * their source buckets, the dirty nodes' degree rows from theirs, and
+    * [[refreshDegrees]]' arithmetic over them. */
+  private val localDegrees: LocalFold = (lc, b) => for {
+    probe <- lc.rels(Seq("source_id"), b.sources)
+    oldRows = probe.filter(b.touches)
+    dirty = ends(oldRows.map(_.pair)) ++ ends(b.alive.map(_.pair)) ++
+      b.twins.keySet
+    base <- lc.rows("degrees", DegreesSchema, Seq("dt_id"), dirty)
+  } yield {
+    val delta = scala.collection.mutable.Map[String, (Long, Long)]()
+      .withDefaultValue((0L, 0L))
+    def add(rs: Iterable[Rel], sign: Long): Unit = rs.foreach { r =>
+      val (o, i) = delta(r.source); delta(r.source) = (o + sign, i)
+      val (o2, i2) = delta(r.target); delta(r.target) = (o2, i2 + sign)
+    }
+    add(oldRows, -1L); add(b.alive, 1L)
+    val was = base.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    val universe = (was.keySet -- b.dead) ++ (b.born -- was.keySet)
+    val up = universe.toSeq.map { n =>
+      val (o, i) = was.getOrElse(n, (0L, 0L))
+      val (dOut, dIn) = delta(n)
+      Row(n, o + dOut, i + dIn, o + dOut + i + dIn)
+    }
+    Seq(LocalDelta("degrees", DegreesSchema, up,
+      (dirty -- universe).toSeq.map(Row(_))))
+  }
+
+  /** [[Maintainer.components]] on the driver ([[componentsParts]]): the
+    * touched nodes' labels from their buckets, the affected components'
+    * members from one filtered scan, their new edges from the members'
+    * source buckets, and [[LocalGraph.componentLabelsAny]] — the solve
+    * [[graft.pipeline.Dedup.components]] bottoms out in — over them. */
+  private val localComponents: LocalFold = (lc, b) => for {
+    probe <- lc.rels(Seq("source_id"), b.sources)
+    touched = ends(probe.filter(b.touches).map(_.pair)) ++
+      ends(b.alive.map(_.pair)) ++ b.twins.keySet
+    labelled <- lc.rows("components", ComponentsSchema, Seq("dt_id"), touched)
+    members <- lc.rows("components", ComponentsSchema, Seq("component"),
+      labelled.map(_.getString(1)).toSet)
+    memberIds = members.map(_.getString(0)).toSet
+    sub = memberIds ++ b.born ++ ends(b.alive.map(_.pair)) -- b.dead
+    subRels <- lc.rels(Seq("source_id"), sub)
+  } yield {
+    val pairs = (subRels.filterNot(b.touches) ++
+        b.alive.filter(r => sub(r.source)))
+      .map(r => (r.source: AnyRef, r.target: AnyRef)).toArray
+    val label = LocalGraph.componentLabelsAny(pairs, (x, y) =>
+      LocalGraph.utf8Lt(x.asInstanceOf[String], y.asInstanceOf[String])).toMap
+    Seq(LocalDelta("components", ComponentsSchema,
+      sub.toSeq.map(n => Row(n, label.getOrElse(n, n))),
+      (memberIds -- sub).toSeq.map(Row(_))))
+  }
+
+  /** [[Maintainer.kcore]] on the driver ([[kcoreParts]]): the changed
+    * pairs from the touched sources' buckets; the region — the undirected
+    * reach of their endpoints over old ∪ new edges — by a driver-side
+    * frontier with one pruned `rels` read per hop, so only the region's
+    * incident edges are held; then [[LocalGraph.kcoreSurvivors]], the peel
+    * [[KCore.kcore]] bottoms out in, over the region's new edges. Declines
+    * past `maxRounds` hops, where the distributed reach throws. */
+  private def localKcore(k: Int, maxRounds: Int = 200): LocalFold =
+    (lc, b) => lc.rels(Seq("source_id"), b.sources).flatMap { probe =>
+      val newPairs = b.alive.map(_.pair).toSet
+      val candidates =
+        probe.filter(b.touches).map(_.pair).toSet ++ newPairs
+      val before = probe.map(_.pair).filter(candidates).toSet
+      val after = probe.filterNot(b.touches)
+        .map(_.pair).filter(candidates).toSet ++ newPairs
+      val touched = ends((before -- after) ++ (after -- before))
+      if (touched.isEmpty) Some(Nil)
+      else reach(lc, b, touched, touched, Map.empty, maxRounds).map {
+        case (region, held) =>
+          val sym = (held.valuesIterator.filterNot(b.touches) ++
+              b.alive.iterator)
+            .filter(r => r.source != r.target && region(r.source) &&
+              region(r.target))
+            .flatMap(r => Iterator((r.source, r.target), (r.target, r.source)))
+            .toSet[(AnyRef, AnyRef)].toArray
+          val core = LocalGraph.kcoreSurvivors(sym, k, 1000)
+            .map(_.asInstanceOf[String]).toSet
+          Seq(LocalDelta("kcore", KcoreSchema, core.toSeq.map(Row(_)),
+            (region -- core).toSeq.map(Row(_))))
+      }
+    }
+
+  /** The undirected reach of a k-core region over old ∪ new edges: each
+    * hop reads the old rows incident to `frontier` and adds the batch's
+    * live rows. Returns the region and every old row incident to it;
+    * None over the cutoff or past `hopsLeft` non-empty frontiers. */
+  @scala.annotation.tailrec
+  private def reach(lc: LocalCommit, b: LocalBatch, region: Set[String],
+      frontier: Set[String], held: Map[(String, String), Rel], hopsLeft: Int)
+      : Option[(Set[String], Map[(String, String), Rel])] =
+    if (frontier.isEmpty) Some((region, held))
+    else if (hopsLeft == 0) None
+    else lc.rels(Seq("source_id", "target_id"), frontier) match {
+      case None => None
+      case Some(hop) =>
+        val heldNow = held ++ hop.map(r => r.key -> r)
+        if (heldNow.size > lc.cutoff) None
+        else {
+          val next = (hop.iterator ++ b.alive.iterator)
+            .filter(r => r.source != r.target)
+            .flatMap(r =>
+              (if (frontier(r.source)) Some(r.target) else None) ++
+                (if (frontier(r.target)) Some(r.source) else None))
+            .filterNot(region).toSet
+          reach(lc, b, region ++ next, next, heldNow, hopsLeft - 1)
+        }
+    }
+
   // ---------------- the eight maintainers ----------------
 
   private[graft] object Maintainer {
@@ -1217,8 +1506,8 @@ object IncrementalAnalytics {
       * RESTRICTED to the dirty keys yields exactly their new rows (the
       * upserts); dirty keys it drops (dead twins) are the tombstones.
       * `rels` is only probed, never folded. */
-    val degrees = new Maintainer(Seq("degrees" -> Seq("dt_id")))(
-      (c, m, latest) => {
+    val degrees = new Maintainer(Seq("degrees" -> Seq("dt_id")),
+      Some(localDegrees))((c, m, latest) => {
         val relsProbe = touchedRels(c, latest)
         val oldRows = relsProbe
           .select(col("source_id"), col("relationship_id"), col("target_id"))
@@ -1239,8 +1528,8 @@ object IncrementalAnalytics {
       * (every surviving member of an affected component plus every new
       * node); tombstones = affected-component members with no recomputed
       * row — the batch's dead twins. */
-    val components = new Maintainer(Seq("components" -> Seq("dt_id")))(
-      (c, m, _) => {
+    val components = new Maintainer(Seq("components" -> Seq("dt_id")),
+      Some(localComponents))((c, m, _) => {
         val baseRels = c.table("rels")
         val baseComp = c.table("components")
         val p = componentsParts(baseComp, baseRels, m)
@@ -1295,7 +1584,8 @@ object IncrementalAnalytics {
     /** The k-core survivor set ([[refreshKcore]]): upserts = the region's
       * recomputed survivors; tombstones = region nodes peeled out. */
     def kcore(k: Int): Maintainer =
-      new Maintainer(Seq("kcore" -> Seq("node")))((c, m, _) =>
+      new Maintainer(Seq("kcore" -> Seq("node")),
+        Some(localKcore(k)))((c, m, _) =>
         kcoreParts(c.table("rels"), m, k).toSeq.map(p => c.splice("kcore",
           c.own(p.recomputed.compactCheckpoint()), p.affected)))
 

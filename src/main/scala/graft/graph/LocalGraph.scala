@@ -73,6 +73,20 @@ object LocalGraph {
     if (cutoff >= Int.MaxValue - 1) e.count() > cutoff
     else e.limit(cutoff.toInt + 1).count() > cutoff
 
+  /** Collect a frame when it holds at most `cutoff` rows (None over it,
+    * or when the cutoff is 0): `limit(cutoff + 1).collect()` — the probe
+    * and the collect are one action, and on a single-partition input
+    * (coalesce it) one Spark job. */
+  def collectBounded(df: DataFrame, cutoff: Long)
+      : Option[Array[org.apache.spark.sql.Row]] =
+    if (cutoff <= 0) None
+    else {
+      val rows =
+        if (cutoff >= Int.MaxValue - 1) df.collect()
+        else df.limit(cutoff.toInt + 1).collect()
+      if (rows.length > cutoff) None else Some(rows)
+    }
+
   /** Collect a (string, string) edge frame when its row count is at or
     * under the cutoff; None ⇒ stay distributed. The input should already
     * be materialized (checkpointed) so the probe is a cached-scan job. */

@@ -232,8 +232,6 @@ object Scc {
       val newFrontier = next.filter(col("chg"))
         .select(col("node"), col("lab"))
       moving = newFrontier.count()
-      if (sys.env.get("SPARK_GRAFT_SCC_TRACE").contains("1"))
-        println(s"[scc-trace] round=$round moving=$moving")
       if (frontier ne lab) Blocks.free(frontier)
       Blocks.free(lab)
       lab = next.select(col("node"), col("lab"))

@@ -61,6 +61,16 @@ private[graft] object StateStore {
   def bucketOf(key: Column, k: Int): Column =
     pmod(xxhash64(key), lit(k.toLong)).cast("int")
 
+  /** [[bucketOf]] of one string key, computed on the driver: the same
+    * xxhash64 (seed 42) over the key's UTF-8 bytes and the same pmod, so a
+    * local fold finds a key's bucket without a Spark job. */
+  def bucketOfKey(key: String, k: Int): Int =
+    java.lang.Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        org.apache.spark.unsafe.types.UTF8String.fromString(key),
+        org.apache.spark.sql.types.StringType, 42L),
+      k.toLong).toInt
+
   // ---------------- paths + small JSON sidecars ----------------
 
   private def pointerPath(stateDir: String) =
@@ -102,6 +112,13 @@ private[graft] object StateStore {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(stateDir, "SCHEMAS.json"), node.toString): Unit
   }
+
+  /** `table`'s recorded schema. */
+  def tableSchema(stateDir: String, table: String)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      readSchema(stateDir, table).getOrElse(
+        throw new IllegalStateException(s"no schema recorded for $table")))
 
   private def readSchema(stateDir: String, table: String): Option[String] = {
     val p = java.nio.file.Paths.get(stateDir, "SCHEMAS.json")
@@ -206,6 +223,48 @@ private[graft] object StateStore {
     }
   }
 
+  /** Owner-version column of [[collectRows]]' rows; -1 marks a base row. */
+  private val VersionCol = "__v"
+
+  /** A local fold's read of `table` as of `v`, in ONE bounded collect
+    * ([[LocalGraph.collectBounded]]): the base rows of `buckets` that
+    * match `filter` and, with `chain`, every row of the table's delta
+    * chain. Chain rows are NOT filtered: a chain row supersedes its key's
+    * base row even when only one of the two matches. Each row holds the
+    * table's fields, then [[TombCol]] and [[VersionCol]]; the caller folds
+    * (newest version per key wins). None over the cutoff. The scan runs
+    * as one task per 128 MB of listed input, so a cone-sized read is one
+    * Spark job; no schema inference, since the schema is recorded. */
+  def collectRows(spark: SparkSession, stateDir: String, v: Long,
+      table: String, buckets: Seq[Int], filter: Column, chain: Boolean,
+      cutoff: Long): Option[Array[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.types.BooleanType
+    val schema = tableSchema(stateDir, table)
+    val fields = schema.fieldNames.toSeq.map(col)
+    val base = ownedBucketDirs(spark, stateDir, v, table, buckets).map { ds =>
+      ds -> spark.read.schema(schema).parquet(ds: _*).filter(filter).select(
+        fields :+ lit(false).as(TombCol) :+ lit(-1L).as(VersionCol): _*)
+    }
+    val chainVersions =
+      if (chain) readManifest(stateDir, v)(table).chain else Nil
+    val deltas = chainVersions.map { dv =>
+      val d = deltaDir(stateDir, dv, table)
+      Seq(d) -> spark.read.schema(schema.add(TombCol, BooleanType)).parquet(d)
+        .select(fields :+ col(TombCol) :+ lit(dv).as(VersionCol): _*)
+    }
+    val parts = base ++ deltas
+    if (parts.isEmpty) Some(Array.empty)
+    else {
+      val fs = new org.apache.hadoop.fs.Path(stateDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bytes = parts.flatMap(_._1).map(d =>
+        fs.getContentSummary(new org.apache.hadoop.fs.Path(d)).getLength).sum
+      val tasks = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20))
+      LocalGraph.collectBounded(
+        parts.map(_._2).reduce(_ unionByName _).coalesce(tasks.toInt), cutoff)
+    }
+  }
+
   /** The newest chain row per key (tombstones kept, flagged). */
   private def chainLatest(spark: SparkSession, stateDir: String,
       table: String, chain: Seq[Long], keys: Seq[String]): DataFrame = {
@@ -228,24 +287,29 @@ private[graft] object StateStore {
     * discovery off and make the scan physically pruned. */
   def readBase(spark: SparkSession, stateDir: String, v: Long,
       table: String, buckets: Seq[Int]): DataFrame = {
-    val man = readManifest(stateDir, v)(table).buckets
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val byOwner = buckets.distinct.sorted
-      .map(b => (man(b), b)).groupBy(_._1)
-    val frames = byOwner.toSeq.sortBy(_._1).flatMap { case (owner, bs) =>
-      val paths = bs.map { case (_, b) => bucketDir(stateDir, owner, table, b) }
-        .filter { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf).exists(hp)
-        }
-      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-    }
+    val frames = ownedBucketDirs(spark, stateDir, v, table, buckets)
+      .map(paths => spark.read.parquet(paths: _*))
     if (frames.isEmpty)
       // every named bucket is empty: an empty frame with the table schema
       // read from ANY existing bucket of the table, or the schema sidecar
       // when the whole table is empty everywhere
       emptyLike(spark, stateDir, v, table)
     else frames.reduce(_ unionByName _)
+  }
+
+  /** The existing dirs of `buckets` as of `v`, one non-empty group per
+    * owning version (absent dirs are empty buckets). */
+  private def ownedBucketDirs(spark: SparkSession, stateDir: String, v: Long,
+      table: String, buckets: Seq[Int]): Seq[Seq[String]] = {
+    val man = readManifest(stateDir, v)(table).buckets
+    val fs = new org.apache.hadoop.fs.Path(stateDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    buckets.distinct.sorted.groupBy(man).toSeq.sortBy(_._1)
+      .map { case (owner, bs) =>
+        bs.map(b => bucketDir(stateDir, owner, table, b))
+          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+      }
+      .filter(_.nonEmpty)
   }
 
   private def emptyLike(spark: SparkSession, stateDir: String, v: Long,
@@ -313,9 +377,7 @@ private[graft] object StateStore {
   def writeChainDelta(spark: SparkSession, stateDir: String, v: Long,
       table: String, upserts: DataFrame, tombstoneKeys: DataFrame,
       keys: Seq[String], prev: TableState): Option[(TableState, Long)] = {
-    val ddl = readSchema(stateDir, table).getOrElse(
-      throw new IllegalStateException(s"no schema recorded for $table"))
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    val schema = tableSchema(stateDir, table)
     val tombs = tombstoneKeys.select(
       schema.fields.map { f =>
         if (keys.contains(f.name)) col(f.name)
@@ -364,14 +426,32 @@ private[graft] object StateStore {
     while (it.hasNext) {
       val f = it.next()
       if (f.getPath.getName.endsWith(".parquet")) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try n += r.getRecordCount finally r.close()
+        val key = (f.getPath.toString, f.getLen, f.getModificationTime)
+        n += footerRows.synchronized(Option(footerRows.get(key)))
+          .map(_.longValue).getOrElse {
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromStatus(f, conf)
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            val rows = try r.getRecordCount finally r.close()
+            footerRows.synchronized(footerRows.put(key, rows))
+            rows
+          }
       }
     }
     n
   }
+
+  /** Footer row counts by (file, length, modification time), a bounded
+    * LRU: committed bucket files are never rewritten, so the per-commit
+    * [[baseRowCount]] opens only footers it has not seen — re-opening
+    * all K base footers cost about 0.3 s per table per batch on a 4-core
+    * host. */
+  private val footerRows =
+    new java.util.LinkedHashMap[(String, Long, Long), java.lang.Long](
+        256, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, Long, Long), java.lang.Long]): Boolean = size() > 4096
+    }
 
   /** Fold `table`'s chain back into its bucketed base at version `v`:
     * rewrite ONLY the buckets containing any chain key (one file per

@@ -248,9 +248,6 @@ object Dedup {
           val thr = knob("spark.graft.wideagg.repartBytes",
               "SPARK_GRAFT_WIDEAGG_REPART_BYTES")
             .map(BigInt(_)).getOrElse(BigInt(8L << 20))
-          if (sys.env.get("SPARK_GRAFT_DEBUG_STATS").contains("1"))
-            println(s"[wideagg] input stats=$bytes threshold=$thr " +
-              s"repartition=${bytes >= thr}")
           bytes >= thr
       }
     if (repartition) ids.repartition(col("doc")) else ids

@@ -312,6 +312,59 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     assert(got == expect, s"replay != batch recompute\ngot:    $got\nexpect: $expect")
   }
 
+  test("a local fold that throws after its first delta leaves the pointer, leaks nothing, and replays") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-incr-torn-local").toString
+    val mutDir = s"$dir/mutations"
+    val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "c", "a"))
+    val batch = muts((1L, "D", "r2", "b", "c"), (2L, "C", "r4", "a", "c"),
+      (3L, "C", "r5", "c", "b"))
+    batch.write.mode("append").parquet(mutDir)
+    def state(name: String): String = {
+      val s = s"$dir/$name"
+      new java.io.File(s).mkdirs()
+      IncrementalAnalytics.initDegreesState(s, batchDegrees(base), base)
+      s
+    }
+    // the real local degrees fold, but the batch dies after its FIRST
+    // table delta landed in v1 and before the commit
+    val degrees = IncrementalAnalytics.Maintainer.degrees
+    val torn = new IncrementalAnalytics.Maintainer(degrees.tables,
+      degrees.local.map(f => (lc, b) => f(lc, b).map { deltas =>
+        lc.write(deltas.head)
+        throw new IllegalStateException("injected local fold failure")
+      }))(degrees.fold)
+    val stateDir = state("state")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val q1 = IncrementalAnalytics.maintainStream(spark, mutDir, stateDir,
+      s"$dir/cp", torn)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.awaitTermination(60000))
+    assert(err.getMessage.contains("injected local fold failure"), err.getMessage)
+    assert(StateStore.readPointer(stateDir) == 0L)
+    assert(new java.io.File(s"$stateDir/v1/degrees").isDirectory,
+      "the failed attempt should have left a torn v1 behind")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs still registered after the failed batch: $leaked")
+    // restart with the real maintainer: batch 0 replays over the torn v1
+    val q2 = IncrementalAnalytics.maintainDegreesStream(
+      spark, mutDir, stateDir, s"$dir/cp")
+    q2.awaitTermination(60000)
+    assert(q2.exception.isEmpty)
+    assert(StateStore.readPointer(stateDir) == 1L)
+    // ... to exactly the state the distributed fold commits
+    val distDir = state("dist")
+    spark.conf.set("spark.graft.graph.localSolveMaxEdges", "0")
+    try IncrementalAnalytics.maintainDegreesStream(spark, mutDir, distDir,
+      s"$dir/cp-dist").awaitTermination(60000)
+    finally spark.conf.unset("spark.graft.graph.localSolveMaxEdges")
+    for (t <- Seq("degrees", "rels")) {
+      def rows(s: String) = IncrementalAnalytics.current(spark, s, t)
+        .collect().map(_.toString).toSet
+      assert(rows(stateDir) == rows(distDir),
+        s"$t: replay != distributed fold")
+    }
+  }
+
   test("refreshRanks restricts the contribution join to the affected cone") {
     val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "x", "y"))
     val m = muts((1L, "C", "r5", "c", "a"))
