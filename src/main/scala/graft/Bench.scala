@@ -178,6 +178,10 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Freeing a local checkpoint on purpose (core.Blocks.free) warns on
+    // every call; the same rule as src/test/resources/log4j2.properties.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     def warm(step: String)(body: => Unit): Unit =
       try body catch {
         case e: Throwable =>

@@ -14,6 +14,10 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Freeing a local checkpoint on purpose (core.Blocks.free) warns on
+    // every call; the same rule as src/test/resources/log4j2.properties.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     // A query that throws must surface as a FAIL row in the driver's
     // compare, never as a silent absence (r8/r9 shipped all-green

@@ -1506,8 +1506,8 @@ final class AdtPlanner(graph: TwinGraph) {
     * persisted frames), property access is an O(1) `variant_get` against
     * cached variant binary — the JSON parse was paid ONCE at cache fill.
     * The JSON-string route re-parses the full document once PER property
-    * per operator (filters don't subexpression-eliminate, measured in
-    * Profile propscan), which at 100 TB is k full passes over the scan's
+    * per operator (filters don't subexpression-eliminate; measured in
+    * SCALING.md), which at 100 TB is k full passes over the scan's
     * heaviest column for a k-property predicate. String-rendering parity
     * between the routes is spec-pinned (VariantPropSpec) for scalars and
     * arrays; values that may EMBED AN OBJECT (rendered value contains
@@ -1515,13 +1515,11 @@ final class AdtPlanner(graph: TwinGraph) {
     * variant renders object fields name-sorted/re-spaced, and user-visible
     * output must not change with the access route (ADVICE r17). The
     * fallback evaluates lazily inside the when(), so scalar-only scans
-    * never pay a re-parse. `spark.graft.props.variant=false` forces the
-    * get_json_object route throughout. */
-  private val variantProps: Boolean = // strict: conf read at construction
+    * never pay a re-parse. A graph without the column (both frames must
+    * carry it) takes the get_json_object route throughout. */
+  private val variantProps: Boolean =
     graph.twins.columns.contains("properties_v") &&
-      graph.relationships.columns.contains("properties_v") &&
-      graph.twins.sparkSession.conf
-        .get("spark.graft.props.variant", "true").toBoolean
+      graph.relationships.columns.contains("properties_v")
   private def jsonProp(entity: String, path: List[String]): Column =
     if (variantProps) {
       val jp = "$" + path.map(p => s"['$p']").mkString
@@ -1536,15 +1534,9 @@ final class AdtPlanner(graph: TwinGraph) {
     * once, consistent with [[jsonProp]]; the JSON-string kernel
     * ([[graft.functions.JsonTypeOf]]) re-parses the document per call.
     * Total-boolean semantics (reference plpgsql helpers RETURN false on
-    * missing, GraphInitialization.cs:186-235) live in [[typeIsCol]].
-    * `spark.graft.typeof.variant=false` pins the Jackson kernel for THIS
-    * family alone (the Profile `typeofcost` A/B knob — property access
-    * keeps its own `spark.graft.props.variant` routing). */
-  private val variantTypeof: Boolean = variantProps &&
-    graph.twins.sparkSession.conf
-      .get("spark.graft.typeof.variant", "true").toBoolean
+    * missing, GraphInitialization.cs:186-235) live in [[typeIsCol]]. */
   private def typeOfCol(ent: String, path: List[String]): Column =
-    if (variantTypeof)
+    if (variantProps)
       JsonFunctions.variantTypeOf(col(s"${ent}__properties_v"), path)
     else JsonFunctions.json_type_of(docCol(ent), path.mkString("."))
   private def typeIsCol(ent: String, path: List[String], t: String): Column =

@@ -43,10 +43,8 @@ object Blocks {
     * The estimate is Catalyst's `optimizedPlan.stats.sizeInBytes` — free
     * (no job). Frames whose size the planner cannot bound report the
     * `defaultSizeInBytes` sentinel and keep their partitioning, the safe
-    * side at scale. Tune with `spark.graft.ckpt.targetBytes` (or env
-    * `SPARK_GRAFT_CKPT_TARGET_BYTES`); `0` disables compaction. The
-    * default 64 MB mirrors AQE's advisory partition size, so the knob is
-    * a size class, not a core count.
+    * side at scale. [[CkptTargetBytes]] (64 MB) mirrors AQE's advisory
+    * partition size, so the target is a size class, not a core count.
     *
     * Semantics: partitioning only — every caller is a join/aggregation
     * consumer, so results are bit-identical on any layout. */
@@ -57,15 +55,10 @@ object Blocks {
     def compactCheckpoint(): DataFrame = Blocks.compactCheckpoint(df)
   }
 
-  def compactCheckpoint(df: DataFrame, targetBytes: Long = 64L << 20)
-      : DataFrame = {
+  private val CkptTargetBytes: Long = 64L << 20
+
+  def compactCheckpoint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val target: Long =
-      spark.conf.getOption("spark.graft.ckpt.targetBytes")
-        .orElse(sys.env.get("SPARK_GRAFT_CKPT_TARGET_BYTES"))
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .getOrElse(targetBytes)
-    if (target <= 0) return df.localCheckpoint(eager = true)
     val stats = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val sentinel = BigInt(spark.sessionState.conf.defaultSizeInBytes)
     import org.apache.spark.sql.graftbridge.CheckpointStats
@@ -89,13 +82,14 @@ object Blocks {
     val ck = CheckpointStats.withMaterializedStats(
       if (stats >= sentinel) df.localCheckpoint(eager = true)
       else {
-        val parts = ((stats + target - 1) / target)
+        val parts = ((stats + CkptTargetBytes - 1) / CkptTargetBytes)
           .max(BigInt(1)).min(BigInt(1 << 20)).toInt
         df.coalesce(parts).localCheckpoint(eager = true)
       })
     CheckpointStats.materializedInfo(ck) match {
       case Some((bytes, cur)) =>
-        val parts = math.max(1L, (bytes + target - 1) / target).toInt
+        val parts =
+          math.max(1L, (bytes + CkptTargetBytes - 1) / CkptTargetBytes).toInt
         if (parts.toLong * 2 <= cur) {
           val ck2 = CheckpointStats.withMaterializedStats(
             ck.coalesce(parts).localCheckpoint(eager = true))

@@ -175,19 +175,10 @@ object GraphViews {
       // where the JSON-string route re-parses the full document once PER
       // property per operator (filters don't subexpression-eliminate, so
       // an expression-level parse_json would re-parse k times too —
-      // measured, Profile propscan). At the 100 TB tier the same column
-      // is what a store would shred into parquet at write time.
-      // `spark.graft.props.variant.fill=false` (r18) skips the dual-write
-      // for property-free sessions: the fill costs ~0.1 s/gate at sf0.1
-      // when a bench drops session state between gates (judge A/B r17),
-      // and a workload that never reads properties shouldn't pay it —
-      // without the column the planner's variant route disables itself.
-      val fill = spark.conf
-        .get("spark.graft.props.variant.fill", "true").toBoolean
+      // measured in SCALING.md). At the 100 TB tier the same column is
+      // what a store would shred into parquet at write time.
       def withVariant(df: org.apache.spark.sql.DataFrame) =
-        if (fill) df.withColumn("properties_v",
-          try_parse_json(col("properties")))
-        else df
+        df.withColumn("properties_v", try_parse_json(col("properties")))
       TwinGraph(
         withVariant(twins(spark, dir))
           .persist(StorageLevel.MEMORY_AND_DISK),

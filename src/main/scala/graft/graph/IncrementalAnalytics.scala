@@ -896,18 +896,6 @@ object IncrementalAnalytics {
   def currentComponents(spark: SparkSession, stateDir: String): DataFrame =
     current(spark, stateDir, "components")
 
-  /** `history` is the per-iteration ranks of the last full run
-    * ([[PageRank.ranksHistory]]). */
-  def initRanksState(stateDir: String, history: IndexedSeq[DataFrame],
-      baseRels: DataFrame, buckets: Int = StateStore.DefaultBuckets): Unit =
-    initState(stateDir, Maintainer.ranks(history.size), baseRels, history,
-      buckets)
-  def maintainRanksStream(spark: SparkSession, mutationsDir: String,
-      stateDir: String, checkpointDir: String, iterations: Int,
-      readOptions: Map[String, String] = Map.empty): StreamingQuery =
-    maintainStream(spark, mutationsDir, stateDir, checkpointDir,
-      Maintainer.ranks(iterations), readOptions)
-
   def initKcoreState(stateDir: String, baseCore: DataFrame,
       baseRels: DataFrame, buckets: Int = StateStore.DefaultBuckets): Unit =
     // k does not shape the state, only the fold

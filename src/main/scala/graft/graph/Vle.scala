@@ -22,12 +22,16 @@ object Vle {
     * [[TrailEnumRowBudget]] rows — so open-ended ranges ('*2..' parses to
     * 2..30) are exact on all but adversarially cyclic graphs, where the
     * frontier explodes combinatorially and the run is truncated with a
-    * driver-log warning instead of silently. Both knobs are configurable:
+    * driver-log warning instead of silently. Both bound the resources one
+    * user query may use, so both are configurable:
     * `spark.graft.vle.trailEnumDepthCap` / `spark.graft.vle.trailEnumRowBudget`. */
   val TrailEnumDepthCap = 8
 
   /** Frontier-row ceiling for trail enumeration beyond the static cap. */
   val TrailEnumRowBudget = 2000000L
+
+  /** Largest static bound [[reachability]] expands as a plain join chain. */
+  private val JoinChainMaxDepth = 3
 
   /** Observed-work telemetry for VLE expansion (SURVEY B20): iteration
     * count + peak frontier rows, recorded by the BFS loop and the trail
@@ -102,7 +106,7 @@ object Vle {
     * pair is "reachable" iff it is reachable at its minimal depth.
     *
     * Two regimes. For small static bounds (maxIter ≤
-    * `spark.graft.vle.joinChainMaxDepth`, default 3) the expansion is a
+    * [[JoinChainMaxDepth]]) the expansion is a
     * plain chain of joins — no persist, no per-iteration checkpoint, no
     * isEmpty probes: Catalyst plans the whole thing as one job, which is
     * both the fastest local plan and the one you'd want on a cluster (the
@@ -119,9 +123,7 @@ object Vle {
       maxIter: Int = 100, checkpointEvery: Int = 3,
       sourceIds: Option[Seq[String]] = None,
       sourceDf: Option[DataFrame] = None): DataFrame = {
-    val chainCap = edges.sparkSession.conf
-      .get("spark.graft.vle.joinChainMaxDepth", "3").toInt
-    if (maxIter <= chainCap)
+    if (maxIter <= JoinChainMaxDepth)
       return joinChain(edges, relNames, maxIter, sourceIds, sourceDf)
 
     import graft.core.Blocks

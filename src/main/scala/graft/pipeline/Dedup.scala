@@ -54,6 +54,14 @@ object Dedup {
 
   val P: Long = 2147483647L // 2^31 - 1, Mersenne prime
 
+  /** Estimated input size from which a wide aggregation hash-partitions
+    * by doc first (see [[partitionForWideAgg]]). */
+  private[pipeline] val WideAggRepartBytes: BigInt = BigInt(8L << 20)
+
+  /** blockmgr disk footprint from which a multi-wave LSH run nudges a GC
+    * between waves so shuffle files of finished waves are reclaimed. */
+  private val LshGcMinMb = 1024L
+
   /** Deterministic LCG-style hash parameters, identical in oracle SQL. */
   def hashParams(numHashes: Int): Seq[(Int, Long, Long)] =
     (0 until numHashes).map { i =>
@@ -223,35 +231,20 @@ object Dedup {
     * bytes that fit the page cache either way — r15 paid +50% on
     * `q_dedup_components` at sf0.1 for a fix that only matters from
     * roughly sf10 up. Decide from plan statistics (no job): repartition
-    * when the estimated input size reaches the threshold
-    * (`spark.graft.wideagg.repartBytes` conf, or env
-    * `SPARK_GRAFT_WIDEAGG_REPART_BYTES`). The estimate Catalyst propagates
+    * when the estimated input size reaches [[WideAggRepartBytes]]. The
+    * estimate Catalyst propagates
     * through the shingle projection is ~0.3× the compressed parquet bytes
     * (measured: 170 KB at sf0.1, 2.0 MB at sf1, 21 MB at sf10), so the
-    * default of 8 MB lands between the sf1 and sf10 trees — i.e. skip
+    * threshold of 8 MB lands between the sf1 and sf10 trees — i.e. skip
     * where the r15 bench paid, keep from the tier where inflation is
     * multi-GB. Eagerly-checkpointed inputs (incl. streaming micro-batch
     * state) report their ACTUAL materialized size, so small batches skip
     * too; a genuinely unknown plan reports the `defaultSizeInBytes`
-    * sentinel and chooses repartition — the safe side at scale.
-    * `spark.graft.wideagg.repart` / `SPARK_GRAFT_WIDEAGG_REPART` = `1`|`0`
-    * forces either plan. */
-  private def partitionForWideAgg(ids: DataFrame): DataFrame = {
-    def knob(confKey: String, envKey: String): Option[String] =
-      ids.sparkSession.conf.getOption(confKey).orElse(sys.env.get(envKey))
-    val repartition =
-      knob("spark.graft.wideagg.repart", "SPARK_GRAFT_WIDEAGG_REPART") match {
-        case Some("1") => true
-        case Some("0") => false
-        case _ =>
-          val bytes = ids.queryExecution.optimizedPlan.stats.sizeInBytes
-          val thr = knob("spark.graft.wideagg.repartBytes",
-              "SPARK_GRAFT_WIDEAGG_REPART_BYTES")
-            .map(BigInt(_)).getOrElse(BigInt(8L << 20))
-          bytes >= thr
-      }
-    if (repartition) ids.repartition(col("doc")) else ids
-  }
+    * sentinel and chooses repartition — the safe side at scale. */
+  private def partitionForWideAgg(ids: DataFrame): DataFrame =
+    if (ids.queryExecution.optimizedPlan.stats.sizeInBytes >= WideAggRepartBytes)
+      ids.repartition(col("doc"))
+    else ids
 
   /** LSH band-signature rows (doc, band, sig) from exploded shingle ids:
     * sig = "-"-joined minima of the band's hashes, concatenated in
@@ -350,26 +343,16 @@ object Dedup {
       // accumulates ALL waves' shuffle files, defeating the disk bound
       // waving exists to provide. The nudge is CONDITIONAL (r18): it fires
       // only when the measured blockmgr disk footprint actually crosses
-      // SPARK_GRAFT_LSH_GC_MIN_MB (default 1024), so runs whose shuffle
-      // residue is small never pay a stop-the-world pause on co-tenant
-      // JVMs. SPARK_GRAFT_LSH_GC=0 disables entirely; =1 forces every
-      // wave (the r17 behavior); lowering
+      // [[LshGcMinMb]], so runs whose shuffle residue is small never pay a
+      // stop-the-world pause on co-tenant JVMs; lowering
       // spark.cleaner.periodicGC.interval session-wide remains the
-      // Spark-native alternative.
-      if (waveGroups.size > 1) sys.env.get("SPARK_GRAFT_LSH_GC") match {
-        case Some("0") => ()
-        case Some("1") => System.gc()
-        case _ =>
-          val minMb = sys.env.get("SPARK_GRAFT_LSH_GC_MIN_MB")
-            .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(1024L)
-          // blockMgrDiskMb only sees THIS JVM's blockmgr dirs; on a
-          // non-local master shuffle/spill residue lives on executor
-          // nodes, the measurement reads ~0, and the nudge (whose whole
-          // purpose is bounding shuffle disk) would never fire — fall
-          // back to the unconditional r17 nudge there (r18 advice)
-          if (!l.sparkSession.sparkContext.isLocal ||
-              Dedup.blockMgrDiskMb(l.sparkSession) >= minMb) System.gc()
-      }
+      // Spark-native alternative. blockMgrDiskMb only sees THIS JVM's
+      // blockmgr dirs; on a non-local master shuffle/spill residue lives
+      // on executor nodes, the measurement reads ~0, and the nudge (whose
+      // whole purpose is bounding shuffle disk) would never fire — so a
+      // non-local master nudges every wave (r18 advice).
+      if (waveGroups.size > 1 && (!l.sparkSession.sparkContext.isLocal ||
+          Dedup.blockMgrDiskMb(l.sparkSession) >= LshGcMinMb)) System.gc()
       c
     }
     val candidates =

@@ -181,17 +181,14 @@ object EventQueries {
       // reopened by another process, and the checksum futures were the
       // gate's single largest cost at high core counts (thread dumps:
       // ~40% of state-task samples parked in
-      // ChecksumCheckpointFileManager.awaitResult, r20). Scoped off for
-      // the drains and restored after; spark.graft.stream.ckChecksum=true
-      // keeps them on (e.g. to mirror a production profile).
-      val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      val ckPrev = s.conf.getOption(ckKey)
-      s.conf.set(ckKey, s.conf.getOption("spark.graft.stream.ckChecksum")
-        .orElse(sys.env.get("SPARK_GRAFT_STREAM_CK_CHECKSUM"))
-        .getOrElse("false"))
+      // ChecksumCheckpointFileManager.awaitResult, r20). The drains run in
+      // a child session with them off, so the caller's session conf is
+      // never touched.
+      val ss = s.newSession()
+      ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       def drain(): Unit = {
         val q = graft.streaming.StreamingSessionize.sessions(
-            s.readStream.schema(ev.schema).parquet(s"$dir/in"),
+            ss.readStream.schema(ev.schema).parquet(s"$dir/in"),
             Seq("user_id"), "ts", gapMs = 1800000L, lateness = "1 second")
           .writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -199,18 +196,13 @@ object EventQueries {
           .format("parquet").option("path", s"$dir/out").start()
         q.awaitTermination(300000): Unit
       }
-      try {
-        drain() // all real events in one backlog
-        // sentinel batch: pushes the watermark past every real session
-        s.range(1).select(lit(-1L).as("event_id"),
-            lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
-            lit(-1L).as("user_id"))
-          .write.mode("append").parquet(s"$dir/in")
-        drain() // restart from the checkpoint; flushes the held sessions
-      } finally ckPrev match {
-        case Some(v) => s.conf.set(ckKey, v)
-        case None => s.conf.unset(ckKey)
-      }
+      drain() // all real events in one backlog
+      // sentinel batch: pushes the watermark past every real session
+      s.range(1).select(lit(-1L).as("event_id"),
+          lit("2030-01-01 00:00:00").cast("timestamp").as("ts"),
+          lit(-1L).as("user_id"))
+        .write.mode("append").parquet(s"$dir/in")
+      drain() // restart from the checkpoint; flushes the held sessions
       s.read.parquet(s"$dir/out").filter(col("user_id") >= 0)
         .select(col("user_id"),
           unix_micros(col("session_start")).as("start_us"),

@@ -212,7 +212,7 @@ final class PointReader(conf: Configuration, dir: String,
 
   /** Eagerly read every (file, row-group) key-column page index into the
     * driver cache — the btree inner nodes of this layout, pinned up
-    * front. The r18 PointProfile attributed ~1.8 ms of every COLD lookup
+    * front. An r18 profile (SCALING.md) attributed ~1.8 ms of every COLD lookup
     * to the per-row-group column/offset-index reads; a serving store that
     * preloads them at reader construction pays that once per snapshot
     * instead of once per (lookup × row group). Cost: two small metadata

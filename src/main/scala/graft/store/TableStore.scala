@@ -255,11 +255,8 @@ final class TableTwinStore private (
     * ~13 lookups/s (scheduler-bound) becomes btree-like latency. Keyed by
     * snapshot version: a checkpoint/import that moves the pointer builds
     * fresh readers, so a stale range index can never serve a moved
-    * snapshot (spec-asserted). `spark.graft.store.pointreader=false`
-    * restores the Spark-job probe. */
+    * snapshot (spec-asserted). */
   private var pointReaders: Option[(Int, PointReader, PointReader)] = None
-  private def usePointReader: Boolean =
-    spark.conf.get("spark.graft.store.pointreader", "true").toBoolean
   // Swapping readers after a checkpoint CLOSES the superseded version's
   // persistent file streams; a concurrent lookup mid-fault-in must never
   // observe that close (the default HttpServer executor serializes
@@ -298,10 +295,7 @@ final class TableTwinStore private (
           // pin the page indexes while we already hold the write lock:
           // two small metadata reads per row group now, instead of
           // ~1.8 ms of index reads on every cold lookup (r18 profile)
-          if (spark.conf.get("spark.graft.store.pointreader.preload",
-              "true").toBoolean) {
-            t.preloadPageIndexes(); r.preloadPageIndexes()
-          }
+          t.preloadPageIndexes(); r.preloadPageIndexes()
           pointReaders = Some((version, t, r)); (t, r)
       }
       readerLock.readLock().lock() // downgrade: success path only
@@ -314,19 +308,10 @@ final class TableTwinStore private (
   }
   private def snapTwinDoc(dtId: String): Option[String] =
     if (version == 0) None
-    else if (usePointReader)
-      withReaders(_._1.lookup(Seq(dtId)).headOption)
-    else snapshotGraph().twins
-      .filter(col("dt_id") === dtId).select(col("properties"))
-      .collect().headOption.map(_.getString(0))
+    else withReaders(_._1.lookup(Seq(dtId)).headOption)
   private def snapRelDoc(sourceId: String, relId: String): Option[String] =
     if (version == 0) None
-    else if (usePointReader)
-      withReaders(_._2.lookup(Seq(sourceId, relId)).headOption)
-    else snapshotGraph().relationships
-      .filter(col("source_id") === sourceId && col("relationship_id") === relId)
-      .select(col("properties"))
-      .collect().headOption.map(_.getString(0))
+    else withReaders(_._2.lookup(Seq(sourceId, relId)).headOption)
 
   private def restoreTwinDoc(doc: Option[String]): Unit =
     doc.foreach(d => mem.restoreTwin(Json.parse(d).asInstanceOf[ObjectNode]))
@@ -352,15 +337,11 @@ final class TableTwinStore private (
     val (inTail, rest) = todo.partition(tailTwinDoc(_).isDefined)
     val snap: Map[String, String] =
       if (version == 0 || rest.isEmpty) Map.empty
-      else if (usePointReader)
+      else
         // per-key footer-index reads (no Spark job); batches are capped
         // at 100 (D5), so this stays under the one IN-probe job's latency
         withReaders(rs => rest.flatMap(id => rs._1.lookup(Seq(id))
           .headOption.map(id -> _)).toMap)
-      else snapshotGraph().twins
-        .filter(col("dt_id").isin(rest: _*))
-        .select(col("dt_id"), col("properties"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     inTail.foreach(id => restoreTwinDoc(tailTwinDoc(id).get))
     rest.foreach(id => restoreTwinDoc(snap.get(id)))
     faultedTwins ++= todo
@@ -432,12 +413,7 @@ final class TableTwinStore private (
       var exhausted = false
       while (snap.size < n && !exhausted) {
         val chunk: Seq[String] =
-          if (usePointReader)
-            withReaders(_._1.keysAfter(cur.map(Seq(_)), n)).map(_.head)
-          else snapshotGraph().twins.select(col("dt_id"))
-            .filter(cur.map(col("dt_id") > lit(_)).getOrElse(lit(true)))
-            .orderBy(col("dt_id")).limit(n)
-            .collect().map(_.getString(0)).toSeq
+          withReaders(_._1.keysAfter(cur.map(Seq(_)), n)).map(_.head)
         if (chunk.isEmpty) exhausted = true
         else {
           cur = Some(chunk.last)
@@ -467,18 +443,8 @@ final class TableTwinStore private (
       var exhausted = false
       while (snap.size < n && !exhausted) {
         val chunk: Seq[(String, String)] =
-          if (usePointReader)
-            withReaders(_._2.keysAfter(cur.map(c => Seq(c._1, c._2)), n))
-              .map(k => (k.head, k(1)))
-          else snapshotGraph().relationships
-            .select(col("source_id"), col("relationship_id"))
-            .filter(cur.map(c =>
-              col("source_id") > lit(c._1) ||
-                (col("source_id") === lit(c._1) &&
-                  col("relationship_id") > lit(c._2)))
-              .getOrElse(lit(true)))
-            .orderBy(col("source_id"), col("relationship_id")).limit(n)
-            .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+          withReaders(_._2.keysAfter(cur.map(c => Seq(c._1, c._2)), n))
+            .map(k => (k.head, k(1)))
         if (chunk.isEmpty) exhausted = true
         else {
           cur = Some(chunk.last)
@@ -657,10 +623,7 @@ final class TableTwinStore private (
     if (!lazyLoad) return
     val snapDocs: Seq[String] =
       if (version == 0) Nil
-      else if (usePointReader) withReaders(_._2.scanFirst(sourceId))
-      else snapshotGraph().relationships
-        .filter(col("source_id") === sourceId)
-        .select(col("properties")).collect().map(_.getString(0)).toSeq
+      else withReaders(_._2.scanFirst(sourceId))
     val snapByKey: Map[(String, String), String] = snapDocs.flatMap { d =>
       Json.tryParse(d).flatMap(n => Json.get(n, "/$relationshipId")
         .map(rid => ((sourceId, rid.asText()), d)))
@@ -740,9 +703,8 @@ final class TableTwinStore private (
       // rename, so a crash mid-write leaves only an ignored dot-file.
       // Bulk appends (imports, large folds) stay on the distributed
       // writer — the cutoff is rows, a size class, not a local-mode tune.
-      val maxLocal = spark.conf
-        .get("spark.graft.store.journal.localWriteMaxRows", "10000").toInt
-      if (batch.size <= maxLocal) writeJournalLocal(batch)
+      if (batch.size <= TableTwinStore.JournalLocalWriteMaxRows)
+        writeJournalLocal(batch)
       else TwinStore.mutationsDf(spark, batch)
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(mutationsPath)
@@ -1253,6 +1215,10 @@ final class TableTwinStore private (
 }
 
 object TableTwinStore {
+
+  /** Largest journal flush written driver-side; larger flushes go through
+    * a Spark write job. */
+  private[store] val JournalLocalWriteMaxRows = 10000
 
   /** Open (or initialize) a table-backed store at `dir`. Restores models,
     * the journal-tail overlay and the seq high-water mark — O(meta +

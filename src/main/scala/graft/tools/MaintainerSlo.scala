@@ -9,10 +9,10 @@ import graft.graph.{GraphViews, IncrementalAnalytics, PageRank, TwinGraph}
   * consumer (reference `AgeDigitalTwinsReplication.cs:194-573`): N
   * consecutive mutation batches folded through
   * [[IncrementalAnalytics.maintainComponentsStream]] and
-  * [[IncrementalAnalytics.maintainRanksStream]] over a real tree,
-  * recording per-batch trigger latency (from the streaming progress
-  * events of ONE long-lived AvailableNow query slicing one file per
-  * trigger) and the files/versions retained on disk after every commit.
+  * [[IncrementalAnalytics.maintainStream]] with the PageRank maintainer
+  * over a real tree, recording per-batch trigger latency (from the
+  * streaming progress events of ONE long-lived AvailableNow query slicing
+  * one file per trigger) and the files/versions retained on disk after every commit.
   *
   * What bounded-drift means here: per-batch latency must not grow with
   * batch index (state is version-pruned and leaf-compacted each commit,
@@ -204,10 +204,12 @@ object MaintainerSlo {
     val rankState = s"$dir/rank-state"
     new java.io.File(rankState).mkdirs()
     val hist = PageRank.ranksHistory(rels, iterations)
-    IncrementalAnalytics.initRanksState(rankState, hist, rels)
+    IncrementalAnalytics.initState(rankState,
+      IncrementalAnalytics.Maintainer.ranks(hist.size), rels, hist)
     measure("ranks", rankState)(() =>
-      IncrementalAnalytics.maintainRanksStream(spark, mutDir, rankState,
-        s"$dir/rank-cp", iterations, Map("maxFilesPerTrigger" -> "1")))
+      IncrementalAnalytics.maintainStream(spark, mutDir, rankState,
+        s"$dir/rank-cp", IncrementalAnalytics.Maintainer.ranks(iterations),
+        Map("maxFilesPerTrigger" -> "1")))
 
     // best-effort cleanup of the temp tree
     scala.util.Try(org.apache.commons.io.FileUtils

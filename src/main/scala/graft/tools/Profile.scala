@@ -34,104 +34,13 @@ object Profile {
       case "explain" :: names if names.nonEmpty => names.foreach(explain(spark, sfDir, _))
       case "stages" :: _ => stages(spark, sfDir)
       case "components" :: _ => components(spark, sfDir)
-      case "propscan" :: _ => propScan(spark, sfDir, reps)
       case "incr" :: _ => incrPhases(spark, sfDir)
-      case "fillcost" :: _ => fillCost(spark, sfDir, reps)
-      case "typeofcost" :: _ => typeofCost(spark, sfDir, reps)
-      case "vleseed" :: rest =>
-        vleSeedProbe(spark, sfDir, rest.headOption.flatMap(_.toIntOption)
-          .getOrElse(32))
-      case "scale" :: rest =>
-        val factor = rest.headOption.flatMap(_.toIntOption).getOrElse(8)
-        val names = rest.drop(if (rest.headOption.exists(_.toIntOption.isDefined)) 1 else 0) match {
-          case Nil => Seq("q_dedup_minhash", "q_dedup_jaccard", "q_dedup_components",
-            "q_text_dupspan", "q_text_bm25", "q_pipeline_shuffle", "q_sim_topk",
-            "q_embed_nn", "q_sessionize", "q_asof_join", "q_range_join",
-            "q_e10_window", "q_graph_triangles", "q_graph_kcore",
-            "q_stats_quantiles", "q_skew_join", "q_text_unigramlm",
-            "q_text_classifier", "q_span_dedup", "q_dedup_keepbest")
-          case ns => ns
-        }
-        scaleProbe(spark, sfDir, factor, names)
       case other =>
         System.err.println(
-          s"""usage: Profile query <name>... | explain <name>... | stages | components | scale [factor] [name...]
+          s"""usage: Profile query <name>... | jobs <name>... | explain <name>... | stages | components | incr
              |got: ${other.mkString(" ")}""".stripMargin)
         sys.exit(2)
     } finally spark.stop()
-  }
-
-  /** A/B of the variant dual-write's CACHE-FILL cost (r18, r17 verdict
-    * #7): derive + fully materialize the graph frames with the fill on
-    * vs off, interleaved across reps on fresh child sessions (the memo
-    * keys by session, so each measurement re-derives from parquet and
-    * re-persists). The delta is exactly what a property-free session
-    * saves by setting `spark.graft.props.variant.fill=false`. */
-  private def fillCost(spark: SparkSession, sfDir: String, reps: Int): Unit = {
-    def once(fill: Boolean): Double = {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.props.variant.fill", fill.toString)
-      val t0 = System.nanoTime()
-      val g = graft.graph.GraphViews.graph(s, sfDir)
-      g.twins.count(); g.relationships.count()
-      val t = (System.nanoTime() - t0) / 1e9
-      g.twins.unpersist(blocking = true)
-      g.relationships.unpersist(blocking = true)
-      t
-    }
-    val times = collection.mutable.Map[Boolean, List[Double]]()
-      .withDefaultValue(Nil)
-    once(true); once(false) // untimed JIT warm-up of both shapes
-    for (_ <- 1 to math.max(reps, 3); fill <- Seq(true, false))
-      times(fill) = once(fill) :: times(fill)
-    val on = times(true).min
-    val off = times(false).min
-    println(f"""{"probe":"fillcost","sf":"$sfDir","fill_on_sec":$on%.2f,""" +
-      f""""fill_off_sec":$off%.2f,"fill_delta_sec":${on - off}%.2f,""" +
-      f""""ratio":${on / off}%.2f}""")
-  }
-
-  /** A/B of the C8-C12 routing (r18 verdict watch item): the
-    * q_adt_typeof predicate shape — five IS_* calls over one document —
-    * run with `spark.graft.typeof.variant` on (schema_of_variant over the
-    * shared parsed binary) vs off (the Jackson kernel re-parsing the doc
-    * string per call), interleaved on fresh child sessions, graph frames
-    * pre-cached per session so only the predicate differs. The fixture
-    * gate measured the variant route ~1.9× SLOWER on tiny docs; this
-    * probe decides whether the at-scale argument (one binary touch per
-    * doc for k predicates) actually wins at sf1/sf10. */
-  private def typeofCost(spark: SparkSession, sfDir: String, reps: Int): Unit = {
-    val q = "SELECT T.$dtId AS dt_id FROM DIGITALTWINS T " +
-      "WHERE IS_NUMBER(T.acctbal) AND IS_STRING(T.name) " +
-      "AND NOT IS_BOOL(T.acctbal) AND NOT IS_OBJECT(T.name) " +
-      "AND NOT IS_PRIMITIVE(T.tags)"
-    def once(variant: Boolean): Double = {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.typeof.variant", variant.toString)
-      val g = graft.graph.GraphViews.graph(s, sfDir)
-      g.twins.count(); g.relationships.count() // cache fill, untimed
-      val planner = new graft.adt.AdtPlanner(g)
-      val (_, t) = timedD(planner.run(q).count())
-      g.twins.unpersist(blocking = true)
-      g.relationships.unpersist(blocking = true)
-      t
-    }
-    val times = collection.mutable.Map[Boolean, List[Double]]()
-      .withDefaultValue(Nil)
-    once(true); once(false) // untimed JIT warm-up of both shapes
-    for (_ <- 1 to math.max(reps, 3); v <- Seq(true, false))
-      times(v) = once(v) :: times(v)
-    val on = times(true).min
-    val off = times(false).min
-    println(f"""{"probe":"typeofcost","sf":"$sfDir",""" +
-      f""""variant_sec":$on%.3f,"jackson_sec":$off%.3f,""" +
-      f""""variant_over_jackson":${on / off}%.2f}""")
-  }
-
-  private def timedD[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
   }
 
   private def dropState(spark: SparkSession): Unit = {
@@ -140,7 +49,6 @@ object Profile {
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** Best-of-N timing of one SparkEntry query, without the full Bench. */
   /** Phase attribution for the q_incr_* family (guide §1: measure before
     * touching): store build vs base batch compute vs incremental refresh,
     * with per-phase wall time AND Spark job counts — the fixture-scale
@@ -264,20 +172,19 @@ object Profile {
     println(f"[jobs] $name%-28s wall=$wall%6.2fs jobs=${jobs.get}%4d " +
       f"stages=${stages.get}%4d tasks=${tasks.get}%5d " +
       f"taskTime=${taskMs.get / 1000.0}%7.2fs  stageHist: $hist")
-    if (sys.env.get("SPARK_GRAFT_JOBS_TOPSTAGES").forall(_ != "0")) {
-      val top = {
-        val it = stageMs.entrySet().iterator()
-        val b = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-        while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue.longValue())) }
-        b.sortBy(-_._2).take(6)
-      }
-      top.foreach { case (sid, ms) =>
-        val (nm, nt) = stageMeta.getOrDefault(sid, ("?", -1))
-        println(f"[jobs]   stage $sid%5d ${ms / 1000.0}%7.2fs ${nt}%4dt  $nm")
-      }
+    val top = {
+      val it = stageMs.entrySet().iterator()
+      val b = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+      while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue.longValue())) }
+      b.sortBy(-_._2).take(6)
+    }
+    top.foreach { case (sid, ms) =>
+      val (nm, nt) = stageMeta.getOrDefault(sid, ("?", -1))
+      println(f"[jobs]   stage $sid%5d ${ms / 1000.0}%7.2fs ${nt}%4dt  $nm")
     }
   }
 
+  /** Best-of-N timing of one SparkEntry query, without the full Bench. */
   private def query(spark: SparkSession, sfDir: String, reps: Int,
       name: String): Unit = {
     val fn = graft.SparkEntry.queries(name)
@@ -325,250 +232,6 @@ object Profile {
     dropState(spark)
     count("minhash pairs COLD")(
       Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 64, 16, 0.5))
-  }
-
-  /** Data-scaling probe: amplify documents/embeddings by `factor` (id
-    * offsets; each copy's text gets a distinct leading token so near-dup
-    * structure is preserved without quadratic duplicate groups; vectors
-    * get a tiny per-copy first-component nudge for the same reason), then
-    * time each query at 1x vs Nx. The per-query growth ratio is the
-    * empirical scaling exponent the plan audits argue for: a
-    * linear-by-design operator should report ratio ≈ factor — superlinear
-    * growth here is a red flag no sf0.1-only bench can see, because at
-    * sf0.1 fixed scheduling overhead dominates data-dependent cost. */
-  private def scaleProbe(spark: SparkSession, sfDir: String, factor: Int,
-      names: Seq[String]): Unit = {
-    import org.apache.spark.sql.DataFrame
-    val out = java.nio.file.Files.createTempDirectory("graft-scale").toString
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val docSpan = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      docs.select((col("doc_id") + lit(k * docSpan)).as("doc_id"),
-        concat(lit(s"c$k "), col("text")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val embSpan = emb.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      emb.select((col("vec_id") + lit(k * embSpan)).as("vec_id"),
-        concat(array(element_at(col("embedding"), 1) + lit(k * 1e-3f)),
-          slice(col("embedding"), 2, 10000)).as("embedding"),
-        col("label"))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    // events amplify along the KEY dimension (user_id offsets): more users
-    // with the same per-key history is the direction a growing deployment
-    // actually takes, and it keeps per-key window/sort depth constant so a
-    // super-linear result indicts the plan, not the data shape.
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val evSpan = events.agg(max(col("event_id"))).collect()(0).getLong(0) + 1
-    val userSpan = events.agg(max(col("user_id"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      events.select((col("event_id") + lit(k * evSpan)).as("event_id"),
-        col("ts"), (col("user_id") + lit(k * userSpan)).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-    // lineitem/orders amplify as DISJOINT copies (order AND part keys
-    // offset): the co-purchase graph gains factor independent components
-    // of the original density — growth then measures the PLAN, where
-    // offsetting only orders would densify the graph and grow pair/
-    // triangle counts super-linearly by construction.
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val okSpan = li.agg(max(col("l_orderkey"))).collect()(0).getLong(0) + 1
-    val pkSpan = li.agg(max(col("l_partkey"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      li.withColumn("l_orderkey", col("l_orderkey") + lit(k * okSpan))
-        .withColumn("l_partkey", col("l_partkey") + lit(k * pkSpan))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    val ords = spark.read.parquet(s"$sfDir/orders.parquet")
-    (0 until factor).map { k =>
-      ords.withColumn("o_orderkey", col("o_orderkey") + lit(k * okSpan))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/orders.parquet")
-    // the place graph amplifies along the LEAF dimension: customers/
-    // suppliers get offset keys but KEEP their nation, so nation hubs
-    // gain factor× degree — the direction a real twin graph grows, and
-    // the shape that stresses the hub claims (walks' O(1) pick, hop's
-    // skew salting) rather than handing each copy its own island.
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    val ckSpan = cust.agg(max(col("c_custkey"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      cust.withColumn("c_custkey", col("c_custkey") + lit(k * ckSpan))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/customer.parquet")
-    val supp = spark.read.parquet(s"$sfDir/supplier.parquet")
-    val skSpan = supp.agg(max(col("s_suppkey"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      supp.withColumn("s_suppkey", col("s_suppkey") + lit(k * skSpan))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/supplier.parquet")
-    // interior levels copy through unchanged
-    Seq("nation", "region").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.mode("overwrite").parquet(s"$out/$t.parquet")
-    }
-    println(s"[scale] corpus x$factor at $out")
-    def best(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        dropState(spark)
-        t
-      }
-      ts.min
-    }
-    val results = names.map { name =>
-      val fn = graft.SparkEntry.queries(name)
-      val t1 = best(fn, sfDir)
-      val tN = best(fn, out)
-      println(f"[scale] $name%-22s 1x=$t1%7.2fs  ${factor}x=$tN%7.2fs  " +
-        f"ratio=${tN / t1}%5.2f (linear would be <= $factor)")
-      (name, t1, tN)
-    }
-    writeScalingJson(sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT",
-      "scaling_probe.json"), sfDir, factor, results)
-  }
-
-  /** r17 evidence for the variant-backed property route (VERDICT #4): the
-    * same multi-property Cypher predicate timed through both extraction
-    * routes — variant (one try_parse_json per row per operator, codegen-
-    * CSE-deduped, then O(1) variant_get per property) vs get_json_object
-    * (one full document re-parse PER property). Best-of-`reps` each. */
-  private def propScan(spark: SparkSession, sfDir: String, reps: Int): Unit = {
-    import graft.adt.AdtPlanner
-    import graft.graph.GraphViews
-    // every distinct JSON property a twin document carries, each touched
-    // once (identical paths would be CSE-deduped on BOTH routes)
-    val q = "MATCH (m:Twin) WHERE m.acctbal > 1000.0 AND m.name CONTAINS '1' " +
-      "AND m.mktsegment IN ['BUILDING', 'MACHINERY', 'AUTOMOBILE'] " +
-      "AND size(m.tags) >= 1 " +
-      "RETURN count(*) AS n"
-    // warm the memoized cache ONCE (both routes scan the same persisted
-    // frames), then interleave routes per rep — a fixed route order would
-    // bill the cache fill to whichever route ran first
-    val g = GraphViews.graph(spark, sfDir)
-    g.twins.count(); g.relationships.count()
-    val planners = Seq(true, false).map { variant =>
-      spark.conf.set("spark.graft.props.variant", variant.toString)
-      variant -> new AdtPlanner(GraphViews.graph(spark, sfDir))
-    }
-    spark.conf.unset("spark.graft.props.variant")
-    val times = collection.mutable.Map[Boolean, List[(Double, Long)]]()
-      .withDefaultValue(Nil)
-    for (_ <- 1 to math.max(reps, 3); (variant, planner) <- planners) {
-      val t0 = System.nanoTime()
-      val n = planner.run(q).collect()(0).getLong(0)
-      val t = (System.nanoTime() - t0) / 1e9
-      times(variant) = (t, n) :: times(variant)
-    }
-    for ((variant, ts) <- Seq(true, false).map(v => v -> times(v)))
-      println(f"[propscan] route=${if (variant) "variant" else "gjo    "} " +
-        f"best=${ts.map(_._1).min}%7.3fs rows=${ts.head._2} " +
-        s"all=${ts.reverse.map(t => f"${t._1}%.2f").mkString(",")}")
-  }
-
-  /** r17 evidence for frontier-seeded VLE (VERDICT #1): a FIXED bound
-    * set's expansion must stay ~flat while the graph grows Nx — O(cone)
-    * work, not O(graph). Amplifies the place graph's leaf dimension Nx
-    * (same shape as scaleProbe), then measures, at 1x and Nx: the
-    * gate-shaped chain expansion (*1..3) wall time and the BFS regime's
-    * (*1..6) peak frontier rows, each seeded with the SAME fixed
-    * 100-supplier set vs unseeded. */
-  private def vleSeedProbe(spark: SparkSession, sfDir: String,
-      factor: Int): Unit = {
-    import graft.graph.{GraphViews, Vle}
-    val out = java.nio.file.Files.createTempDirectory("graft-vleseed").toString
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    val ckSpan = cust.agg(max(col("c_custkey"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      cust.withColumn("c_custkey", col("c_custkey") + lit(k * ckSpan))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/customer.parquet")
-    val supp = spark.read.parquet(s"$sfDir/supplier.parquet")
-    val skSpan = supp.agg(max(col("s_suppkey"))).collect()(0).getLong(0) + 1
-    (0 until factor).map { k =>
-      supp.withColumn("s_suppkey", col("s_suppkey") + lit(k * skSpan))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").parquet(s"$out/supplier.parquet")
-    Seq("nation", "region").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.mode("overwrite").parquet(s"$out/$t.parquet")
-    }
-    val relNames = Seq("located_in", "in_region")
-    def run(dir: String, seeded: Boolean, hi: Int): (Double, Long) = {
-      val ts = (1 to 2).map { _ =>
-        // rebuilt per rep: dropState() unpersists all blocks, which would
-        // orphan a shared localCheckpoint between reps
-        val seedIds = spark.read.parquet(s"$sfDir/supplier.parquet")
-          .select(concat(lit("S"), col("s_suppkey")).as("id"))
-          .limit(100).localCheckpoint(eager = true)
-        val g = GraphViews.graph(spark, dir)
-        val m = new Vle.Metrics
-        val t0 = System.nanoTime()
-        Vle.withMetrics(m) {
-          Vle.range(g.relationships, 1, hi, relNames,
-            sourceDf = if (seeded) Some(seedIds) else None).count()
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        dropState(spark)
-        (t, m.frontierPeak)
-      }
-      (ts.map(_._1).min, ts.map(_._2).max)
-    }
-    for ((dir, label) <- Seq((sfDir, "1x"), (out, s"${factor}x"))) {
-      val (ts, _) = run(dir, seeded = true, 3)
-      val (tu, _) = run(dir, seeded = false, 3)
-      val (_, ps) = run(dir, seeded = true, 6)
-      val (_, pu) = run(dir, seeded = false, 6)
-      println(f"[vleseed] $label%-4s chain(*1..3) seeded=$ts%7.2fs " +
-        f"unseeded=$tu%7.2fs | bfs(*1..6) frontierPeak " +
-        s"seeded=$ps unseeded=$pu")
-    }
-  }
-
-  /** Machine-readable scaling artifact: one file accumulating every probe
-    * run, `{"sf":…,"cpus":…,"factors":{"8":{query:{"t1":…,"tN":…,
-    * "ratio":…}},…}}` — so the driver/judge can diff rounds mechanically
-    * instead of reading SCALING.md prose. Re-running a factor overwrites
-    * that factor's map; other factors merge through. */
-  private def writeScalingJson(path: String, sfDir: String, factor: Int,
-      results: Seq[(String, Double, Double)]): Unit = {
-    import graft.json.Json
-    def r3(v: Double) = math.rint(v * 1000) / 1000
-    val root = scala.util.Try(
-        Json.parse(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)))
-      .toOption.filter(_.isObject)
-      .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-      .getOrElse(Json.obj())
-    root.put("sf", sfDir)
-    root.put("cpus", Runtime.getRuntime.availableProcessors())
-    val factors =
-      if (root.get("factors") != null && root.get("factors").isObject)
-        root.get("factors").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else { val f = Json.obj(); root.set[com.fasterxml.jackson.databind.JsonNode]("factors", f); f }
-    // merge into any existing per-factor map so chunked runs accumulate
-    val fObj =
-      if (factors.get(factor.toString) != null &&
-          factors.get(factor.toString).isObject)
-        factors.get(factor.toString)
-          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else Json.obj()
-    results.foreach { case (name, t1, tN) =>
-      val q = Json.obj()
-      q.put("t1", r3(t1)); q.put("tN", r3(tN))
-      q.put("ratio", if (t1 > 0) r3(tN / t1) else -1.0)
-      q.put("linear_bound", factor)
-      fObj.set[com.fasterxml.jackson.databind.JsonNode](name, q)
-    }
-    factors.set[com.fasterxml.jackson.databind.JsonNode](factor.toString, fObj)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      Json.render(root) + "\n")
-    println(s"[scale] wrote $path (factor $factor, ${results.size} queries)")
   }
 
   /** LSH pairs → connected components, stage-timed. */

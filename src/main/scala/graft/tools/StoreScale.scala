@@ -83,7 +83,7 @@ object StoreScale {
     // pre-session journal-tail read (one Spark collect) and the footer
     // cache construction. Steady-state per-request throughput is what
     // the reference's ~100 req/s light-read target grades
-    // (performance.mdx:28); PointProfile separates the phases.
+    // (performance.mdx:28); SCALING.md records the per-phase split.
     try stPoint.getTwin("__absent_warmup__")
     catch { case _: graft.store.StoreException => () }
     val (pointHits, pointSec) = timed(ids.count { id =>

@@ -488,15 +488,20 @@ class CypherSpec extends AnyFunSuite {
   test("variant and get_json_object extraction routes answer identically") {
     val q = "MATCH (t:Twin) WHERE t.mass > 1e24 AND t.name CONTAINS 'e' " +
       "RETURN t.`$dtId` AS id, t.mass AS mass, t.tags AS tags ORDER BY id"
-    val viaVariant = planner.run(q).collect().map(_.toSeq).toSeq
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString
+    val variantDf = planner.run(q)
+    assert(plan(variantDf).contains("variant_get"))
+    val viaVariant = variantDf.collect().map(_.toSeq).toSeq
     assert(viaVariant.nonEmpty)
-    val spark = host.graph.twins.sparkSession
-    spark.conf.set("spark.graft.props.variant", "false")
-    try {
-      val viaGjo = new AdtPlanner(host.graph).run(q).collect()
-        .map(_.toSeq).toSeq
-      assert(viaGjo == viaVariant)
-    } finally spark.conf.unset("spark.graft.props.variant")
+    // a graph without the parsed column takes the string route
+    val g = host.graph
+    val noVariant = g.copy(twins = g.twins.drop("properties_v"),
+      relationships = g.relationships.drop("properties_v"))
+    val gjoDf = new AdtPlanner(noVariant).run(q)
+    assert(!plan(gjoDf).contains("variant_get"))
+    assert(plan(gjoDf).contains("get_json_object"))
+    assert(gjoDf.collect().map(_.toSeq).toSeq == viaVariant)
   }
 
   test("EXISTS-VLE probe is frontier-seeded by the bound side (r17)") {

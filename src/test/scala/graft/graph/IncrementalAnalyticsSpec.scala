@@ -508,18 +508,21 @@ class IncrementalAnalyticsSpec extends AnyFunSuite {
     val base = rels(("r1", "a", "b"), ("r2", "b", "c"), ("r3", "c", "a"),
       ("r4", "x", "y"))
     val hist0 = PageRank.ranksHistory(base, 3)
-    IncrementalAnalytics.initRanksState(stateDir, hist0, base)
+    IncrementalAnalytics.initState(stateDir,
+      IncrementalAnalytics.Maintainer.ranks(hist0.size), base, hist0)
     hist0.foreach(graft.core.Blocks.free)
     // batch 1 drains, maintainer stops (the kill)
     muts((1L, "D", "r2", "b", "c"), (2L, "C", "r5", "a", "c"))
       .write.mode("append").parquet(mutDir)
-    IncrementalAnalytics.maintainRanksStream(
-      spark, mutDir, stateDir, cpDir, iterations = 3).awaitTermination(60000)
+    IncrementalAnalytics.maintainStream(
+      spark, mutDir, stateDir, cpDir, IncrementalAnalytics.Maintainer.ranks(3))
+      .awaitTermination(60000)
     // batch 2 lands while down; a fresh query resumes from the checkpoint
     muts((3L, "C", "r6", "y", "a"), (4L, "D", "r4", "x", "y"))
       .write.mode("append").parquet(mutDir)
-    IncrementalAnalytics.maintainRanksStream(
-      spark, mutDir, stateDir, cpDir, iterations = 3).awaitTermination(60000)
+    IncrementalAnalytics.maintainStream(
+      spark, mutDir, stateDir, cpDir, IncrementalAnalytics.Maintainer.ranks(3))
+      .awaitTermination(60000)
     val got = ranksMap(IncrementalAnalytics.current(spark, stateDir, "hist/i=2"))
     val all = muts((1L, "D", "r2", "b", "c"), (2L, "C", "r5", "a", "c"),
       (3L, "C", "r6", "y", "a"), (4L, "D", "r4", "x", "y"))

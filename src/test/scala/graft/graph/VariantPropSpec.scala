@@ -111,28 +111,6 @@ class VariantPropSpec extends AnyFunSuite {
     }
   }
 
-  test("variant fill knob: fill=false derives a graph without properties_v") {
-    // property-free sessions skip the dual-write (r18): without the
-    // column the planner's variant route disables itself (its presence
-    // check fails) and every gate still answers via get_json_object
-    val dir = "/root/testdata/sf0.001"
-    spark.conf.set("spark.graft.props.variant.fill", "false")
-    try {
-      // distinct session key so the memoized default-fill graph of other
-      // suites is not reused
-      val s2 = spark.newSession()
-      s2.conf.set("spark.graft.props.variant.fill", "false")
-      val g = GraphViews.graph(s2, dir)
-      assert(!g.twins.columns.contains("properties_v"))
-      assert(!g.relationships.columns.contains("properties_v"))
-      // a property-reading query still answers through the string route
-      val n = new graft.adt.AdtPlanner(g)
-        .run("SELECT T.$dtId AS id FROM DIGITALTWINS T WHERE IS_DEFINED(T.name)")
-        .count()
-      assert(n > 0)
-    } finally spark.conf.unset("spark.graft.props.variant.fill")
-  }
-
   test("malformed documents answer null through both routes") {
     import spark.implicits._
     val df = Seq("not json at all", """{"a": [unterminated""", "")

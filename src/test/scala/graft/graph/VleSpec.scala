@@ -208,7 +208,7 @@ class VleSpec extends AnyFunSuite {
     val s2 = spark; import s2.implicits._
     val m = new Vle.Metrics
     val out = Vle.withMetrics(m) {
-      // maxIter 6 > joinChainMaxDepth(3) => frontier BFS with metrics
+      // maxIter 6 > JoinChainMaxDepth(3) => frontier BFS with metrics
       Vle.range(g, 1, 6, sourceDf = Some(Seq("s").toDF("id"))).collect()
     }
     assert(out.map(r => (r.getString(0), r.getString(1))).toSet ==

@@ -98,23 +98,31 @@ class PipelineSpec extends AnyFunSuite {
 
   test("adaptive wide-agg repartition: both plan shapes agree bit-for-bit") {
     // the signature aggregation's pre-shuffle is a plan-statistics
-    // decision (repartition when the input estimate crosses the
-    // threshold; RDD-backed plans with unknown stats always repartition).
-    // Drive BOTH shapes through the public API — scan-backed ids (tiny
-    // estimate → map-side partials) vs the same ids localCheckpoint'ed
-    // (defaultSizeInBytes sentinel → repartition-first) — and assert the
-    // verified pair sets are identical.
+    // decision (repartition when the input estimate reaches
+    // Dedup.WideAggRepartBytes). Drive BOTH shapes through inputs the
+    // planner sizes differently — scan-backed ids (tiny estimate →
+    // map-side partials) vs the same rows behind an RDD (no estimate, the
+    // defaultSizeInBytes sentinel → repartition-first) — read from each
+    // executed plan which shape ran, and assert the verified pair sets
+    // are identical.
     val ids = Dedup.shingleIds(docs, "doc_id", "text", 3)
-    def pairs() = Dedup.minhashLshPairsFrom(ids, 64, 16, 0.5)
-      .as[(Long, Long, Long)].collect().toSet
-    val conf = spark.conf
-    conf.set("spark.graft.wideagg.repart", "0")
-    val mapSidePartials = try pairs() finally conf.unset("spark.graft.wideagg.repart")
-    conf.set("spark.graft.wideagg.repart", "1")
-    val repartFirst = try pairs() finally conf.unset("spark.graft.wideagg.repart")
-    val auto = pairs() // tiny scan estimate → same plan as forced-0
-    assert(mapSidePartials == repartFirst && auto == repartFirst,
-      s"plan shapes diverged: $mapSidePartials vs $repartFirst vs $auto")
+    val unsized = spark.createDataFrame(ids.rdd, ids.schema)
+    assert(ids.queryExecution.optimizedPlan.stats.sizeInBytes <
+      Dedup.WideAggRepartBytes)
+    assert(unsized.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      Dedup.WideAggRepartBytes)
+    def repartitionsFirst(in: org.apache.spark.sql.DataFrame): Boolean =
+      Dedup.bandSignaturesFrom(in, 64, 16).queryExecution.executedPlan
+        .toString.contains("REPARTITION_BY_COL")
+    assert(!repartitionsFirst(ids), "a sized small input keeps map-side partials")
+    assert(repartitionsFirst(unsized), "an unsized input repartitions first")
+    def pairs(in: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashLshPairsFrom(in, 64, 16, 0.5)
+        .as[(Long, Long, Long)].collect().toSet
+    val mapSidePartials = pairs(ids)
+    val repartFirst = pairs(unsized)
+    assert(mapSidePartials == repartFirst,
+      s"plan shapes diverged: $mapSidePartials vs $repartFirst")
     // an eagerly-checkpointed input reports its ACTUAL materialized size
     // (not the unknown sentinel), so small streaming batches skip the
     // pre-shuffle too

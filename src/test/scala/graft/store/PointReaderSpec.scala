@@ -64,12 +64,16 @@ class PointReaderSpec extends AnyFunSuite {
     // missing key answers the proper 404 through the same path
     assert(intercept[StoreException](s2.getTwin("nope")).status == 404)
 
-    // parity with the Spark-probe route on a third fresh open
-    spark.conf.set("spark.graft.store.pointreader", "false")
-    try {
-      val s3 = TableTwinStore.open(spark, dir, fixedClock())
-      assert(s3.getTwin("t042").toString == twinDoc.toString)
-    } finally spark.conf.unset("spark.graft.store.pointreader")
+    // parity with a Spark read of the pinned snapshot, which runs jobs
+    import org.apache.spark.sql.functions.col
+    var snapRows: Array[org.apache.spark.sql.Row] = null
+    val scanJobs = jobsRun {
+      snapRows = spark.read.parquet(s"$dir/v1/twins")
+        .filter(col("dt_id") === "t042").select(col("properties")).collect()
+    }
+    assert(scanJobs > 0, "the Spark read of the snapshot should run a job")
+    assert(snapRows.length == 1)
+    assert(Json.parse(snapRows.head.getString(0)).toString == twinDoc.toString)
   }
 
   test("a snapshot pointer move invalidates the reader") {
@@ -120,9 +124,8 @@ class PointReaderSpec extends AnyFunSuite {
 
   test("preloaded page indexes serve the same answers, idempotently") {
     // r19: the serving store preloads every (file, row-group) key page
-    // index at reader construction (spark.graft.store.pointreader.preload)
-    // so cold lookups skip the per-row-group index reads. Preload must be
-    // idempotent and must not change any lookup answer — hit, miss, or
+    // index at reader construction so cold lookups skip the
+    // per-row-group index reads. Preload must be idempotent and must not change any lookup answer — hit, miss, or
     // page-coverage count.
     val dir = tempDir()
     val s1 = TableTwinStore.open(spark, dir, fixedClock())

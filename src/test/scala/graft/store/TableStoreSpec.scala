@@ -192,6 +192,37 @@ class TableStoreSpec extends AnyFunSuite {
     assert(s2.twinIds.toSet == (1 to 6).map(i => s"r$i").toSet)
   }
 
+  test("a batch over the driver-side journal cutoff goes through the Spark writer and reads back exactly") {
+    val dir = tempDir()
+    val s = TableTwinStore.open(spark, dir, fixedClock())
+    s.createModels(Seq(roomModel))
+    val n = TableTwinStore.JournalLocalWriteMaxRows + 1
+    val ids = (1 to n).map(i => s"r$i")
+    s.batch(ids.zipWithIndex.foreach { case (id, i) =>
+      s.createOrReplaceTwin(id, roomDoc(id, i))
+    })
+    // one Spark-written part file; the driver-side writer names its files
+    // part-local-*
+    val files = new java.io.File(dir, "mutations").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet"))
+    assert(files.length == 1 && !files.head.startsWith("part-local-"),
+      files.toSeq)
+    val rows = spark.read.parquet(s"$dir/mutations")
+      .select("seq", "entity_kind", "entity_id", "event_type", "new_json")
+      .orderBy("seq").collect()
+    assert(rows.length == n)
+    assert(rows.map(_.getLong(0)).toSeq == (rows.head.getLong(0) until
+      rows.head.getLong(0) + n))
+    assert(rows.map(_.getString(2)).toSeq == ids)
+    assert(rows.map(r => (r.getString(1), r.getString(3))).distinct.length == 1)
+    rows.foreach { r =>
+      assert(Json.parse(r.getString(4)) == s.getTwin(r.getString(2)),
+        s"journal row for ${r.getString(2)} differs from the store's twin")
+    }
+    val s2 = TableTwinStore.open(spark, dir, fixedClock())
+    assert(s2.getTwin(ids.last) == s.getTwin(ids.last))
+  }
+
   test("bulk importGraph merges set-wise and is visible after reopen") {
     val dir = tempDir()
     val s = TableTwinStore.open(spark, dir, fixedClock())
