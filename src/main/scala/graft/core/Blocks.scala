@@ -28,6 +28,19 @@ object Blocks {
       if (rdd.getStorageLevel.isValid) rdd.unpersist(blocking = false)
     }
 
+  /** True when re-evaluating `df` costs no more than re-reading stored
+    * rows: every node in the optimized plan is a narrow projection/filter
+    * over checkpoint blocks or a local relation. Such inputs don't need a
+    * defensive checkpoint before being read twice. */
+  private[graft] def isRematerializable(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
+    import org.apache.spark.sql.execution.LogicalRDD
+    df.queryExecution.optimizedPlan.collectFirst {
+      case p if !p.isInstanceOf[Project] && !p.isInstanceOf[Filter] &&
+        !p.isInstanceOf[LogicalRDD] && !p.isInstanceOf[LocalRelation] => p
+    }.isEmpty
+  }
+
   /** `localCheckpoint(eager = true)` with DATA-PROPORTIONAL partitioning
     * (guide §2.2; the r19 verdict's #1 item): a checkpoint whose plan has
     * no final shuffle keeps its input partition count — file-split

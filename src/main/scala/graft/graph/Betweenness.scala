@@ -50,42 +50,36 @@ object Betweenness {
     * [[centrality]] — one (source,node)-keyed equi-join + combinable
     * aggregate per depth round — with per-term integer division summed
     * order-independently, so results are bit-identical anywhere. */
-  /** The shared symmetric distinct edge checkpoint both paths consume. */
-  private def edgeCheckpoint(relationships: DataFrame): DataFrame =
+  /** The shared symmetric distinct edge plan both paths consume; the
+    * distributed path checkpoints it. */
+  private def edgePlan(relationships: DataFrame): DataFrame =
     relationships
       .select(col("source_id").as("a"), col("target_id").as("b"))
       .unionByName(relationships
         .select(col("target_id").as("a"), col("source_id").as("b")))
       .filter(col("a") =!= col("b"))
-      .distinct().compactCheckpoint()
+      .distinct()
 
   /** Sub-cutoff driver bottom-out (r19 verdict item 4, [[LocalBrandes]]):
     * at fixture/cone scale the batched rounds are ~90 Spark jobs of pure
     * scheduling over microseconds of arithmetic. Gated on the shared
     * [[LocalGraph.maxEdges]] size class (`0` disables); string keys only
     * (the order-free parts don't need an order, but collectEdges does
-    * string extraction). Frees `e` on the local path. */
+    * string extraction). */
   private def localSolved(e: DataFrame, sources: Seq[String],
-      maxDepth: Int, strict: Boolean): Option[LocalBrandes.Solved] = {
-    val allString = e.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.StringType)
-    if (!allString) None
-    else LocalGraph.collectEdges(e, LocalGraph.maxEdges(e.sparkSession))
-      .map { es =>
-        val s = LocalBrandes.solve(es, sources, maxDepth, strict)
-        Blocks.free(e)
-        s
-      }
-  }
+      maxDepth: Int, strict: Boolean): Option[LocalBrandes.Solved] =
+    LocalGraph.collectEdges(e, LocalGraph.maxEdges(e.sparkSession))
+      .map(LocalBrandes.solve(_, sources, maxDepth, strict))
 
   def harmonic(relationships: DataFrame, sources: Seq[String],
                maxDepth: Int = 16, strict: Boolean = true): DataFrame = {
-    val e0 = edgeCheckpoint(relationships)
-    localSolved(e0, sources, maxDepth, strict).foreach { s =>
+    val plan = LocalGraph.probeInput(edgePlan(relationships))
+    localSolved(plan, sources, maxDepth, strict).foreach { s =>
       val spark = relationships.sparkSession
       import spark.implicits._
       return s.nodes.zip(s.hcM).toSeq.toDF("node", "hc_m").coalesce(1)
     }
+    val e0 = plan.compactCheckpoint()
     val (e, layers) = forward(e0, sources, maxDepth, strict)
     val all = e.select(col("a").as("node")).distinct()
     val agg = layers.zipWithIndex.drop(1).map { case (l, d) =>
@@ -150,12 +144,13 @@ object Betweenness {
     * depth cap or a split). */
   def eccentricity(relationships: DataFrame, sources: Seq[String],
                    maxDepth: Int = 16, strict: Boolean = true): DataFrame = {
-    val e0 = edgeCheckpoint(relationships)
-    localSolved(e0, sources, maxDepth, strict).foreach { s =>
+    val plan = LocalGraph.probeInput(edgePlan(relationships))
+    localSolved(plan, sources, maxDepth, strict).foreach { s =>
       val spark = relationships.sparkSession
       import spark.implicits._
       return s.eccBySource.toSeq.toDF("source", "ecc", "n_reached").coalesce(1)
     }
+    val e0 = plan.compactCheckpoint()
     val (e, layers) = forward(e0, sources, maxDepth, strict)
     val out = layers.zipWithIndex.map { case (l, d) =>
         l.select(col("s"), lit(d.toLong).as("depth"))
@@ -252,12 +247,13 @@ object Betweenness {
     */
   def centrality(relationships: DataFrame, sources: Seq[String],
                  maxDepth: Int = 16, strict: Boolean = true): DataFrame = {
-    val e0 = edgeCheckpoint(relationships)
-    localSolved(e0, sources, maxDepth, strict).foreach { s =>
+    val plan = LocalGraph.probeInput(edgePlan(relationships))
+    localSolved(plan, sources, maxDepth, strict).foreach { s =>
       val spark = relationships.sparkSession
       import spark.implicits._
       return s.nodes.zip(s.bcM).toSeq.toDF("node", "bc_m").coalesce(1)
     }
+    val e0 = plan.compactCheckpoint()
     val (e, layers0) = forward(e0, sources, maxDepth, strict)
     val layers = scala.collection.mutable.Buffer(layers0: _*)
 

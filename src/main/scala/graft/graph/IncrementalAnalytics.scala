@@ -142,8 +142,9 @@ object IncrementalAnalytics {
     * primitive every splice maintainer uses. `e` must be materialized
     * (checkpointed) with string columns `u`, `v`; `seeds` carries one
     * string column `node`. Returns the visited set (incl. edge-free
-    * seeds) as a checkpointed (node) frame the CALLER frees; never frees
-    * its inputs.
+    * seeds) as a (node) frame the CALLER frees — a checkpoint, or under
+    * the cutoff a local relation ([[LocalGraph.frame]]); never frees its
+    * inputs.
     *
     * Sub-cutoff inputs ([[LocalGraph.maxEdges]]) resolve in one serial
     * BFS — the mutation cone a maintainer chases is batch-sized by
@@ -158,48 +159,37 @@ object IncrementalAnalytics {
     val cutoff = LocalGraph.maxEdges(spark)
     // The cutoff gates the SEED frame too (r19 advice): the edge probe
     // alone would let a huge seed set over a tiny edge frame collect
-    // unbounded rows to the driver. Seeds are collected through a
-    // limit(cutoff+1) probe — over-cutoff falls back to the distributed
-    // branch instead of relying on spark.driver.maxResultSize.
-    val localSolve = LocalGraph.collectEdges(e, cutoff).flatMap { es =>
-      val lim = if (cutoff >= Int.MaxValue - 1) Int.MaxValue
-        else cutoff.toInt + 1
-      val seedRows = seeds.select(col("node")).distinct()
-        .limit(lim).collect()
-      if (seedRows.length > cutoff) None
-      else Some((es, seedRows.map(_.getString(0))))
+    // unbounded rows to the driver, so the seeds go through the same
+    // bounded collect and an over-cutoff seed set stays distributed.
+    val seedSet = seeds.select(col("node")).distinct()
+    for {
+      es <- LocalGraph.collectEdges(e, cutoff)
+      seedRows <- LocalGraph.collectBounded(seedSet, cutoff)
+    } return LocalGraph.frame(spark, StructType(Seq(StructField("node", StringType))),
+      LocalGraph.reachNodes(es, seedRows.map(_.getString(0))).map(Row(_)))
+    var parts = List(seedSet.compactCheckpoint())
+    var frontier = parts.head
+    var alive = frontier.count()
+    var round = 0
+    while (alive > 0) {
+      round += 1
+      if (round > maxRounds)
+        throw new IllegalStateException(
+          s"$what reachability still expanding after $maxRounds " +
+            "rounds — raise the round cap")
+      val visited = parts.reduce(_ unionByName _)
+      val nxt = e.join(frontier.withColumnRenamed("node", "u"),
+          Seq("u"), "left_semi")
+        .select(col("v").as("node")).distinct()
+        .join(visited, Seq("node"), "left_anti")
+        .compactCheckpoint()
+      alive = nxt.count()
+      parts ::= nxt
+      frontier = nxt
     }
-    localSolve match {
-      case Some((es, seedArr)) =>
-        import spark.implicits._
-        LocalGraph.reachNodes(es, seedArr).toSeq.toDF("node")
-          .compactCheckpoint()
-      case None =>
-        var parts = List(seeds.select(col("node")).distinct()
-          .compactCheckpoint())
-        var frontier = parts.head
-        var alive = frontier.count()
-        var round = 0
-        while (alive > 0) {
-          round += 1
-          if (round > maxRounds)
-            throw new IllegalStateException(
-              s"$what reachability still expanding after $maxRounds " +
-                "rounds — raise the round cap")
-          val visited = parts.reduce(_ unionByName _)
-          val nxt = e.join(frontier.withColumnRenamed("node", "u"),
-              Seq("u"), "left_semi")
-            .select(col("v").as("node")).distinct()
-            .join(visited, Seq("node"), "left_anti")
-            .compactCheckpoint()
-          alive = nxt.count()
-          parts ::= nxt
-          frontier = nxt
-        }
-        val out = parts.reduce(_ unionByName _).compactCheckpoint()
-        parts.foreach(Blocks.free)
-        out
-    }
+    val out = parts.reduce(_ unionByName _).compactCheckpoint()
+    parts.foreach(Blocks.free)
+    out
   }
 
   private def endpoints(p: DataFrame): DataFrame =

@@ -1,8 +1,10 @@
 package graft.graph
 
+import graft.core.Blocks
 import graft.core.Blocks.CompactCheckpointOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** k-core decomposition by iterative peeling — the cohesion signal that
   * separates densely embedded nodes from peripheral ones (Seidman,
@@ -23,21 +25,26 @@ import org.apache.spark.sql.functions._
   * count — all equi-joins on node keys. The symmetric edge list is
   * materialized once and re-read per round; survivor sets checkpoint per
   * round and free their predecessor (lineage stays flat across any
-  * number of rounds). No adjacency lists, no driver state; peeling a
-  * 100 TB graph is K passes of join+count.
+  * number of rounds). Above the [[LocalGraph]] cutoff: no adjacency
+  * lists, no driver state; peeling a 100 TB graph is K passes of
+  * join+count. At or under it the peel runs on the driver
+  * ([[LocalGraph.kcoreSurvivors]]).
   */
 object KCore {
 
-  private def symmetric(edges: DataFrame, srcCol: String, dstCol: String)
-      : DataFrame = {
-    val und = edges.select(
+  /** The canonical simple edge set: one (least, greatest) row per
+    * undirected non-loop pair. */
+  private def canonical(edges: DataFrame, srcCol: String, dstCol: String)
+      : DataFrame =
+    edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .distinct()
+
+  private def symmetric(und: DataFrame): DataFrame =
     und.select(col("a").as("u"), col("b").as("v"))
       .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-  }
 
   /** One peeling round as an UNMATERIALIZED plan: survivors of `nodes`
     * with ≥ k neighbors inside the `nodes`-restricted subgraph — two
@@ -52,41 +59,35 @@ object KCore {
 
   /** The symmetric simple edge view, for [[peelRound]] callers. */
   private[graft] def symmetricView(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = symmetric(edges, srcCol, dstCol)
+      dstCol: String): DataFrame = symmetric(canonical(edges, srcCol, dstCol))
+
+  /** Survivors of a driver-side synchronous peel as a (node) frame —
+    * the sub-cutoff bottom-out ([[LocalGraph]] doc): the canonical pairs
+    * are collected (half the rows of the symmetric set) and symmetrized
+    * here, and one serial pass replaces O(cascade length) Spark jobs,
+    * with bit-identical output (the survivor SET needs no ordering, only
+    * equality). None ⇒ distributed. */
+  private def localPeel(und: DataFrame, k: Int,
+      rounds: Int): Option[DataFrame] = {
+    val spark = und.sparkSession
+    LocalGraph.collectEdgesAny(und, LocalGraph.maxEdges(spark)).map { es =>
+      val schema = StructType(Seq(StructField("node", und.schema("a").dataType)))
+      LocalGraph.frame(spark, schema, LocalGraph.kcoreSurvivors(
+        es ++ es.map(_.swap), k, rounds).map(Row(_)))
+    }
+  }
 
   /** Surviving nodes after `rounds` synchronous peeling rounds at
     * threshold `k` (every node starts alive; round r drops nodes with
     * fewer than k surviving neighbors). With enough rounds this IS the
     * k-core; the bounded form exists for oracle parity and for
     * incremental monitoring. */
-  /** Survivors of a driver-side synchronous peel as a (node) frame —
-    * the sub-cutoff bottom-out ([[LocalGraph]] doc): one serial pass
-    * replaces O(cascade length) Spark jobs, with bit-identical output
-    * (the survivor SET needs no ordering, only equality). */
-  private def localPeel(sym: DataFrame, k: Int,
-      rounds: Int): Option[DataFrame] = {
-    val spark = sym.sparkSession
-    LocalGraph.collectEdgesAny(sym, LocalGraph.maxEdges(spark)).map { es =>
-      val dt = sym.schema.fields(0).dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", dt)))
-      // coalesce(1): LocalRelations otherwise scan as one-row tasks
-      // (see Scc.localDf)
-      spark.createDataFrame(
-        java.util.Arrays.asList(LocalGraph.kcoreSurvivors(es, k, rounds)
-          .map(n => org.apache.spark.sql.Row(n)): _*), schema).coalesce(1)
-    }
-  }
-
   def peel(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    import graft.core.Blocks
-    val sym = symmetric(edges, srcCol, dstCol).compactCheckpoint()
-    localPeel(sym, k, rounds).foreach { out =>
-      Blocks.free(sym)
-      return out
-    }
+    val und = LocalGraph.probeInput(canonical(edges, srcCol, dstCol))
+    localPeel(und, k, rounds).foreach(return _)
+    val sym = symmetric(und).compactCheckpoint()
     var nodes = sym.select(col("u").as("node")).distinct()
       .compactCheckpoint()
     for (_ <- 1 to rounds) {
@@ -103,12 +104,9 @@ object KCore {
     * on a checkpointed survivor set (driver sees only the count). */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int = 1000): DataFrame = {
-    import graft.core.Blocks
-    val sym = symmetric(edges, srcCol, dstCol).compactCheckpoint()
-    localPeel(sym, k, maxRounds).foreach { out =>
-      Blocks.free(sym)
-      return out
-    }
+    val und = LocalGraph.probeInput(canonical(edges, srcCol, dstCol))
+    localPeel(und, k, maxRounds).foreach(return _)
+    val sym = symmetric(und).compactCheckpoint()
     var nodes = sym.select(col("u").as("node")).distinct()
       .compactCheckpoint()
     var prev = nodes.count()

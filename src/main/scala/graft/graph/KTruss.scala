@@ -50,26 +50,19 @@ object KTruss {
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = canonical(edges).compactCheckpoint()
+    val und = LocalGraph.probeInput(canonical(edges))
     // Sub-cutoff bottom-out ([[LocalGraph]] doc): one serial synchronous
     // peel replaces rounds × (wedge join + semi-join + count) Spark jobs;
     // the survivor EDGE SET needs no ordering, so output is bit-identical.
-    LocalGraph.collectEdgesAny(e, LocalGraph.maxEdges(e.sparkSession))
-      .foreach { es =>
-        val spark = e.sparkSession
-        val dtA = e.schema.fields(0).dataType
-        val dtB = e.schema.fields(1).dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("a", dtA),
-          org.apache.spark.sql.types.StructField("b", dtB)))
-        Blocks.free(e)
-        // coalesce(1): LocalRelations otherwise scan as one-row tasks
-        // (see Scc.localDf)
-        return spark.createDataFrame(
-          java.util.Arrays.asList(LocalGraph.ktrussSurvivors(es, k, rounds)
-            .map(p => org.apache.spark.sql.Row(p._1, p._2)): _*), schema)
-          .coalesce(1)
-      }
+    // The edges are checkpointed only when it declines.
+    val spark = edges.sparkSession
+    LocalGraph.collectEdgesAny(und, LocalGraph.maxEdges(spark)).foreach { es =>
+      return LocalGraph.frame(spark, org.apache.spark.sql.types.StructType(
+          und.schema.fields.map(_.copy(nullable = true))),
+        LocalGraph.ktrussSurvivors(es, k, rounds)
+          .map(p => org.apache.spark.sql.Row(p._1, p._2)))
+    }
+    var e = und.compactCheckpoint()
     for (_ <- 1 to rounds) {
       val kept = supports(e).filter(col("support") >= k - 2)
         .select(col("a"), col("b"))

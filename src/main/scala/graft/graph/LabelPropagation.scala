@@ -28,9 +28,12 @@ import graft.pipeline.TextAnalysis
   * Scale shape per round: one equi-join of the symmetrized edge list
   * against the label table (keyed by neighbor), one combinable
   * groupBy(node, label) count, one groupBy(node) min-of-struct argmax —
-  * no windows, no driver state. Lineage is truncated per round via
-  * `localCheckpoint` with superseded tables freed ([[PageRank]]'s
-  * discipline), so a deep run neither replays history nor leaks blocks.
+  * no windows, and above the [[LocalGraph]] cutoff no driver state.
+  * Lineage is truncated per round via `localCheckpoint` with superseded
+  * tables freed ([[PageRank]]'s discipline), so a deep run neither
+  * replays history nor leaks blocks. At or under the cutoff (string
+  * keys), the distinct directed pairs are collected once and every round
+  * runs on the driver ([[LocalGraph.lpaRounds]]).
   * Reference anchor: the reference exposes AGE/openCypher graph
   * analytics over the twin graph (api/Query.cs:1); community labels are
   * the same graph surface one aggregate further.
@@ -42,21 +45,25 @@ object LabelPropagation {
     * edge endpoint; community = 60-bit label value. */
   def communities(relationships: DataFrame, rounds: Int = 3): DataFrame = {
     val hist = communitiesHistory(relationships, rounds)
-    val out = hist.last.select(col("node"), col("lab").as("community"))
-      .localCheckpoint(eager = true)
-    hist.foreach(Blocks.free)
-    out
+    hist.dropRight(1).foreach(Blocks.free)
+    hist.last.select(col("node"), col("lab").as("community"))
   }
 
   /** Like [[communities]] but returns EVERY round's (node, lab) table —
     * the maintained state [[IncrementalAnalytics.refreshCommunities]]
     * splices unaffected nodes from. The caller frees the returned
-    * checkpoints; `communitiesHistory(r, k).last` carries the labels
+    * checkpoints (local relations under the [[LocalGraph]] cutoff);
+    * `communitiesHistory(r, k).last` carries the labels
     * `communities(r, k)` renames. */
   def communitiesHistory(relationships: DataFrame, rounds: Int)
       : IndexedSeq[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val fwd = relationships.select(col("source_id").as("node"),
+    // the probed pairs are the distributed path's input too, so a
+    // declined probe's scan and shuffle are not run again
+    val pairs = LocalGraph.probeInput(relationships
+      .select(col("source_id"), col("target_id")).distinct())
+    localHistory(pairs, rounds).foreach(return _)
+    val fwd = pairs.select(col("source_id").as("node"),
       col("target_id").as("nbr"))
     val edges = fwd
       .unionByName(fwd.select(col("nbr").as("node"), col("node").as("nbr")))
@@ -84,5 +91,22 @@ object LabelPropagation {
     }
     Blocks.free(init); Blocks.free(edges)
     hist.result()
+  }
+
+  /** The sub-cutoff bottom-out of [[communitiesHistory]] ([[LocalGraph]]):
+    * the distinct directed pairs collected once (string keys only — the
+    * starting label is the driver-side [[TextAnalysis.stableId]] of the
+    * id), symmetrized and voted on the driver, each round returned as a
+    * local (node, lab) frame. None ⇒ distributed. */
+  private def localHistory(pairs: DataFrame, rounds: Int)
+      : Option[IndexedSeq[DataFrame]] = {
+    import org.apache.spark.sql.types.StringType
+    val spark = pairs.sparkSession
+    if (!pairs.schema.fields.forall(_.dataType == StringType)) return None
+    LocalGraph.collectEdgesAny(pairs, LocalGraph.maxEdges(spark)).map { es =>
+      val (nodes, hist) = LocalGraph.lpaRounds(es,
+        n => TextAnalysis.stableId(n.asInstanceOf[String]), rounds)
+      LocalGraph.roundFrames(spark, StringType, "lab", nodes, hist)
+    }
   }
 }

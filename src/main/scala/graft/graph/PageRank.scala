@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   * shuffles on target, both map-side combinable. Per-iteration
   * `localCheckpoint` truncates the iterative-join lineage and frees the
   * superseded rank table, same discipline as [[Vle]] and
-  * [[graft.pipeline.Dedup.componentsStars]]. No driver-side state, no
-  * adjacency lists — hub nodes cost one aggregation bucket, not a task.
+  * [[graft.pipeline.Dedup.componentsStars]]. Above the [[LocalGraph]]
+  * cutoff there is no driver-side state and no adjacency list — hub
+  * nodes cost one aggregation bucket, not a task; at or under it,
+  * [[ranksHistory]] collects the distinct pairs once and runs the same
+  * integer rounds on the driver.
   */
 object PageRank {
 
@@ -40,7 +43,8 @@ object PageRank {
   }
 
   /** Like [[ranks]] but returns EVERY iteration's rank table r¹..r^K
-    * (each an eager localCheckpoint; the caller frees them) — the
+    * (each an eager localCheckpoint the caller frees, or under the
+    * [[LocalGraph]] cutoff a local relation) — the
     * maintained state an incremental refresh
     * ([[IncrementalAnalytics.refreshRanks]]) splices unaffected nodes
     * from. Same loop, same integer arithmetic: `ranksHistory(e, k).last`
@@ -49,8 +53,9 @@ object PageRank {
       : IndexedSeq[DataFrame] = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     import graft.core.Blocks
-    val edges = relationships.select(col("source_id"), col("target_id"))
-      .distinct()
+    val edges = LocalGraph.probeInput(relationships
+      .select(col("source_id"), col("target_id")).distinct())
+    localHistory(edges, iterations).foreach(return _)
     val nodes = edges.select(col("source_id").as("node"))
       .unionByName(edges.select(col("target_id").as("node")))
       .distinct()
@@ -83,6 +88,22 @@ object PageRank {
     Blocks.free(e)
     Blocks.free(nodes)
     hist.result()
+  }
+
+  /** The sub-cutoff bottom-out of [[ranksHistory]] ([[LocalGraph]]): the
+    * distinct pairs collected once, every round solved on the driver
+    * ([[LocalGraph.pagerankRounds]]), each returned as a local (node,
+    * rank_m) frame. None ⇒ distributed (over the cutoff, a null endpoint,
+    * or endpoint columns of differing or non-value-equal types). */
+  private def localHistory(edges: DataFrame, iterations: Int)
+      : Option[IndexedSeq[DataFrame]] = {
+    val dt = edges.schema("source_id").dataType
+    if (edges.schema("target_id").dataType != dt) return None
+    val spark = edges.sparkSession
+    LocalGraph.collectEdgesAny(edges, LocalGraph.maxEdges(spark)).map { es =>
+      val (nodes, hist) = LocalGraph.pagerankRounds(es, iterations)
+      LocalGraph.roundFrames(spark, dt, "rank_m", nodes, hist)
+    }
   }
 
   /** Weighted PageRank — rank flows in proportion to edge weight

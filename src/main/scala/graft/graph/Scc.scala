@@ -59,20 +59,19 @@ object Scc {
     */
   def components(edges: DataFrame, maxOuter: Int = 50,
                  maxInner: Int = 200): DataFrame = {
-    val e0 = edges.select(col("src").cast("string").as("src"),
-        col("dst").cast("string").as("dst"))
-      .distinct().compactCheckpoint()
-    val spark = e0.sparkSession
+    val distinctEdges = LocalGraph.probeInput(edges.select(
+        col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
+      .distinct())
+    val spark = edges.sparkSession
     val localMax = LocalGraph.maxEdges(spark)
     // Sub-cutoff bottom-out (r19, LocalGraph doc): a whole graph at or
     // under the cutoff resolves in one serial Tarjan instead of
-    // O(diameter × passes) Spark jobs. Counts as one pass against
-    // maxOuter (maxOuter = 0 keeps the loud non-convergence guard).
-    if (maxOuter > 0) LocalGraph.collectEdges(e0, localMax).foreach { es =>
-      val out = localDf(spark, LocalGraph.sccLabels(es))
-      Blocks.free(e0)
-      return out
-    }
+    // O(diameter × passes) Spark jobs; the edges are checkpointed only
+    // when it declines. Counts as one pass against maxOuter (maxOuter = 0
+    // keeps the loud non-convergence guard).
+    if (maxOuter > 0) LocalGraph.collectEdges(distinctEdges, localMax)
+      .foreach(es => return localDf(spark, LocalGraph.sccLabels(es)))
+    val e0 = distinctEdges.compactCheckpoint()
     var rem = e0.select(col("src").as("node"))
       .unionByName(e0.select(col("dst").as("node")))
       .distinct().compactCheckpoint()
@@ -170,12 +169,10 @@ object Scc {
   /** (node, scc) rows from a driver-side solve. */
   private def localDf(spark: org.apache.spark.sql.SparkSession,
       labels: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
-    // coalesce(1): a LocalRelation scans as min(rows, defaultParallelism)
-    // one-row TASKS per consumer (Spark's LocalTableScanExec slicing) —
-    // a 30-row solve consumed by three splice joins cost 90 scheduled
-    // tasks per job for driver-memory rows (r20)
-    labels.toSeq.toDF("node", "scc").coalesce(1)
+    import org.apache.spark.sql.types._
+    LocalGraph.frame(spark, StructType(Seq(StructField("node", StringType),
+        StructField("scc", StringType))),
+      labels.map { case (n, c) => org.apache.spark.sql.Row(n, c) })
   }
 
   /** Propagate the min label along `edges` (src → dst) until no label

@@ -13,6 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * classic iterative-algorithm failure mode on Spark — and persistence is
   * MEMORY_AND_DISK so a 100 TB frontier spills instead of OOMing. The loop
   * converges when the frontier empties (transitive closure) or at maxIter.
+  * The loop keeps no driver-side state above the [[LocalGraph]] cutoff;
+  * at or under it [[reachability]]'s BFS regime solves on the driver.
   */
 object Vle {
 
@@ -127,7 +129,9 @@ object Vle {
       return joinChain(edges, relNames, maxIter, sourceIds, sourceDf)
 
     import graft.core.Blocks
-    val e = filtered(edges, relNames).persist(StorageLevel.MEMORY_AND_DISK)
+    val e0 = LocalGraph.probeInput(filtered(edges, relNames))
+    localReach(e0, maxIter, sourceIds, sourceDf).foreach(return _)
+    val e = e0.persist(StorageLevel.MEMORY_AND_DISK)
 
     // A bound start set prunes the whole expansion to the reachable cone —
     // at scale, the difference between scanning a 100 TB edge set once per
@@ -201,6 +205,45 @@ object Vle {
     if (!(frontier eq out)) Blocks.free(frontier)
     e.unpersist(false)
     out
+  }
+
+  /** The sub-cutoff bottom-out of the BFS regime ([[LocalGraph]]): the
+    * filtered distinct edges (string keys) and the seed frame are each
+    * collected under the cutoff, one BFS per start runs on the driver
+    * ([[LocalGraph.bfsDepths]]), and the same iteration and frontier
+    * counts the distributed loop would observe are recorded. None ⇒
+    * distributed — over the cutoff (the output too), a null endpoint, or
+    * a non-string key or seed column. */
+  private def localReach(e: DataFrame, maxIter: Int,
+      sourceIds: Option[Seq[String]], sourceDf: Option[DataFrame])
+      : Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val spark = e.sparkSession
+    val cutoff = LocalGraph.maxEdges(spark)
+    // the seed plan is scanned as is (no shuffle, no single-task
+    // coalesce): a selective filter over a large twin table keeps its
+    // scan parallelism; duplicates are dropped here
+    def seedSet(sd: DataFrame): Option[Set[AnyRef]] = {
+      val ids = sd.select(col(sd.columns.head))
+      if (ids.schema.head.dataType != StringType) None
+      else LocalGraph.collectBounded(ids, cutoff)
+        .map(_.filterNot(_.isNullAt(0)).map(r => r.getString(0): AnyRef).toSet)
+    }
+    if (!e.schema.fields.forall(_.dataType == StringType)) return None
+    for {
+      es <- LocalGraph.collectEdgesAny(e, cutoff)
+      fromDf <- sourceDf.fold(Option(Option.empty[Set[AnyRef]]))(
+        sd => seedSet(sd).map(Some(_)))
+      starts = (sourceIds.map(_.toSet[AnyRef]) ++ fromDf).reduceOption(_ intersect _)
+      (rows, levels) <- LocalGraph.bfsDepths(es, starts, maxIter, cutoff)
+    } yield {
+      levels.zipWithIndex.foreach { case (n, d) => record(d + 1, n) }
+      LocalGraph.frame(spark, StructType(Seq(StructField("start_id", StringType),
+          StructField("end_id", StringType),
+          StructField("depth", IntegerType, nullable = false))),
+        rows.map { case (a, b, d) => Row(a, b, d) })
+    }
   }
 
   /** Small-bound regime: minimal-depth reachability as one declarative

@@ -421,7 +421,7 @@ object Dedup {
     // like [[minhashLshPairs]] checkpoint their own output, and a second
     // copy of the same rows would just double the pinned blocks.
     val proj = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val ownsEdges = !isRematerializable(proj)
+    val ownsEdges = !graft.core.Blocks.isRematerializable(proj)
     val edges = if (ownsEdges) proj.compactCheckpoint() else proj
     // sym is CHECKPOINTED (not merely persisted): every loop iteration
     // joins against it, and its lineage would otherwise reach back through
@@ -491,18 +491,17 @@ object Dedup {
   def componentsStars(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b"): DataFrame = {
     val proj = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val ownsEdges = !isRematerializable(proj)
-    val edges0 = if (ownsEdges) proj.compactCheckpoint() else proj
     // Sub-cutoff bottom-out (r19, graft.graph.LocalGraph doc): a pair
     // list at or under `spark.graft.graph.localSolveMaxEdges` resolves in
     // one serial union-find instead of O(log diameter) contraction
     // rounds × 3 Spark jobs each. Same labels bit-for-bit: min member
     // under the exact order Spark's `min` uses for the id type (skipped
-    // for types whose order this module doesn't reproduce).
-    localComponents(edges0).foreach { out =>
-      if (ownsEdges) graft.core.Blocks.free(edges0)
-      return out
-    }
+    // for types whose order this module doesn't reproduce). The input is
+    // checkpointed only when it declines.
+    val input = graft.graph.LocalGraph.probeInput(proj)
+    localComponents(input).foreach(return _)
+    val ownsEdges = !graft.core.Blocks.isRematerializable(proj)
+    val edges0 = if (ownsEdges) input.compactCheckpoint() else proj
     // all nodes, for labeling isolated-in-pairs docs at the end
     val nodes = edges0.select(col("a")).unionByName(edges0.select(col("b").as("a")))
       .distinct().select(col("a").as("doc")).compactCheckpoint()
@@ -539,29 +538,27 @@ object Dedup {
   }
 
   /** Driver-side union-find over a sub-cutoff pair frame (columns `a`,
-    * `b`, same orderable type), or None to stay distributed. The frame
-    * must already be materialized (count + collect read cached blocks). */
+    * `b`, same orderable type), or None to stay distributed. The pairs
+    * are read by ONE bounded collect ([[graft.graph.LocalGraph.collectBounded]]),
+    * not coalesced: an arbitrary pair plan keeps its scan parallelism. */
   private def localComponents(edges0: DataFrame)
       : Option[org.apache.spark.sql.DataFrame] = {
     import graft.graph.LocalGraph
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
     val spark = edges0.sparkSession
-    val cutoff = LocalGraph.maxEdges(spark)
     val dt = edges0.schema.fields(0).dataType
-    if (cutoff <= 0 || edges0.schema.fields(1).dataType != dt) return None
+    if (edges0.schema.fields(1).dataType != dt) return None
     val lt = LocalGraph.sparkLt(dt).getOrElse(return None)
-    if (LocalGraph.overCutoff(edges0, cutoff)) return None
-    val rows = edges0.collect()
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val labs = LocalGraph.componentLabelsAny(
-      rows.map(r => (r.get(0).asInstanceOf[AnyRef], r.get(1).asInstanceOf[AnyRef])), lt)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc", dt),
-      org.apache.spark.sql.types.StructField("component", dt)))
-    // coalesce(1): LocalRelations otherwise scan as one-row tasks
-    // (see graft.graph.Scc.localDf)
-    Some(spark.createDataFrame(
-      java.util.Arrays.asList(labs.map(p =>
-        org.apache.spark.sql.Row(p._1, p._2)): _*), schema).coalesce(1))
+    LocalGraph.collectBounded(edges0, LocalGraph.maxEdges(spark))
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .map { rows =>
+        val labs = LocalGraph.componentLabelsAny(rows.map(r =>
+          (r.get(0).asInstanceOf[AnyRef], r.get(1).asInstanceOf[AnyRef])), lt)
+        LocalGraph.frame(spark, StructType(Seq(StructField("doc", dt),
+            StructField("component", dt))),
+          labs.map(p => Row(p._1, p._2)))
+      }
   }
 
   /** One large-star + small-star contraction round ([[componentsStars]]'
@@ -656,19 +653,6 @@ object Dedup {
         coalesce(col("component"), col("doc")).as("component"))
       .write.mode("overwrite").parquet(s"$stateDir/labels")
     spark.read.parquet(s"$stateDir/labels")
-  }
-
-  /** True when re-evaluating `df` costs no more than re-reading stored
-    * rows: every node in the optimized plan is a narrow projection/filter
-    * over checkpoint blocks or a local relation. Such inputs don't need a
-    * defensive checkpoint before being read twice. */
-  private def isRematerializable(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
-    import org.apache.spark.sql.execution.LogicalRDD
-    df.queryExecution.optimizedPlan.collectFirst {
-      case p if !p.isInstanceOf[Project] && !p.isInstanceOf[Filter] &&
-        !p.isInstanceOf[LogicalRDD] && !p.isInstanceOf[LocalRelation] => p
-    }.isEmpty
   }
 
   /** Survivor election per component: keep the min doc id; returns

@@ -44,6 +44,15 @@ object TextAnalysis {
   def stableId(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast(LongType)
 
+  /** [[stableId]] on the driver: the first 15 hex digits of the MD5 of
+    * the string's UTF-8 bytes, read as a Long. */
+  def stableId(s: String): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // 15 hex digits = the first 7.5 bytes = the top 60 bits of 8
+    java.nio.ByteBuffer.wrap(d).getLong >>> 4
+  }
+
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
 

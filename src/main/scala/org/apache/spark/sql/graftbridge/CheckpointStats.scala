@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * number is known — which both kills the snowball and gives the planner
   * accurate sizes for broadcast decisions. It lives under
   * `org.apache.spark.sql` purely for access to `Dataset.ofRows` and
-  * `LogicalRDD`, the same pattern as [[ColumnBridge]].
+  * `LogicalRDD`, the same pattern as [[ColumnBridge]]; [[executed]]
+  * builds the same kind of leaf over a plan's executed RDD.
   */
 object CheckpointStats {
 
@@ -59,4 +60,16 @@ object CheckpointStats {
         Dataset.ofRows(spark, clean)
       case _ => df
     }
+
+  /** `df` executed once up to its final stage, as a frame over the
+    * resulting RDD with `df`'s output, partitioning and estimated
+    * statistics (the leaf `localCheckpoint` builds, minus the blocks).
+    * Under adaptive execution `toRdd` runs the scan, shuffle-map and
+    * broadcast stages here, so every later query over the frame re-reads
+    * their output instead of re-running them; nothing is persisted. */
+  def executed(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[_]]
+    Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
 }

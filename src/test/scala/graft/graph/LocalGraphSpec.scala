@@ -167,4 +167,196 @@ class LocalGraphSpec extends AnyFunSuite {
     assert(LocalGraph.ktrussSurvivors(canon, 3, 10).toSet ==
       Set[(AnyRef, AnyRef)](("a", "b"), ("a", "c"), ("b", "c")))
   }
+
+  /** Relationship frame over `rows` plus two self-loops and three
+    * duplicated edges — inputs the fixpoints must deduplicate. */
+  private def rels(rows: Seq[(String, String)]): DataFrame = {
+    val s = spark; import s.implicits._
+    (rows ++ rows.take(3) ++ Seq((rows.head._1, rows.head._1),
+      (rows.last._2, rows.last._2))).toDF("source_id", "target_id")
+  }
+
+  private def trickyDigraph(seed: Int, n: Int = 14) = randomDigraph(n, seed,
+    i => if (i < Tricky.size) Tricky(i) else f"p$i%02d")
+
+  /** True when `df` is a driver-side result: a local relation, no
+    * checkpoint blocks. */
+  private def isLocal(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) &&
+      !plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+  }
+
+  test("PageRank ranks and every ranksHistory round: local == distributed") {
+    for (seed <- 1 to 2) {
+      val r = rels(trickyDigraph(seed))
+      val (local, dist) = bothPaths {
+        (PageRank.ranks(r, 3).collect().map(x => (x.getString(0), x.getLong(1))).toSet,
+         PageRank.ranksHistory(r, 3).map(_.collect()
+           .map(x => (x.getString(0), x.getLong(1))).toSet))
+      }
+      assert(local == dist, s"seed $seed")
+    }
+  }
+
+  test("label propagation communities and every round: local == distributed") {
+    for (seed <- 1 to 2) {
+      val r = rels(trickyDigraph(seed))
+      val (local, dist) = bothPaths {
+        (LabelPropagation.communities(r, 3).collect()
+           .map(x => (x.getString(0), x.getLong(1))).toSet,
+         LabelPropagation.communitiesHistory(r, 3).map(_.collect()
+           .map(x => (x.getString(0), x.getLong(1))).toSet))
+      }
+      assert(local == dist, s"seed $seed")
+    }
+  }
+
+  test("k-core with self-loops, duplicates and non-BMP ids: local == distributed") {
+    val r = rels(trickyDigraph(3))
+    for (k <- Seq(2, 3)) {
+      val (local, dist) = bothPaths {
+        (KCore.peel(r, "source_id", "target_id", k, rounds = 2).collect()
+           .map(_.getString(0)).toSet,
+         KCore.kcore(r, "source_id", "target_id", k).collect()
+           .map(_.getString(0)).toSet)
+      }
+      assert(local == dist, s"k $k")
+    }
+  }
+
+  test("the cutoff counts collected rows: k-core and LPA solve locally when the pairs fit") {
+    // the symmetric sets (what the distributed loops read) hold about
+    // twice the collected pairs, so a cutoff of exactly the pair count
+    // must still take the local path
+    val rows = trickyDigraph(2)
+    val r = rels(rows)
+    val directed = r.distinct().count()
+    val canon = rows.map { case (a, b) =>
+      if (LocalGraph.utf8Lt(a, b)) (a, b) else (b, a) }.distinct.size.toLong
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    try {
+      spark.conf.set(Knob, "0")
+      val kDist = rowsOf(KCore.kcore(r, "source_id", "target_id", 2))
+      val lDist = rowsOf(LabelPropagation.communities(r, 2))
+      spark.conf.set(Knob, canon.toString)
+      val kc = KCore.kcore(r, "source_id", "target_id", 2)
+      assert(isLocal(kc) && rowsOf(kc) == kDist)
+      spark.conf.set(Knob, directed.toString)
+      val lp = LabelPropagation.communities(r, 2)
+      assert(isLocal(lp) && rowsOf(lp) == lDist)
+      spark.conf.set(Knob, (directed - 1).toString)
+      val lpDeclined = LabelPropagation.communities(r, 2)
+      assert(!isLocal(lpDeclined) && rowsOf(lpDeclined) == lDist)
+    } finally spark.conf.unset(Knob)
+  }
+
+  test("Vle.reachability BFS regime: local == distributed, metrics included") {
+    val s = spark; import s.implicits._
+    // a ring through the seed "a" (a reaches itself at depth 4) plus the
+    // random digraph, two relationship names
+    val ring = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("d", "e"))
+    val rows = (ring ++ trickyDigraph(4, 12)).zipWithIndex.map {
+      case ((x, y), i) => (x, y, if (i % 4 == 3) "r2" else "r1") }
+    val g = (rows ++ rows.take(2) :+ (("e", "e", "r1")))
+      .toDF("source_id", "target_id", "relationship_name")
+    val seedFrame = Seq("a", "p07", "p07", "nowhere").toDF("id")
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "ids" -> (() => Vle.reachability(g, maxIter = 4,
+        sourceIds = Some(Seq("a", "p05")))),
+      "frame" -> (() => Vle.reachability(g, maxIter = 6,
+        sourceDf = Some(seedFrame))),
+      "ids+frame, one name" -> (() => Vle.reachability(g, Seq("r1"),
+        maxIter = 6, sourceIds = Some(Seq("a", "p07")),
+        sourceDf = Some(seedFrame))),
+      "unseeded" -> (() => Vle.reachability(g, maxIter = 4)),
+      "to fixpoint" -> (() => Vle.reachability(g, maxIter = Int.MaxValue,
+        sourceIds = Some(Seq("a")))))
+    for ((name, run) <- cases) {
+      val (local, dist) = bothPaths {
+        val m = new Vle.Metrics
+        val out = Vle.withMetrics(m)(run()).collect()
+          .map(x => (x.getString(0), x.getString(1), x.getInt(2)))
+        (out.toSet, out.length, m.iterations, m.frontierPeak)
+      }
+      assert(local == dist, name)
+    }
+    val (aRing, _) = bothPaths(Vle.reachability(g, maxIter = 6,
+      sourceIds = Some(Seq("a"))).collect().map(_.getString(1)).toSet)
+    assert(aRing.contains("a"), "a cycle leads back to the seed")
+  }
+
+  /** Spark jobs (or, with `stages`, stages actually run — a stage whose
+    * shuffle output is reused is skipped, not submitted) started while
+    * `f` runs; the listener bus delivers asynchronously, so wait for the
+    * count to settle. */
+  private def jobsOf(f: => Unit, stages: Boolean = false): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!stages) n.incrementAndGet(): Unit
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (stages) n.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      var last = -1
+      while (n.get() != last) { last = n.get(); Thread.sleep(200) }
+      last
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def pinFixpoints(r: DataFrame): Seq[(String, () => DataFrame)] = {
+    val pairs = r.select(col("source_id").as("doc_a"), col("target_id").as("doc_b"))
+    Seq(
+      "pagerank" -> (() => PageRank.ranks(r, 2)),
+      "lpa" -> (() => LabelPropagation.communities(r, 2)),
+      "kcore" -> (() => KCore.kcore(r, "source_id", "target_id", 2)),
+      "vle" -> (() => Vle.reachability(r, maxIter = 6,
+        sourceIds = Some(Seq("j00", "j03")))),
+      "wcc" -> (() => graft.pipeline.Dedup.components(pairs)),
+      "scc" -> (() => Scc.components(r.select(col("source_id").as("src"),
+        col("target_id").as("dst")))))
+  }
+
+  test("a local fixpoint runs a handful of Spark jobs and persists nothing") {
+    val r = rels(randomDigraph(12, 6, i => f"j$i%02d")).localCheckpoint(true)
+    try {
+      spark.conf.set(Knob, "100000")
+      for ((name, run) <- pinFixpoints(r)) {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val jobs = jobsOf(run().collect(): Unit)
+        assert(jobs <= 4, s"$name ran $jobs jobs")
+        assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+          s"$name left a persisted RDD")
+      }
+    } finally spark.conf.unset(Knob)
+    graft.core.Blocks.free(r)
+  }
+
+  test("a declined probe reuses its work: at most one stage over the distributed path") {
+    // the probe of a distinct plan runs its shuffle-map stage; the decline
+    // path's checkpoint must re-read that output (a persisted probe input),
+    // not run the stage again
+    val r = rels(randomDigraph(12, 6, i => f"j$i%02d"))
+    def stagesAt(cutoff: String, name: String, run: () => DataFrame): Int = {
+      spark.conf.set(Knob, cutoff)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      var out: DataFrame = null
+      val n = jobsOf({ out = run(); out.collect(): Unit }, stages = true)
+      graft.core.Blocks.free(out) // the distributed result is a checkpoint
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"$name left a persisted RDD at cutoff $cutoff")
+      n
+    }
+    try {
+      for ((name, run) <- pinFixpoints(r)) {
+        val dist = stagesAt("0", name, run)
+        val declined = stagesAt("3", name, run)
+        assert(declined <= dist + 1, s"$name: $declined stages declined, $dist distributed")
+      }
+    } finally spark.conf.unset(Knob)
+  }
 }

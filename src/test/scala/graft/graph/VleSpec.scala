@@ -240,4 +240,24 @@ class VleSpec extends AnyFunSuite {
     assert(vleOf("r*") == Some((1, AdtParser.DefaultVleMax)))
     assert(vleOf("r*3..4") == Some((3, 4)))
   }
+
+  test("trail enumeration past the depth cap stops at the row budget without throwing") {
+    // a 10-ring with a parallel n0->n1 edge: the direct pair (n0, n1) is
+    // redeemed for *2..12 only by the 11-edge trail around the ring, past
+    // TrailEnumDepthCap; a budget of 1 frontier row truncates there
+    val rows = (0 until 10).map(i => (s"n$i", s"n${(i + 1) % 10}", s"e$i")) :+
+      (("n0", "n1", "e10"))
+    def run(s: SparkSession): Set[(String, String, Int)] = {
+      import s.implicits._
+      Vle.range(rows.toDF("source_id", "target_id", "relationship_id"), 2, 12)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    }
+    assert(12 > Vle.TrailEnumDepthCap)
+    val full = run(spark)
+    val child = spark.newSession()
+    child.conf.set("spark.graft.vle.trailEnumRowBudget", "1")
+    val capped = run(child)
+    assert(full.contains(("n0", "n1", 11)))
+    assert(capped.subsetOf(full) && !capped.contains(("n0", "n1", 11)))
+  }
 }
