@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Blocks
@@ -24,8 +23,9 @@ import graft.core.Blocks
   * accumulates its own dependency, Brandes' v ≠ s rule).
   *
   * Scale shape: per-round lineage truncated via eager localCheckpoint
-  * (layer tables are kept — the backward pass re-reads them — and freed
-  * at the end); frontier emptiness probes are driver-side counts over
+  * in a [[graft.core.Blocks.Scope]] (layer tables are kept — the backward
+  * pass re-reads them — and freed on exit, also when a guard throws);
+  * frontier emptiness probes are driver-side counts over
   * materialized blocks. Rounds = eccentricity of the source set, the
   * [[Sssp]] discipline.
   */
@@ -74,34 +74,30 @@ object Betweenness {
   def harmonic(relationships: DataFrame, sources: Seq[String],
                maxDepth: Int = 16, strict: Boolean = true): DataFrame = {
     val plan = LocalGraph.probeInput(edgePlan(relationships))
-    localSolved(plan, sources, maxDepth, strict).foreach { s =>
+    localSolved(plan, sources, maxDepth, strict).map { sv =>
       val spark = relationships.sparkSession
       import spark.implicits._
-      return s.nodes.zip(s.hcM).toSeq.toDF("node", "hc_m").coalesce(1)
-    }
-    val e0 = plan.compactCheckpoint()
-    val (e, layers) = forward(e0, sources, maxDepth, strict)
-    val all = e.select(col("a").as("node")).distinct()
-    val agg = layers.zipWithIndex.drop(1).map { case (l, d) =>
-        l.select(col("node"), lit(Scale / d).as("h"))
-      } match {
-      case Seq() => None
-      case parts => Some(parts.reduce(_ unionByName _)
-        .groupBy(col("node")).agg(sum(col("h")).as("hc_m"))
-        .compactCheckpoint())
-    }
-    layers.foreach(Blocks.free)
-    // materialize the (node-sized) result so every upstream checkpoint —
-    // the edge table included — can be freed before returning, the
-    // eccentricity discipline: a lazy return would pin e's blocks until
-    // driver GC
-    val out = (agg match {
-      case None => all.select(col("node"), lit(0L).as("hc_m"))
-      case Some(a) => all.join(a, Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("hc_m"), lit(0L)).as("hc_m"))
-    }).compactCheckpoint()
-    Blocks.free(e); agg.foreach(Blocks.free)
-    out
+      sv.nodes.zip(sv.hcM).toSeq.toDF("node", "hc_m").coalesce(1)
+    }.getOrElse(Blocks.scoped { s =>
+      val e = s.compact(plan)
+      val layers = forward(e, sources, maxDepth, strict)
+      val all = e.select(col("a").as("node")).distinct()
+      val agg = layers.zipWithIndex.drop(1).map { case (l, d) =>
+          l.select(col("node"), lit(Scale / d).as("h"))
+        } match {
+        case Seq() => None
+        case parts => Some(s.compact(parts.reduce(_ unionByName _)
+          .groupBy(col("node")).agg(sum(col("h")).as("hc_m"))))
+      }
+      // materialize the (node-sized) result, so the scope frees every
+      // upstream checkpoint — the edge table included: a lazy return
+      // would pin e's blocks until driver GC
+      s.compact(agg match {
+        case None => all.select(col("node"), lit(0L).as("hc_m"))
+        case Some(a) => all.join(a, Seq("node"), "left_outer")
+          .select(col("node"), coalesce(col("hc_m"), lit(0L)).as("hc_m"))
+      })
+    })
   }
 
   /** Sampled approximate betweenness — the 100 TB path (Brandes & Pich
@@ -145,29 +141,25 @@ object Betweenness {
   def eccentricity(relationships: DataFrame, sources: Seq[String],
                    maxDepth: Int = 16, strict: Boolean = true): DataFrame = {
     val plan = LocalGraph.probeInput(edgePlan(relationships))
-    localSolved(plan, sources, maxDepth, strict).foreach { s =>
+    localSolved(plan, sources, maxDepth, strict).map { sv =>
       val spark = relationships.sparkSession
       import spark.implicits._
-      return s.eccBySource.toSeq.toDF("source", "ecc", "n_reached").coalesce(1)
-    }
-    val e0 = plan.compactCheckpoint()
-    val (e, layers) = forward(e0, sources, maxDepth, strict)
-    val out = layers.zipWithIndex.map { case (l, d) =>
-        l.select(col("s"), lit(d.toLong).as("depth"))
-      }.reduce(_ unionByName _)
-      .groupBy(col("s").as("source"))
-      .agg(max(col("depth")).as("ecc"), count(lit(1)).as("n_reached"))
-      .compactCheckpoint()
-    layers.foreach(Blocks.free); Blocks.free(e)
-    out
+      sv.eccBySource.toSeq.toDF("source", "ecc", "n_reached").coalesce(1)
+    }.getOrElse(Blocks.scoped { s =>
+      val layers = forward(s.compact(plan), sources, maxDepth, strict)
+      s.compact(layers.zipWithIndex.map { case (l, d) =>
+          l.select(col("s"), lit(d.toLong).as("depth"))
+        }.reduce(_ unionByName _)
+        .groupBy(col("s").as("source"))
+        .agg(max(col("depth")).as("ecc"), count(lit(1)).as("n_reached")))
+    })
   }
 
-  /** Shared forward machinery: the undirected edge checkpoint plus the
-    * BFS layers (s, node, sigma) per depth; layers(0) = the sources.
-    * Caller owns (and frees) the returned checkpoints. */
+  /** Shared forward machinery: the BFS layers (s, node, sigma) per depth
+    * over the undirected edge checkpoint `e`; layers(0) = the sources. */
   private def forward(e: DataFrame, sources: Seq[String],
       maxDepth: Int, strict: Boolean)
-      : (DataFrame, IndexedSeq[DataFrame]) = {
+      : IndexedSeq[DataFrame] = Blocks.scoped { s =>
     require(sources.nonEmpty, "need at least one source")
     val spark = e.sparkSession
     import spark.implicits._
@@ -190,11 +182,10 @@ object Betweenness {
             s"Long at depth $depth — equal-path structure too dense for " +
             "64-bit accumulation; sample fewer/other sources")
     var prevMaxSigma = 1L
-    var frontier = sources.distinct.map(s => (s, s, 1L))
-      .toDF("s", "node", "sigma").compactCheckpoint()
+    var frontier = s.compact(sources.distinct.map(src => (src, src, 1L))
+      .toDF("s", "node", "sigma"))
     val layers = scala.collection.mutable.Buffer(frontier)
-    var visited = frontier.select(col("s"), col("node"))
-      .compactCheckpoint()
+    var visited = s.compact(frontier.select(col("s"), col("node")))
     var d = 0
     var alive = frontier.count()
     while (alive > 0 && d < maxDepth) {
@@ -202,11 +193,10 @@ object Betweenness {
       // BEFORE this round's Long sums execute: certify they cannot wrap
       // (term count ≤ in-degree ≤ m, each term ≤ prevMaxSigma)
       checkNoWrap(prevMaxSigma, d)
-      val nxt = frontier.join(e, frontier("node") === e("a"))
+      val nxt = s.compact(frontier.join(e, frontier("node") === e("a"))
         .select(col("s"), e("b").as("node"), col("sigma"))
         .join(visited, Seq("s", "node"), "left_anti")
-        .groupBy(col("s"), col("node")).agg(sum(col("sigma")).as("sigma"))
-        .compactCheckpoint()
+        .groupBy(col("s"), col("node")).agg(sum(col("sigma")).as("sigma")))
       // one probe job over the materialized blocks carries BOTH the
       // emptiness test and the overflow guard: sigma counts equal
       // shortest paths and grow combinatorially on grid-like graphs —
@@ -220,22 +210,19 @@ object Betweenness {
           s"shortest-path count sigma=${probe.getLong(1)} exceeds " +
             s"$SigmaBound at depth $d — equal-path structure too dense " +
             "for 64-bit accumulation; sample fewer/other sources")
-      if (alive > 0) prevMaxSigma = probe.getLong(1)
       if (alive > 0) {
+        prevMaxSigma = probe.getLong(1)
         layers += nxt
-        val nv = visited.unionByName(nxt.select(col("s"), col("node")))
-          .compactCheckpoint()
-        Blocks.free(visited)
-        visited = nv
+        visited = s.compact(visited.unionByName(nxt.select(col("s"), col("node"))))
         frontier = nxt
+        s.keep(visited, layers)
       }
     }
     if (strict && alive > 0)
       throw new IllegalStateException(
         s"BFS still expanding at maxDepth=$maxDepth — " +
           "raise maxDepth or pass strict=false")
-    Blocks.free(visited)
-    (e, layers.toIndexedSeq)
+    layers.toIndexedSeq
   }
 
   /** (node, bc_m) for every endpoint in `relationships` — micro-unit
@@ -248,71 +235,62 @@ object Betweenness {
   def centrality(relationships: DataFrame, sources: Seq[String],
                  maxDepth: Int = 16, strict: Boolean = true): DataFrame = {
     val plan = LocalGraph.probeInput(edgePlan(relationships))
-    localSolved(plan, sources, maxDepth, strict).foreach { s =>
+    localSolved(plan, sources, maxDepth, strict).map { sv =>
       val spark = relationships.sparkSession
       import spark.implicits._
-      return s.nodes.zip(s.bcM).toSeq.toDF("node", "bc_m").coalesce(1)
-    }
-    val e0 = plan.compactCheckpoint()
-    val (e, layers0) = forward(e0, sources, maxDepth, strict)
-    val layers = scala.collection.mutable.Buffer(layers0: _*)
+      sv.nodes.zip(sv.bcM).toSeq.toDF("node", "bc_m").coalesce(1)
+    }.getOrElse(Blocks.scoped { s =>
+      val e = s.compact(plan)
+      val layers = forward(e, sources, maxDepth, strict)
 
-    // ---- backward accumulation, deepest layer first ----
-    // delta(v) over the deepest layer is 0 (no successors); each shallower
-    // layer joins successors-at-depth+1 with their deltas
-    var delta = layers.last.select(col("s"), col("node"), lit(0L).as("delta"))
-      .compactCheckpoint()
-    // frames holding dist>0 deltas feed the final aggregate and must stay
-    // materialized; only the dist-0 frame (sources, excluded by Brandes'
-    // v ≠ s rule) is freeable
-    val contributions = scala.collection.mutable.Buffer.empty[DataFrame]
-    if (layers.size > 1) contributions += delta // deepest layer, dist > 0
-    for (dep <- (layers.size - 2) to 0 by -1) {
-      val lv = layers(dep)
-        .select(col("s").as("vs"), col("node").as("v"), col("sigma").as("sv"))
-      val lw = layers(dep + 1)
-        .select(col("s"), col("node").as("w"), col("sigma").as("sw"))
-        .join(delta.select(col("s"), col("node").as("w"),
-          col("delta").as("dw")), Seq("s", "w"))
-      val dv = lv
-        .join(e, col("v") === e("a"))
-        .join(lw, e("b") === lw("w") && col("vs") === lw("s"))
-        .select(col("vs"), col("v"),
-          // DECIMAL(38,0) product: sigma (≤ SigmaBound) times micro-unit
-          // deltas overflows Long on dense equal-path graphs; `div`
-          // narrows the exact decimal quotient back to Long
-          expr("(CAST(sv AS DECIMAL(38,0)) * (1000000 + dw)) div sw")
-            .as("term"))
-        .groupBy(col("vs").as("s"), col("v").as("node"))
-        .agg(sum(col("term")).as("delta"))
-      val full = lv.select(col("vs").as("s"), col("v").as("node"))
-        .join(dv, Seq("s", "node"), "left_outer")
-        .select(col("s"), col("node"),
-          coalesce(col("delta"), lit(0L)).as("delta"))
-        .compactCheckpoint()
-      delta = full
-      if (dep > 0) contributions += full
-    }
-    Blocks.free(delta) // the dist-0 frame (never added to contributions)
+      // ---- backward accumulation, deepest layer first ----
+      // delta(v) over the deepest layer is 0 (no successors); each shallower
+      // layer joins successors-at-depth+1 with their deltas
+      var delta = s.compact(layers.last
+        .select(col("s"), col("node"), lit(0L).as("delta")))
+      // frames holding dist>0 deltas feed the final aggregate; the dist-0
+      // frame (sources, excluded by Brandes' v ≠ s rule) is not one
+      val contributions = scala.collection.mutable.Buffer.empty[DataFrame]
+      if (layers.size > 1) contributions += delta // deepest layer, dist > 0
+      for (dep <- (layers.size - 2) to 0 by -1) {
+        val lv = layers(dep)
+          .select(col("s").as("vs"), col("node").as("v"), col("sigma").as("sv"))
+        val lw = layers(dep + 1)
+          .select(col("s"), col("node").as("w"), col("sigma").as("sw"))
+          .join(delta.select(col("s"), col("node").as("w"),
+            col("delta").as("dw")), Seq("s", "w"))
+        val dv = lv
+          .join(e, col("v") === e("a"))
+          .join(lw, e("b") === lw("w") && col("vs") === lw("s"))
+          .select(col("vs"), col("v"),
+            // DECIMAL(38,0) product: sigma (≤ SigmaBound) times micro-unit
+            // deltas overflows Long on dense equal-path graphs; `div`
+            // narrows the exact decimal quotient back to Long
+            expr("(CAST(sv AS DECIMAL(38,0)) * (1000000 + dw)) div sw")
+              .as("term"))
+          .groupBy(col("vs").as("s"), col("v").as("node"))
+          .agg(sum(col("term")).as("delta"))
+        delta = s.compact(lv.select(col("vs").as("s"), col("v").as("node"))
+          .join(dv, Seq("s", "node"), "left_outer")
+          .select(col("s"), col("node"),
+            coalesce(col("delta"), lit(0L)).as("delta")))
+        if (dep > 0) contributions += delta
+      }
 
-    val nodes = e.select(col("a").as("node")).distinct()
-    // materialize the node-sized result, then free EVERY upstream
-    // checkpoint (edge table, layers, backward contributions) — returning
-    // a lazy frame would pin all of them in the BlockManager until
-    // driver GC
-    val bc = (
-      if (contributions.isEmpty)
-        nodes.select(col("node"), lit(0L).as("bc_m"))
-      else
-        nodes.join(
-          contributions.reduce(_ unionByName _)
-            .groupBy(col("node")).agg(sum(col("delta")).as("bc_m")),
-          Seq("node"), "left_outer")
-          .select(col("node"), coalesce(col("bc_m"), lit(0L)).as("bc_m"))
-      ).compactCheckpoint()
-    layers.foreach(Blocks.free)
-    contributions.foreach(Blocks.free)
-    Blocks.free(e)
-    bc
+      val nodes = e.select(col("a").as("node")).distinct()
+      // materialize the node-sized result, so the scope frees EVERY
+      // upstream checkpoint (edge table, layers, backward contributions) —
+      // returning a lazy frame would pin all of them in the BlockManager
+      // until driver GC
+      s.compact(
+        if (contributions.isEmpty)
+          nodes.select(col("node"), lit(0L).as("bc_m"))
+        else
+          nodes.join(
+            contributions.reduce(_ unionByName _)
+              .groupBy(col("node")).agg(sum(col("delta")).as("bc_m")),
+            Seq("node"), "left_outer")
+            .select(col("node"), coalesce(col("bc_m"), lit(0L)).as("bc_m")))
+    })
   }
 }

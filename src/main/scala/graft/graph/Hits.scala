@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Blocks
@@ -23,20 +22,21 @@ import graft.core.Blocks
   * Scale shape per iteration: two equi-joins (scores against the edge
   * list, keyed by source/target), two map-side-combinable sums, and one
   * scalar total per half-step (a broadcastable single row). Lineage is
-  * truncated per iteration via `localCheckpoint` with superseded tables
-  * freed — [[PageRank]]'s discipline.
+  * truncated per iteration via `localCheckpoint` in a
+  * [[graft.core.Blocks.Scope]], which frees superseded tables.
   */
 object Hits {
 
   /** (node, hub_m, auth_m) after `iterations` synchronous rounds over
     * the DIRECTED edge set; nodes = every endpoint. */
-  def scores(relationships: DataFrame, iterations: Int = 3): DataFrame = {
+  def scores(relationships: DataFrame,
+      iterations: Int = 3): DataFrame = Blocks.scoped { s =>
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val edges = relationships.select(col("source_id"), col("target_id"))
-      .distinct().compactCheckpoint()
-    val nodes = edges.select(col("source_id").as("node"))
+    val edges = s.compact(relationships.select(col("source_id"), col("target_id"))
+      .distinct())
+    val nodes = s.compact(edges.select(col("source_id").as("node"))
       .unionByName(edges.select(col("target_id").as("node")))
-      .distinct().compactCheckpoint()
+      .distinct())
 
     /** Sum-normalize a (node, x) table into micro-units, two-step:
       * pre-shrink by s = t div 1e6 + 1 so the ·1e6 product never
@@ -48,50 +48,44 @@ object Hits {
       * output both read the materialized blocks (pre-r13 the collect ran
       * the un-checkpointed join+agg and the caller's checkpoint re-ran
       * it — doubling every half-step). Returns an eagerly-checkpointed
-      * frame; the raw intermediate's blocks are freed before returning. */
+      * frame; the raw intermediate is freed at the round's end. */
     def normalize(df: DataFrame): DataFrame = {
-      val raw = df.compactCheckpoint()
+      val raw = s.compact(df)
       val row = raw.agg(sum(col("x"))).collect()(0)
       // empty frame sums to NULL, an all-zero vector to 0 — both degrade
       // to divisor 1 (scores stay zero / no rows)
       val total = if (row.isNullAt(0)) 0L else row.getLong(0)
       val t = if (total == 0L) 1L else total
-      val s = t / 1000000L + 1L
-      val ts = t / s
-      val out = raw.select(col("node"),
-        expr(s"((x div ${s}L) * 1000000L) div ${ts}L").as("x"))
-        .compactCheckpoint()
-      Blocks.free(raw)
-      out
+      val sh = t / 1000000L + 1L
+      val ts = t / sh
+      s.compact(raw.select(col("node"),
+        expr(s"((x div ${sh}L) * 1000000L) div ${ts}L").as("x")))
     }
 
-    var hubs = nodes.withColumn("x", lit(1000000L))
-      .compactCheckpoint()
-    var auths: DataFrame = null
-    for (_ <- 1 to iterations) {
+    /** One round from the hub scores: (new hubs, new authorities). */
+    def round(hubs: DataFrame): (DataFrame, DataFrame) = {
       // authority step: a(v) = Σ h(u) over edges u→v
       val aRaw = edges
         .join(hubs.select(col("node").as("source_id"), col("x")), Seq("source_id"))
         .groupBy(col("target_id").as("node")).agg(sum(col("x")).as("x"))
-      val aNext = normalize(
+      val auths = normalize(
         nodes.join(aRaw, Seq("node"), "left_outer")
           .select(col("node"), coalesce(col("x"), lit(0L)).as("x")))
-      if (auths != null) Blocks.free(auths)
-      auths = aNext
       // hub step: h(u) = Σ a(v) over edges u→v
       val hRaw = edges
         .join(auths.select(col("node").as("target_id"), col("x")), Seq("target_id"))
         .groupBy(col("source_id").as("node")).agg(sum(col("x")).as("x"))
-      val hNext = normalize(
+      val next = (normalize(
         nodes.join(hRaw, Seq("node"), "left_outer")
-          .select(col("node"), coalesce(col("x"), lit(0L)).as("x")))
-      Blocks.free(hubs)
-      hubs = hNext
+          .select(col("node"), coalesce(col("x"), lit(0L)).as("x"))), auths)
+      s.keep(next, edges, nodes)
+      next
     }
-    val out = hubs.select(col("node"), col("x").as("hub_m"))
-      .join(auths.select(col("node"), col("x").as("auth_m")), Seq("node"))
-      .compactCheckpoint()
-    Blocks.free(hubs); Blocks.free(auths); Blocks.free(edges); Blocks.free(nodes)
-    out
+
+    val (hubs, auths) = (2 to iterations).foldLeft(
+        round(s.compact(nodes.withColumn("x", lit(1000000L))))) {
+      case ((h, _), _) => round(h) }
+    s.compact(hubs.select(col("node"), col("x").as("hub_m"))
+      .join(auths.select(col("node"), col("x").as("auth_m")), Seq("node")))
   }
 }

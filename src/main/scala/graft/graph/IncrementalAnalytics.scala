@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -142,9 +141,9 @@ object IncrementalAnalytics {
     * primitive every splice maintainer uses. `e` must be materialized
     * (checkpointed) with string columns `u`, `v`; `seeds` carries one
     * string column `node`. Returns the visited set (incl. edge-free
-    * seeds) as a (node) frame the CALLER frees — a checkpoint, or under
-    * the cutoff a local relation ([[LocalGraph.frame]]); never frees its
-    * inputs.
+    * seeds) as a (node) frame — a checkpoint its scope hands up, or
+    * under the cutoff a local relation ([[LocalGraph.frame]]); never
+    * frees its inputs.
     *
     * Sub-cutoff inputs ([[LocalGraph.maxEdges]]) resolve in one serial
     * BFS — the mutation cone a maintainer chases is batch-sized by
@@ -162,34 +161,30 @@ object IncrementalAnalytics {
     // unbounded rows to the driver, so the seeds go through the same
     // bounded collect and an over-cutoff seed set stays distributed.
     val seedSet = seeds.select(col("node")).distinct()
-    for {
+    (for {
       es <- LocalGraph.collectEdges(e, cutoff)
       seedRows <- LocalGraph.collectBounded(seedSet, cutoff)
-    } return LocalGraph.frame(spark, StructType(Seq(StructField("node", StringType))),
-      LocalGraph.reachNodes(es, seedRows.map(_.getString(0))).map(Row(_)))
-    var parts = List(seedSet.compactCheckpoint())
-    var frontier = parts.head
-    var alive = frontier.count()
-    var round = 0
-    while (alive > 0) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"$what reachability still expanding after $maxRounds " +
-            "rounds — raise the round cap")
-      val visited = parts.reduce(_ unionByName _)
-      val nxt = e.join(frontier.withColumnRenamed("node", "u"),
-          Seq("u"), "left_semi")
-        .select(col("v").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .compactCheckpoint()
-      alive = nxt.count()
-      parts ::= nxt
-      frontier = nxt
-    }
-    val out = parts.reduce(_ unionByName _).compactCheckpoint()
-    parts.foreach(Blocks.free)
-    out
+    } yield LocalGraph.frame(spark, StructType(Seq(StructField("node", StringType))),
+      LocalGraph.reachNodes(es, seedRows.map(_.getString(0))).map(Row(_))))
+      .getOrElse(Blocks.scoped { s =>
+        var parts = List(s.compact(seedSet))
+        var alive = parts.head.count()
+        var round = 0
+        while (alive > 0) {
+          round += 1
+          if (round > maxRounds)
+            throw new IllegalStateException(
+              s"$what reachability still expanding after $maxRounds " +
+                "rounds — raise the round cap")
+          val nxt = s.compact(e.join(parts.head.withColumnRenamed("node", "u"),
+              Seq("u"), "left_semi")
+            .select(col("v").as("node")).distinct()
+            .join(parts.reduce(_ unionByName _), Seq("node"), "left_anti"))
+          alive = nxt.count()
+          parts ::= nxt
+        }
+        s.compact(parts.reduce(_ unionByName _))
+      })
   }
 
   private def endpoints(p: DataFrame): DataFrame =
@@ -224,10 +219,8 @@ object IncrementalAnalytics {
       history: IndexedSeq[DataFrame]): DataFrame = {
     // needDirty=false: the dirty key sets would be discarded, so skip
     // their per-iteration materialization jobs outright (r19)
-    val (hist, _) = refreshRanksHistoryParts(newRels, changedPairs,
-      history, needDirty = false)
-    hist.dropRight(1).foreach(Blocks.free)
-    hist.last
+    Blocks.scoped(_ => refreshRanksHistoryParts(newRels, changedPairs,
+      history, needDirty = false)._1.last)
   }
 
   /** [[refreshRanks]] returning EVERY refreshed iteration (the new
@@ -236,41 +229,39 @@ object IncrementalAnalytics {
     * iteration, the key set whose rows can differ from the previous
     * history — iteration i's affected cone plus the nodes the batch
     * removed from the edge universe. A delta commit rewrites only the
-    * state buckets those keys hash into. Caller owns BOTH returned
-    * checkpoint sequences. */
+    * state buckets those keys hash into. BOTH returned checkpoint
+    * sequences pass to the caller's scope. */
   private[graft] def refreshRanksHistoryParts(newRels: DataFrame,
       changedPairs: DataFrame, history: IndexedSeq[DataFrame],
       needDirty: Boolean = true)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
+      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = Blocks.scoped { s =>
     require(history.nonEmpty, "need the previous run's per-iteration ranks")
     val newPairs = pairs(newRels)
-    val nodes = endpoints(newPairs).compactCheckpoint()
+    val nodes = s.compact(endpoints(newPairs))
     val outdeg = newPairs.groupBy(col("source_id"))
       .agg(count(lit(1)).as("outdeg"))
-    val e = newPairs.join(outdeg, Seq("source_id")).compactCheckpoint()
+    val e = s.compact(newPairs.join(outdeg, Seq("source_id")))
 
     def outNeighbors(a: DataFrame): DataFrame =
       e.join(a.select(col("node").as("source_id")), Seq("source_id"), "left_semi")
         .select(col("target_id").as("node")).distinct()
 
-    val changed = changedPairs.select(col("source_id"), col("target_id"))
-      .distinct().compactCheckpoint()
+    val changed = s.compact(changedPairs.select(col("source_id"), col("target_id"))
+      .distinct())
     // round-1 affected set: endpoints of changed pairs (covers added /
     // dropped edges and brand-new nodes) + out-neighbors of changed
     // sources (their out-degree shifted every surviving contribution);
     // intersected with the live universe so dropped nodes vanish
-    val affected1 = changed.select(col("source_id").as("node"))
+    val affected1 = s.compact(changed.select(col("source_id").as("node"))
       .unionByName(changed.select(col("target_id").as("node")))
       .distinct()
       .join(nodes, Seq("node"), "left_semi")
       .unionByName(outNeighbors(
         changed.select(col("source_id").as("node")).distinct()))
-      .distinct()
-      .compactCheckpoint()
+      .distinct())
     // r⁰ is the constant init — exact for every node, including new ones
-    val init = nodes.withColumn("rank_m", lit(1000000L))
-      .compactCheckpoint()
-    val out = spliceRounds(history, nodes, changed, affected1, init,
+    val init = s.compact(nodes.withColumn("rank_m", lit(1000000L)))
+    spliceRounds(history, nodes, changed, affected1, init,
       needDirty)((affected, blend) => {
         val contribs = e
           .join(affected.select(col("node").as("target_id")),
@@ -285,8 +276,6 @@ object IncrementalAnalytics {
             (lit(150000L) + expr("(85 * coalesce(contrib, 0L)) div 100"))
               .as("rank_m"))
       }, outNeighbors)
-    Blocks.free(e); Blocks.free(nodes)
-    out
   }
 
   /** The per-round splice both history refreshes share: round i
@@ -296,46 +285,34 @@ object IncrementalAnalytics {
     * by one `nbrs` hop. With `needDirty`, round i's dirty keys are its
     * affected set plus the nodes the batch dropped from the edge universe
     * (their history rows vanish via the semi-join, so their buckets are
-    * dirty too). Frees `changed`, `affected` and `init`; the caller owns
-    * `nodes` and both returned checkpoint sequences. */
+    * dirty too). Both returned checkpoint sequences pass to the caller's
+    * scope. */
   private def spliceRounds(history: IndexedSeq[DataFrame], nodes: DataFrame,
       changed: DataFrame, affected1: DataFrame, init: DataFrame,
       needDirty: Boolean)(recompute: (DataFrame, DataFrame) => DataFrame,
       nbrs: DataFrame => DataFrame)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
-    val removed =
-      if (!needDirty) null
-      else changed
-        .select(explode(array(col("source_id"), col("target_id"))).as("node"))
-        .distinct()
-        .join(nodes, Seq("node"), "left_anti")
-        .compactCheckpoint()
+      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = Blocks.scoped { s =>
+    val removed = Option.when(needDirty)(s.compact(changed
+      .select(explode(array(col("source_id"), col("target_id"))).as("node"))
+      .distinct()
+      .join(nodes, Seq("node"), "left_anti")))
     var affected = affected1
     var blend = init
-    val outHist = IndexedSeq.newBuilder[DataFrame]
-    val outDirty = IndexedSeq.newBuilder[DataFrame]
+    val outHist = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val outDirty = scala.collection.mutable.ArrayBuffer[DataFrame]()
     for (i <- 1 to history.size) {
-      val spliced = history(i - 1)
+      blend = s.compact(history(i - 1)
         .join(nodes, Seq("node"), "left_semi")   // drop removed nodes
         .join(affected, Seq("node"), "left_anti") // affected: recomputed
-        .unionByName(recompute(affected, blend))
-        .compactCheckpoint()
-      if (i == 1) Blocks.free(blend) // the r⁰ init; later blends ARE history
-      blend = spliced
-      outHist += spliced
-      if (needDirty)
-        outDirty += affected.unionByName(removed).distinct()
-          .compactCheckpoint()
-      if (i < history.size) {
-        val grown = affected.unionByName(nbrs(affected)).distinct()
-          .compactCheckpoint()
-        Blocks.free(affected)
-        affected = grown
-      }
+        .unionByName(recompute(affected, blend)))
+      outHist += blend
+      removed.foreach(r =>
+        outDirty += s.compact(affected.unionByName(r).distinct()))
+      if (i < history.size)
+        affected = s.compact(affected.unionByName(nbrs(affected)).distinct())
+      s.keep(affected, removed, outHist, outDirty)
     }
-    Blocks.free(affected); Blocks.free(changed)
-    if (removed != null) Blocks.free(removed)
-    (outHist.result(), outDirty.result())
+    (outHist.toIndexedSeq, outDirty.toIndexedSeq)
   }
 
   /** Affected-component refresh of [[TwinGraph.components]] (weakly
@@ -380,9 +357,10 @@ object IncrementalAnalytics {
       recomputed: DataFrame)
 
   private[graft] def componentsParts(baseComponents: DataFrame,
-      baseRels: DataFrame, mutations: DataFrame): ComponentsParts = {
-    val latest = latestRelMutations(mutations).compactCheckpoint()
-    val twinDelta = latestTwinMutations(mutations).compactCheckpoint()
+      baseRels: DataFrame,
+      mutations: DataFrame): ComponentsParts = Blocks.scoped { s =>
+    val latest = s.compact(latestRelMutations(mutations))
+    val twinDelta = s.compact(latestTwinMutations(mutations))
     val oldTouched = baseRels
       .select(col("source_id"), col("relationship_id"), col("target_id"))
       .join(latest.select(RelKey.map(col): _*), RelKey, "left_semi")
@@ -393,19 +371,17 @@ object IncrementalAnalytics {
       .select(explode(array(col("source_id"), col("target_id"))).as("dt_id"))
       .unionByName(twinDelta.select(col("dt_id")))
       .distinct()
-    val affected = baseComponents
+    val affected = s.compact(baseComponents
       .join(touchedNodes, Seq("dt_id"), "left_semi")
-      .select(col("component")).distinct()
-      .compactCheckpoint()
+      .select(col("component")).distinct())
     val deadTwins = twinDelta.filter(!col("alive")).select(col("dt_id"))
-    val subNodes = baseComponents
+    val subNodes = s.compact(baseComponents
       .join(affected, Seq("component"), "left_semi").select(col("dt_id"))
       .unionByName(twinDelta.filter(col("alive")).select(col("dt_id")))
       .unionByName(newTouched.select(
         explode(array(col("source_id"), col("target_id"))).as("dt_id")))
       .distinct()
-      .join(deadTwins, Seq("dt_id"), "left_anti")
-      .compactCheckpoint()
+      .join(deadTwins, Seq("dt_id"), "left_anti"))
     // maintained edges with source inside the subgraph — for untouched
     // edges "source in" implies "both in" (same base component), for
     // touched edges both endpoints were added explicitly
@@ -418,7 +394,6 @@ object IncrementalAnalytics {
         .withColumnRenamed("doc", "dt_id"), Seq("dt_id"), "left_outer")
       .select(col("dt_id"),
         coalesce(col("component"), col("dt_id")).as("component"))
-    Blocks.free(latest); Blocks.free(twinDelta)
     ComponentsParts(affected, recomputed)
   }
 
@@ -475,9 +450,11 @@ object IncrementalAnalytics {
     * back into the hash-bucketed base, rewriting only the buckets the
     * chain's keys touch. Construction clears any torn `v{target}` a
     * crashed prior attempt left (the pointer never moved, so it is
-    * garbage and the recompute is deterministic). */
+    * garbage and the recompute is deterministic). The batch's frames live
+    * in `scope` ([[foldBatch]]'s), which frees them when the batch ends,
+    * committed or thrown. */
   private[graft] final class StateCommit(val spark: SparkSession,
-      val stateDir: String, target: Long) {
+      val stateDir: String, target: Long, scope: Blocks.Scope) {
     val v: Long = StateStore.readPointer(stateDir)
     val k: Int = StateStore.bucketCount(stateDir)
     // free the PREVIOUS batch's folded blocks now, not at its commit: a
@@ -490,7 +467,7 @@ object IncrementalAnalytics {
     // the session close reaps the last.
     StateCommit.pendingFree.synchronized {
       StateCommit.pendingFree.remove(stateDir)
-    }.foreach(_.foreach(Blocks.free))
+    }.foreach(_.foreach(Blocks.free)) // the park: disowned by commit()
     private val prev = StateStore.readManifest(stateDir, v)
     private val next =
       scala.collection.mutable.Map[String, StateStore.TableState]()
@@ -503,17 +480,15 @@ object IncrementalAnalytics {
     // per table per batch pays the fold once; commit() parks the blocks
     // for the NEXT batch's StateCommit to free (constructor note).
     private val folded = scala.collection.mutable.Map[String, DataFrame]()
-    private val owned = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def table(name: String): DataFrame =
       folded.getOrElseUpdate(name,
-        StateStore.readTable(spark, stateDir, v, name)
-          .compactCheckpoint())
+        scope.compact(StateStore.readTable(spark, stateDir, v, name)))
     def tableBuckets(name: String, buckets: Seq[Int]): DataFrame =
       StateStore.readTableBuckets(spark, stateDir, v, name, buckets)
     def dirty(keys: DataFrame, keyCol: String): Seq[Int] =
       StateStore.dirtyBuckets(keys, col(keyCol), k)
-    /** Hand a batch checkpoint to [[release]]; returns it. */
-    def own(df: DataFrame): DataFrame = { owned += df; df }
+    /** A batch checkpoint, freed when the batch ends. */
+    def compact(df: DataFrame): DataFrame = scope.compact(df)
     /** `name`'s splice delta: upsert `up`, tombstone every `dirty` key (a
       * frame of the table's key columns) that `up` has no row for. */
     def splice(name: String, up: DataFrame, dirty: DataFrame): Delta = {
@@ -554,15 +529,9 @@ object IncrementalAnalytics {
       StateStore.writePointer(stateDir, target)
       StateStore.prune(stateDir, target)
       StateCommit.pendingFree.synchronized {
-        StateCommit.pendingFree(stateDir) = folded.values.toSeq
+        StateCommit.pendingFree(stateDir) = folded.values.map(scope.disown).toSeq
       }
       folded.clear()
-    }
-    /** Free the owned frames, and — when the batch never committed — its
-      * folded reads too (a committed batch parked them above). */
-    def release(): Unit = {
-      (owned ++ folded.values).foreach(Blocks.free)
-      owned.clear(); folded.clear()
     }
   }
 
@@ -644,9 +613,9 @@ object IncrementalAnalytics {
     *    needs — `c.table` for an eager fold, `c.tableBuckets` for a
     *    pruned probe — and a table missing from the result is carried
     *    forward by reference (an empty result carries them all).
-    *  - the frames it wants freed: every checkpoint it makes is handed to
-    *    `c.own` as it is made, so the driver frees it even if the fold
-    *    throws.
+    *  - its checkpoints: each is made with `c.compact` (or by a scoped
+    *    operator, whose result passes to the batch's scope), so the
+    *    driver frees it even if the fold throws.
     *  - `local`: the optional driver-side fold of a batch under the size
     *    class ([[LocalCommit]]), with the same deltas as `fold`; None
     *    from it declines, and `fold` runs instead. */
@@ -691,36 +660,34 @@ object IncrementalAnalytics {
     * attempt left) or already advanced (skip — the fold is NOT applied
     * twice). Restart resumes from the streaming checkpoint; state
     * versions are keyed by batch id, so resume and replay compose. The
-    * distributed path's checkpoints — `m`, `latest`, the fold's owned
-    * frames and, when the batch never commits, its folded state reads —
-    * are freed in a `finally`, so a fold that throws leaks nothing; the
-    * local path makes none. */
+    * distributed path's checkpoints — `m`, `latest`, the fold's frames
+    * and, when the batch never commits, its folded state reads — live in
+    * the batch's [[Blocks.Scope]], so a fold that throws leaks nothing;
+    * the local path makes none. */
   private[graft] def foldBatch(stateDir: String, op: Maintainer,
       batch: DataFrame, batchId: Long): Unit = {
     val target = batchId + 1
-    if (StateStore.readPointer(stateDir) < target) {
-      val c = new StateCommit(batch.sparkSession, stateDir, target)
-      try {
-        val lc = new LocalCommit(c)
-        val local = for {
-          f <- op.local
-          b <- LocalBatch.collect(batch, lc.cutoff)
-          deltas <- f(lc, b)
-        } yield deltas :+ b.relsDelta
-        local match {
-          case Some(deltas) =>
-            deltas.foreach(lc.write)
-            op.tables.map(_._1).diff(deltas.map(_.table)).foreach(c.carry)
-          case None =>
-            val m = c.own(batch.compactCheckpoint())
-            val latest = c.own(latestRelMutations(m).compactCheckpoint())
-            val deltas = op.fold(c, m, latest)
-            deltas.foreach { case (t, up, tomb) => c.chainDelta(t, up, tomb) }
-            op.tables.map(_._1).diff(deltas.map(_._1)).foreach(c.carry)
-            relsDelta(c, latest)
-        }
-        c.commit()
-      } finally c.release()
+    if (StateStore.readPointer(stateDir) < target) Blocks.scoped { s =>
+      val c = new StateCommit(batch.sparkSession, stateDir, target, s)
+      val lc = new LocalCommit(c)
+      val local = for {
+        f <- op.local
+        b <- LocalBatch.collect(batch, lc.cutoff)
+        deltas <- f(lc, b)
+      } yield deltas :+ b.relsDelta
+      local match {
+        case Some(deltas) =>
+          deltas.foreach(lc.write)
+          op.tables.map(_._1).diff(deltas.map(_.table)).foreach(c.carry)
+        case None =>
+          val m = c.compact(batch)
+          val latest = c.compact(latestRelMutations(m))
+          val deltas = op.fold(c, m, latest)
+          deltas.foreach { case (t, up, tomb) => c.chainDelta(t, up, tomb) }
+          op.tables.map(_._1).diff(deltas.map(_._1)).foreach(c.carry)
+          relsDelta(c, latest)
+      }
+      c.commit()
     }
   }
 
@@ -930,38 +897,35 @@ object IncrementalAnalytics {
       recomputed: DataFrame)
 
   private[graft] def trianglesParts(baseRels: DataFrame,
-      mutations: DataFrame): NodeSpliceParts = {
+      mutations: DataFrame): NodeSpliceParts = Blocks.scoped { s =>
     def sym(rels: DataFrame): DataFrame =
       rels.select(col("source_id").as("u"), col("target_id").as("v"))
         .unionByName(rels.select(col("target_id").as("u"),
           col("source_id").as("v")))
         .filter(col("u") =!= col("v")).distinct()
-    val newRels = applyRelationshipMutations(baseRels, mutations)
-      .compactCheckpoint()
-    val changed = changedPairs(baseRels, mutations)
-      .compactCheckpoint()
+    val newRels = s.compact(applyRelationshipMutations(baseRels, mutations))
+    val changed = s.compact(changedPairs(baseRels, mutations))
     val basePairs = sym(baseRels)
-    val newPairs = sym(newRels).compactCheckpoint()
+    val newPairs = s.compact(sym(newRels))
     val ends = changed
       .select(explode(array(col("source_id"), col("target_id"))).as("node"))
       .distinct()
     def neighborsOf(pairs: DataFrame, of: DataFrame): DataFrame =
       pairs.join(of.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .select(col("v").as("node"))
-    val affected = ends
+    val affected = s.compact(ends
       .unionByName(neighborsOf(basePairs, ends))
       .unionByName(neighborsOf(newPairs, ends))
-      .distinct().compactCheckpoint()
-    val cone = affected
+      .distinct())
+    val cone = s.compact(affected
       .unionByName(neighborsOf(newPairs, affected))
-      .distinct().compactCheckpoint()
+      .distinct())
     val coneEdges = newPairs
       .join(cone.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
       .join(cone.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
       .select(col("u"), col("v"))
     val recomputed = Triangles.perNode(coneEdges, "u", "v")
       .join(affected, Seq("node"), "left_semi")
-    Blocks.free(changed); Blocks.free(newRels)
     NodeSpliceParts(affected, recomputed)
   }
 
@@ -977,46 +941,40 @@ object IncrementalAnalytics {
       history: IndexedSeq[DataFrame]): DataFrame = {
     // needDirty=false: the dirty key sets would be freed unread — skip
     // their per-round materialization jobs (r19)
-    val (hist, _) = refreshCommunitiesHistoryParts(newRels, changedPairs,
-      history, needDirty = false)
-    val out = hist.last.select(col("node"), col("lab").as("community"))
-      .compactCheckpoint()
-    hist.foreach(Blocks.free)
-    out
+    Blocks.scoped(s => s.compact(refreshCommunitiesHistoryParts(newRels,
+      changedPairs, history, needDirty = false)._1.last
+      .select(col("node"), col("lab").as("community"))))
   }
 
   /** [[refreshCommunities]] returning EVERY refreshed round's (node, lab)
     * table — the new history a continuously-maintained LPA carries
     * forward — plus per-round dirty key sets, the
-    * [[refreshRanksHistoryParts]] contract at label granularity. Caller
-    * owns both returned checkpoint sequences. */
+    * [[refreshRanksHistoryParts]] contract at label granularity. Both
+    * returned checkpoint sequences pass to the caller's scope. */
   private[graft] def refreshCommunitiesHistoryParts(newRels: DataFrame,
       changedPairs: DataFrame, history: IndexedSeq[DataFrame],
       needDirty: Boolean = true)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = {
+      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame]) = Blocks.scoped { s =>
     require(history.nonEmpty, "need the previous run's per-round labels")
     val fwd = newRels.select(col("source_id").as("node"),
       col("target_id").as("nbr"))
-    val edges = fwd
+    val edges = s.compact(fwd
       .unionByName(fwd.select(col("nbr").as("node"), col("node").as("nbr")))
-      .distinct().compactCheckpoint()
-    val nodes = edges.select(col("node")).distinct()
-      .compactCheckpoint()
+      .distinct())
+    val nodes = s.compact(edges.select(col("node")).distinct())
     def nbrsOf(a: DataFrame): DataFrame =
       edges.join(a.select(col("node").as("nbr")), Seq("nbr"), "left_semi")
         .select(col("node")).distinct()
-    val changed = changedPairs.select(col("source_id"), col("target_id"))
-      .distinct().compactCheckpoint()
-    val affected1 = changed
+    val changed = s.compact(changedPairs.select(col("source_id"), col("target_id"))
+      .distinct())
+    val affected1 = s.compact(changed
       .select(explode(array(col("source_id"), col("target_id"))).as("node"))
       .distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .compactCheckpoint()
-    val init = nodes
+      .join(nodes, Seq("node"), "left_semi"))
+    val init = s.compact(nodes
       .select(col("node"),
-        graft.pipeline.TextAnalysis.stableId(col("node")).as("lab"))
-      .compactCheckpoint()
-    val out = spliceRounds(history, nodes, changed, affected1, init,
+        graft.pipeline.TextAnalysis.stableId(col("node")).as("lab")))
+    spliceRounds(history, nodes, changed, affected1, init,
       needDirty)((affected, blend) => edges
         .join(affected, Seq("node"), "left_semi")
         .join(blend.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
@@ -1024,8 +982,6 @@ object IncrementalAnalytics {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("m"))
         .select(col("node"), col("m.lab").as("lab")), nbrsOf)
-    Blocks.free(edges); Blocks.free(nodes)
-    out
   }
 
   /** The changed (source,target) pair set a mutation batch induces,
@@ -1139,41 +1095,35 @@ object IncrementalAnalytics {
       regionNodes: DataFrame, regionLabels: DataFrame, deltaEnds: DataFrame)
 
   private[graft] def sccParts(baseScc: DataFrame, baseRels: DataFrame,
-      mutations: DataFrame, maxRounds: Int = 200): SccParts = {
-    val newRels = applyRelationshipMutations(baseRels, mutations)
-      .compactCheckpoint()
-    val delta = changedPairsSigned(baseRels, mutations)
-      .filter(col("source_id") =!= col("target_id")) // self-loops are inert
-      .compactCheckpoint()
+      mutations: DataFrame, maxRounds: Int = 200): SccParts = Blocks.scoped { s =>
+    val newRels = s.compact(applyRelationshipMutations(baseRels, mutations))
+    val delta = s.compact(changedPairsSigned(baseRels, mutations)
+      .filter(col("source_id") =!= col("target_id"))) // self-loops are inert
     val added = delta.filter(col("added"))
     val removed = delta.filter(!col("added"))
     // dirty SCCs: lost an internal (same-label) edge — the only splits
-    val dirty = removed
+    val dirty = s.compact(removed
       .join(baseScc.select(col("node").as("source_id"), col("scc").as("ls")),
         Seq("source_id"))
       .join(baseScc.select(col("node").as("target_id"), col("scc").as("lt")),
         Seq("target_id"))
       .filter(col("ls") === col("lt"))
-      .select(col("ls").as("scc")).distinct()
-      .compactCheckpoint()
+      .select(col("ls").as("scc")).distinct())
     // group(n): base label for clean members, the node itself for dirty
     // members and for nodes the base labeling never saw (created now)
-    val universe = endpoints(pairs(newRels)
-      .filter(col("source_id") =!= col("target_id")))
-      .compactCheckpoint()
-    val grpAll = baseScc
+    val universe = s.compact(endpoints(pairs(newRels)
+      .filter(col("source_id") =!= col("target_id"))))
+    val grpAll = s.compact(baseScc
       .join(dirty.withColumn("__dirty", lit(true)), Seq("scc"), "left_outer")
       .select(col("node"),
         when(col("__dirty"), col("node")).otherwise(col("scc")).as("grp"))
       .unionByName(universe.join(baseScc, Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("grp")))
-      .compactCheckpoint()
+        .select(col("node"), col("node").as("grp"))))
     val dirtyMembers = baseScc.join(dirty, Seq("scc"), "left_semi")
       .select(col("node"))
     def seedGroups(nodes: DataFrame): DataFrame =
-      nodes.unionByName(dirtyMembers)
-        .join(grpAll, Seq("node")).select(col("grp")).distinct()
-        .compactCheckpoint()
+      s.compact(nodes.unionByName(dirtyMembers)
+        .join(grpAll, Seq("node")).select(col("grp")).distinct())
     val fwdSeeds = seedGroups(added.select(col("target_id").as("node")))
     val bwdSeeds = seedGroups(added.select(col("source_id").as("node")))
     // group-granularity reachability: project the new edges to group
@@ -1181,14 +1131,13 @@ object IncrementalAnalytics {
     // the old per-round member expansion walked, without re-joining
     // grpAll every hop), then run the shared seed-closure primitive on
     // the projected graph in each direction.
-    val ge = newRels
+    val ge = s.compact(newRels
       .join(grpAll.select(col("node").as("source_id"), col("grp").as("gs")),
         Seq("source_id"))
       .join(grpAll.select(col("node").as("target_id"), col("grp").as("gt")),
         Seq("target_id"))
       .filter(col("gs") =!= col("gt"))
-      .select(col("gs").as("u"), col("gt").as("v")).distinct()
-      .compactCheckpoint()
+      .select(col("gs").as("u"), col("gt").as("v")).distinct())
     def reach(seeds: DataFrame, reversed: Boolean): DataFrame = {
       val e = if (reversed) ge.select(col("v").as("u"), col("u").as("v"))
         else ge
@@ -1197,11 +1146,8 @@ object IncrementalAnalytics {
     }
     val fwd = reach(fwdSeeds, reversed = false)
     val bwd = reach(bwdSeeds, reversed = true)
-    val region = fwd.join(bwd, Seq("grp"), "left_semi")
-      .compactCheckpoint()
-    Blocks.free(ge)
-    val regionNodes = grpAll.join(region, Seq("grp"), "left_semi")
-      .compactCheckpoint() // (node, grp)
+    val region = s.compact(fwd.join(bwd, Seq("grp"), "left_semi"))
+    val regionNodes = s.compact(grpAll.join(region, Seq("grp"), "left_semi")) // (node, grp)
     // quotient recompute: new edges with both endpoint groups in-region
     val q = newRels
       .join(regionNodes.select(col("node").as("source_id"),
@@ -1215,16 +1161,11 @@ object IncrementalAnalytics {
       .join(resolved.withColumnRenamed("node", "grp"), Seq("grp"),
         "left_outer")
       .select(col("grp"), coalesce(col("scc"), col("grp")).as("scc"))
-    val deltaEnds = delta
+    val deltaEnds = s.compact(delta
       .select(explode(array(col("source_id"), col("target_id"))).as("node"))
-      .distinct().compactCheckpoint()
-    // the parts reference only checkpointed frames (universe, regionNodes,
-    // region, deltaEnds, Scc's internal resolved parts) — everything else
-    // is freeable now
-    Blocks.free(delta); Blocks.free(dirty)
-    Blocks.free(fwdSeeds); Blocks.free(bwdSeeds)
-    Blocks.free(fwd); Blocks.free(bwd)
-    Blocks.free(grpAll); Blocks.free(newRels)
+      .distinct())
+    // the parts read only checkpointed frames (universe, regionNodes,
+    // region, deltaEnds, Scc's resolved parts); the scope frees the rest
     SccParts(universe, regionNodes, regionLabels, deltaEnds)
   }
 
@@ -1271,40 +1212,31 @@ object IncrementalAnalytics {
     * batch changes no pair): the region is the undirected reach of the
     * changed pairs' endpoints over old ∪ new edges, and `recompute` runs
     * the batch operator on the region-induced NEW (source_id, target_id)
-    * rels. `recompute` must materialize eagerly (the peels checkpoint
-    * internally): its input's checkpoint is freed once it returns. */
+    * rels. */
   private def regionParts(baseRels: DataFrame, mutations: DataFrame,
       maxRounds: Int, what: String)(recompute: DataFrame => DataFrame)
-      : Option[NodeSpliceParts] = {
-    val newRels = applyRelationshipMutations(baseRels, mutations)
-      .compactCheckpoint()
-    val touched = changedPairs(baseRels, mutations)
+      : Option[NodeSpliceParts] = Blocks.scoped { s =>
+    val newRels = s.compact(applyRelationshipMutations(baseRels, mutations))
+    val touched = s.compact(changedPairs(baseRels, mutations)
       .select(explode(array(col("source_id"), col("target_id"))).as("node"))
-      .distinct().compactCheckpoint()
-    if (touched.count() == 0) {
-      Blocks.free(newRels); Blocks.free(touched)
-      return None
+      .distinct())
+    Option.when(touched.count() > 0) {
+      // undirected union edge set: old ∪ new pairs, both directions
+      val unionPairs = pairs(baseRels).unionByName(pairs(newRels)).distinct()
+      val e = s.compact(unionPairs
+        .select(col("source_id").as("u"), col("target_id").as("v"))
+        .unionByName(unionPairs.select(col("target_id").as("u"),
+          col("source_id").as("v")))
+        .filter(col("u") =!= col("v")))
+      val region = reachClosure(e, touched, maxRounds, what)
+      // region is component-closed in the new graph, so restricting the
+      // source endpoint restricts both — keep both semi-joins for shape
+      NodeSpliceParts(region, recompute(newRels
+        .join(region.withColumnRenamed("node", "source_id"),
+          Seq("source_id"), "left_semi")
+        .join(region.withColumnRenamed("node", "target_id"),
+          Seq("target_id"), "left_semi")))
     }
-    // undirected union edge set: old ∪ new pairs, both directions
-    val unionPairs = pairs(baseRels).unionByName(pairs(newRels)).distinct()
-    val e = unionPairs
-      .select(col("source_id").as("u"), col("target_id").as("v"))
-      .unionByName(unionPairs.select(col("target_id").as("u"),
-        col("source_id").as("v")))
-      .filter(col("u") =!= col("v"))
-      .compactCheckpoint()
-    val region = reachClosure(e, touched, maxRounds, what)
-    Blocks.free(touched)
-    // region is component-closed in the new graph, so restricting the
-    // source endpoint restricts both — keep both semi-joins for shape
-    val regionEdges = newRels
-      .join(region.withColumnRenamed("node", "source_id"),
-        Seq("source_id"), "left_semi")
-      .join(region.withColumnRenamed("node", "target_id"),
-        Seq("target_id"), "left_semi")
-    val recomputed = recompute(regionEdges)
-    Blocks.free(newRels); Blocks.free(e)
-    Some(NodeSpliceParts(region, recomputed))
   }
 
   // ---------------- incremental k-truss ----------------
@@ -1492,13 +1424,13 @@ object IncrementalAnalytics {
           .join(latest.select(RelKey.map(col): _*), RelKey, "left_semi")
         def ends(df: DataFrame): DataFrame = df.select(
           explode(array(col("source_id"), col("target_id"))).as("dt_id"))
-        val dirtyNodes = c.own(ends(oldRows)
+        val dirtyNodes = c.compact(ends(oldRows)
           .unionByName(ends(latest.filter(col("alive"))))
           .unionByName(latestTwinMutations(m).select(col("dt_id")))
-          .distinct().compactCheckpoint())
-        val up = c.own(refreshDegrees(
+          .distinct())
+        val up = c.compact(refreshDegrees(
           c.table("degrees").join(dirtyNodes, Seq("dt_id"), "left_semi"),
-          relsProbe, m).compactCheckpoint())
+          relsProbe, m))
         Seq(c.splice("degrees", up, dirtyNodes))
       })
 
@@ -1511,7 +1443,7 @@ object IncrementalAnalytics {
         val baseRels = c.table("rels")
         val baseComp = c.table("components")
         val p = componentsParts(baseComp, baseRels, m)
-        Seq(c.splice("components", c.own(p.recomputed.compactCheckpoint()),
+        Seq(c.splice("components", c.compact(p.recomputed),
           baseComp.join(p.affected, Seq("component"), "left_semi")
             .select(col("dt_id"))))
       })
@@ -1538,11 +1470,9 @@ object IncrementalAnalytics {
       new Maintainer(names.map(_ -> Seq("node")))((c, m, latest) => {
         val baseRels = c.table("rels")
         val hist = names.map(c.table)
-        val newRels = c.own(applyRelationshipMutations(baseRels, m)
-          .compactCheckpoint())
+        val newRels = c.compact(applyRelationshipMutations(baseRels, m))
         val (newHist, dirtyKeys) = refresh(newRels,
           changedPairs(touchedRels(c, latest), m), hist)
-        (newHist ++ dirtyKeys).foreach(c.own)
         names.indices.map(i => c.splice(names(i),
           newHist(i).join(dirtyKeys(i), Seq("node"), "left_semi"),
           dirtyKeys(i)))
@@ -1555,7 +1485,7 @@ object IncrementalAnalytics {
     val triangles = new Maintainer(Seq("triangles" -> Seq("node")))(
       (c, m, _) => {
         val p = trianglesParts(c.table("rels"), m)
-        Seq(c.splice("triangles", c.own(p.recomputed.compactCheckpoint()),
+        Seq(c.splice("triangles", c.compact(p.recomputed),
           p.affected))
       })
 
@@ -1565,7 +1495,7 @@ object IncrementalAnalytics {
       new Maintainer(Seq("kcore" -> Seq("node")),
         Some(localKcore(k)))((c, m, _) =>
         kcoreParts(c.table("rels"), m, k).toSeq.map(p => c.splice("kcore",
-          c.own(p.recomputed.compactCheckpoint()), p.affected)))
+          c.compact(p.recomputed), p.affected)))
 
     /** The k-truss edge set ([[refreshKtruss]]); truss edges are canonical
       * (a < b) and a's bucket is the edge's home. Upserts = the region's
@@ -1575,7 +1505,7 @@ object IncrementalAnalytics {
     def ktruss(k: Int, rounds: Int): Maintainer =
       new Maintainer(Seq("ktruss" -> Seq("a", "b")))((c, m, _) =>
         ktrussParts(c.table("rels"), m, k, rounds).toSeq.map { p =>
-          val rec = c.own(p.recomputed.compactCheckpoint())
+          val rec = c.compact(p.recomputed)
           c.splice("ktruss", rec,
             c.tableBuckets("ktruss", c.dirty(p.affected, "node"))
               .join(p.affected.withColumnRenamed("node", "a"), Seq("a"),
@@ -1592,10 +1522,10 @@ object IncrementalAnalytics {
       val baseRels = c.table("rels")
       val baseScc = c.table("scc")
       val p = sccParts(baseScc, baseRels, m)
-      val dirtyNodes = c.own(p.regionNodes.select(col("node"))
-        .unionByName(p.deltaEnds).distinct().compactCheckpoint())
-      val up = c.own(sccSplice(baseScc, p)
-        .join(dirtyNodes, Seq("node"), "left_semi").compactCheckpoint())
+      val dirtyNodes = c.compact(p.regionNodes.select(col("node"))
+        .unionByName(p.deltaEnds).distinct())
+      val up = c.compact(sccSplice(baseScc, p)
+        .join(dirtyNodes, Seq("node"), "left_semi"))
       Seq(c.splice("scc", up, dirtyNodes))
     })
   }

@@ -1,7 +1,6 @@
 package graft.graph
 
 import graft.core.Blocks
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -24,8 +23,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * edge list to surviving endpoints) and one map-side-combinable degree
   * count — all equi-joins on node keys. The symmetric edge list is
   * materialized once and re-read per round; survivor sets checkpoint per
-  * round and free their predecessor (lineage stays flat across any
-  * number of rounds). Above the [[LocalGraph]] cutoff: no adjacency
+  * round in a [[graft.core.Blocks.Scope]], which frees their predecessor
+  * (lineage stays flat across any number of rounds). Above the [[LocalGraph]] cutoff: no adjacency
   * lists, no driver state; peeling a 100 TB graph is K passes of
   * join+count. At or under it the peel runs on the driver
   * ([[LocalGraph.kcoreSurvivors]]).
@@ -86,17 +85,15 @@ object KCore {
       rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val und = LocalGraph.probeInput(canonical(edges, srcCol, dstCol))
-    localPeel(und, k, rounds).foreach(return _)
-    val sym = symmetric(und).compactCheckpoint()
-    var nodes = sym.select(col("u").as("node")).distinct()
-      .compactCheckpoint()
-    for (_ <- 1 to rounds) {
-      val next = peelRound(sym, nodes, k).compactCheckpoint()
-      Blocks.free(nodes)
-      nodes = next
-    }
-    Blocks.free(sym)
-    nodes
+    localPeel(und, k, rounds).getOrElse(Blocks.scoped { s =>
+      val sym = s.compact(symmetric(und))
+      (1 to rounds).foldLeft(s.compact(sym.select(col("u").as("node")).distinct())) {
+        (nodes, _) =>
+          val next = s.compact(peelRound(sym, nodes, k))
+          s.keep(next, sym)
+          next
+      }
+    })
   }
 
   /** The exact k-core: peel until the survivor set stops shrinking.
@@ -105,23 +102,21 @@ object KCore {
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int = 1000): DataFrame = {
     val und = LocalGraph.probeInput(canonical(edges, srcCol, dstCol))
-    localPeel(und, k, maxRounds).foreach(return _)
-    val sym = symmetric(und).compactCheckpoint()
-    var nodes = sym.select(col("u").as("node")).distinct()
-      .compactCheckpoint()
-    var prev = nodes.count()
-    var rounds = 0
-    var converged = prev == 0L
-    while (!converged && rounds < maxRounds) {
-      val next = peelRound(sym, nodes, k).compactCheckpoint()
-      val n = next.count()
-      Blocks.free(nodes)
-      nodes = next
-      converged = n == prev
-      prev = n
-      rounds += 1
-    }
-    Blocks.free(sym)
-    nodes
+    localPeel(und, k, maxRounds).getOrElse(Blocks.scoped { s =>
+      val sym = s.compact(symmetric(und))
+      var nodes = s.compact(sym.select(col("u").as("node")).distinct())
+      var prev = nodes.count()
+      var rounds = 0
+      var converged = prev == 0L
+      while (!converged && rounds < maxRounds) {
+        nodes = s.compact(peelRound(sym, nodes, k))
+        s.keep(nodes, sym)
+        val n = nodes.count()
+        converged = n == prev
+        prev = n
+        rounds += 1
+      }
+      nodes
+    })
   }
 }

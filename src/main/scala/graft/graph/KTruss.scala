@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Blocks
@@ -20,7 +19,7 @@ import graft.core.Blocks
   * semi-joined against the (b,x) edge set — the [[Triangles]] shape,
   * never an all-pairs stage — one combinable count per edge, one
   * semi-join filter. Per-round lineage truncated via eager
-  * localCheckpoint with freed predecessors.
+  * localCheckpoint in a [[graft.core.Blocks.Scope]].
   */
 object KTruss {
 
@@ -56,20 +55,18 @@ object KTruss {
     // the survivor EDGE SET needs no ordering, so output is bit-identical.
     // The edges are checkpointed only when it declines.
     val spark = edges.sparkSession
-    LocalGraph.collectEdgesAny(und, LocalGraph.maxEdges(spark)).foreach { es =>
-      return LocalGraph.frame(spark, org.apache.spark.sql.types.StructType(
+    LocalGraph.collectEdgesAny(und, LocalGraph.maxEdges(spark)).map { es =>
+      LocalGraph.frame(spark, org.apache.spark.sql.types.StructType(
           und.schema.fields.map(_.copy(nullable = true))),
         LocalGraph.ktrussSurvivors(es, k, rounds)
           .map(p => org.apache.spark.sql.Row(p._1, p._2)))
-    }
-    var e = und.compactCheckpoint()
-    for (_ <- 1 to rounds) {
-      val kept = supports(e).filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-        .compactCheckpoint()
-      Blocks.free(e)
-      e = kept
-    }
-    e
+    }.getOrElse(Blocks.scoped { s =>
+      (1 to rounds).foldLeft(s.compact(und)) { (e, _) =>
+        val kept = s.compact(supports(e).filter(col("support") >= k - 2)
+          .select(col("a"), col("b")))
+        s.keep(kept)
+        kept
+      }
+    })
   }
 }

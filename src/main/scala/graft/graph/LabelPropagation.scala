@@ -29,9 +29,9 @@ import graft.pipeline.TextAnalysis
   * against the label table (keyed by neighbor), one combinable
   * groupBy(node, label) count, one groupBy(node) min-of-struct argmax —
   * no windows, and above the [[LocalGraph]] cutoff no driver state.
-  * Lineage is truncated per round via `localCheckpoint` with superseded
-  * tables freed ([[PageRank]]'s discipline), so a deep run neither
-  * replays history nor leaks blocks. At or under the cutoff (string
+  * Lineage is truncated per round via `localCheckpoint` in a
+  * [[graft.core.Blocks.Scope]], so a deep run neither replays history
+  * nor leaks blocks. At or under the cutoff (string
   * keys), the distinct directed pairs are collected once and every round
   * runs on the driver ([[LocalGraph.lpaRounds]]).
   * Reference anchor: the reference exposes AGE/openCypher graph
@@ -43,16 +43,14 @@ object LabelPropagation {
   /** (node, community) after `rounds` synchronous mode-label rounds over
     * the UNDIRECTED (symmetrized, deduplicated) edge set; nodes = every
     * edge endpoint; community = 60-bit label value. */
-  def communities(relationships: DataFrame, rounds: Int = 3): DataFrame = {
-    val hist = communitiesHistory(relationships, rounds)
-    hist.dropRight(1).foreach(Blocks.free)
-    hist.last.select(col("node"), col("lab").as("community"))
-  }
+  def communities(relationships: DataFrame, rounds: Int = 3): DataFrame =
+    Blocks.scoped(_ => communitiesHistory(relationships, rounds).last
+      .select(col("node"), col("lab").as("community")))
 
   /** Like [[communities]] but returns EVERY round's (node, lab) table —
     * the maintained state [[IncrementalAnalytics.refreshCommunities]]
-    * splices unaffected nodes from. The caller frees the returned
-    * checkpoints (local relations under the [[LocalGraph]] cutoff);
+    * splices unaffected nodes from. The returned checkpoints pass to the
+    * caller's scope (local relations under the [[LocalGraph]] cutoff);
     * `communitiesHistory(r, k).last` carries the labels
     * `communities(r, k)` renames. */
   def communitiesHistory(relationships: DataFrame, rounds: Int)
@@ -62,35 +60,27 @@ object LabelPropagation {
     // declined probe's scan and shuffle are not run again
     val pairs = LocalGraph.probeInput(relationships
       .select(col("source_id"), col("target_id")).distinct())
-    localHistory(pairs, rounds).foreach(return _)
-    val fwd = pairs.select(col("source_id").as("node"),
-      col("target_id").as("nbr"))
-    val edges = fwd
-      .unionByName(fwd.select(col("nbr").as("node"), col("node").as("nbr")))
-      .distinct().localCheckpoint(eager = true)
-
-    var labels = edges.select(col("node")).distinct()
-      .select(col("node"), TextAnalysis.stableId(col("node")).as("lab"))
-      .localCheckpoint(eager = true)
-    val init = labels
-    val hist = Vector.newBuilder[DataFrame]
-    for (_ <- 1 to rounds) {
-      val votes = edges
-        .join(labels.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
-        .groupBy(col("node"), col("lab")).agg(count(lit(1)).as("c"))
-      // argmax by (count desc, label asc) as one min-of-struct aggregate:
-      // struct ordering is lexicographic, so min((-c, lab)) is the most
-      // frequent label with the smallest-value tie-break
-      val next = votes
-        .groupBy(col("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("m"))
-        .select(col("node"), col("m.lab").as("lab"))
-        .localCheckpoint(eager = true)
-      hist += next
-      labels = next
-    }
-    Blocks.free(init); Blocks.free(edges)
-    hist.result()
+    localHistory(pairs, rounds).getOrElse(Blocks.scoped { s =>
+      val fwd = pairs.select(col("source_id").as("node"),
+        col("target_id").as("nbr"))
+      val edges = s.local(fwd
+        .unionByName(fwd.select(col("nbr").as("node"), col("node").as("nbr")))
+        .distinct())
+      val init = s.local(edges.select(col("node")).distinct()
+        .select(col("node"), TextAnalysis.stableId(col("node")).as("lab")))
+      (1 to rounds).scanLeft(init) { (labels, _) =>
+        val votes = edges
+          .join(labels.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
+          .groupBy(col("node"), col("lab")).agg(count(lit(1)).as("c"))
+        // argmax by (count desc, label asc) as one min-of-struct aggregate:
+        // struct ordering is lexicographic, so min((-c, lab)) is the most
+        // frequent label with the smallest-value tie-break
+        s.local(votes
+          .groupBy(col("node"))
+          .agg(min(struct((-col("c")).as("nc"), col("lab"))).as("m"))
+          .select(col("node"), col("m.lab").as("lab")))
+      }.tail
+    })
   }
 
   /** The sub-cutoff bottom-out of [[communitiesHistory]] ([[LocalGraph]]):

@@ -24,7 +24,7 @@ import graft.core.Blocks
   * Scale shape per round: one edge × priority equi-join to find
   * dominated nodes, two anti-joins, one semi-join edge restriction —
   * all combinable/equi, per-round lineage truncated via eager
-  * localCheckpoint with freed predecessors.
+  * localCheckpoint in a [[graft.core.Blocks.Scope]].
   */
 object Mis {
 
@@ -32,15 +32,15 @@ object Mis {
     * `edges` (columns src, dst). Isolated nodes never appear in `edges`
     * and are trivially independent — callers union them if their
     * universe is wider. */
-  def independentSet(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
-    val e0 = edges
+  def independentSet(edges: DataFrame,
+      maxRounds: Int = 100): DataFrame = Blocks.scoped { s =>
+    val e0 = s.local(edges
       .select(col("src").cast("string").as("u"), col("dst").cast("string").as("v"))
       .unionByName(edges
         .select(col("dst").cast("string").as("u"), col("src").cast("string").as("v")))
       .filter(col("u") =!= col("v"))
-      .distinct().localCheckpoint(eager = true)
-    var rem = e0.select(col("u").as("node")).distinct()
-      .localCheckpoint(eager = true)
+      .distinct())
+    var rem = s.local(e0.select(col("u").as("node")).distinct())
     var e = e0
     var out = List.empty[DataFrame]
     var remCount = rem.count()
@@ -57,25 +57,20 @@ object Mis {
         .filter(md5(col("u")) < md5(col("v")) ||
           (md5(col("u")) === md5(col("v")) && col("u") < col("v")))
         .select(col("v").as("node")).distinct()
-      val winners = rem.join(dominated, Seq("node"), "left_anti")
-        .localCheckpoint(eager = true)
+      val winners = s.local(rem.join(dominated, Seq("node"), "left_anti"))
       out ::= winners
       val removed = winners
         .unionByName(e.join(winners.withColumnRenamed("node", "u"),
           Seq("u"), "left_semi").select(col("v").as("node")))
         .distinct()
-      val nextRem = rem.join(removed, Seq("node"), "left_anti")
-        .localCheckpoint(eager = true)
-      val nextE = e
-        .join(nextRem.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(nextRem.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(eager = true)
-      Blocks.free(rem); Blocks.free(e)
-      rem = nextRem; e = nextE
+      rem = s.local(rem.join(removed, Seq("node"), "left_anti"))
+      e = s.local(e
+        .join(rem.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+        .join(rem.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+        .select(col("u"), col("v")))
+      s.keep(rem, e, out)
       remCount = rem.count()
     }
-    Blocks.free(rem); Blocks.free(e)
     out match {
       case Nil => e0.sparkSession.emptyDataFrame
         .withColumn("node", lit(null).cast("string")).limit(0)

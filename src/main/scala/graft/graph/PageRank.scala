@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import graft.core.Blocks
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank over the relationship graph — the classic
@@ -23,9 +24,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: the loop is K joins/aggregations — contributions shuffle
   * on the edge's source (co-partitioned with the rank table), the sum
   * shuffles on target, both map-side combinable. Per-iteration
-  * `localCheckpoint` truncates the iterative-join lineage and frees the
-  * superseded rank table, same discipline as [[Vle]] and
-  * [[graft.pipeline.Dedup.componentsStars]]. Above the [[LocalGraph]]
+  * `localCheckpoint` truncates the iterative-join lineage; the loop's
+  * [[graft.core.Blocks.Scope]] frees what the result no longer reads.
+  * The three variants share one round body and differ only in the
+  * contribution and teleport expressions. Above the [[LocalGraph]]
   * cutoff there is no driver-side state and no adjacency list — hub
   * nodes cost one aggregation bucket, not a task; at or under it,
   * [[ranksHistory]] collects the distinct pairs once and runs the same
@@ -35,16 +37,12 @@ object PageRank {
 
   /** (node, rank_m) after `iterations` synchronous rounds, nodes = every
     * endpoint of `relationships` (source_id/target_id columns). */
-  def ranks(relationships: DataFrame, iterations: Int = 3): DataFrame = {
-    import graft.core.Blocks
-    val hist = ranksHistory(relationships, iterations)
-    hist.dropRight(1).foreach(Blocks.free)
-    hist.last
-  }
+  def ranks(relationships: DataFrame, iterations: Int = 3): DataFrame =
+    Blocks.scoped(_ => ranksHistory(relationships, iterations).last)
 
   /** Like [[ranks]] but returns EVERY iteration's rank table r¹..r^K
-    * (each an eager localCheckpoint the caller frees, or under the
-    * [[LocalGraph]] cutoff a local relation) — the
+    * (each an eager localCheckpoint passed to the caller's scope, or
+    * under the [[LocalGraph]] cutoff a local relation) — the
     * maintained state an incremental refresh
     * ([[IncrementalAnalytics.refreshRanks]]) splices unaffected nodes
     * from. Same loop, same integer arithmetic: `ranksHistory(e, k).last`
@@ -52,43 +50,46 @@ object PageRank {
   def ranksHistory(relationships: DataFrame, iterations: Int)
       : IndexedSeq[DataFrame] = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    import graft.core.Blocks
     val edges = LocalGraph.probeInput(relationships
       .select(col("source_id"), col("target_id")).distinct())
-    localHistory(edges, iterations).foreach(return _)
-    val nodes = edges.select(col("source_id").as("node"))
+    localHistory(edges, iterations).getOrElse(Blocks.scoped { s =>
+      val nodes = s.local(endpoints(edges))
+      val outdeg = edges.groupBy(col("source_id"))
+        .agg(count(lit(1)).as("outdeg"))
+      // edge list annotated with its source's out-degree, materialized once:
+      // every iteration re-reads it
+      val e = s.local(edges.join(outdeg, Seq("source_id")))
+      rounds(s, nodes, e, s.local(nodes.withColumn("rank_m", lit(1000000L))),
+        iterations, "rank_m div outdeg", lit(150000L), history = true)
+    })
+  }
+
+  private def endpoints(edges: DataFrame): DataFrame =
+    edges.select(col("source_id").as("node"))
       .unionByName(edges.select(col("target_id").as("node")))
       .distinct()
-      .localCheckpoint(eager = true)
-    val outdeg = edges.groupBy(col("source_id"))
-      .agg(count(lit(1)).as("outdeg"))
-    // edge list annotated with its source's out-degree, materialized once:
-    // every iteration re-reads it
-    val e = edges.join(outdeg, Seq("source_id")).localCheckpoint(eager = true)
-    val init = nodes.withColumn("rank_m", lit(1000000L))
-      .localCheckpoint(eager = true)
-    var ranks = init
-    val hist = Vector.newBuilder[DataFrame]
-    for (_ <- 1 to iterations) {
+
+  /** The round body all three variants share: `iterations` synchronous
+    * rounds from `init` over the annotated edge list `e`, each node's new
+    * rank being `teleport + (85 · Σ contribution) div 100` with the
+    * per-edge `contribution` expression. Returns every round's rank
+    * checkpoint; without `history` each round frees its predecessor. */
+  private def rounds(s: Blocks.Scope, nodes: DataFrame, e: DataFrame,
+      init: DataFrame, iterations: Int, contribution: String,
+      teleport: Column, history: Boolean): IndexedSeq[DataFrame] =
+    (1 to iterations).scanLeft(init) { (ranks, _) =>
       val contribs = e
         .join(ranks.select(col("node").as("source_id"), col("rank_m")),
           Seq("source_id"))
-        .select(col("target_id").as("node"),
-          expr("rank_m div outdeg").as("c"))
+        .select(col("target_id").as("node"), expr(contribution).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      val next = nodes.join(contribs, Seq("node"), "left_outer")
+      val next = s.local(nodes.join(contribs, Seq("node"), "left_outer")
         .select(col("node"),
-          (lit(150000L) + expr("(85 * coalesce(contrib, 0L)) div 100"))
-            .as("rank_m"))
-        .localCheckpoint(eager = true)
-      hist += next
-      ranks = next
-    }
-    Blocks.free(init)
-    Blocks.free(e)
-    Blocks.free(nodes)
-    hist.result()
-  }
+          (teleport + expr("(85 * coalesce(contrib, 0L)) div 100"))
+            .as("rank_m")))
+      if (!history) s.keep(next, nodes, e)
+      next
+    }.tail
 
   /** The sub-cutoff bottom-out of [[ranksHistory]] ([[LocalGraph]]): the
     * distinct pairs collected once, every round solved on the driver
@@ -116,39 +117,19 @@ object PageRank {
     * weight column projects it as `w` on the input instead. Same integer
     * determinism and per-iteration checkpoint discipline as [[ranks]]. */
   def weightedRanks(relationships: DataFrame, iterations: Int = 3)
-      : DataFrame = {
+      : DataFrame = Blocks.scoped { s =>
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    import graft.core.Blocks
     val hasW = relationships.columns.contains("w")
     val edges = (if (hasW) relationships
         .select(col("source_id"), col("target_id"), col("w").cast("long").as("w"))
       else relationships.select(col("source_id"), col("target_id"),
         expr(Sssp.weightSql("relationship_id")).cast("long").as("w")))
       .distinct()
-    val nodes = edges.select(col("source_id").as("node"))
-      .unionByName(edges.select(col("target_id").as("node")))
-      .distinct().localCheckpoint(eager = true)
+    val nodes = s.local(endpoints(edges))
     val outw = edges.groupBy(col("source_id")).agg(sum(col("w")).as("sw"))
-    val e = edges.join(outw, Seq("source_id")).localCheckpoint(eager = true)
-    var ranks = nodes.withColumn("rank_m", lit(1000000L))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.select(col("node").as("source_id"), col("rank_m")),
-          Seq("source_id"))
-        .select(col("target_id").as("node"),
-          expr("(rank_m * w) div sw").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      val next = nodes.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(150000L) + expr("(85 * coalesce(contrib, 0L)) div 100"))
-            .as("rank_m"))
-        .localCheckpoint(eager = true)
-      Blocks.free(ranks)
-      ranks = next
-    }
-    Blocks.free(e); Blocks.free(nodes)
-    ranks
+    val e = s.local(edges.join(outw, Seq("source_id")))
+    rounds(s, nodes, e, s.local(nodes.withColumn("rank_m", lit(1000000L))),
+      iterations, "(rank_m * w) div sw", lit(150000L), history = false).last
   }
 
   /** Personalized PageRank — teleports land on a SEED SET instead of
@@ -166,43 +147,22 @@ object PageRank {
     * driver scalar (the node count) and a seed-membership `isin` over a
     * small broadcast list — seeds are a curated handful by construction. */
   def personalizedRanks(relationships: DataFrame, sources: Seq[String],
-      iterations: Int = 3): DataFrame = {
+      iterations: Int = 3): DataFrame = Blocks.scoped { s =>
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(sources.nonEmpty, "personalization needs at least one seed")
-    import graft.core.Blocks
     val edges = relationships.select(col("source_id"), col("target_id"))
       .distinct()
-    val nodes = edges.select(col("source_id").as("node"))
-      .unionByName(edges.select(col("target_id").as("node")))
-      .distinct()
-      .localCheckpoint(eager = true)
+    val nodes = s.local(endpoints(edges))
     val n = nodes.count()
     val seedInit = 1000000L * n / sources.length
     val teleport = 150000L * n / sources.length
     val isSeed = col("node").isin(sources.map(lit): _*)
     val outdeg = edges.groupBy(col("source_id"))
       .agg(count(lit(1)).as("outdeg"))
-    val e = edges.join(outdeg, Seq("source_id")).localCheckpoint(eager = true)
-    var ranks = nodes
-      .withColumn("rank_m", when(isSeed, seedInit).otherwise(0L))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.select(col("node").as("source_id"), col("rank_m")),
-          Seq("source_id"))
-        .select(col("target_id").as("node"),
-          expr("rank_m div outdeg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      val next = nodes.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"),
-          (when(isSeed, teleport).otherwise(0L) +
-            expr("(85 * coalesce(contrib, 0L)) div 100")).as("rank_m"))
-        .localCheckpoint(eager = true)
-      Blocks.free(ranks)
-      ranks = next
-    }
-    Blocks.free(e)
-    Blocks.free(nodes)
-    ranks
+    val e = s.local(edges.join(outdeg, Seq("source_id")))
+    rounds(s, nodes, e,
+      s.local(nodes.withColumn("rank_m", when(isSeed, seedInit).otherwise(0L))),
+      iterations, "rank_m div outdeg", when(isSeed, teleport).otherwise(0L),
+      history = false).last
   }
 }

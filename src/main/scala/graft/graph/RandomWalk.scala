@@ -26,8 +26,9 @@ import graft.core.Blocks
   * per step and melts on hubs; the index-pick shape is what survives a
   * graph with 10^8-degree hubs. The adjacency index itself is built once
   * with one window (`row_number` per src); per-iteration
-  * `localCheckpoint` truncates the iterative-join lineage and frees the
-  * superseded frontier, same discipline as [[Vle]] and [[PageRank]].
+  * `localCheckpoint` truncates the iterative-join lineage. Every step's
+  * frontier checkpoint is part of the output; the walk's
+  * [[graft.core.Blocks.Scope]] frees the index tables on return.
   */
 object RandomWalk {
 
@@ -56,7 +57,7 @@ object RandomWalk {
     * node) with step 0 = the start node; a walk that reaches a node with
     * no neighbors simply ends early. walk_id = start || '#' || rep. */
   def walks(relationships: DataFrame, length: Int,
-            walksPerNode: Int = 1): DataFrame = {
+            walksPerNode: Int = 1): DataFrame = Blocks.scoped { s =>
     require(length >= 1, s"length must be >= 1, got $length")
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
     val edges = undirectedEdges(relationships)
@@ -65,23 +66,20 @@ object RandomWalk {
     // distinct column names per derived table — adj/deg/frontier all
     // descend from `edges`, and shared names would trip the ambiguous
     // self-join analyzer when the step joins chain them
-    val adj = edges
+    val adj = s.local(edges
       .withColumn("idx",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
           - lit(1))
       .select(col("src").as("a_src"), col("idx").as("a_idx"),
-        col("dst").as("a_dst"))
-      .localCheckpoint(eager = true)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("d_src"), col("deg"))
-      .localCheckpoint(eager = true)
+        col("dst").as("a_dst")))
+    val deg = s.local(edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("d_src"), col("deg")))
     val nodes = edges.select(col("src").as("node")).distinct()
-    var frontier = nodes
+    var frontier = s.local(nodes
       .select(col("node"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("rep"))
       .select(concat(col("node"), lit("#"), col("rep")).as("walk_id"),
-        col("node"))
-      .localCheckpoint(eager = true)
+        col("node")))
     var out = frontier.select(col("walk_id"),
       lit(0).cast("long").as("step"), col("node"))
     for (k <- 1 to length) {
@@ -89,21 +87,15 @@ object RandomWalk {
         .join(deg, col("node") === col("d_src"))
         .withColumn("h", expr(s"md5(walk_id || ':$k:' || node)"))
         .withColumn("pick", expr(s"${nibbleValueSql("h")} % deg"))
-      // NOT freed: every step's frontier is part of the result (the
-      // checkpoint doubles as the output block), unlike PageRank where
-      // the superseded table is dead. Total footprint = the walk corpus
-      // itself, walks × (length+1) rows.
-      frontier = picked
+      // every step's frontier is part of the result (the checkpoint
+      // doubles as the output block), so the scope keeps them all; total
+      // footprint = the walk corpus itself, walks × (length+1) rows.
+      frontier = s.local(picked
         .join(adj, col("node") === col("a_src") && col("pick") === col("a_idx"))
-        .select(col("walk_id"), col("a_dst").as("node"))
-        .localCheckpoint(eager = true)
+        .select(col("walk_id"), col("a_dst").as("node")))
       out = out.unionByName(frontier.select(col("walk_id"),
         lit(k).cast("long").as("step"), col("node")))
     }
-    // every frontier is eagerly materialized, so the adjacency/degree
-    // tables are dead once the loop ends
-    Blocks.free(adj)
-    Blocks.free(deg)
     out
   }
 
@@ -132,22 +124,20 @@ object RandomWalk {
     */
   def node2vecWalks(relationships: DataFrame, length: Int,
       wReturn: Long, wCommon: Long, wFar: Long,
-      walksPerNode: Int = 1): DataFrame = {
+      walksPerNode: Int = 1): DataFrame = Blocks.scoped { s =>
     require(length >= 1, s"length must be >= 1, got $length")
     require(wReturn >= 0 && wCommon >= 0 && wFar >= 0 &&
       wReturn + wCommon + wFar > 0,
       "weights must be non-negative and not all zero")
     val edges = undirectedEdges(relationships)
-    val adj = edges
+    val adj = s.local(edges
       .withColumn("idx",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
           - lit(1))
       .select(col("src").as("a_src"), col("idx").as("a_idx"),
-        col("dst").as("a_dst"))
-      .localCheckpoint(eager = true)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("d_src"), col("deg"))
-      .localCheckpoint(eager = true)
+        col("dst").as("a_dst")))
+    val deg = s.local(edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("d_src"), col("deg")))
     // (prev, cur, idx, nxt, w, cum_lo, cum_hi, total): cur's neighbors in
     // dst order with cumulative weights; zero-weight rows keep their slot
     // in the cumulative sum (an empty range can never match) but are
@@ -165,36 +155,33 @@ object RandomWalk {
           .when(col("p_dst").isNotNull, lit(wCommon))
           .otherwise(lit(wFar)).as("w"))
     val byPair = Window.partitionBy(col("t_prev"), col("t_cur"))
-    val trans = weighted
+    val trans = s.local(weighted
       .withColumn("cum_hi", sum(col("w")).over(byPair.orderBy(col("a_idx"))))
       .withColumn("total", sum(col("w")).over(byPair))
       .withColumn("cum_lo", col("cum_hi") - col("w"))
       .filter(col("w") > 0)
       .select(col("t_prev"), col("t_cur"), col("t_nxt"),
-        col("cum_lo"), col("cum_hi"), col("total"))
-      .localCheckpoint(eager = true)
-    val totals = trans.select(col("t_prev").as("tt_prev"),
+        col("cum_lo"), col("cum_hi"), col("total")))
+    val totals = s.local(trans.select(col("t_prev").as("tt_prev"),
         col("t_cur").as("tt_cur"), col("total").as("tt_total"))
-      .distinct().localCheckpoint(eager = true)
+      .distinct())
 
     val nodes = edges.select(col("src").as("node")).distinct()
-    val start = nodes
+    val start = s.local(nodes
       .select(col("node"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("rep"))
       .select(concat(col("node"), lit("#"), col("rep")).as("walk_id"),
-        col("node"))
-      .localCheckpoint(eager = true)
+        col("node")))
     var out = start.select(col("walk_id"), lit(0).cast("long").as("step"),
       col("node"))
     // step 1: first-order (no prev yet) — the walks() pick verbatim
-    var frontier = start
+    var frontier = s.local(start
       .join(deg, col("node") === col("d_src"))
       .withColumn("h", expr(s"md5(walk_id || ':1:' || node)"))
       .withColumn("pick", expr(s"${nibbleValueSql("h")} % deg"))
       .join(adj, col("node") === col("a_src") && col("pick") === col("a_idx"))
       .select(col("walk_id"), col("node").as("prev"),
-        col("a_dst").as("node"))
-      .localCheckpoint(eager = true)
+        col("a_dst").as("node")))
     out = out.unionByName(frontier.select(col("walk_id"),
       lit(1).cast("long").as("step"), col("node")))
     for (k <- 2 to length) {
@@ -203,18 +190,15 @@ object RandomWalk {
           col("prev") === col("tt_prev") && col("node") === col("tt_cur"))
         .withColumn("h", expr(s"md5(walk_id || ':$k:' || node)"))
         .withColumn("r", expr(s"${nibbleValueSql("h")} % tt_total"))
-      frontier = drawn
+      frontier = s.local(drawn
         .join(trans,
           col("prev") === col("t_prev") && col("node") === col("t_cur") &&
             col("r") >= col("cum_lo") && col("r") < col("cum_hi"))
         .select(col("walk_id"), col("node").as("prev"),
-          col("t_nxt").as("node"))
-        .localCheckpoint(eager = true)
+          col("t_nxt").as("node")))
       out = out.unionByName(frontier.select(col("walk_id"),
         lit(k).cast("long").as("step"), col("node")))
     }
-    Blocks.free(adj); Blocks.free(deg)
-    Blocks.free(trans); Blocks.free(totals)
     out
   }
 

@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Blocks
@@ -37,7 +36,8 @@ import graft.core.Blocks
   * Scale shape: every round is one equi-join of a (node, label) table
   * against the edge list plus a map-side-combinable `min` — the
   * [[PageRank]] discipline. Lineage is truncated per round via eager
-  * `localCheckpoint` with superseded blocks freed ([[graft.core.Blocks]]);
+  * `localCheckpoint` in a [[graft.core.Blocks.Scope]], which frees
+  * superseded blocks — also when a pass throws;
   * convergence checks are bounded driver-side scalar counts over already
   * materialized blocks. Labels are node-id strings, so `min` is
   * order-independent ⇒ bit-identical output on any partitioning.
@@ -69,12 +69,21 @@ object Scc {
     // O(diameter × passes) Spark jobs; the edges are checkpointed only
     // when it declines. Counts as one pass against maxOuter (maxOuter = 0
     // keeps the loud non-convergence guard).
-    if (maxOuter > 0) LocalGraph.collectEdges(distinctEdges, localMax)
-      .foreach(es => return localDf(spark, LocalGraph.sccLabels(es)))
-    val e0 = distinctEdges.compactCheckpoint()
-    var rem = e0.select(col("src").as("node"))
+    (if (maxOuter > 0) LocalGraph.collectEdges(distinctEdges, localMax) else None)
+      .map(es => localDf(spark, LocalGraph.sccLabels(es)))
+      .getOrElse(passes(distinctEdges, maxOuter, maxInner, localMax))
+  }
+
+  /** [[components]]' distributed path: FW-BW-Trim passes over the
+    * distinct edges, bottoming out on the driver once the remainder fits
+    * `localMax`. */
+  private def passes(distinctEdges: DataFrame, maxOuter: Int, maxInner: Int,
+      localMax: Long): DataFrame = Blocks.scoped { s =>
+    val spark = distinctEdges.sparkSession
+    val e0 = s.compact(distinctEdges)
+    var rem = s.compact(e0.select(col("src").as("node"))
       .unionByName(e0.select(col("dst").as("node")))
-      .distinct().compactCheckpoint()
+      .distinct())
     var e = e0
     var resolvedParts = List.empty[DataFrame] // each a checkpoint
     var pass = 0
@@ -85,80 +94,64 @@ object Scc {
       // every iteration; once it fits the cutoff, one serial Tarjan
       // replaces the remaining O(diameter) coloring rounds. rem can hold
       // edge-free nodes (neighbors all resolved) — carried as singletons.
-      if (remCount <= localMax)
-        LocalGraph.collectEdges(e, localMax).foreach { es =>
+      (if (remCount <= localMax) LocalGraph.collectEdges(e, localMax) else None) match {
+        case Some(es) =>
           val remNodes = rem.collect().map(_.getString(0))
           resolvedParts ::= localDf(spark,
             LocalGraph.sccLabels(es, remNodes.iterator))
-          Blocks.free(rem); Blocks.free(e)
-          rem = null; e = null
           remCount = 0
-        }
-      if (remCount > 0) {
-
-      // 1. Trim: peel in-degree-0 / out-degree-0 nodes iteratively.
-      var trimming = true
-      while (trimming) {
-        val hasIn = e.select(col("dst").as("node")).distinct()
-        val hasOut = e.select(col("src").as("node")).distinct()
-        val interior = rem.join(hasIn, Seq("node"), "left_semi")
-          .join(hasOut, Seq("node"), "left_semi")
-          .compactCheckpoint()
-        val interiorCount = interior.count()
-        if (interiorCount == remCount) {
-          Blocks.free(interior)
-          trimming = false
-        } else {
-          val peeled = rem.join(interior, Seq("node"), "left_anti")
-            .select(col("node"), col("node").as("scc"))
-            .compactCheckpoint()
-          resolvedParts ::= peeled
-          val nextE = e.join(interior.withColumnRenamed("node", "src"),
-              Seq("src"), "left_semi")
-            .join(interior.withColumnRenamed("node", "dst"),
-              Seq("dst"), "left_semi")
-            .select(col("src"), col("dst"))
-            .compactCheckpoint()
-          Blocks.free(rem); Blocks.free(e)
-          rem = interior; e = nextE
-          remCount = interiorCount
-        }
+        case None =>
+          // 1. Trim: peel in-degree-0 / out-degree-0 nodes iteratively.
+          var trimming = true
+          while (trimming) {
+            val hasIn = e.select(col("dst").as("node")).distinct()
+            val hasOut = e.select(col("src").as("node")).distinct()
+            val interior = s.compact(rem.join(hasIn, Seq("node"), "left_semi")
+              .join(hasOut, Seq("node"), "left_semi"))
+            val interiorCount = interior.count()
+            if (interiorCount == remCount) trimming = false
+            else {
+              resolvedParts ::= s.compact(rem.join(interior, Seq("node"), "left_anti")
+                .select(col("node"), col("node").as("scc")))
+              e = s.compact(e.join(interior.withColumnRenamed("node", "src"),
+                  Seq("src"), "left_semi")
+                .join(interior.withColumnRenamed("node", "dst"),
+                  Seq("dst"), "left_semi")
+                .select(col("src"), col("dst")))
+              rem = interior
+              remCount = interiorCount
+            }
+            s.keep(rem, e, resolvedParts)
+          }
+          if (remCount == 0) {
+            pass = maxOuter // nothing cyclic left; exit outer loop
+          } else {
+            // 2./3. Min-label fixpoints in both directions.
+            val fwd = minLabelFixpoint(rem, e, maxInner)
+            val bwd = minLabelFixpoint(rem,
+              e.select(col("dst").as("src"), col("src").as("dst")), maxInner)
+            val joined = fwd.withColumnRenamed("lab", "f")
+              .join(bwd.withColumnRenamed("lab", "b"), "node")
+            resolvedParts ::= s.compact(joined.filter(col("f") === col("b"))
+              .select(col("node"), col("f").as("scc")))
+            rem = s.compact(joined.filter(col("f") =!= col("b"))
+              .select(col("node")))
+            e = s.compact(e.join(rem.withColumnRenamed("node", "src"),
+                Seq("src"), "left_semi")
+              .join(rem.withColumnRenamed("node", "dst"),
+                Seq("dst"), "left_semi")
+              .select(col("src"), col("dst")))
+            s.keep(rem, e, resolvedParts)
+            remCount = rem.count()
+          }
       }
-      if (remCount == 0) {
-        pass = maxOuter // nothing cyclic left; exit outer loop
-      } else {
-        // 2./3. Min-label fixpoints in both directions.
-        val fwd = minLabelFixpoint(rem, e, maxInner)
-        val bwd = minLabelFixpoint(rem,
-          e.select(col("dst").as("src"), col("src").as("dst")), maxInner)
-        val joined = fwd.withColumnRenamed("lab", "f")
-          .join(bwd.withColumnRenamed("lab", "b"), "node")
-        val resolved = joined.filter(col("f") === col("b"))
-          .select(col("node"), col("f").as("scc"))
-          .compactCheckpoint()
-        resolvedParts ::= resolved
-        val nextRem = joined.filter(col("f") =!= col("b"))
-          .select(col("node")).compactCheckpoint()
-        val nextE = e.join(nextRem.withColumnRenamed("node", "src"),
-            Seq("src"), "left_semi")
-          .join(nextRem.withColumnRenamed("node", "dst"),
-            Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .compactCheckpoint()
-        Blocks.free(fwd); Blocks.free(bwd); Blocks.free(rem); Blocks.free(e)
-        rem = nextRem; e = nextE
-        remCount = rem.count()
-      }
-      } // remCount > 0 (not bottomed out locally this pass)
     }
     if (remCount > 0)
       throw new IllegalStateException(
         s"SCC did not converge within $maxOuter FW-BW passes " +
           s"($remCount nodes unresolved) — raise maxOuter")
-    if (rem != null) Blocks.free(rem)
-    if (e != null) Blocks.free(e)
     resolvedParts match {
-      case Nil => e0.sparkSession.emptyDataFrame
+      case Nil => spark.emptyDataFrame
         .withColumn("node", lit(null).cast("string"))
         .withColumn("scc", lit(null).cast("string"))
         .limit(0)
@@ -197,9 +190,8 @@ object Scc {
     * ancestor labeling (lab non-increasing along every edge ⇒ lab(v) ≤
     * every ancestor id; lab(v) is itself an ancestor id ⇒ equality). */
   private def minLabelFixpoint(nodes: DataFrame, edges: DataFrame,
-                               maxInner: Int): DataFrame = {
-    var lab = nodes.select(col("node"), col("node").as("lab"))
-      .compactCheckpoint()
+      maxInner: Int): DataFrame = Blocks.scoped { s =>
+    var lab = s.compact(nodes.select(col("node"), col("node").as("lab")))
     var frontier = lab // every label is "new" in round 1
     var moving = 1L
     var round = 0
@@ -218,21 +210,17 @@ object Scc {
       // id of this subgraph, so the self-join always finds its row
       val asMap = stepped.select(col("node").as("m_node"),
         col("mid").as("m_lab"))
-      val next = stepped
+      val next = s.compact(stepped
         .join(asMap, col("mid") === col("m_node"), "left_outer")
         .select(col("node"),
           least(col("mid"), coalesce(col("m_lab"), col("mid"))).as("nlab"),
           col("lab"))
         .select(col("node"), col("nlab").as("lab"),
-          (col("nlab") < col("lab")).as("chg"))
-        .compactCheckpoint()
-      val newFrontier = next.filter(col("chg"))
-        .select(col("node"), col("lab"))
-      moving = newFrontier.count()
-      if (frontier ne lab) Blocks.free(frontier)
-      Blocks.free(lab)
+          (col("nlab") < col("lab")).as("chg")))
+      frontier = next.filter(col("chg")).select(col("node"), col("lab"))
+      moving = frontier.count()
       lab = next.select(col("node"), col("lab"))
-      frontier = newFrontier
+      s.keep(lab, frontier)
     }
     lab
   }

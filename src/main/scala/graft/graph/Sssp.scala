@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.core.Blocks.CompactCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Blocks
@@ -21,9 +20,8 @@ import graft.core.Blocks
   * Scale shape per round: one equi-join of the current distance table
   * against the edge list (shuffle keyed by node/src, both sides
   * co-partitioned after round 1), one map-side-combinable min. Frontier
-  * lineage is truncated per round via `localCheckpoint` with the
-  * superseded table's blocks freed — same discipline as
-  * [[graft.pipeline.Dedup.componentsStars]].
+  * lineage is truncated per round via `localCheckpoint` in a
+  * [[graft.core.Blocks.Scope]], which frees the superseded table.
   */
 object Sssp {
 
@@ -48,24 +46,20 @@ object Sssp {
     * longest shortest path. Unreachable nodes are absent (their distance
     * is +∞, which has no honest integer encoding). */
   def distances(relationships: DataFrame, source: String,
-                rounds: Int): DataFrame = {
+                rounds: Int): DataFrame = Blocks.scoped { s =>
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = weightedEdges(relationships).compactCheckpoint()
+    val edges = s.compact(weightedEdges(relationships))
     val spark = relationships.sparkSession
     import spark.implicits._
-    var dist = Seq((source, 0L)).toDF("node", "dist")
-      .compactCheckpoint()
-    for (_ <- 1 to rounds) {
-      val relaxed = dist
-        .join(edges, dist("node") === edges("src"))
-        .select(edges("dst").as("node"), (dist("dist") + edges("w")).as("dist"))
-      val next = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .compactCheckpoint()
-      Blocks.free(dist)
-      dist = next
+    (1 to rounds).foldLeft(s.compact(Seq((source, 0L)).toDF("node", "dist"))) {
+      (dist, _) =>
+        val relaxed = dist
+          .join(edges, dist("node") === edges("src"))
+          .select(edges("dst").as("node"), (dist("dist") + edges("w")).as("dist"))
+        val next = s.compact(dist.unionByName(relaxed)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist")))
+        s.keep(next, edges)
+        next
     }
-    Blocks.free(edges)
-    dist
   }
 }

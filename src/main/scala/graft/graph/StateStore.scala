@@ -461,10 +461,9 @@ private[graft] object StateStore {
     * dirty-proportional. */
   def compactIntoBuckets(spark: SparkSession, stateDir: String,
       fromV: Long, v: Long, table: String, k: Int,
-      prev: TableState): TableState = {
+      prev: TableState): TableState = graft.core.Blocks.scoped { s =>
     val keys = tableKeys(stateDir, table)
-    val latest = chainLatest(spark, stateDir, table, prev.chain, keys)
-      .localCheckpoint(true)
+    val latest = s.local(chainLatest(spark, stateDir, table, prev.chain, keys))
     val dirty = dirtyBuckets(latest, col(keys.head), k)
     val base = readBase(spark, stateDir, fromV, table, dirty)
     val folded = base
@@ -476,7 +475,6 @@ private[graft] object StateStore {
       .repartition(col(BucketCol))
       .write.partitionBy(BucketCol).mode("overwrite")
       .parquet(s"$stateDir/v$v/$table")
-    graft.core.Blocks.free(latest)
     TableState(prev.buckets ++ dirty.map(b => b -> v), Seq.empty)
   }
 

@@ -1,8 +1,8 @@
 package graft.graph
 
+import graft.core.Blocks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Unbounded variable-length path expansion (SURVEY §2 B7) — Cypher
   * `-[*]->` / `-[:name*1..]->`, which the reference passes through to AGE's
@@ -119,8 +119,9 @@ object Vle {
     * yourself if you re-read; `range`'s minDepth>1 branch already does).
     * The BFS regime returns an eager localCheckpoint, read-many for free.
     * Deep or unbounded expansion keeps the
-    * frontier-BFS with per-iteration lineage truncation, and explicitly
-    * frees each superseded checkpoint instead of waiting for a driver GC. */
+    * frontier-BFS with per-iteration lineage truncation in a
+    * [[graft.core.Blocks.Scope]], which frees each superseded checkpoint
+    * instead of waiting for a driver GC. */
   def reachability(edges: DataFrame, relNames: Seq[String] = Nil,
       maxIter: Int = 100, checkpointEvery: Int = 3,
       sourceIds: Option[Seq[String]] = None,
@@ -128,83 +129,53 @@ object Vle {
     if (maxIter <= JoinChainMaxDepth)
       return joinChain(edges, relNames, maxIter, sourceIds, sourceDf)
 
-    import graft.core.Blocks
     val e0 = LocalGraph.probeInput(filtered(edges, relNames))
-    localReach(e0, maxIter, sourceIds, sourceDf).foreach(return _)
-    val e = e0.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // A bound start set prunes the whole expansion to the reachable cone —
-    // at scale, the difference between scanning a 100 TB edge set once per
-    // hop and touching only the frontier's neighborhoods.
-    val seed = seedStarts(e, sourceIds, sourceDf)
-    var visited = seed.select(col("source_id").as("start_id"),
-      col("target_id").as("end_id"), lit(1).as("depth"))
-      .localCheckpoint(eager = true)
-    if (metricsOn) record(1, visited.count())
-    var visitedCp = visited // last checkpoint holding the visited base rows
-    var frontier = visited
-    var depth = 1
-    var done = false
-    // Intermediate frames awaiting release: a checkpoint truncates the
-    // lineage that referenced them, at which point persists can be
-    // unpersisted and superseded checkpoint blocks freed — leaving either
-    // around accumulates across a long multi-query session.
-    var pending: List[DataFrame] = Nil
-    var oldFrontiers: List[DataFrame] = Nil
-    while (!done && depth < maxIter) {
-      // localCheckpoint every iteration: lineage of an iterative join grows
-      // multiplicatively and both planning time and driver memory blow up
-      // without truncation.
-      val next = frontier.join(e, col("end_id") === col("source_id"))
-        .select(col("start_id"), col("target_id").as("end_id"),
-          lit(depth + 1).as("depth"))
-        .distinct()
-        .join(visited.select(col("start_id").as("vs"), col("end_id").as("ve")),
-          col("start_id") === col("vs") && col("end_id") === col("ve"), "left_anti")
-        .localCheckpoint(eager = true)
-      // with metrics on, the emptiness probe doubles as the frontier count
-      // (next is an eager checkpoint — counting reads cached blocks)
-      val frontierRows =
-        if (metricsOn) next.count() else if (next.isEmpty) 0L else -1L
-      if (frontierRows == 0L) { done = true; Blocks.free(next) }
-      else {
-        record(depth + 1, frontierRows)
-        oldFrontiers = frontier :: oldFrontiers
-        val grown = visited.unionByName(next)
-        visited =
-          if (depth % checkpointEvery == 0) {
-            val cp = grown.localCheckpoint(eager = true)
-            pending.foreach(_.unpersist(false)); pending = Nil
-            // cp holds every row; the previous checkpoint and the frontier
-            // checkpoints folded into it are no longer reachable from any
-            // live plan
-            Blocks.free(visitedCp)
-            oldFrontiers.foreach(Blocks.free); oldFrontiers = Nil
-            visitedCp = cp
-            cp
-          } else {
-            val p = grown.persist(StorageLevel.MEMORY_AND_DISK)
-            pending = p :: pending
-            p
-          }
-        frontier = next
-        depth += 1
+    localReach(e0, maxIter, sourceIds, sourceDf).getOrElse(Blocks.scoped { s =>
+      val e = s.persist(e0)
+      // A bound start set prunes the whole expansion to the reachable cone —
+      // at scale, the difference between scanning a 100 TB edge set once per
+      // hop and touching only the frontier's neighborhoods.
+      val seed = seedStarts(e, sourceIds, sourceDf)
+      var visited = s.local(seed.select(col("source_id").as("start_id"),
+        col("target_id").as("end_id"), lit(1).as("depth")))
+      if (metricsOn) record(1, visited.count())
+      var visitedCp = visited // last checkpoint holding the visited base rows
+      var frontier = visited
+      var depth = 1
+      var done = false
+      while (!done && depth < maxIter) {
+        // localCheckpoint every iteration: lineage of an iterative join grows
+        // multiplicatively and both planning time and driver memory blow up
+        // without truncation.
+        val next = s.local(frontier.join(e, col("end_id") === col("source_id"))
+          .select(col("start_id"), col("target_id").as("end_id"),
+            lit(depth + 1).as("depth"))
+          .distinct()
+          .join(visited.select(col("start_id").as("vs"), col("end_id").as("ve")),
+            col("start_id") === col("vs") && col("end_id") === col("ve"), "left_anti"))
+        // with metrics on, the emptiness probe doubles as the frontier count
+        // (next is an eager checkpoint — counting reads cached blocks)
+        val frontierRows =
+          if (metricsOn) next.count() else if (next.isEmpty) 0L else -1L
+        if (frontierRows == 0L) done = true
+        else {
+          record(depth + 1, frontierRows)
+          // every checkpointEvery rounds the visited union is checkpointed,
+          // and the persisted unions and frontier checkpoints folded into
+          // it are read by no live plan any more
+          val grown = visited.unionByName(next)
+          visited =
+            if (depth % checkpointEvery == 0) { visitedCp = s.local(grown); visitedCp }
+            else s.persist(grown)
+          frontier = next
+          depth += 1
+          s.keep(e, visited, frontier)
+        }
       }
-    }
-    // sever lineage so the edge cache can be released per-invocation; when
-    // the loop ended exactly on a checkpoint the result IS that checkpoint
-    val out =
-      if (visited eq visitedCp) visited
-      else {
-        val cp = visited.localCheckpoint(eager = true)
-        pending.foreach(_.unpersist(false))
-        Blocks.free(visitedCp)
-        cp
-      }
-    oldFrontiers.foreach(Blocks.free)
-    if (!(frontier eq out)) Blocks.free(frontier)
-    e.unpersist(false)
-    out
+      // sever lineage so the edge cache can be released per-invocation; when
+      // the loop ended exactly on a checkpoint the result IS that checkpoint
+      if (visited eq visitedCp) visited else s.local(visited)
+    })
   }
 
   /** The sub-cutoff bottom-out of the BFS regime ([[LocalGraph]]): the
@@ -336,29 +307,23 @@ object Vle {
       reachability(edges, relNames, maxIter = maxDepth,
           sourceIds = sourceIds, sourceDf = sourceDf)
         .filter(col("depth") <= maxDepth)
-    else {
-      val bfs = reachability(edges, relNames, maxIter = maxDepth,
-          sourceIds = sourceIds, sourceDf = sourceDf)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    else Blocks.scoped { s =>
+      val bfs = s.persist(reachability(edges, relNames, maxIter = maxDepth,
+          sourceIds = sourceIds, sourceDf = sourceDf))
       val inRange = bfs.filter(col("depth") >= minDepth && col("depth") <= maxDepth)
-      val shortPairs = bfs.filter(col("depth") < minDepth)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val out =
-        if (shortPairs.isEmpty) inRange.localCheckpoint(eager = true)
-        else {
-          val redeemed = trailEnumerate(edges, relNames, minDepth, maxDepth,
-            shortPairs)
-          // keep only redeemed pairs NOT already found in range by BFS (the
-          // BFS depth is the true minimal in-range depth when present)
-          val extra = redeemed.join(
-            inRange.select(col("start_id").as("rs"), col("end_id").as("re")),
-            col("start_id") === col("rs") && col("end_id") === col("re"),
-            "left_anti")
-          inRange.unionByName(extra).localCheckpoint(eager = true)
-        }
-      bfs.unpersist(false)
-      shortPairs.unpersist(false)
-      out
+      val shortPairs = s.persist(bfs.filter(col("depth") < minDepth))
+      if (shortPairs.isEmpty) s.local(inRange)
+      else {
+        val redeemed = trailEnumerate(edges, relNames, minDepth, maxDepth,
+          shortPairs)
+        // keep only redeemed pairs NOT already found in range by BFS (the
+        // BFS depth is the true minimal in-range depth when present)
+        val extra = redeemed.join(
+          inRange.select(col("start_id").as("rs"), col("end_id").as("re")),
+          col("start_id") === col("rs") && col("end_id") === col("re"),
+          "left_anti")
+        s.local(inRange.unionByName(extra))
+      }
     }
   }
 
@@ -408,12 +373,88 @@ object Vle {
           col("depth"), reverse(col("node_ids")).as("node_ids"),
           reverse(col("rel_ids")).as("rel_ids"))
     }
+    val rowBudget = conf
+      .get("spark.graft.vle.trailEnumRowBudget", TrailEnumRowBudget.toString).toLong
+    Blocks.scoped { s =>
+      val e = s.persist(idEdges(edges, relNames))
+      val frames = collection.mutable.ListBuffer[DataFrame]() // in-range levels
+      // the zero-length path: (n, n, [n], []) for every node in the caller's
+      // universe (openCypher *0..k matches nodes regardless of edges)
+      if (minDepth == 0) {
+        val universe = nodes.map(n => n.select(col(n.columns.head).as("n")))
+          .getOrElse(e.select(explode(array(col("source_id"), col("target_id")))
+            .as("n")))
+          .distinct()
+        val bound0 = sourceIds.fold(universe)(ids =>
+          universe.filter(col("n").isin(ids: _*)))
+        val bound = sourceDf.fold(bound0) { sd =>
+          val ids = sd.select(col(sd.columns.head).as("__seed_id")).distinct()
+          bound0.join(ids, col("n") === col("__seed_id"), "left_semi")
+        }
+        frames += bound.select(col("n").as("start_id"), col("n").as("end_id"),
+          lit(0).as("depth"), array(col("n")).as("node_ids"),
+          array().cast("array<string>").as("rel_ids"))
+      }
+      var frontier = s.local(seedStarts(e, sourceIds, sourceDf)
+        .select(col("source_id").as("start_id"), col("target_id").as("end_id"),
+          lit(1).as("depth"),
+          array(col("source_id"), col("target_id")).as("node_ids"),
+          array(col("__eid")).as("rel_ids")))
+      if (minDepth <= 1 && maxDepth >= 1) frames += frontier
+      var depth = 1
+      var emptied = frontier.isEmpty
+      if (metricsOn && !emptied) record(1, frontier.count())
+      def overBudget(): Boolean = {
+        val n = frontier.count()
+        record(depth, n)
+        val over = n > rowBudget
+        if (over) org.apache.log4j.Logger.getLogger(getClass).warn(
+          s"VLE path enumeration truncated at depth $depth/$maxDepth: frontier " +
+            s"exceeds $rowBudget rows (spark.graft.vle.trailEnumRowBudget); " +
+            "deeper paths are missing from nodes()/relationships() output")
+        over
+      }
+      while (!emptied && depth < maxDepth && !overBudget()) {
+        val next = s.local(frontier.join(e, col("end_id") === col("source_id"))
+          .filter(!array_contains(col("rel_ids"), col("__eid")))
+          .select(col("start_id"), col("target_id").as("end_id"),
+            lit(depth + 1).as("depth"),
+            concat(col("node_ids"), array(col("target_id"))).as("node_ids"),
+            concat(col("rel_ids"), array(col("__eid"))).as("rel_ids")))
+        depth += 1
+        if (next.isEmpty) emptied = true
+        else {
+          frontier = next
+          if (depth >= minDepth) frames += next
+          s.keep(e, frontier, frames)
+        }
+      }
+      val raw =
+        if (frames.isEmpty)
+          frontier.limit(0) // schema-correct empty frame
+        else frames.reduce(_.unionByName(_))
+      val filtered1 = targetIds.fold(raw)(ids =>
+        raw.filter(col("end_id").isin(ids: _*)))
+      val filteredOut = targetDf.fold(filtered1) { td =>
+        val ids = td.select(col(td.columns.head).as("__seed_id")).distinct()
+        filtered1.join(ids, col("end_id") === col("__seed_id"), "left_semi")
+      }
+      s.local(filteredOut)
+    }
+  }
+
+  /** The (source_id, target_id, __eid) distinct edge set trail
+    * enumeration walks, restricted to `relNames`. Relationship uniqueness
+    * is per edge *identity*: parallel edges are distinct traversals, and
+    * `__eid` is also the relationships(p) output. Use the real id when
+    * the graph has one; else a (source, target, name) composite is the
+    * closest stable identity. The explicit "\u0001" unit separator keeps
+    * ("a","bc") and ("ab","c") from colliding into one composite id
+    * (VleSpec has the collision case). */
+  private def idEdges(edges: DataFrame, relNames: Seq[String]): DataFrame = {
     val named =
       if (relNames.isEmpty) edges
       else edges.filter(col("relationship_name").isin(relNames: _*))
-    // Edge identity for both uniqueness and the relationships(p) output:
-    // the real relationship_id when the graph has one, else a
-    // "\u0001"-separated composite (see trailEnumerate).
     val withId =
       if (named.columns.contains("relationship_id"))
         named.withColumn("__eid", col("relationship_id"))
@@ -422,81 +463,7 @@ object Vle {
           col("source_id"), col("target_id"), col("relationship_name")))
       else named.withColumn("__eid",
         concat_ws("\u0001", col("source_id"), col("target_id")))
-    val e = withId.select(col("source_id"), col("target_id"), col("__eid"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val rowBudget = conf
-      .get("spark.graft.vle.trailEnumRowBudget", TrailEnumRowBudget.toString).toLong
-
-    import graft.core.Blocks
-    val frames = collection.mutable.ListBuffer[DataFrame]() // in-range levels
-    // the zero-length path: (n, n, [n], []) for every node in the caller's
-    // universe (openCypher *0..k matches nodes regardless of edges)
-    if (minDepth == 0) {
-      val universe = nodes.map(n => n.select(col(n.columns.head).as("n")))
-        .getOrElse(e.select(explode(array(col("source_id"), col("target_id")))
-          .as("n")))
-        .distinct()
-      val bound0 = sourceIds.fold(universe)(ids =>
-        universe.filter(col("n").isin(ids: _*)))
-      val bound = sourceDf.fold(bound0) { sd =>
-        val ids = sd.select(col(sd.columns.head).as("__seed_id")).distinct()
-        bound0.join(ids, col("n") === col("__seed_id"), "left_semi")
-      }
-      frames += bound.select(col("n").as("start_id"), col("n").as("end_id"),
-        lit(0).as("depth"), array(col("n")).as("node_ids"),
-        array().cast("array<string>").as("rel_ids"))
-    }
-    var frontier = seedStarts(e, sourceIds, sourceDf)
-      .select(col("source_id").as("start_id"), col("target_id").as("end_id"),
-        lit(1).as("depth"),
-        array(col("source_id"), col("target_id")).as("node_ids"),
-        array(col("__eid")).as("rel_ids"))
-      .localCheckpoint(eager = true)
-    val frontiers = collection.mutable.ListBuffer(frontier)
-    if (minDepth <= 1 && maxDepth >= 1) frames += frontier
-    var depth = 1
-    var emptied = frontier.isEmpty
-    if (metricsOn && !emptied) record(1, frontier.count())
-    def overBudget(): Boolean = {
-      val n = frontier.count()
-      record(depth, n)
-      val over = n > rowBudget
-      if (over) org.apache.log4j.Logger.getLogger(getClass).warn(
-        s"VLE path enumeration truncated at depth $depth/$maxDepth: frontier " +
-          s"exceeds $rowBudget rows (spark.graft.vle.trailEnumRowBudget); " +
-          "deeper paths are missing from nodes()/relationships() output")
-      over
-    }
-    while (!emptied && depth < maxDepth && !overBudget()) {
-      val next = frontier.join(e, col("end_id") === col("source_id"))
-        .filter(!array_contains(col("rel_ids"), col("__eid")))
-        .select(col("start_id"), col("target_id").as("end_id"),
-          lit(depth + 1).as("depth"),
-          concat(col("node_ids"), array(col("target_id"))).as("node_ids"),
-          concat(col("rel_ids"), array(col("__eid"))).as("rel_ids"))
-        .localCheckpoint(eager = true)
-      depth += 1
-      if (next.isEmpty) { emptied = true; Blocks.free(next) }
-      else {
-        frontier = next
-        frontiers += next
-        if (depth >= minDepth) frames += next
-      }
-    }
-    val raw =
-      if (frames.isEmpty)
-        frontier.limit(0) // schema-correct empty frame
-      else frames.reduce(_.unionByName(_))
-    val filtered1 = targetIds.fold(raw)(ids =>
-      raw.filter(col("end_id").isin(ids: _*)))
-    val filteredOut = targetDf.fold(filtered1) { td =>
-      val ids = td.select(col(td.columns.head).as("__seed_id")).distinct()
-      filtered1.join(ids, col("end_id") === col("__seed_id"), "left_semi")
-    }
-    val out = filteredOut.localCheckpoint(eager = true)
-    frontiers.foreach(Blocks.free)
-    e.unpersist(false)
-    out
+    withId.select(col("source_id"), col("target_id"), col("__eid")).distinct()
   }
 
   /** Canonical shortest path per endpoint pair WITH interiors — what
@@ -538,25 +505,9 @@ object Vle {
     * pair below minDepth (`shortPairs`); returns (start_id, end_id, depth)
     * for pairs in `shortPairs` reached by a trail of in-range length. */
   private def trailEnumerate(edges: DataFrame, relNames: Seq[String],
-      minDepth: Int, maxDepth: Int, shortPairs: DataFrame): DataFrame = {
-    val named =
-      if (relNames.isEmpty) edges
-      else edges.filter(col("relationship_name").isin(relNames: _*))
-    // Relationship uniqueness is per edge *identity*: parallel edges are
-    // distinct traversals. Use the real id when the graph has one; else a
-    // (source, target, name) composite is the closest stable identity.
-    // The explicit "\u0001" unit separator keeps ("a","bc") and ("ab","c")
-    // from colliding into one composite id (VleSpec has the collision case).
-    val withId =
-      if (named.columns.contains("relationship_id"))
-        named.withColumn("__eid", col("relationship_id"))
-      else if (named.columns.contains("relationship_name"))
-        named.withColumn("__eid", concat_ws("\u0001",
-          col("source_id"), col("target_id"), col("relationship_name")))
-      else named.withColumn("__eid",
-        concat_ws("\u0001", col("source_id"), col("target_id")))
-    val e = withId.select(col("source_id"), col("target_id"), col("__eid"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      minDepth: Int, maxDepth: Int,
+      shortPairs: DataFrame): DataFrame = Blocks.scoped { s =>
+    val e = s.persist(idEdges(edges, relNames))
     val starts = shortPairs.select(col("start_id")).distinct()
     val conf = edges.sparkSession.conf
     val staticCap = math.max(minDepth, conf
@@ -564,13 +515,12 @@ object Vle {
     val rowBudget = conf
       .get("spark.graft.vle.trailEnumRowBudget", TrailEnumRowBudget.toString).toLong
 
-    var frontier = e
+    var frontier = s.local(e
       .join(starts.select(col("start_id").as("source_id")), Seq("source_id"),
         "left_semi")
       .select(col("source_id").as("start_id"), col("target_id").as("end_id"),
-        array(col("__eid")).as("eset"))
-      .localCheckpoint(eager = true)
-    var result: DataFrame = null
+        array(col("__eid")).as("eset")))
+    var result = Option.empty[DataFrame]
     var depth = 1
     var emptied = frontier.isEmpty
     // Beyond the static cap, keep enumerating only while the edge-subset
@@ -586,45 +536,35 @@ object Vle {
           "trail is deeper are under-approximated")
       over
     }
-    import graft.core.Blocks
     while (!emptied && depth < maxDepth && !overBudget()) {
-      val next = frontier.join(e, col("end_id") === col("source_id"))
+      val next = s.local(frontier.join(e, col("end_id") === col("source_id"))
         .filter(!array_contains(col("eset"), col("__eid")))
         .select(col("start_id"), col("target_id").as("end_id"),
           array_sort(concat(col("eset"), array(col("__eid")))).as("eset"))
-        .distinct()
-        .localCheckpoint(eager = true)
+        .distinct())
       depth += 1
-      if (next.isEmpty) { emptied = true; Blocks.free(next) }
+      if (next.isEmpty) emptied = true
       else {
-        Blocks.free(frontier) // superseded: next's checkpoint holds the rows
         frontier = next
         if (depth >= minDepth) {
           val pairs = frontier.select(col("start_id"), col("end_id"))
             .distinct().withColumn("depth", lit(depth))
           // anti-join so each pair keeps its first (minimal) in-range depth
-          val grown =
-            (if (result == null) pairs
-             else result.unionByName(pairs.join(
-               result.select(col("start_id").as("rs"), col("end_id").as("re")),
-               col("start_id") === col("rs") && col("end_id") === col("re"),
-               "left_anti")))
-              .localCheckpoint(eager = true)
-          if (result != null) Blocks.free(result)
-          result = grown
+          result = Some(s.local(result.fold(pairs)(r => r.unionByName(pairs.join(
+            r.select(col("start_id").as("rs"), col("end_id").as("re")),
+            col("start_id") === col("rs") && col("end_id") === col("re"),
+            "left_anti")))))
         }
+        s.keep(e, frontier, result)
       }
     }
-    Blocks.free(frontier)
-    e.unpersist(false)
-    if (result == null)
+    result.fold(
       shortPairs.select(col("start_id"), col("end_id"), lit(0).as("depth"))
-        .limit(0)
-    else
+        .limit(0))(
       // only pairs that actually needed redemption (d0 < min)
-      result.join(shortPairs.select(col("start_id").as("ss"),
+      _.join(shortPairs.select(col("start_id").as("ss"),
           col("end_id").as("se")),
         col("start_id") === col("ss") && col("end_id") === col("se"),
-        "left_semi")
+        "left_semi"))
   }
 }

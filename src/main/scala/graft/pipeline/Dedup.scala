@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Blocks.CompactCheckpointOps
+import graft.core.Blocks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -77,8 +77,8 @@ object Dedup {
 
   // Materialization discipline shared by the pair builders below: the
   // shingle-id table AND results are `localCheckpoint(eager)`ed —
-  // evaluated ONCE, lineage truncated, blocks freed explicitly at pass
-  // end ([[graft.core.Blocks]]) so downstream consumers that read a
+  // evaluated ONCE, lineage truncated, blocks freed at pass end by the
+  // pass's [[graft.core.Blocks.Scope]], so downstream consumers that read a
   // frame several times (verifyJaccard scans `ids` three ways;
   // [[components]] builds edges ∪ edges.swap) never re-run the generator
   // pipeline. A lazy `persist` here was measurably worse (r20): the
@@ -145,12 +145,9 @@ object Dedup {
     * set sizes in the union stay exact). No n² stage, no candidate×set
     * re-join. */
   def shingleJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5, maxDf: Int = 1000): DataFrame = {
-    val ids = shingleIds(df, idCol, textCol, n)
-      .compactCheckpoint()
-    try shingleJaccardPairsFrom(ids, threshold, maxDf)
-    finally graft.core.Blocks.free(ids)
-  }
+      n: Int = 3, threshold: Double = 0.5, maxDf: Int = 1000): DataFrame =
+    Blocks.scoped(s => shingleJaccardPairsFrom(
+      s.compact(shingleIds(df, idCol, textCol, n)), threshold, maxDf))
 
   /** [[shingleJaccardPairs]] over pre-built shingle ids — the entry point
     * for callers that feed several dedup passes from ONE `shingleIds` run
@@ -160,7 +157,7 @@ object Dedup {
     * The result is eagerly checkpointed, so it remains readable after the
     * caller releases `ids`. */
   def shingleJaccardPairsFrom(ids: DataFrame, threshold: Double = 0.5,
-      maxDf: Int = 1000): DataFrame = {
+      maxDf: Int = 1000): DataFrame = Blocks.scoped { s =>
     val rare = ids.groupBy(col("sid")).agg(count(lit(1)).as("df_cnt"))
       .filter(col("df_cnt") <= maxDf).select(col("sid"))
     // Exact (pre-cap) set size per doc, annotated ONTO the index rows
@@ -172,10 +169,9 @@ object Dedup {
     // materialized once: the capped+annotated index feeds BOTH sides of
     // the self-join below — left lazy, the df-count and size aggregations
     // would run twice
-    val idsF = ids.join(rare, Seq("sid"), "left_semi")
-      .join(sizes, Seq("doc"))
-      .compactCheckpoint()
-    val out =
+    val idsF = s.compact(ids.join(rare, Seq("sid"), "left_semi")
+      .join(sizes, Seq("doc")))
+    s.compact(
       idsF.select(col("doc").as("doc_a"), col("sz").as("sz_a"), col("sid"))
         .join(idsF.select(col("doc").as("doc_b"), col("sz").as("sz_b"),
           col("sid")), Seq("sid"))
@@ -188,10 +184,7 @@ object Dedup {
           floor(col("inter") * 10000.0 / (col("sz_a") + col("sz_b") - col("inter")) + 0.5)
             .cast(LongType))
         .filter(col("jaccard_4") >= math.round(threshold * 10000))
-        .select(col("doc_a"), col("doc_b"), col("jaccard_4"))
-        .compactCheckpoint()
-    graft.core.Blocks.free(idsF)
-    out
+        .select(col("doc_a"), col("doc_b"), col("jaccard_4")))
   }
 
   /** MinHash signatures, wide form (doc, mh0..mh{numHashes-1}): the i-th
@@ -292,18 +285,17 @@ object Dedup {
     *              monolith exceeded). */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, waves: Int = 1): DataFrame = {
-    val ids = shingleIds(df, idCol, textCol, n)
-      .compactCheckpoint()
-    try minhashLshPairsFrom(ids, numHashes, bands, threshold, waves)
-    finally graft.core.Blocks.free(ids)
-  }
+      threshold: Double = 0.5, waves: Int = 1): DataFrame =
+    Blocks.scoped(s => minhashLshPairsFrom(
+      s.compact(shingleIds(df, idCol, textCol, n)), numHashes, bands,
+      threshold, waves))
 
   /** [[minhashLshPairs]] over pre-built shingle ids — see
     * [[shingleJaccardPairsFrom]] for the contract (caller materializes and
     * owns `ids`; the eagerly-checkpointed result outlives it). */
   def minhashLshPairsFrom(ids: DataFrame, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5, waves: Int = 1): DataFrame = {
+      bands: Int = 16, threshold: Double = 0.5,
+      waves: Int = 1): DataFrame = Blocks.scoped { s =>
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must divide evenly into bands ($bands); " +
         "a remainder would silently drop hash functions from the banding")
@@ -314,8 +306,7 @@ object Dedup {
     // mh0..mh{n-1}) frame is numHashes longs per doc — re-aggregating the
     // shingle table per wave would multiply the operator's only required
     // shuffle by `waves`
-    val wide = minhashSignaturesFrom(ids, numHashes)
-      .compactCheckpoint()
+    val wide = s.compact(minhashSignaturesFrom(ids, numHashes))
     def bandRows(bnds: Seq[Int]): DataFrame = {
       val structs = bnds.map { bnd =>
         struct(lit(bnd).as("band"),
@@ -331,11 +322,10 @@ object Dedup {
       val sigs = bandRows(bnds) // narrow explode over checkpointed blocks
       val l = sigs.select(col("doc").as("doc_a"), col("band"), col("sig"))
       val r = sigs.select(col("doc").as("doc_b"), col("band"), col("sig"))
-      val c = l.join(r, Seq("band", "sig"))
+      val c = s.compact(l.join(r, Seq("band", "sig"))
         .filter(col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"))
-        .distinct()
-        .compactCheckpoint()
+        .distinct())
       // checkpointing c cuts the lineage to this wave's bucket-join
       // shuffle, but ContextCleaner only reclaims the shuffle files after
       // a GC collects the dropped ShuffleDependency (or the ~30-min
@@ -357,16 +347,8 @@ object Dedup {
     }
     val candidates =
       if (waveCands.size == 1) waveCands.head
-      else waveCands.reduce(_ unionByName _).distinct() // cross-wave dups
-        .compactCheckpoint()
-    val out = verifyJaccard(candidates, ids, threshold)
-      .compactCheckpoint()
-    waveCands.foreach(graft.core.Blocks.free)
-    // single-wave: candidates IS waveCands.head, already freed above
-    if (!waveCands.headOption.exists(_ eq candidates))
-      graft.core.Blocks.free(candidates)
-    graft.core.Blocks.free(wide)
-    out
+      else s.compact(waveCands.reduce(_ unionByName _).distinct()) // cross-wave dups
+    s.compact(verifyJaccard(candidates, ids, threshold))
   }
 
   /** Connected components over near-dup pairs: (doc, component = min doc id
@@ -412,7 +394,7 @@ object Dedup {
     * `localCheckpoint` truncates the iterative-join lineage, same
     * discipline as [[graft.graph.Vle]]. */
   def componentsMinLabel(pairs: DataFrame, aCol: String = "doc_a",
-      bCol: String = "doc_b"): DataFrame = {
+      bCol: String = "doc_b"): DataFrame = Blocks.scoped { s =>
     // Materialize the incoming pair plan ONCE before fanning it out into
     // sym = edges ∪ edges.swap — without this, an expensive unpersisted
     // generator subplan (e.g. the full LSH+verify pipeline) is evaluated
@@ -421,26 +403,23 @@ object Dedup {
     // like [[minhashLshPairs]] checkpoint their own output, and a second
     // copy of the same rows would just double the pinned blocks.
     val proj = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val ownsEdges = !graft.core.Blocks.isRematerializable(proj)
-    val edges = if (ownsEdges) proj.compactCheckpoint() else proj
+    val edges = if (Blocks.isRematerializable(proj)) proj else s.compact(proj)
     // sym is CHECKPOINTED (not merely persisted): every loop iteration
     // joins against it, and its lineage would otherwise reach back through
     // the freed one-shot edge copy — a lost partition would then be
-    // unrecomputable. Severing the lineage makes freeing edges safe.
+    // unrecomputable. Severing the lineage lets the scope free edges.
     // No distinct(): min-label propagation is duplicate-insensitive (a
     // repeated edge changes no min), so deduplication would buy nothing
     // for a full extra shuffle. Checkpointed HASH-PARTITIONED ON `b` —
     // the key every round's neighbor join probes — so the per-round join
     // reuses this partitioning and only the (much smaller) labels side
     // shuffles each iteration.
-    val sym = edges
+    val sym = s.compact(edges
       .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b"))
-      .compactCheckpoint()
-    if (ownsEdges) graft.core.Blocks.free(edges)
-    var labels = sym.select(col("a").as("doc")).distinct()
-      .withColumn("label", col("doc"))
-      .compactCheckpoint()
+      .repartition(col("b")))
+    s.keep(sym)
+    var labels = s.compact(sym.select(col("a").as("doc")).distinct()
+      .withColumn("label", col("doc")))
     var changed = true
     while (changed) {
       val neighborMin = sym
@@ -456,19 +435,17 @@ object Dedup {
       val asMap = stepped.select(col("doc").as("m_doc"), col("mid_label").as("m_label"))
       // ONE eager checkpoint per round; the convergence probe and next
       // round's labels both read the checkpointed frame (cheap projections)
-      val merged = stepped
+      val merged = s.compact(stepped
         .join(asMap, col("mid_label") === col("m_doc"), "left_outer")
         .select(col("doc"), col("label"),
           least(col("mid_label"), coalesce(col("m_label"), col("mid_label")))
-            .as("next_label"))
-        .compactCheckpoint()
-      // the new checkpoint subsumes the previous round's — free it now
+            .as("next_label")))
+      // the new checkpoint subsumes the previous round's — free that now
       // rather than waiting for a driver GC + ContextCleaner pass
-      graft.core.Blocks.free(labels)
+      s.keep(merged, sym)
       changed = !merged.filter(col("next_label") =!= col("label")).isEmpty
       labels = merged.select(col("doc"), col("next_label").as("label"))
     }
-    graft.core.Blocks.free(sym) // labels are checkpoints; sym is dead now
     labels.select(col("doc"), col("label").as("component"))
   }
 
@@ -499,42 +476,35 @@ object Dedup {
     // for types whose order this module doesn't reproduce). The input is
     // checkpointed only when it declines.
     val input = graft.graph.LocalGraph.probeInput(proj)
-    localComponents(input).foreach(return _)
-    val ownsEdges = !graft.core.Blocks.isRematerializable(proj)
-    val edges0 = if (ownsEdges) input.compactCheckpoint() else proj
-    // all nodes, for labeling isolated-in-pairs docs at the end
-    val nodes = edges0.select(col("a")).unionByName(edges0.select(col("b").as("a")))
-      .distinct().select(col("a").as("doc")).compactCheckpoint()
-    // canonical downward orientation (a > b)
-    var e = edges0
-      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .compactCheckpoint()
-    if (ownsEdges) graft.core.Blocks.free(edges0)
-    var eSig = edgeSig(e)
-    var converged = false
-    while (!converged) {
-      val (smallPlan, large) = starsRound(e)
-      val small = smallPlan.compactCheckpoint()
-      graft.core.Blocks.free(large)
-      // convergence: same distinct-edge set as last round, compared via
-      // (count, order-insensitive hash-sum) — one agg job per round; the
-      // previous round's signature is carried, not recomputed
-      val sig = edgeSig(small)
-      converged = sig == eSig
-      eSig = sig
-      graft.core.Blocks.free(e)
-      e = small
-    }
-    // stars: every non-root points directly at its component min
-    val out = nodes.join(e.select(col("a").as("doc"), col("b").as("component")),
-        Seq("doc"), "left_outer")
-      .select(col("doc"), coalesce(col("component"), col("doc")).as("component"))
-      .compactCheckpoint()
-    graft.core.Blocks.free(e)
-    graft.core.Blocks.free(nodes)
-    out
+    localComponents(input).getOrElse(Blocks.scoped { s =>
+      val edges0 = if (Blocks.isRematerializable(proj)) proj else s.compact(input)
+      // all nodes, for labeling isolated-in-pairs docs at the end
+      val nodes = s.compact(edges0.select(col("a"))
+        .unionByName(edges0.select(col("b").as("a")))
+        .distinct().select(col("a").as("doc")))
+      // canonical downward orientation (a > b)
+      var e = s.compact(edges0
+        .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct())
+      s.keep(e, nodes)
+      var eSig = edgeSig(e)
+      var converged = false
+      while (!converged) {
+        e = s.compact(starsRound(s, e))
+        s.keep(e, nodes)
+        // convergence: same distinct-edge set as last round, compared via
+        // (count, order-insensitive hash-sum) — one agg job per round; the
+        // previous round's signature is carried, not recomputed
+        val sig = edgeSig(e)
+        converged = sig == eSig
+        eSig = sig
+      }
+      // stars: every non-root points directly at its component min
+      s.compact(nodes.join(e.select(col("a").as("doc"), col("b").as("component")),
+          Seq("doc"), "left_outer")
+        .select(col("doc"), coalesce(col("component"), col("doc")).as("component")))
+    })
   }
 
   /** Driver-side union-find over a sub-cutoff pair frame (columns `a`,
@@ -563,27 +533,26 @@ object Dedup {
 
   /** One large-star + small-star contraction round ([[componentsStars]]'
     * loop body). Returns the next downward edge list as an UNMATERIALIZED
-    * plan plus the intermediate large-star checkpoint the caller frees
-    * once the plan is materialized (checkpointed or written to disk). */
-  private def starsRound(e: DataFrame): (DataFrame, DataFrame) = {
+    * plan over the intermediate large-star checkpoint `s` owns, so the
+    * caller materializes it (checkpointed or written to disk) before
+    * `s` frees that checkpoint. */
+  private def starsRound(s: Blocks.Scope, e: DataFrame): DataFrame = {
     val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
     val lmins = sym.groupBy(col("a"))
       .agg(min(col("b")).as("mb"))
       .select(col("a"), least(col("a"), col("mb")).as("m"))
-    val large = sym.join(lmins, Seq("a"))
+    val large = s.compact(sym.join(lmins, Seq("a"))
       .filter(col("b") > col("a"))
       .select(col("b").as("a"), col("m").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .compactCheckpoint()
+      .distinct())
     val smins = large.groupBy(col("a")).agg(min(col("b")).as("m"))
-    val small = large.join(smins, Seq("a"))
+    large.join(smins, Seq("a"))
       .filter(col("b") =!= col("m"))
       .select(col("b").as("a"), col("m").as("b"))
       .unionByName(smins.select(col("a"), col("m").as("b")))
       .filter(col("a") =!= col("b"))
       .distinct()
-    (small, large)
   }
 
   /** Order-insensitive (count, hash-sum) signature of a downward edge
@@ -632,16 +601,17 @@ object Dedup {
     var converged = false
     // resume always runs at least one round; if the crash happened after
     // convergence the first round is a no-op whose signature matches
-    while (!converged) {
-      val (smallPlan, large) = starsRound(e)
-      smallPlan.write.mode("overwrite").parquet(dir(i + 1))
-      graft.core.Blocks.free(large)
-      val next = spark.read.parquet(dir(i + 1))
-      val sig = edgeSig(next)
-      converged = sig == eSig
-      eSig = sig
-      e = next
-      i += 1
+    Blocks.scoped { s =>
+      while (!converged) {
+        starsRound(s, e).write.mode("overwrite").parquet(dir(i + 1))
+        s.keep() // the round is on disk: its large-star checkpoint is dead
+        val next = spark.read.parquet(dir(i + 1))
+        val sig = edgeSig(next)
+        converged = sig == eSig
+        eSig = sig
+        e = next
+        i += 1
+      }
     }
     val nodes = spark.read.parquet(dir(0))
     val allNodes = nodes.select(col("a"))
@@ -703,28 +673,24 @@ object Dedup {
     * pigeonhole banding over 4 byte-chunks makes the candidate join linear
     * in collisions rather than n². */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, maxHamming: Int = 3): DataFrame = {
+      n: Int = 3, maxHamming: Int = 3): DataFrame = Blocks.scoped { s =>
     val sh = simhash(df, idCol, textCol, n)
     // materialized once: chunked feeds BOTH sides of the pigeonhole
     // self-join — left lazy, the 32-sum signature aggregation (and the
     // whole shingle pipeline below it) would run twice
-    val chunked = sh.select(col("doc"), col("simhash"),
+    val chunked = s.compact(sh.select(col("doc"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("chunk"))
-      .withColumn("cv", shr(col("simhash"), col("chunk") * 8) % 256)
-      .compactCheckpoint()
+      .withColumn("cv", shr(col("simhash"), col("chunk") * 8) % 256))
     val l = chunked.select(col("doc").as("doc_a"), col("simhash").as("sh_a"),
       col("chunk"), col("cv"))
     val r = chunked.select(col("doc").as("doc_b"), col("simhash").as("sh_b"),
       col("chunk"), col("cv"))
-    val out = l.join(r, Seq("chunk", "cv"))
+    s.compact(l.join(r, Seq("chunk", "cv"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("sh_a"), col("sh_b"))
       .distinct()
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-      .compactCheckpoint()
-    graft.core.Blocks.free(chunked)
-    out
+      .select(col("doc_a"), col("doc_b"), col("hamming")))
   }
 }

@@ -1,0 +1,35 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Repository inventories the design depends on: the change log stays a
+  * readable text file, and the graph fixpoints keep their checkpoints in
+  * a `Blocks` scope instead of hand-placed releases. */
+class LifecycleInventorySpec extends AnyFunSuite {
+
+  private def read(p: java.nio.file.Path): String =
+    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+
+  test("CHANGES.md stays under 1 MB with no line over 20,000 characters") {
+    val p = java.nio.file.Paths.get("CHANGES.md")
+    assert(java.nio.file.Files.size(p) < (1L << 20), "CHANGES.md is 1 MB or more")
+    val longest = read(p).linesIterator.map(_.length).maxOption.getOrElse(0)
+    assert(longest <= 20000, s"a CHANGES.md line has $longest characters")
+  }
+
+  test("hand-placed Blocks.free calls in graph/ and pipeline/Dedup.scala stay at 1") {
+    val graph = java.nio.file.Paths.get("src/main/scala/graft/graph")
+    val walk = java.nio.file.Files.walk(graph)
+    val files =
+      try walk.filter(_.toString.endsWith(".scala")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).toSeq
+      finally walk.close()
+    val sites = (files :+ java.nio.file.Paths.get(
+        "src/main/scala/graft/pipeline/Dedup.scala"))
+      .map(p => p.getFileName -> "Blocks\\.free\\b".r.findAllMatchIn(read(p)).size)
+      .filter(_._2 > 0)
+    // the one left is the StateCommit park: folded state reads a committed
+    // batch disowns, freed by the next batch's commit
+    assert(sites.map(_._2).sum <= 1, s"Blocks.free sites: $sites")
+  }
+}

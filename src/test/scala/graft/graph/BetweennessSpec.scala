@@ -130,11 +130,28 @@ class BetweennessSpec extends AnyFunSuite {
       "x" -> 0L, "y" -> 1000000L))
   }
 
+  /** `body` on the distributed loop (local-solve cutoff 0): it throws an
+    * IllegalStateException whose message contains `msg`, and the
+    * checkpoints it held are freed. */
+  private def throwsDistributed(msg: String)(body: => Any): Unit = {
+    val knob = "spark.graft.graph.localSolveMaxEdges"
+    spark.conf.set(knob, "0")
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val ex = intercept[IllegalStateException](body)
+      assert(ex.getMessage.contains(msg), ex.getMessage)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        "the throw left the loop's checkpoints persisted")
+    } finally spark.conf.unset(knob)
+  }
+
   test("strict depth guard throws instead of truncating") {
     val g = rels(("a", "b"), ("b", "c"), ("c", "d"))
     val ex = intercept[IllegalStateException](
       Betweenness.centrality(g, Seq("a"), maxDepth = 1))
     assert(ex.getMessage.contains("maxDepth"))
+    throwsDistributed("maxDepth")(
+      Betweenness.centrality(g, Seq("a"), maxDepth = 1))
   }
 
   test("sigma guard: combinatorial equal-path growth throws instead of wrapping") {
@@ -148,6 +165,8 @@ class BetweennessSpec extends AnyFunSuite {
     val ex = intercept[IllegalStateException](
       Betweenness.centrality(rels(edges: _*), Seq("n0"), maxDepth = 200))
     assert(ex.getMessage.contains("sigma"), ex.getMessage)
+    throwsDistributed("sigma")(
+      Betweenness.centrality(rels(edges: _*), Seq("n0"), maxDepth = 200))
   }
 
   test("approximate: k = n degenerates to exact betweenness") {

@@ -253,4 +253,27 @@ class LocalFoldSpec extends AnyFunSuite {
       assert(jobs <= 8, s"$name: a local batch ran $jobs Spark jobs")
     }
   }
+
+  test("a distributed batch leaves only its parked state reads, which the next commit frees") {
+    val dist = spark.newSession()
+    dist.conf.set(Knob, "0")
+    // a triangle edge deleted and two groups merged: every maintainer's
+    // distributed fold recomputes a region
+    val ms = Seq(d("b3_1", node(3, 1), node(3, 2)), c("e9", node(9, 0), node(11, 2)))
+    for ((name, op, init) <- maintainers) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-dist-leak").toString
+      val stateDir = s"$dir/state"
+      new java.io.File(stateDir).mkdirs()
+      init(stateDir, rels(baseRows))
+      val batch = batchFrame(dist, s"$dir/batch", 1L, ms)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      IncrementalAnalytics.foldBatch(stateDir, op, batch, 0L)
+      assert(StateStore.readPointer(stateDir) == 1L)
+      // the next batch's StateCommit releases the parked folded reads
+      graft.core.Blocks.scoped(s =>
+        new IncrementalAnalytics.StateCommit(dist, stateDir, 2L, s))
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"$name: the distributed batch left a persisted RDD")
+    }
+  }
 }

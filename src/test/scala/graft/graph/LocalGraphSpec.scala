@@ -321,6 +321,30 @@ class LocalGraphSpec extends AnyFunSuite {
         col("target_id").as("dst")))))
   }
 
+  /** The distributed-only loops and regimes beyond [[pinFixpoints]]. */
+  private def pinDistributed(r: DataFrame): Seq[(String, () => DataFrame)] = {
+    val withIds = r.withColumn("relationship_id",
+      concat_ws(":", col("source_id"), col("target_id")))
+    val sd = r.select(col("source_id").as("src"), col("target_id").as("dst"))
+    val seeds = Some(Seq("j00", "j03"))
+    Seq(
+      "hits" -> (() => Hits.scores(r, 2)),
+      "sssp" -> (() => Sssp.distances(withIds, "j00", 3)),
+      "mis" -> (() => Mis.independentSet(sd)),
+      "wpagerank" -> (() => PageRank.weightedRanks(withIds, 2)),
+      "ppr" -> (() => PageRank.personalizedRanks(r, Seq("j00", "j03"), 2)),
+      "ktruss" -> (() => KTruss.peel(sd, 3, 2)),
+      "betweenness" -> (() => Betweenness.centrality(r, Seq("j00", "j03"))),
+      "randomwalk" -> (() => RandomWalk.walks(r, 3)),
+      "vle range" -> (() => Vle.range(r, 2, 4, sourceIds = seeds)),
+      "vle trails" -> (() => Vle.trails(r, 1, 3, sourceIds = seeds)),
+      "vle shortest" -> (() => Vle.shortestPaths(r, 1, 3, sourceIds = seeds)),
+      "reach" -> (() => IncrementalAnalytics.reachClosure(
+        r.select(col("source_id").as("u"), col("target_id").as("v")),
+        r.select(col("source_id").as("node")).filter(col("node") === "j00"),
+        50, "pin")))
+  }
+
   test("a local fixpoint runs a handful of Spark jobs and persists nothing") {
     val r = rels(randomDigraph(12, 6, i => f"j$i%02d")).localCheckpoint(true)
     try {
@@ -352,11 +376,35 @@ class LocalGraphSpec extends AnyFunSuite {
       n
     }
     try {
-      for ((name, run) <- pinFixpoints(r)) {
+      for ((name, run) <- pinFixpoints(r) ++ pinDistributed(r)) {
         val dist = stagesAt("0", name, run)
         val declined = stagesAt("3", name, run)
         assert(declined <= dist + 1, s"$name: $declined stages declined, $dist distributed")
       }
+    } finally spark.conf.unset(Knob)
+  }
+
+  test("every distributed loop at cutoff 0 frees what it makes and runs its pinned jobs") {
+    val r = rels(randomDigraph(12, 6, i => f"j$i%02d"))
+    // Spark jobs per entry on this fixture. Releasing blocks runs no job,
+    // so the checkpoint scope leaves these counts as the loops had them.
+    // Some counts vary run to run on the same code (SCC 130–132, WCC
+    // 49–50 seen), so each is pinned to within 2 jobs of that count.
+    val pinned = Map("pagerank" -> 18, "lpa" -> 14, "kcore" -> 22, "vle" -> 15,
+      "wcc" -> 49, "scc" -> 131, "hits" -> 36, "sssp" -> 13, "mis" -> 17,
+      "wpagerank" -> 18, "ppr" -> 20, "ktruss" -> 13, "betweenness" -> 103,
+      "randomwalk" -> 18, "vle range" -> 46, "vle trails" -> 16,
+      "vle shortest" -> 17, "reach" -> 18)
+    spark.conf.set(Knob, "0")
+    try for ((name, run) <- pinFixpoints(r) ++ pinDistributed(r)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      var out: DataFrame = null
+      val jobs = jobsOf { out = run(); out.collect(): Unit }
+      graft.core.Blocks.free(out) // the result handed to the caller
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"$name left a persisted RDD")
+      assert(math.abs(jobs - pinned(name)) <= 2,
+        s"$name ran $jobs jobs, pinned ${pinned(name)}")
     } finally spark.conf.unset(Knob)
   }
 }

@@ -88,4 +88,15 @@ class MisSpec extends AnyFunSuite {
     // either way the pair keeps exactly 1
     assert(got.count(Set("d", "e")) == 1)
   }
+
+  test("non-convergence within maxRounds throws and frees the round checkpoints") {
+    // a path needs more than one Luby round: the minimum-priority node
+    // wins first, its neighbors drop, and the rest repeats
+    val g = edges((1 until 12).map(i => (s"v$i", s"v${i + 1}")): _*)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalStateException](Mis.independentSet(g, maxRounds = 1))
+    assert(ex.getMessage.contains("did not converge"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the throw left the round checkpoints persisted")
+  }
 }

@@ -102,8 +102,11 @@ class SccSpec extends AnyFunSuite {
     // two separate 2-cycles chained: needs >=1 FW-BW pass after trim;
     // with maxOuter=0 the guard must fire
     val g = edges(("a", "b"), ("b", "a"), ("a", "c"), ("c", "d"), ("d", "c"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalStateException](Scc.components(g, maxOuter = 0))
     assert(ex.getMessage.contains("did not converge"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the throw left the pass's checkpoints persisted")
   }
 
   test("empty edge set yields empty labeling") {
