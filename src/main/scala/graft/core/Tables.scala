@@ -77,15 +77,22 @@ object Td {
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   /** events.parquet has shipped with two physical layouts for `ts`:
-    * TIMESTAMP(NANOS) — which Spark's vectorized reader rejects, so it is
-    * read as a long (`nanosAsLong`) and floor-divided to micros — and plain
-    * `timestamp[us]` (isAdjustedToUTC=false → TIMESTAMP_NTZ). Branch on the
-    * read schema so both load to a UTC microsecond TimestampType with
-    * identical values (DuckDB `epoch_us` floor semantics either way). */
+    * TIMESTAMP(NANOS) — whose schema Spark rejects unless the session sets
+    * `nanosAsLong`, so it is read as a long and floor-divided to micros —
+    * and plain `timestamp[us]` (isAdjustedToUTC=false → TIMESTAMP_NTZ).
+    * Only the NANOS layout sets that conf, and only once schema inference
+    * has rejected the file; every other layout leaves the caller's session
+    * as it was. Branch on the read schema so all load to a UTC microsecond
+    * TimestampType with identical values (DuckDB `epoch_us` floor
+    * semantics either way). */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
-    val raw = table(s, d, "events")
+    val raw =
+      try table(s, d, "events")
+      catch { case e: Exception if isNanosTimestamp(e) =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        table(s, d, "events")
+      }
     raw.schema("ts").dataType match {
       case LongType =>
         // INTEGER `div`, not `/`: epoch nanos (~1.7e18) exceed double's
@@ -104,6 +111,12 @@ object Td {
         raw.withColumn("ts", col("ts").cast(TimestampType))
     }
   }
+  /** Spark's "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,…))" schema
+    * error, raised on the driver or wrapped in a failed footer-read job. */
+  private def isNanosTimestamp(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("TIMESTAMP(NANOS"))
+
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

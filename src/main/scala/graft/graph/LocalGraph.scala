@@ -47,6 +47,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   *  - [[graft.pipeline.Dedup.components]]: the pair list as given.
   *  - the incremental maintainers' region-reach cones
   *    ([[IncrementalAnalytics.reachClosure]]) and batch folds.
+  *  - the Kusto, MQTT and webhook event sinks: a micro-batch's delivery
+  *    rows ([[graft.streaming.EventPipeline.ClientSink]]); over the cutoff
+  *    they are delivered on the executors, one client per partition.
   *
   * Every local result is a `coalesce(1)` local relation ([[frame]]) with
   * the distributed result's column names and types; it holds no

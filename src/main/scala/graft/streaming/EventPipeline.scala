@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.core.Tables
 import graft.events.{CloudEvent, CloudEventFactory}
+import graft.graph.LocalGraph
 import graft.store.MutationEvent
 
 /** The streaming events service (SURVEY §2.E / §3.3), Spark-native:
@@ -17,13 +20,10 @@ import graft.store.MutationEvent
   * unnecessary — classification (E2), validity filter (E4), patch
   * derivation (E5) and formatting (E6/E7/E8) are per-row transforms that
   * scale embarrassingly. Routes (E9) become one output stream per
-  * (format, sink); reliability (E11) is checkpointing + a DLQ capture per
-  * batch.
+  * (format, [[Sink]]); reliability (E11) is checkpointing + the one DLQ
+  * rule of [[runSink]].
   */
 object EventPipeline {
-
-  /** A route: which event format feeds which sink (E9). */
-  final case class Route(format: String, sinkName: String)
 
   def mutationsToDataset(spark: SparkSession, df: DataFrame): Dataset[MutationEvent] = {
     import spark.implicits._
@@ -62,8 +62,8 @@ object EventPipeline {
 
   /** The three Kusto-shaped DataHistory tables
     * (docs/how-to-guides/data-history-kusto.mdx:113-179): (data-JSON
-    * path → Kusto column) specs shared by the driver and executor
-    * ingest routes. */
+    * path → Kusto column) specs shared by the table projections below and
+    * the [[Kusto]] sink's rows. */
   private val PropertyCols = Seq("timeStamp" -> "TimeStamp",
     "serviceId" -> "ServiceId", "id" -> "Id", "modelId" -> "ModelId",
     "key" -> "Key", "value" -> "Value", "relationshipId" -> "RelationshipId",
@@ -93,201 +93,6 @@ object EventPipeline {
   def relationshipLifeCycleEvents(events: Dataset[CloudEvent]): DataFrame =
     projectTable(events, CloudEventFactory.RelationshipLifecycleType, RelLifecycleCols)
 
-  /** A12: Kusto route — each micro-batch splits into the three DataHistory
-    * tables and queued-ingests each table's JSON rows through an injected
-    * ingest function (the reference's IKustoQueuedIngestClient with
-    * per-table JSON ingestion mappings, KustoEventSink.cs:31-70; no Kusto
-    * client library in this zero-egress build — a deployment closes over
-    * the real queued-ingest client, specs pass a recorder). Queued
-    * ingestion is batch-granular, so a failed table batch dead-letters
-    * that TABLE's rows; the other tables' ingestions stand. Default table
-    * names per data-history-kusto.mdx:100-102. */
-  def runKustoRoute(
-      events: Dataset[CloudEvent],
-      ingest: (String, Seq[String]) => Unit, // (table, JSON rows); throws on failure
-      checkpointDir: String,
-      dlqDir: Option[String] = None,
-      propertyTable: String = "AdtPropertyEvents",
-      twinLifecycleTable: String = "AdtTwinLifeCycleEvents",
-      relLifecycleTable: String = "AdtRelationshipLifeCycleEvents"): StreamingQuery = {
-    events.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[CloudEvent], batchId: Long) =>
-        val cached = batch.persist()
-        try kustoIngestDriverBatch(cached, batchId, ingest, dlqDir,
-          propertyTable, twinLifecycleTable, relLifecycleTable)
-        finally cached.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** Per-batch body of the driver-collected Kusto route; `batch` must
-    * already be persisted by the caller (it is read three times). */
-  private def kustoIngestDriverBatch(batch: Dataset[CloudEvent],
-      batchId: Long, ingest: (String, Seq[String]) => Unit,
-      dlqDir: Option[String], propertyTable: String,
-      twinLifecycleTable: String, relLifecycleTable: String): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val tables = Seq(
-      propertyTable -> propertyEvents(batch),
-      twinLifecycleTable -> twinLifeCycleEvents(batch),
-      relLifecycleTable -> relationshipLifeCycleEvents(batch))
-    val failed = tables.flatMap { case (table, df) =>
-      val rows = df.toJSON.collect().toSeq
-      if (rows.isEmpty) None
-      else {
-        try { ingest(table, rows); None }
-        catch { case e: Exception =>
-          Some((table, rows, String.valueOf(e.getMessage)))
-        }
-      }
-    }
-    if (failed.nonEmpty) dlqDir match {
-      case Some(d) =>
-        failed.flatMap { case (table, rows, msg) =>
-          rows.map(r => (table, r, msg))
-        }.toDF("kusto_table", "row_json", "dlq_error")
-          .withColumn("dlq_batch", lit(batchId))
-          .write.mode("append").parquet(d)
-      case None => throw new RuntimeException(
-        s"${failed.length} Kusto table ingestions failed: ${failed.head._3}")
-    }
-  }
-
-  /** A12 at scale: Kusto queued ingestion distributed over EXECUTORS —
-    * the scale path for data-history volumes where the driver-collected
-    * [[runKustoRoute]] becomes the bottleneck. `mkIngest` builds ONE
-    * queued-ingest client per partition (the factory closure must be
-    * serializable); rows are hash-partitioned by (table, subject) —
-    * table-major so each executor submits few large per-table ingestions
-    * (queued ingestion amortizes per-blob overhead), subject to spread
-    * one table's volume across partitions — and time-sorted within each
-    * partition, so any one entity's history lands in order within its
-    * ingest batch. Only FAILED rows return to the driver.
-    *
-    * DLQ semantics refine [[runKustoRoute]]'s: a failed ingestion
-    * dead-letters that (table × partition)'s rows rather than the whole
-    * table's — same rows-on-failure guarantee, finer blast radius. DLQ
-    * schema is identical (kusto_table, row_json, dlq_error, dlq_batch);
-    * no DLQ configured → the batch throws and the checkpoint retries. */
-  def runKustoRouteDistributed(
-      events: Dataset[CloudEvent],
-      mkIngest: () => (String, Seq[String]) => Unit,
-      checkpointDir: String,
-      dlqDir: Option[String] = None,
-      propertyTable: String = "AdtPropertyEvents",
-      twinLifecycleTable: String = "AdtTwinLifeCycleEvents",
-      relLifecycleTable: String = "AdtRelationshipLifeCycleEvents",
-      parallelism: Int = 0): StreamingQuery = {
-    events.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[CloudEvent], batchId: Long) =>
-        kustoIngestDistributedBatch(batch, batchId, mkIngest, dlqDir,
-          propertyTable, twinLifecycleTable, relLifecycleTable, parallelism)
-        ()
-      }
-      .start()
-  }
-
-  /** Per-batch body of the executor-distributed Kusto route. */
-  private def kustoIngestDistributedBatch(batch: Dataset[CloudEvent],
-      batchId: Long, mkIngest: () => (String, Seq[String]) => Unit,
-      dlqDir: Option[String], propertyTable: String,
-      twinLifecycleTable: String, relLifecycleTable: String,
-      parallelism: Int): Unit = {
-    {
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val slots =
-          if (parallelism > 0) parallelism
-          else spark.sessionState.conf.numShufflePartitions
-        // (table, subject, time, row_json) — row_json built with the same
-        // column specs as the driver route's projections, so both routes
-        // ingest byte-identical rows
-        val specs = Seq(
-          (propertyTable, CloudEventFactory.PropertyEventType, PropertyCols),
-          (twinLifecycleTable, CloudEventFactory.TwinLifecycleType, TwinLifecycleCols),
-          (relLifecycleTable, CloudEventFactory.RelationshipLifecycleType, RelLifecycleCols))
-        val tagged = specs.map { case (table, typ, cols) =>
-          batch.toDF().filter(col("type") === typ)
-            .select(lit(table).as("kusto_table"), col("subject"), col("time"),
-              to_json(struct(tableColumns(cols): _*)).as("row_json"))
-        }.reduce(_ unionAll _)
-        val failed: Array[(String, String, String)] = tagged
-          .repartition(slots, col("kusto_table"), col("subject"))
-          .sortWithinPartitions(col("kusto_table"), col("time"))
-          .as[(String, String, String, String)]
-          .mapPartitions { it =>
-            val ingest = mkIngest()
-            // rows arrive table-contiguous (sorted); one ingestion per
-            // table run keeps queued-ingest batch granularity
-            val byTable = scala.collection.mutable.LinkedHashMap
-              .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-            it.foreach { case (t, _, _, row) =>
-              byTable.getOrElseUpdate(t,
-                scala.collection.mutable.ArrayBuffer.empty[String]) += row
-            }
-            byTable.iterator.flatMap { case (t, rows) =>
-              try { ingest(t, rows.toSeq); Iterator.empty }
-              catch { case e: Exception =>
-                val msg = String.valueOf(e.getMessage)
-                rows.iterator.map(r => (t, r, msg))
-              }
-            }
-          }
-          .collect()
-        if (failed.nonEmpty) dlqDir match {
-          case Some(d) =>
-            failed.toSeq.toDF("kusto_table", "row_json", "dlq_error")
-              .withColumn("dlq_batch", lit(batchId))
-              .write.mode("append").parquet(d)
-          case None => throw new RuntimeException(
-            s"${failed.length} Kusto row ingestions failed: ${failed.head._3}")
-        }
-    }
-  }
-
-  /** A12 with per-batch dispatch: small micro-batches take the
-    * driver-collected route (one client, minimal scheduling overhead —
-    * the steady-state data-history trickle), batches above
-    * `distributedRowThreshold` take the executor route (per-partition
-    * clients, only failed rows return to the driver — backfills and burst
-    * replays). The threshold probe is one count over the persisted batch;
-    * both bodies then reuse those cached blocks. One client factory
-    * serves both paths: the driver path instantiates it locally once per
-    * batch, so a deployment configures a single connection closure. */
-  def runKustoRouteAuto(
-      events: Dataset[CloudEvent],
-      mkIngest: () => (String, Seq[String]) => Unit,
-      checkpointDir: String,
-      dlqDir: Option[String] = None,
-      propertyTable: String = "AdtPropertyEvents",
-      twinLifecycleTable: String = "AdtTwinLifeCycleEvents",
-      relLifecycleTable: String = "AdtRelationshipLifeCycleEvents",
-      parallelism: Int = 0,
-      distributedRowThreshold: Long = 50000L): StreamingQuery = {
-    events.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[CloudEvent], batchId: Long) =>
-        val cached = batch.persist()
-        try {
-          if (cached.count() > distributedRowThreshold)
-            kustoIngestDistributedBatch(cached, batchId, mkIngest, dlqDir,
-              propertyTable, twinLifecycleTable, relLifecycleTable, parallelism)
-          else
-            kustoIngestDriverBatch(cached, batchId, mkIngest(), dlqDir,
-              propertyTable, twinLifecycleTable, relLifecycleTable)
-        } finally cached.unpersist()
-        ()
-      }
-      .start()
-  }
-
   /** One physical change-feed row (e.g. a WAL tuple): several may belong
     * to one logical operation within a transaction. */
   final case class PhysicalChange(txnId: Long, seq: Long, ts: String,
@@ -315,6 +120,9 @@ object EventPipeline {
       .as[MutationEvent]
   }
 
+  /** Per-entity in-flight fold inside one open transaction. */
+  final case class TxnFold(entries: Seq[MutationEvent], entityIds: Seq[String])
+
   /** Streaming form of [[foldPhysicalRows]]: `flatMapGroupsWithState`
     * keyed by transaction id, with the commit row as the flush boundary —
     * the exact shape of the reference's replication consumer, which
@@ -324,9 +132,6 @@ object EventPipeline {
     * managed state until the `Commit` marker arrives, then flush in
     * first-seq order and release the state. State size is bounded by open
     * transactions × touched entities, independent of stream length. */
-  /** Per-entity in-flight fold inside one open transaction. */
-  final case class TxnFold(entries: Seq[MutationEvent], entityIds: Seq[String])
-
   def foldPhysicalRowsStream(rows: Dataset[PhysicalChange]): Dataset[MutationEvent] = {
     import rows.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -391,12 +196,8 @@ object EventPipeline {
       saslMechanism: Option[String] = None,    // PLAIN | OAUTHBEARER
       saslJaasConfig: Option[String] = None)
 
-  /** CloudEvents → Kafka records: key = subject (so all events of one
-    * entity land in one partition, preserving per-entity order — the same
-    * affinity the reference gets from the CloudEvents partition key),
-    * value = the JSON envelope (structured content mode). */
-  /** The structured-mode JSON envelope as a Column over a CloudEvent
-    * frame: attributes via to_json; `data` is already JSON text, so it is
+  /** The structured-mode JSON envelope as column `__envelope` of a
+    * CloudEvent frame: attributes via to_json; `data` is already JSON text, so it is
     * spliced in verbatim (structured content mode embeds data as JSON, not
     * as a quoted string). */
   private def withEnvelope(df: DataFrame): DataFrame = {
@@ -409,6 +210,10 @@ object EventPipeline {
       .drop("__attrs")
   }
 
+  /** CloudEvents → Kafka records: key = subject (so all events of one
+    * entity land in one partition, preserving per-entity order — the same
+    * affinity the reference gets from the CloudEvents partition key),
+    * value = the JSON envelope (structured content mode). */
   def kafkaFrame(events: Dataset[CloudEvent]): DataFrame =
     withEnvelope(events.toDF())
       .select(col("subject").as("key"), col("__envelope").as("value"))
@@ -436,179 +241,195 @@ object EventPipeline {
       .options(kafkaOptions(config))
   }
 
-  /** A13 MQTT sink record frame: the reference publishes every CloudEvent
-    * to ONE configured topic (Events/Sinks/Mqtt/MqttEventSink.cs:17-128);
-    * payload = the structured JSON envelope. On a deployment the frame
-    * feeds a foreachBatch MQTT client exactly like [[runWebhookRoute]]'s
-    * injected post function. */
-  def mqttFrame(events: Dataset[CloudEvent], topic: String): DataFrame =
-    kafkaFrame(events).select(lit(topic).as("topic"), col("value").as("payload"))
+  /** An event sink (E9): delivers one micro-batch of CloudEvents and
+    * reports what it could not deliver. The reference wraps every sink in
+    * one resilient wrapper with one DLQ service
+    * (ResilientEventSinkWrapper.cs, DLQService.cs); [[runSink]] is that
+    * wrapper here. */
+  trait Sink {
+    /** Deliver `batch`. Returns the rows of every delivery unit that
+      * failed, each with its `dlq_error`, or None when all were
+      * delivered. */
+    def deliver(batch: Dataset[CloudEvent]): Option[DataFrame]
+  }
 
-  /** A13: MQTT route — per-event publish of the structured envelope to the
-    * configured topic through an injected publish function (no MQTT client
-    * library in this zero-egress environment; a deployment passes e.g. a
-    * Paho client's publish, specs pass a recorder — the same treatment as
-    * [[runWebhookRoute]]). A publish that throws dead-letters ONLY that
-    * event; delivered events are never replayed
-    * (Events/Sinks/Mqtt/MqttEventSink.cs publishes per event too). */
-  def runMqttRoute(
-      events: Dataset[CloudEvent],
-      topic: String,
-      publish: (String, String) => Unit, // (topic, payload); throws on failure
-      checkpointDir: String,
+  /** E9/E11: run one event stream into `sink` with checkpointing. A failed
+    * delivery unit (a Kusto table group, one event, or the parquet batch)
+    * dead-letters exactly that unit's rows, with `dlq_error` and
+    * `dlq_batch`, into `dlqDir`; delivered units are never replayed. With
+    * no DLQ the batch throws, so the checkpoint retries it. */
+  def runSink(events: Dataset[CloudEvent], sink: Sink, checkpointDir: String,
       dlqDir: Option[String] = None): StreamingQuery =
-    runPerEventRoute(events, checkpointDir, dlqDir, "MQTT publishes") { envelope =>
-      try { publish(topic, envelope); None }
-      catch { case e: Exception => Some(String.valueOf(e.getMessage)) }
-    }
-
-  /** Shared per-event delivery scaffold for the injected-client sinks
-    * (webhook, MQTT): collect each micro-batch with its structured
-    * envelope — event batches are small (≤100, SharedEventConsumer.cs:31)
-    * and dispatch is driver-side single-consumer, like the reference —
-    * attempt each event through `deliver` (None = delivered,
-    * Some(error) = failed), and dead-letter ONLY the failures:
-    * already-delivered events are never replayed. */
-  private def runPerEventRoute(
-      events: Dataset[CloudEvent],
-      checkpointDir: String,
-      dlqDir: Option[String],
-      what: String)(deliver: String => Option[String]): StreamingQuery = {
     events.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[CloudEvent], batchId: Long) =>
-        val rows = withEnvelope(batch.toDF()).collect()
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val failed = rows.flatMap { r =>
-          deliver(r.getAs[String]("__envelope")).map(msg => CloudEvent(
-            r.getAs[String]("id"), r.getAs[String]("source"),
-            r.getAs[String]("type"), r.getAs[String]("subject"),
-            r.getAs[String]("time"), r.getAs[String]("datacontenttype"),
-            r.getAs[String]("data"), r.getAs[String]("dataschema")) -> msg)
-        }
-        if (failed.nonEmpty) dlqDir match {
-          case Some(d) =>
-            failed.toSeq.toDF("event", "dlq_error")
-              .select(col("event.*"), col("dlq_error"))
-              .withColumn("dlq_batch", lit(batchId))
-              .write.mode("append").parquet(d)
-          case None => throw new RuntimeException(
-            s"${failed.length} $what failed: ${failed.head._2}")
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** Scale path for the injected-client sinks (A13/A14 at data-history
-    * volumes): delivery runs on the EXECUTORS — `mkDeliver` builds ONE
-    * client per partition (one HTTP connection / MQTT session each; the
-    * factory closure must be serializable), events are hash-partitioned
-    * by `subject` and time-ordered within each partition (the same
-    * per-entity ordering affinity [[kafkaFrame]] keys by — the per-event
-    * total order of the single-consumer route weakens to per-entity
-    * order, which is the guarantee consumers actually rely on), and only
-    * FAILURES return to the driver. DLQ semantics are identical to
-    * [[runPerEventRoute]]: failed events (and nothing else) dead-letter;
-    * no DLQ configured → the batch throws and the checkpoint retries.
-    *
-    * The driver-side single-consumer route matches the reference's
-    * semantics for its ≤100-event batches (SharedEventConsumer.cs:31);
-    * this one scales delivery with partitions where a single consumer is
-    * the bottleneck. */
-  private def runPerEventRouteDistributed(
-      events: Dataset[CloudEvent],
-      checkpointDir: String,
-      dlqDir: Option[String],
-      what: String,
-      parallelism: Int)(mkDeliver: () => String => Option[String])
-      : StreamingQuery = {
-    events.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[CloudEvent], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val slots =
-          if (parallelism > 0) parallelism
-          else spark.sessionState.conf.numShufflePartitions
-        val failed: Array[(CloudEvent, String)] = withEnvelope(batch.toDF())
-          .repartition(slots, col("subject"))
-          .sortWithinPartitions(col("time"), col("id"))
-          .select(struct(col("id"), col("source"), col("type"),
-            col("subject"), col("time"), col("datacontenttype"), col("data"),
-            col("dataschema")).as("event"), col("__envelope").as("env"))
-          .as[(CloudEvent, String)]
-          .mapPartitions { it =>
-            val deliver = mkDeliver()
-            it.flatMap { case (ev, env) => deliver(env).map(msg => (ev, msg)) }
+        sink.deliver(batch).foreach { failed =>
+          dlqDir match {
+            case Some(d) =>
+              failed.withColumn("dlq_batch", lit(batchId))
+                .write.mode("append").parquet(d)
+            case None => throw new RuntimeException("event sink delivery " +
+              s"failed: ${failed.first().getAs[String]("dlq_error")}")
           }
-          .collect()
-        if (failed.nonEmpty) dlqDir match {
-          case Some(d) =>
-            failed.toSeq.toDF("event", "dlq_error")
-              .select(col("event.*"), col("dlq_error"))
-              .withColumn("dlq_batch", lit(batchId))
-              .write.mode("append").parquet(d)
-          case None => throw new RuntimeException(
-            s"${failed.length} $what failed: ${failed.head._2}")
         }
-        ()
       }
       .start()
+
+  /** A15 parquet "sink table": the whole batch is one delivery unit. */
+  final case class Parquet(outDir: String) extends Sink {
+    def deliver(batch: Dataset[CloudEvent]): Option[DataFrame] = {
+      val df = batch.toDF()
+      try { df.write.mode("append").parquet(outDir); None }
+      catch { case e: Exception =>
+        Some(df.withColumn("dlq_error", lit(String.valueOf(e.getMessage))))
+      }
+    }
   }
 
-  /** A13 at scale: MQTT publishes distributed over executors — one client
-    * per partition via `mkPublish`, per-subject ordering, DLQ semantics of
-    * [[runMqttRoute]]. */
-  def runMqttRouteDistributed(
-      events: Dataset[CloudEvent],
-      topic: String,
-      mkPublish: () => (String, String) => Unit,
-      checkpointDir: String,
-      dlqDir: Option[String] = None,
-      parallelism: Int = 0): StreamingQuery =
-    runPerEventRouteDistributed(events, checkpointDir, dlqDir,
-        "MQTT publishes", parallelism) { () =>
-      val publish = mkPublish()
-      env => try { publish(topic, env); None }
-      catch { case e: Exception => Some(String.valueOf(e.getMessage)) }
-    }
+  /** A sink that delivers through a client (A12–A14). Its delivery rows
+    * hold `unit` (the failure granule), `subject` and `time` (the order
+    * key), `payload` (what the client sends) and `dead` (the columns a
+    * failed unit dead-letters).
+    *
+    * The one size class picks where they are delivered: the rows are
+    * collected with [[LocalGraph.collectBounded]] at
+    * [[LocalGraph.maxEdges]]. Under it (the steady-state trickle) one
+    * client delivers them on the driver in arrival order, like the
+    * reference's single consumer (SharedEventConsumer.cs:31). Over it (a
+    * backfill or burst replay) they are hash-partitioned by `subject` and
+    * time-sorted within each partition, one client per partition delivers
+    * them on the executors, and only failed rows return to the driver.
+    * Either way each subject's rows arrive in order, the guarantee the
+    * Kafka key gives too. */
+  sealed abstract class ClientSink extends Sink {
+    protected def deliveries(events: DataFrame): DataFrame
 
-  /** A14 at scale: webhook POSTs distributed over executors — one HTTP
-    * client per partition via `mkPost`, per-subject ordering, DLQ and
-    * 401-retry semantics of [[runWebhookRoute]]. Auth state (including
-    * the [[OAuthTokenProvider]] cache) is serialized per partition: each
-    * executor client acquires and refreshes its own token, as a fleet of
-    * webhook workers would. */
-  def runWebhookRouteDistributed(
-      events: Dataset[CloudEvent],
+    /** A client for the driver batch or one partition (the factories it
+      * calls must be serializable): delivers one unit's payloads in order
+      * and throws on failure. */
+    protected def client(): (String, Seq[String]) => Unit
+
+    final def deliver(batch: Dataset[CloudEvent]): Option[DataFrame] = {
+      val spark = batch.sparkSession
+      val rows = deliveries(batch.toDF())
+      val failed = LocalGraph.collectBounded(rows.coalesce(1),
+          LocalGraph.maxEdges(spark)) match {
+        case Some(local) => deliverUnits(local.iterator, client()).toArray
+        case None =>
+          rows.repartition(spark.sessionState.conf.numShufflePartitions,
+              col("subject"))
+            .sortWithinPartitions(col("time"), col("unit"))
+            .rdd.mapPartitions(it => deliverUnits(it, client()))
+            .collect()
+      }
+      if (failed.isEmpty) None
+      else Some(spark.createDataFrame(java.util.Arrays.asList(failed: _*),
+        rows.schema("dead").dataType.asInstanceOf[StructType]
+          .add("dlq_error", StringType)))
+    }
+  }
+
+  /** A [[ClientSink]]'s delivery rows over `events`. */
+  private def delivery(events: DataFrame, unit: Column, payload: Column,
+      dead: Column*): DataFrame =
+    events.select(unit.as("unit"), col("subject"), col("time"),
+      payload.as("payload"), struct(dead: _*).as("dead"))
+
+  /** One unit per event: its structured JSON envelope is the payload and
+    * a failure dead-letters the event's own columns. */
+  private def eventDeliveries(events: DataFrame): DataFrame =
+    delivery(withEnvelope(events), col("id"), col("__envelope"),
+      events.columns.map(col): _*)
+
+  /** Deliver delivery rows one unit per `deliver` call, units in the order
+    * they first appear and rows in arrival order within a unit; the rows
+    * are held while they are grouped. The rows of a unit whose call threw
+    * come back as their `dead` columns plus the error. */
+  private def deliverUnits(rows: Iterator[Row],
+      deliver: (String, Seq[String]) => Unit): Iterator[Row] = {
+    val units = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Row]]
+    rows.foreach(r =>
+      units.getOrElseUpdate(r.getString(0), mutable.ArrayBuffer.empty) += r)
+    units.iterator.flatMap { case (unit, rs) =>
+      try { deliver(unit, rs.map(_.getString(3)).toSeq); Iterator.empty }
+      catch { case e: Exception =>
+        val msg = String.valueOf(e.getMessage)
+        rs.iterator.map(r => Row.fromSeq(r.getStruct(4).toSeq :+ msg))
+      }
+    }
+  }
+
+  /** A12 Kusto sink: each batch splits into the three DataHistory tables,
+    * and each table's JSON rows are queued-ingested through a client from
+    * `mkIngest` (the reference's IKustoQueuedIngestClient with per-table
+    * JSON ingestion mappings, KustoEventSink.cs:31-70). Queued ingestion
+    * is batch-granular, so the unit is one table's rows (per partition on
+    * the executors), dead-lettered as (`kusto_table`, `row_json`). Default
+    * table names per data-history-kusto.mdx:100-102. */
+  final case class Kusto(
+      mkIngest: () => (String, Seq[String]) => Unit, // (table, JSON rows); throws on failure
+      propertyTable: String = "AdtPropertyEvents",
+      twinLifecycleTable: String = "AdtTwinLifeCycleEvents",
+      relLifecycleTable: String = "AdtRelationshipLifeCycleEvents")
+      extends ClientSink {
+    protected def deliveries(events: DataFrame): DataFrame =
+      Seq((propertyTable, CloudEventFactory.PropertyEventType, PropertyCols),
+        (twinLifecycleTable, CloudEventFactory.TwinLifecycleType, TwinLifecycleCols),
+        (relLifecycleTable, CloudEventFactory.RelationshipLifecycleType, RelLifecycleCols))
+        .map { case (table, typ, cols) =>
+          val row = to_json(struct(tableColumns(cols): _*))
+          delivery(events.filter(col("type") === typ), lit(table), row,
+            lit(table).as("kusto_table"), row.as("row_json"))
+        }.reduce(_ unionAll _)
+
+    protected def client(): (String, Seq[String]) => Unit = mkIngest()
+  }
+
+  /** A13 MQTT sink: every event's envelope is published to ONE configured
+    * topic (Events/Sinks/Mqtt/MqttEventSink.cs:17-128) through a client
+    * from `mkPublish`, e.g. a Paho client's publish. */
+  final case class Mqtt(
+      topic: String,
+      mkPublish: () => (String, String) => Unit) // (topic, payload); throws on failure
+      extends ClientSink {
+    protected def deliveries(events: DataFrame): DataFrame = eventDeliveries(events)
+
+    protected def client(): (String, Seq[String]) => Unit = {
+      val publish = mkPublish()
+      (_, payloads) => payloads.foreach(publish(topic, _))
+    }
+  }
+
+  /** A14 webhook sink: every event's envelope is POSTed to `url`
+    * (WebhookEventSink.cs SendEventsAsync) through a client from `mkPost`,
+    * which returns the HTTP status; a non-2xx status fails the event.
+    * Headers are built per request, so a refreshed OAuth token is the
+    * current one, and a 401 invalidates it and retries once. On the
+    * executors the auth state is serialized per partition: each client
+    * acquires and refreshes its own token, as a fleet of webhook workers
+    * would. */
+  final case class Webhook(
       url: String,
       auth: WebhookAuth,
-      mkPost: () => (String, Map[String, String], String) => Int,
-      checkpointDir: String,
-      dlqDir: Option[String] = None,
-      parallelism: Int = 0): StreamingQuery =
-    runPerEventRouteDistributed(events, checkpointDir, dlqDir,
-        "webhook deliveries", parallelism) { () =>
+      mkPost: () => (String, Map[String, String], String) => Int)
+      extends ClientSink {
+    protected def deliveries(events: DataFrame): DataFrame = eventDeliveries(events)
+
+    protected def client(): (String, Seq[String]) => Unit = {
       val post = mkPost()
-      def headers() = webhookHeaders(auth)
-      body => try {
-        var status = post(url, headers(), body)
+      def send(body: String) = post(url, webhookHeaders(auth), body)
+      (_, bodies) => bodies.foreach { body =>
+        var status = send(body)
         if (status == 401) auth match {
-          // expired-token race: invalidate this partition's cache and
-          // retry once with a freshly acquired token
-          case WebhookAuth.OAuthRefreshed(p) =>
-            p.invalidate()
-            status = post(url, headers(), body)
+          case WebhookAuth.OAuthRefreshed(p) => p.invalidate(); status = send(body)
           case _ =>
         }
-        if (status < 200 || status >= 300) Some(s"webhook returned $status")
-        else None
-      } catch { case e: Exception => Some(String.valueOf(e.getMessage)) }
+        if (status < 200 || status >= 300)
+          throw new RuntimeException(s"webhook returned $status")
+      }
     }
+  }
 
   /** A14 webhook sink auth modes, mirroring the reference's
     * Events/Sinks/Webhook/WebhookEventSink.cs (Basic, Bearer, ApiKey and
@@ -670,71 +491,5 @@ object EventPipeline {
       case WebhookAuth.OAuthRefreshed(p) =>
         base + ("Authorization" -> s"Bearer ${p.token()}")
     }
-  }
-
-  /** A14: webhook route — each micro-batch's events POST one-by-one (the
-    * reference posts per event, WebhookEventSink.cs SendEventsAsync)
-    * through the injected `post` function; a non-2xx status or exception
-    * sends the batch to the DLQ, like [[runRoute]]. `post` is injectable
-    * because this environment has zero egress — a deployment passes a real
-    * HTTP client; specs pass a recorder. */
-  def runWebhookRoute(
-      events: Dataset[CloudEvent],
-      url: String,
-      auth: WebhookAuth,
-      post: (String, Map[String, String], String) => Int,
-      checkpointDir: String,
-      dlqDir: Option[String] = None): StreamingQuery = {
-    // headers re-evaluate per request: a refreshed OAuth token must be the
-    // CURRENT one, not the one cached at stream construction
-    def headers() = webhookHeaders(auth)
-    runPerEventRoute(events, checkpointDir, dlqDir, "webhook deliveries") { body =>
-      try {
-        var status = post(url, headers(), body)
-        if (status == 401) auth match {
-          // expired-token race: invalidate the cache and retry once with a
-          // freshly acquired token (WebhookEventSink.cs refresh-on-401)
-          case WebhookAuth.OAuthRefreshed(p) =>
-            p.invalidate()
-            status = post(url, headers(), body)
-          case _ =>
-        }
-        if (status < 200 || status >= 300) Some(s"webhook returned $status")
-        else None
-      } catch { case e: Exception => Some(String.valueOf(e.getMessage)) }
-    }
-  }
-
-  /** E9/E11: run one routed stream into a parquet "sink table" with
-    * checkpointing; failures in the sink function land in a DLQ directory
-    * instead of killing the stream (ResilientEventSinkWrapper + DLQService
-    * semantics). */
-  def runRoute(
-      events: Dataset[CloudEvent],
-      outDir: String,
-      checkpointDir: String,
-      dlqDir: Option[String] = None,
-      failFor: DataFrame => Boolean = _ => false): StreamingQuery = {
-    events.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[CloudEvent], batchId: Long) =>
-        val df = batch.toDF()
-        try {
-          if (failFor(df)) throw new RuntimeException("sink failure (injected)")
-          df.write.mode("append").parquet(outDir)
-        } catch {
-          case e: Exception =>
-            dlqDir match {
-              case Some(d) =>
-                df.withColumn("dlq_error", lit(e.getMessage))
-                  .withColumn("dlq_batch", lit(batchId))
-                  .write.mode("append").parquet(d)
-              case None => throw e
-            }
-        }
-        ()
-      }
-      .start()
   }
 }

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Repository inventories the design depends on: the change log stays a
-  * readable text file, and the graph fixpoints keep their checkpoints in
-  * a `Blocks` scope instead of hand-placed releases. */
+  * readable text file, the graph fixpoints keep their checkpoints in a
+  * `Blocks` scope instead of hand-placed releases, and CDC delivery runs
+  * through one sink driver. */
 class LifecycleInventorySpec extends AnyFunSuite {
 
   private def read(p: java.nio.file.Path): String =
@@ -31,5 +32,13 @@ class LifecycleInventorySpec extends AnyFunSuite {
     // the one left is the StateCommit park: folded state reads a committed
     // batch disowns, freed by the next batch's commit
     assert(sites.map(_._2).sum <= 1, s"Blocks.free sites: $sites")
+  }
+
+  test("streaming/EventPipeline.scala holds one foreachBatch and no run*Route entry point") {
+    val src = read(java.nio.file.Paths.get("src/main/scala/graft/streaming/EventPipeline.scala"))
+    val batches = "\\.foreachBatch\\b".r.findAllMatchIn(src).size
+    assert(batches == 1, s"$batches foreachBatch sites; runSink should own the only one")
+    val routes = "def run\\w*Route\\w*".r.findAllIn(src).toSeq
+    assert(routes.isEmpty, s"per-route entry points are back: $routes")
   }
 }

@@ -47,12 +47,18 @@ class TdLoaderSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
   }
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   test("ts as TIMESTAMP (instant): passes through unchanged") {
     val dir = Files.createTempDirectory("td-ts").toString
     writeEvents(dir, StructField("ts", TimestampType),
       us => java.sql.Timestamp.from(java.time.Instant.EPOCH
         .plusNanos(us * 1000)))
+    spark.conf.unset(NanosAsLong) // whatever an earlier load left
+    val conf = spark.conf.getOption(NanosAsLong)
     assert(loadedMicros(dir) == micros)
+    assert(spark.conf.getOption(NanosAsLong) == conf,
+      "loading a microsecond layout must leave the session conf as it was")
   }
 
   test("ts as TIMESTAMP_NTZ (timestamp[us], the current generator): identity micros") {
@@ -61,7 +67,11 @@ class TdLoaderSpec extends AnyFunSuite {
       us => java.time.LocalDateTime.ofEpochSecond(
         Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000).toInt,
         java.time.ZoneOffset.UTC))
+    spark.conf.unset(NanosAsLong) // whatever an earlier load left
+    val conf = spark.conf.getOption(NanosAsLong)
     assert(loadedMicros(dir) == micros)
+    assert(spark.conf.getOption(NanosAsLong) == conf,
+      "loading a microsecond layout must leave the session conf as it was")
   }
 
   test("ts as LONG nanos (the r7-era layout): floor-divided to micros with borrow") {
@@ -72,5 +82,31 @@ class TdLoaderSpec extends AnyFunSuite {
     val nanos = Map(-1500001L -> -1500000999L, 1723500000123456L -> 1723500000123456999L)
     writeEvents(dir, StructField("ts", LongType), us => nanos(us))
     assert(loadedMicros(dir) == micros)
+  }
+
+  test("ts as TIMESTAMP(NANOS): the loader turns nanosAsLong on, then floors") {
+    // Spark cannot write TIMESTAMP(NANOS); parquet-mr's example writer can
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("td-nanos").toString
+    val schema = MessageTypeParser.parseMessageType("""message events {
+      |  required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true));
+      |  required int64 user_id; required binary event_type (STRING);
+      |  required double value; required binary props (STRING); }""".stripMargin)
+    val out = new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet")
+    val w = ExampleParquetWriter.builder(out).withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    val nanos = Seq(-1500000999L, 1723500000123456999L)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      w.write(rows.newGroup().append("event_id", i.toLong).append("ts", ns)
+        .append("user_id", 1L).append("event_type", "click")
+        .append("value", 1.0).append("props", "{}"))
+    } finally w.close()
+    spark.conf.unset(NanosAsLong)
+    try {
+      assert(loadedMicros(dir) == micros)
+      assert(spark.conf.getOption(NanosAsLong).contains("true"))
+    } finally spark.conf.unset(NanosAsLong)
   }
 }

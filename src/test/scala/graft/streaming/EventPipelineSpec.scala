@@ -44,7 +44,7 @@ class EventPipelineSpec extends AnyFunSuite {
 
     val stream = EventPipeline.readMutationStream(spark, s"$dir/mutations")
     val en = EventPipeline.toEventNotifications(stream, "https://inst")
-    val q1 = EventPipeline.runRoute(en, s"$dir/en", s"$dir/cp1")
+    val q1 = EventPipeline.runSink(en, EventPipeline.Parquet(s"$dir/en"), s"$dir/cp1")
     q1.awaitTermination(60000)
 
     val got = spark.read.parquet(s"$dir/en")
@@ -58,7 +58,7 @@ class EventPipelineSpec extends AnyFunSuite {
     // DataHistory route → three Kusto-shaped tables
     val stream2 = EventPipeline.readMutationStream(spark, s"$dir/mutations")
     val dh = EventPipeline.toDataHistory(stream2, "https://inst")
-    val q2 = EventPipeline.runRoute(dh, s"$dir/dh", s"$dir/cp2")
+    val q2 = EventPipeline.runSink(dh, EventPipeline.Parquet(s"$dir/dh"), s"$dir/cp2")
     q2.awaitTermination(60000)
     import spark.implicits._
     val events = spark.read.parquet(s"$dir/dh")
@@ -129,12 +129,12 @@ class EventPipelineSpec extends AnyFunSuite {
     val stream = EventPipeline.readMutationStream(spark, s"$dir/mutations")
     val en = EventPipeline.toEventNotifications(stream, "https://inst")
     val posted = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val q = EventPipeline.runWebhookRoute(en, "https://hook.example/events",
-      WA.Bearer("tok"),
-      (url, headers, body) => {
+    val q = EventPipeline.runSink(en, EventPipeline.Webhook(
+      "https://hook.example/events", WA.Bearer("tok"),
+      () => (url, headers, body) => {
         assert(headers("Authorization") == "Bearer tok")
         posted.add(url -> body); 200
-      },
+      }),
       s"$dir/cp", Some(s"$dir/dlq"))
     q.awaitTermination(60000)
     assert(posted.size == 7, s"one POST per event, got ${posted.size}")
@@ -143,10 +143,10 @@ class EventPipelineSpec extends AnyFunSuite {
 
     // failing endpoint → events land in the DLQ, stream survives
     val stream2 = EventPipeline.readMutationStream(spark, s"$dir/mutations")
-    val q2 = EventPipeline.runWebhookRoute(
+    val q2 = EventPipeline.runSink(
       EventPipeline.toEventNotifications(stream2, "https://inst"),
-      "https://hook.example/events", WA.NoAuth,
-      (_, _, _) => 503, s"$dir/cp2", Some(s"$dir/dlq2"))
+      EventPipeline.Webhook("https://hook.example/events", WA.NoAuth,
+        () => (_, _, _) => 503), s"$dir/cp2", Some(s"$dir/dlq2"))
     q2.awaitTermination(60000)
     val dlq = spark.read.parquet(s"$dir/dlq2")
     assert(dlq.count() == 7)
@@ -156,13 +156,13 @@ class EventPipelineSpec extends AnyFunSuite {
     // ones are never replayed
     val stream3 = EventPipeline.readMutationStream(spark, s"$dir/mutations")
     val ok = new java.util.concurrent.atomic.AtomicInteger()
-    val q3 = EventPipeline.runWebhookRoute(
+    val q3 = EventPipeline.runSink(
       EventPipeline.toEventNotifications(stream3, "https://inst"),
-      "https://hook.example/events", WA.NoAuth,
-      (_, _, body) =>
-        if (graft.json.Json.parse(body).get("type").asText()
-            == "Konnektr.IoT.Telemetry") 500
-        else { ok.incrementAndGet(); 200 },
+      EventPipeline.Webhook("https://hook.example/events", WA.NoAuth,
+        () => (_, _, body) =>
+          if (graft.json.Json.parse(body).get("type").asText()
+              == "Konnektr.IoT.Telemetry") 500
+          else { ok.incrementAndGet(); 200 }),
       s"$dir/cp3", Some(s"$dir/dlq3"))
     q3.awaitTermination(60000)
     val dlq3 = spark.read.parquet(s"$dir/dlq3")
@@ -265,8 +265,13 @@ class EventPipelineSpec extends AnyFunSuite {
     store.mutationsDf(spark).write.mode("overwrite").parquet(s"$dir/mutations")
     val stream = EventPipeline.readMutationStream(spark, s"$dir/mutations")
     val en = EventPipeline.toEventNotifications(stream, "https://inst")
-    val q = EventPipeline.runRoute(en, s"$dir/out", s"$dir/cp",
-      dlqDir = Some(s"$dir/dlq"), failFor = _ => true)
+    // a sink that fails every batch before it writes to $dir/out
+    val failing = new EventPipeline.Sink {
+      def deliver(batch: org.apache.spark.sql.Dataset[graft.events.CloudEvent]) =
+        Some(batch.toDF().withColumn("dlq_error", lit("sink failure (injected)")))
+    }
+    val q = EventPipeline.runSink(en, failing, s"$dir/cp",
+      dlqDir = Some(s"$dir/dlq"))
     q.awaitTermination(60000)
     val dlq = spark.read.parquet(s"$dir/dlq")
     assert(dlq.count() == 7)
@@ -279,11 +284,11 @@ class EventPipelineSpec extends AnyFunSuite {
     val store = populatedStore()
     store.mutationsDf(spark).write.mode("overwrite").parquet(s"$dir/mutations")
     val published = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val q = EventPipeline.runMqttRoute(
+    val q = EventPipeline.runSink(
       EventPipeline.toEventNotifications(
         EventPipeline.readMutationStream(spark, s"$dir/mutations"), "https://inst"),
-      "twins/events",
-      (topic, payload) => { published.add(topic -> payload); () },
+      EventPipeline.Mqtt("twins/events",
+        () => (topic, payload) => { published.add(topic -> payload); () }),
       s"$dir/cp", Some(s"$dir/dlq"))
     q.awaitTermination(60000)
     assert(published.size == 7, s"one publish per event, got ${published.size}")
@@ -292,14 +297,14 @@ class EventPipelineSpec extends AnyFunSuite {
 
     // a publish that throws dead-letters ONLY that event
     val ok = new java.util.concurrent.atomic.AtomicInteger()
-    val q2 = EventPipeline.runMqttRoute(
+    val q2 = EventPipeline.runSink(
       EventPipeline.toEventNotifications(
         EventPipeline.readMutationStream(spark, s"$dir/mutations"), "https://inst"),
-      "twins/events",
-      (_, payload) =>
-        if (graft.json.Json.parse(payload).get("type").asText()
-            == "Konnektr.IoT.Telemetry") throw new RuntimeException("broker gone")
-        else { ok.incrementAndGet(); () },
+      EventPipeline.Mqtt("twins/events",
+        () => (_, payload) =>
+          if (graft.json.Json.parse(payload).get("type").asText()
+              == "Konnektr.IoT.Telemetry") throw new RuntimeException("broker gone")
+          else { ok.incrementAndGet(); () }),
       s"$dir/cp2", Some(s"$dir/dlq2"))
     q2.awaitTermination(60000)
     val dlq = spark.read.parquet(s"$dir/dlq2")
@@ -312,10 +317,10 @@ class EventPipelineSpec extends AnyFunSuite {
     val store = populatedStore()
     store.mutationsDf(spark).write.mode("overwrite").parquet(s"$dir/mutations")
     val ingested = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-    val q = EventPipeline.runKustoRoute(
+    val q = EventPipeline.runSink(
       EventPipeline.toDataHistory(
         EventPipeline.readMutationStream(spark, s"$dir/mutations"), "https://inst"),
-      (table, rows) => { ingested.put(table, rows); () },
+      EventPipeline.Kusto(() => (table, rows) => { ingested.put(table, rows); () }),
       s"$dir/cp", Some(s"$dir/dlq"))
     q.awaitTermination(60000)
     // the populated store's feed lands rows in all three tables
@@ -329,12 +334,12 @@ class EventPipelineSpec extends AnyFunSuite {
 
     // one table's ingestion fails → only ITS rows dead-letter; others stand
     val ok = new java.util.concurrent.atomic.AtomicInteger()
-    val q2 = EventPipeline.runKustoRoute(
+    val q2 = EventPipeline.runSink(
       EventPipeline.toDataHistory(
         EventPipeline.readMutationStream(spark, s"$dir/mutations"), "https://inst"),
-      (table, rows) =>
+      EventPipeline.Kusto(() => (table, rows) =>
         if (table == "AdtPropertyEvents") throw new RuntimeException("ingest queue down")
-        else { ok.addAndGet(rows.size); () },
+        else { ok.addAndGet(rows.size); () }),
       s"$dir/cp2", Some(s"$dir/dlq2"))
     q2.awaitTermination(60000)
     val dlq = spark.read.parquet(s"$dir/dlq2")
@@ -362,7 +367,7 @@ class EventPipelineSpec extends AnyFunSuite {
 
     val stream = EventPipeline.readMutationStream(spark, s"$dir/store/mutations")
     val en = EventPipeline.toEventNotifications(stream, "https://inst")
-    val q = EventPipeline.runRoute(en, s"$dir/out", s"$dir/cp")
+    val q = EventPipeline.runSink(en, EventPipeline.Parquet(s"$dir/out"), s"$dir/cp")
     q.awaitTermination(60000)
     val events = spark.read.parquet(s"$dir/out")
     assert(events.count() == 4)
@@ -376,11 +381,11 @@ class EventPipelineSpec extends AnyFunSuite {
     store.checkpoint()
     store.createOrReplaceTwin("t3",
       """{"$metadata":{"$model":"dtmi:m;1"},"temperature":23.0}""")
-    val q2 = EventPipeline.runRoute(
+    val q2 = EventPipeline.runSink(
       EventPipeline.toEventNotifications(
         EventPipeline.readMutationStream(spark, s"$dir/store/mutations"),
         "https://inst"),
-      s"$dir/out", s"$dir/cp")
+      EventPipeline.Parquet(s"$dir/out"), s"$dir/cp")
     q2.awaitTermination(60000)
     val after = spark.read.parquet(s"$dir/out")
     assert(after.count() == 5, "exactly the new mutation arrives, no replays")
@@ -416,15 +421,15 @@ class EventPipelineSpec extends AnyFunSuite {
     store.mutationsDf(spark).write.mode("overwrite").parquet(s"$dir/mutations")
     val rejected = new java.util.concurrent.atomic.AtomicInteger()
     val delivered = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = EventPipeline.runWebhookRoute(
+    val q = EventPipeline.runSink(
       EventPipeline.toEventNotifications(
         EventPipeline.readMutationStream(spark, s"$dir/mutations"), "https://inst"),
-      "https://hook.example/events", WA.OAuthRefreshed(provider),
-      (_, headers, body) => {
-        // reject the token it was built with; accept any newer one
-        if (headers("Authorization") == "Bearer tok3") { rejected.incrementAndGet(); 401 }
-        else { delivered.add(headers("Authorization")); 200 }
-      },
+      EventPipeline.Webhook("https://hook.example/events", WA.OAuthRefreshed(provider),
+        () => (_, headers, body) => {
+          // reject the token it was built with; accept any newer one
+          if (headers("Authorization") == "Bearer tok3") { rejected.incrementAndGet(); 401 }
+          else { delivered.add(headers("Authorization")); 200 }
+        }),
       s"$dir/cp", Some(s"$dir/dlq"))
     q.awaitTermination(60000)
     assert(rejected.get() == 1, "401 happens once; the refreshed token then sticks")
@@ -450,30 +455,40 @@ class EventPipelineSpec extends AnyFunSuite {
       f"2026-01-01T00:00:${i % 60}%02d.${i / 60}%03dZ", "application/json",
       s"""{"seq":$i}"""))
 
+  /** Run `body` with the size class at `rows` delivery rows; 0 sends
+    * every client sink's batches to the executors. */
+  private def withCutoff[T](rows: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.graph.localSolveMaxEdges", rows.toString)
+    try body finally spark.conf.unset("spark.graft.graph.localSolveMaxEdges")
+  }
+
   test("distributed MQTT route: executor-side clients, parity + partial DLQ") {
     val dir = Files.createTempDirectory("graft-dmqtt").toString
     DistributedSinkRecorder.reset()
-    val q = EventPipeline.runMqttRouteDistributed(
-      eventStream(dir, mkEvents(24, subjects = 6)), "twins/events",
-      // factory runs ON the executor: one "client" per partition,
-      // recording into the JVM-static holder (local[*] shares the JVM)
-      () => (topic, payload) => DistributedSinkRecorder.record(topic, payload),
-      s"$dir/cp", Some(s"$dir/dlq"), parallelism = 6)
-    q.awaitTermination(60000)
+    withCutoff(0) {
+      EventPipeline.runSink(
+        eventStream(dir, mkEvents(24, subjects = 6)),
+        // factory runs ON the executor: one "client" per partition,
+        // recording into the JVM-static holder (local[*] shares the JVM)
+        EventPipeline.Mqtt("twins/events",
+          () => (topic, payload) => DistributedSinkRecorder.record(topic, payload)),
+        s"$dir/cp", Some(s"$dir/dlq")).awaitTermination(60000)
+    }
     assert(DistributedSinkRecorder.deliveredSeq.size == 24)
     assert(DistributedSinkRecorder.deliveredSeq.forall(_._2 == "twins/events"))
     assert(!new java.io.File(s"$dir/dlq").exists, "nothing dead-lettered")
 
     // partial failure: one subject's publishes throw → ONLY those DLQ
     DistributedSinkRecorder.reset()
-    val q2 = EventPipeline.runMqttRouteDistributed(
-      eventStream(dir, mkEvents(24, subjects = 6)), "twins/events",
-      () => (topic, payload) =>
-        if (payload.contains("\"subject\":\"twin3\""))
-          throw new RuntimeException("broker gone")
-        else DistributedSinkRecorder.record(topic, payload),
-      s"$dir/cp2", Some(s"$dir/dlq2"), parallelism = 6)
-    q2.awaitTermination(60000)
+    withCutoff(0) {
+      EventPipeline.runSink(
+        eventStream(dir, mkEvents(24, subjects = 6)),
+        EventPipeline.Mqtt("twins/events", () => (topic, payload) =>
+          if (payload.contains("\"subject\":\"twin3\""))
+            throw new RuntimeException("broker gone")
+          else DistributedSinkRecorder.record(topic, payload)),
+        s"$dir/cp2", Some(s"$dir/dlq2")).awaitTermination(60000)
+    }
     val dlq = spark.read.parquet(s"$dir/dlq2")
     assert(dlq.count() == 4 && DistributedSinkRecorder.deliveredSeq.size == 20)
     assert(dlq.select("subject").distinct().collect()
@@ -486,11 +501,13 @@ class EventPipelineSpec extends AnyFunSuite {
     DistributedSinkRecorder.reset()
     // 32 events over 8 subjects, a 40 ms "network" per publish: serial
     // delivery would never overlap; partitioned delivery must
-    val q = EventPipeline.runMqttRouteDistributed(
-      eventStream(dir, mkEvents(32, subjects = 8)), "t",
-      () => (_, payload) => DistributedSinkRecorder.recordSlow(payload, 40),
-      s"$dir/cp", Some(s"$dir/dlq"), parallelism = 8)
-    q.awaitTermination(120000)
+    withCutoff(0) {
+      EventPipeline.runSink(
+        eventStream(dir, mkEvents(32, subjects = 8)),
+        EventPipeline.Mqtt("t",
+          () => (_, payload) => DistributedSinkRecorder.recordSlow(payload, 40)),
+        s"$dir/cp", Some(s"$dir/dlq")).awaitTermination(120000)
+    }
     assert(DistributedSinkRecorder.deliveredSeq.size == 32)
     assert(DistributedSinkRecorder.maxInFlight.get() >= 2,
       s"expected overlapping deliveries, max in-flight was " +
@@ -518,15 +535,16 @@ class EventPipelineSpec extends AnyFunSuite {
 
     // the driver-collected route is the semantic reference
     val driverRows = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val q0 = EventPipeline.runKustoRoute(dh(),
-      (t, rows) => { rows.foreach(r => driverRows.add((t, r))); () }, s"$dir/cp0")
+    val q0 = EventPipeline.runSink(dh(), EventPipeline.Kusto(
+      () => (t, rows) => { rows.foreach(r => driverRows.add((t, r))); () }), s"$dir/cp0")
     q0.awaitTermination(60000)
 
     DistributedSinkRecorder.reset()
-    val q1 = EventPipeline.runKustoRouteDistributed(dh(),
-      () => (t, rows) => rows.foreach(r => DistributedSinkRecorder.record(t, r)),
-      s"$dir/cp1", Some(s"$dir/dlq1"), parallelism = 4)
-    q1.awaitTermination(60000)
+    withCutoff(0) {
+      EventPipeline.runSink(dh(), EventPipeline.Kusto(
+        () => (t, rows) => rows.foreach(r => DistributedSinkRecorder.record(t, r))),
+        s"$dir/cp1", Some(s"$dir/dlq1")).awaitTermination(60000)
+    }
     import scala.jdk.CollectionConverters._
     val driverSet = driverRows.iterator().asScala.toSet
     val distSet = DistributedSinkRecorder.deliveredSeq
@@ -537,17 +555,18 @@ class EventPipelineSpec extends AnyFunSuite {
 
     // injected failure on one table → both routes dead-letter exactly the
     // same rows; the other tables' ingestions stand on both
-    val q2 = EventPipeline.runKustoRoute(dh(),
-      (t, _) => if (t == "AdtPropertyEvents") throw new RuntimeException("ingest queue down") else (),
+    val q2 = EventPipeline.runSink(dh(), EventPipeline.Kusto(
+      () => (t, _) => if (t == "AdtPropertyEvents") throw new RuntimeException("ingest queue down") else ()),
       s"$dir/cp2", Some(s"$dir/dlqDriver"))
     q2.awaitTermination(60000)
     DistributedSinkRecorder.reset()
-    val q3 = EventPipeline.runKustoRouteDistributed(dh(),
-      () => (t, rows) =>
-        if (t == "AdtPropertyEvents") throw new RuntimeException("ingest queue down")
-        else rows.foreach(r => DistributedSinkRecorder.record(t, r)),
-      s"$dir/cp3", Some(s"$dir/dlqDist"), parallelism = 4)
-    q3.awaitTermination(60000)
+    withCutoff(0) {
+      EventPipeline.runSink(dh(), EventPipeline.Kusto(
+        () => (t, rows) =>
+          if (t == "AdtPropertyEvents") throw new RuntimeException("ingest queue down")
+          else rows.foreach(r => DistributedSinkRecorder.record(t, r))),
+        s"$dir/cp3", Some(s"$dir/dlqDist")).awaitTermination(60000)
+    }
     def dlqSet(p: String) = spark.read.parquet(p)
       .select("kusto_table", "row_json")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -557,42 +576,45 @@ class EventPipelineSpec extends AnyFunSuite {
       "non-failing tables still ingested")
   }
 
-  test("auto Kusto route: batch size picks driver vs executor path") {
-    def factory(): (String, Seq[String]) => Unit = {
-      DistributedSinkRecorder.factoryCalls.incrementAndGet()
-      (t, rows) => rows.foreach(r => DistributedSinkRecorder.record(t, r))
-    }
+  test("client sinks: the size class picks driver or executor path") {
+    import EventPipeline.{WebhookAuth => WA}
     def propEvents(n: Int, subjects: Int): Seq[CloudEvent] =
       (1 to n).map(i => CloudEvent(f"id$i%03d", "https://inst",
         graft.events.CloudEventFactory.PropertyEventType, s"twin${i % subjects}",
         f"2026-01-01T00:00:${i % 60}%02d.${i / 60}%03dZ", "application/json",
         s"""{"id":"twin${i % subjects}","key":"temperature","value":"$i"}"""))
-    // small batch (≤ threshold) → driver-collected path: ONE client built
-    val dirS = Files.createTempDirectory("graft-akusto-s").toString
-    DistributedSinkRecorder.reset()
-    val qS = EventPipeline.runKustoRouteAuto(
-      eventStream(dirS, propEvents(10, subjects = 5)), () => factory(),
-      s"$dirS/cp", Some(s"$dirS/dlq"), parallelism = 4,
-      distributedRowThreshold = 64)
-    qS.awaitTermination(60000)
-    assert(DistributedSinkRecorder.deliveredSeq.size == 10)
-    assert(DistributedSinkRecorder.factoryCalls.get == 1,
-      s"small batch must take the driver path (one client), " +
-        s"got ${DistributedSinkRecorder.factoryCalls.get}")
-
-    // large batch (> threshold) → executor path: a client per partition
-    val dirL = Files.createTempDirectory("graft-akusto-l").toString
-    DistributedSinkRecorder.reset()
-    val qL = EventPipeline.runKustoRouteAuto(
-      eventStream(dirL, propEvents(120, subjects = 8)), () => factory(),
-      s"$dirL/cp", Some(s"$dirL/dlq"), parallelism = 4,
-      distributedRowThreshold = 64)
-    qL.awaitTermination(60000)
-    assert(DistributedSinkRecorder.deliveredSeq.size == 120)
-    assert(DistributedSinkRecorder.factoryCalls.get > 1,
-      s"large batch must take the executor path (client per partition), " +
-        s"got ${DistributedSinkRecorder.factoryCalls.get}")
-    assert(!new java.io.File(s"$dirL/dlq").exists, "nothing dead-lettered")
+    // every factory counts its calls: 1 = the driver path's one client,
+    // one per partition task = the executor path
+    def counted[C](client: C): C = {
+      DistributedSinkRecorder.factoryCalls.incrementAndGet(); client
+    }
+    val sinks = Seq[EventPipeline.Sink](
+      EventPipeline.Kusto(() => counted((t, rows) =>
+        rows.foreach(r => DistributedSinkRecorder.record(t, r)))),
+      EventPipeline.Mqtt("twins/events", () => counted((topic, payload) =>
+        DistributedSinkRecorder.record(topic, payload))),
+      EventPipeline.Webhook("https://hook.example/events", WA.NoAuth,
+        () => counted((url, _, body) => { DistributedSinkRecorder.record(url, body); 200 })))
+    // a property event is one delivery row for every sink; the cutoff is 64
+    for (sink <- sinks; (n, subjects) <- Seq((10, 5), (120, 8))) {
+      val dir = Files.createTempDirectory("graft-sizeclass").toString
+      DistributedSinkRecorder.reset()
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      withCutoff(64) {
+        EventPipeline.runSink(eventStream(dir, propEvents(n, subjects)), sink,
+          s"$dir/cp", Some(s"$dir/dlq")).awaitTermination(60000)
+      }
+      val what = s"${sink.getClass.getSimpleName}, $n events"
+      assert(DistributedSinkRecorder.deliveredSeq.size == n, what)
+      val calls = DistributedSinkRecorder.factoryCalls.get
+      if (n <= 64) assert(calls == 1,
+        s"$what: a batch under the cutoff takes the driver path (one client), got $calls")
+      else assert(calls > 1,
+        s"$what: a batch over the cutoff takes the executor path (client per partition), got $calls")
+      assert(!new java.io.File(s"$dir/dlq").exists, s"$what: nothing dead-lettered")
+      assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+        s"$what: the batch left persisted RDDs behind")
+    }
   }
 
   test("distributed Kusto ingest calls overlap across partitions") {
@@ -604,11 +626,11 @@ class EventPipelineSpec extends AnyFunSuite {
       graft.events.CloudEventFactory.PropertyEventType, s"twin${i % 6}",
       f"2026-01-01T00:00:${i % 60}%02dZ", "application/json",
       s"""{"id":"twin${i % 6}","key":"temperature","value":"$i"}"""))
-    val q = EventPipeline.runKustoRouteDistributed(
-      eventStream(dir, events),
-      () => (t, rows) => DistributedSinkRecorder.ingestSlow(t, rows, 40),
-      s"$dir/cp", Some(s"$dir/dlq"), parallelism = 6)
-    q.awaitTermination(120000)
+    withCutoff(0) {
+      EventPipeline.runSink(eventStream(dir, events), EventPipeline.Kusto(
+        () => (t, rows) => DistributedSinkRecorder.ingestSlow(t, rows, 40)),
+        s"$dir/cp", Some(s"$dir/dlq")).awaitTermination(120000)
+    }
     assert(DistributedSinkRecorder.deliveredSeq.size == 24)
     assert(DistributedSinkRecorder.maxInFlight.get() >= 2,
       s"expected overlapping ingest calls, max in-flight was " +
@@ -628,15 +650,16 @@ class EventPipelineSpec extends AnyFunSuite {
       fetch = () =>
         if (localCount.incrementAndGet() == 1) ("stale", 300L)
         else (s"tok${DistributedSinkRecorder.tokenSeq.incrementAndGet()}", 300L))
-    val q = EventPipeline.runWebhookRouteDistributed(
-      eventStream(dir, mkEvents(24, subjects = 6)),
-      "https://hook.example/events", WA.OAuthRefreshed(provider),
-      () => (url, headers, body) =>
-        if (headers("Authorization") == "Bearer stale") {
-          DistributedSinkRecorder.tokenRejections.incrementAndGet(); 401
-        } else { DistributedSinkRecorder.record(url, body); 200 },
-      s"$dir/cp", Some(s"$dir/dlq"), parallelism = 6)
-    q.awaitTermination(60000)
+    withCutoff(0) {
+      EventPipeline.runSink(
+        eventStream(dir, mkEvents(24, subjects = 6)),
+        EventPipeline.Webhook("https://hook.example/events", WA.OAuthRefreshed(provider),
+          () => (url, headers, body) =>
+            if (headers("Authorization") == "Bearer stale") {
+              DistributedSinkRecorder.tokenRejections.incrementAndGet(); 401
+            } else { DistributedSinkRecorder.record(url, body); 200 }),
+        s"$dir/cp", Some(s"$dir/dlq")).awaitTermination(60000)
+    }
     assert(DistributedSinkRecorder.deliveredSeq.size == 24,
       "every event delivered after its partition's 401-retry")
     assert(DistributedSinkRecorder.tokenRejections.get() >= 1,
@@ -645,14 +668,15 @@ class EventPipelineSpec extends AnyFunSuite {
 
     // non-2xx without retry path → DLQ
     DistributedSinkRecorder.reset()
-    val q2 = EventPipeline.runWebhookRouteDistributed(
-      eventStream(dir, mkEvents(12, subjects = 3)),
-      "https://hook.example/events", WA.NoAuth,
-      () => (_, _, body) =>
-        if (body.contains("\"subject\":\"twin1\"")) 503
-        else { DistributedSinkRecorder.record("u", body); 200 },
-      s"$dir/cp2", Some(s"$dir/dlq2"), parallelism = 3)
-    q2.awaitTermination(60000)
+    withCutoff(0) {
+      EventPipeline.runSink(
+        eventStream(dir, mkEvents(12, subjects = 3)),
+        EventPipeline.Webhook("https://hook.example/events", WA.NoAuth,
+          () => (_, _, body) =>
+            if (body.contains("\"subject\":\"twin1\"")) 503
+            else { DistributedSinkRecorder.record("u", body); 200 }),
+        s"$dir/cp2", Some(s"$dir/dlq2")).awaitTermination(60000)
+    }
     val dlq = spark.read.parquet(s"$dir/dlq2")
     assert(dlq.count() == 4 && DistributedSinkRecorder.deliveredSeq.size == 8)
     assert(dlq.select("dlq_error").collect()(0).getString(0).contains("503"))
