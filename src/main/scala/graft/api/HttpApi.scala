@@ -49,7 +49,7 @@ final class HttpApi(
     permissionProvider.getOrElse(new Auth.ClaimsPermissionProvider(
       auth.map(_.permissionsClaimName).getOrElse("permissions")))
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  private val server = HttpApi.newServer()
   server.createContext("/", (ex: HttpExchange) => handle(ex))
 
   def port: Int = server.getAddress.getPort
@@ -632,4 +632,19 @@ final class HttpApi(
       ex.getResponseBody.write(bytes)
     }
   }
+}
+
+object HttpApi {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  // The JDK server writes a response's headers and its body as two TCP
+  // segments; with Nagle's algorithm on, the body waits for the client's
+  // delayed ACK of the headers — about 40 ms on every response that
+  // carries a body. The JDK reads this property once, when it first loads
+  // its server config, so it is set here, before any server exists; a
+  // value set explicitly wins.
+  if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
+  private def newServer(): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
 }

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.Blocks
 
@@ -504,21 +504,30 @@ object IncrementalAnalytics {
       * old full-rewrite cost AND make every read fold chain rows
       * comparable to the state. Point cones stay pure-delta. */
     def chainDelta(name: String, upserts: DataFrame,
-        tombstoneKeys: DataFrame): Unit = {
-      val keys = StateStore.tableKeys(stateDir, name)
-      StateStore.writeChainDelta(spark, stateDir, target,
-        name, upserts, tombstoneKeys, keys, prev(name)) match {
-        case None => carry(name)
-        case Some((appended, deltaRows)) =>
-          next(name) =
-            if (appended.chain.size >= StateCommit.MaxChain ||
-                deltaRows >= StateCommit.CompactFrac * math.max(
-                  StateStore.baseRowCount(spark, stateDir, v, name), 1L))
-              StateStore.compactIntoBuckets(spark, stateDir, v, target,
-                name, k, appended)
-            else appended
-      }
+        tombstoneKeys: DataFrame): Unit =
+      appended(name, StateStore.writeChainDelta(spark, stateDir, target,
+        name, upserts, tombstoneKeys, StateStore.tableKeys(stateDir, name)))
+    /** [[chainDelta]] of a local fold's rows ([[StateStore.writeLocalDelta]]
+      * layout), written on the driver. */
+    def chainDeltaLocal(name: String, rows: Seq[Row]): Unit = {
+      StateStore.writeLocalDelta(spark, stateDir, target, name, rows)
+      appended(name, rows.size.toLong)
     }
+    private def appended(name: String, deltaRows: Long): Unit =
+      if (deltaRows == 0L) carry(name)
+      else {
+        val app = StateStore.TableState(prev(name).buckets,
+          prev(name).chain :+ target)
+        // a base over deltaRows / CompactFrac rows settles the test
+        val upTo = math.ceil(deltaRows / StateCommit.CompactFrac).toLong
+        next(name) =
+          if (app.chain.size >= StateCommit.MaxChain ||
+              deltaRows >= StateCommit.CompactFrac * math.max(
+                StateStore.baseRowCount(spark, stateDir, v, name, upTo), 1L))
+            StateStore.compactIntoBuckets(spark, stateDir, v, target,
+              name, k, app)
+          else app
+      }
     def carry(name: String): Unit = next(name) = prev(name)
     def commit(): Unit = {
       require(next.keySet == prev.keySet,
@@ -647,9 +656,10 @@ object IncrementalAnalytics {
     *
     * Size class: when `op` has a local fold and the batch is at most
     * [[LocalGraph.maxEdges]] rows, the batch is collected once
-    * ([[LocalBatch]]) and folded on the driver; every state read of the
-    * local fold is a bounded collect under the same cutoff, and over it
-    * the fold declines before writing anything. A declined or over-cutoff
+    * ([[LocalBatch]]) and folded on the driver; the local fold reads and
+    * writes its state on the driver too ([[LocalCommit]]), every read
+    * bounded by the same cutoff, and over it the fold declines before
+    * writing anything. A declined or over-cutoff
     * batch, and a maintainer without a local fold, take the distributed
     * fold over the checkpointed batch. Both paths write the same delta
     * rows through the same [[StateCommit]].
@@ -765,47 +775,106 @@ object IncrementalAnalytics {
 
   /** The driver-side view of a [[StateCommit]] a local fold works
     * through: bounded, chain-folded reads of state rows and the delta
-    * write. Reads bucket-prune on the key column with the driver-side
+    * write, with all parquet IO on the driver ([[graft.core.LocalParquet]]),
+    * so a local batch runs no Spark job besides [[LocalBatch.collect]].
+    * Reads bucket-prune on the key column with the driver-side
     * [[StateStore.bucketOfKey]]; a table's delta chain rides along with
-    * its first read and is folded here (newest version per key wins). */
+    * its first read and is folded here (newest version per key wins).
+    * Each base file is decoded at most once per batch while the batch's
+    * decoded rows stay within the cutoff, so k-core's reach hops and
+    * components' member scan filter rows in memory; past it, files stream
+    * through the read's filter, so the driver holds no more than the size
+    * class. */
   private[graft] final class LocalCommit(state: StateCommit) {
+    import org.apache.hadoop.fs.Path
     val cutoff: Long = LocalGraph.maxEdges(state.spark)
+    private val conf = state.spark.sparkContext.hadoopConfiguration
     private val chains =
       scala.collection.mutable.Map[String, Map[Seq[Any], Option[Row]]]()
+    private val decoded = scala.collection.mutable.Map[Path, Array[Row]]()
+    private var held = 0L // rows in `decoded`
+    private var cacheFull = false
 
     /** `table`'s rows whose value in any of `cols` (string columns) is in
-      * `values`, projected to `schema`'s fields. None — decline — over the
-      * cutoff, or when a row holds a null. */
+      * `values`, projected to `schema`'s fields. None — decline — when the
+      * matching base rows plus, on the table's first read, its chain rows
+      * (all of them: a chain row supersedes its key's base row even when
+      * only one of the two matches) are more than the cutoff, or when a
+      * row holds a null. */
     def rows(table: String, schema: StructType, cols: Seq[String],
-        values: Set[String]): Option[Seq[Row]] = {
-      val stored = StateStore.tableSchema(state.stateDir, table)
-      val keys = StateStore.tableKeys(state.stateDir, table)
-      val fresh = !chains.contains(table)
+        values: Set[String]): Option[Seq[Row]] =
       if (values.isEmpty) Some(Nil)
-      else StateStore.collectRows(state.spark, state.stateDir, state.v,
-        table,
-        if (cols != keys.take(1)) 0 until state.k
-        else values.toSeq.map(StateStore.bucketOfKey(_, state.k)),
-        cols.map(c => col(c).isin(values.toSeq: _*)).reduce(_ || _),
-        fresh, cutoff).flatMap { raw =>
-        val tomb = stored.size
+      else {
+        val stored = StateStore.tableSchema(state.stateDir, table)
+        val keys = StateStore.tableKeys(state.stateDir, table)
         def key(r: Row) = keys.map(k => r.get(stored.fieldIndex(k)))
-        val (base, chainRows) = raw.partition(_.getLong(tomb + 1) < 0)
-        if (fresh) chains(table) = chainRows.groupBy(key).map { case (k, g) =>
-          val last = g.maxBy(_.getLong(tomb + 1))
-          k -> (if (last.getBoolean(tomb)) None else Some(last))
-        }
-        val chain = chains(table)
         val hit = cols.map(stored.fieldIndex)
-        val out = (base.iterator.filterNot(r => chain.contains(key(r))) ++
-            chain.valuesIterator.flatten.filter(r =>
-              hit.exists(i => values.contains(r.getString(i)))))
-          .map(r => Row.fromSeq(schema.fieldNames.toSeq
-            .map(f => r.get(stored.fieldIndex(f)))))
-          .toSeq
-        if (out.exists(r => (0 until r.length).exists(r.isNullAt))) None
-        else Some(out)
+        def matches(r: Row) = hit.exists(i => values.contains(r.getString(i)))
+        val chainRows =
+          if (chains.contains(table)) Some(Nil)
+          else readChain(table, stored.add(StateStore.TombCol, BooleanType))
+        val buckets =
+          if (cols != keys.take(1)) 0 until state.k
+          else values.toSeq.map(StateStore.bucketOfKey(_, state.k))
+        for {
+          cr <- chainRows
+          base <- scan(StateStore.baseFiles(state.spark, state.stateDir,
+            state.v, table, buckets), stored, matches, cutoff - cr.size)
+          out <- {
+            if (!chains.contains(table))
+              chains(table) = cr.groupBy(r => key(r._2)).map { case (k, g) =>
+                val last = g.maxBy(_._1)._2
+                k -> (if (last.getBoolean(stored.size)) None else Some(last))
+              }
+            val chain = chains(table)
+            val out = (base.iterator.filterNot(r => chain.contains(key(r))) ++
+                chain.valuesIterator.flatten.filter(matches))
+              .map(r => Row.fromSeq(schema.fieldNames.toSeq
+                .map(f => r.get(stored.fieldIndex(f)))))
+              .toSeq
+            if (out.exists(r => (0 until r.length).exists(r.isNullAt))) None
+            else Some(out)
+          }
+        } yield out
       }
+
+    /** Every row of `table`'s delta chain with its version, read with
+      * `schema` (the table's fields and the tombstone flag); None over the
+      * cutoff. */
+    private def readChain(table: String, schema: StructType)
+        : Option[Seq[(Long, Row)]] =
+      StateStore.readManifest(state.stateDir, state.v)(table).chain
+        .foldLeft(Option(Seq.empty[(Long, Row)])) { (acc, dv) =>
+          acc.flatMap(rs => graft.core.LocalParquet.read(conf,
+            StateStore.deltaFiles(state.spark, state.stateDir, dv, table),
+            schema, _ => true, cutoff - rs.size).map(rs ++ _.map(dv -> _)))
+        }
+
+    /** The rows of base `files` that `keep`; None once more than `bound`
+      * match. A file is decoded whole into the batch's cache while the
+      * cache stays within the cutoff, else read through `keep`. */
+    private def scan(files: Seq[Path], schema: StructType,
+        keep: Row => Boolean, bound: Long): Option[Seq[Row]] = {
+      val out = Seq.newBuilder[Row]
+      var n = 0L
+      val it = files.iterator
+      while (it.hasNext && n <= bound) {
+        val f = it.next()
+        val whole = decoded.get(f).orElse(
+          if (cacheFull) None
+          else graft.core.LocalParquet.read(conf, Seq(f), schema, _ => true,
+              cutoff - held) match {
+            case Some(rs) => decoded(f) = rs; held += rs.length; Some(rs)
+            case None => cacheFull = true; None
+          })
+        val kept = whole.map(_.filter(keep)).orElse(graft.core.LocalParquet
+          .read(conf, Seq(f), schema, keep, bound - n))
+        kept match {
+          case Some(rs) => out ++= rs; n += rs.length
+          case None => n = bound + 1
+        }
+      }
+      if (n > bound) None else Some(out.result())
     }
 
     def rels(cols: Seq[String], values: Set[String]): Option[Seq[Rel]] =
@@ -813,15 +882,22 @@ object IncrementalAnalytics {
         Rel(r.getString(1), r.getString(0), r.getString(2), r.getString(3),
           alive = true)))
 
-    /** Write `d` through [[StateCommit.chainDelta]]; no rows is a carry. */
+    /** Write `d` through [[StateCommit.chainDeltaLocal]]: its upserts and
+      * tombstones as rows of the table's recorded fields and the tombstone
+      * flag. No rows is a carry. */
     def write(d: LocalDelta): Unit =
       if (d.upserts.isEmpty && d.tombstones.isEmpty) state.carry(d.table)
       else {
-        val keys = StateStore.tableKeys(state.stateDir, d.table)
-        def frame(rows: Seq[Row], schema: StructType) =
-          state.spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        state.chainDelta(d.table, frame(d.upserts, d.schema),
-          frame(d.tombstones, StructType(keys.map(d.schema(_)))))
+        val stored = StateStore.tableSchema(state.stateDir, d.table).fieldNames
+        def project(rows: Seq[Row], fields: Seq[String], tomb: Boolean) =
+          rows.map(r => Row.fromSeq(stored.toSeq.map { f =>
+            val i = fields.indexOf(f)
+            if (i < 0) null else r.get(i)
+          } :+ tomb))
+        state.chainDeltaLocal(d.table,
+          project(d.upserts, d.schema.fieldNames.toSeq, tomb = false) ++
+            project(d.tombstones,
+              StateStore.tableKeys(state.stateDir, d.table), tomb = true))
       }
   }
 

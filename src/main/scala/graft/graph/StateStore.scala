@@ -24,7 +24,13 @@ import org.apache.spark.sql.functions._
   *   v{N}/
   *     MANIFEST.json      per table: bucket -> version that OWNS its files
   *     {table}/__sb={k}/  parquet for the buckets vN rewrote (dirty only)
+  *     {table}/delta/     vN's merge-on-read delta (upserts + tombstones)
   * }}}
+  *
+  * A delta dir holds either Spark-written part files with a `_SUCCESS`, or
+  * ONE driver-written `part-local-*` file and no `_SUCCESS` (a
+  * driver-local batch, [[writeLocalDelta]]); every reader lists data
+  * files the way Spark does, so both read alike.
   *
   * Every state table is hash-partitioned into K buckets by its key column
   * (`pmod(xxhash64(key), K)`). A commit writes ONLY the buckets the batch's
@@ -223,48 +229,6 @@ private[graft] object StateStore {
     }
   }
 
-  /** Owner-version column of [[collectRows]]' rows; -1 marks a base row. */
-  private val VersionCol = "__v"
-
-  /** A local fold's read of `table` as of `v`, in ONE bounded collect
-    * ([[LocalGraph.collectBounded]]): the base rows of `buckets` that
-    * match `filter` and, with `chain`, every row of the table's delta
-    * chain. Chain rows are NOT filtered: a chain row supersedes its key's
-    * base row even when only one of the two matches. Each row holds the
-    * table's fields, then [[TombCol]] and [[VersionCol]]; the caller folds
-    * (newest version per key wins). None over the cutoff. The scan runs
-    * as one task per 128 MB of listed input, so a cone-sized read is one
-    * Spark job; no schema inference, since the schema is recorded. */
-  def collectRows(spark: SparkSession, stateDir: String, v: Long,
-      table: String, buckets: Seq[Int], filter: Column, chain: Boolean,
-      cutoff: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    import org.apache.spark.sql.types.BooleanType
-    val schema = tableSchema(stateDir, table)
-    val fields = schema.fieldNames.toSeq.map(col)
-    val base = ownedBucketDirs(spark, stateDir, v, table, buckets).map { ds =>
-      ds -> spark.read.schema(schema).parquet(ds: _*).filter(filter).select(
-        fields :+ lit(false).as(TombCol) :+ lit(-1L).as(VersionCol): _*)
-    }
-    val chainVersions =
-      if (chain) readManifest(stateDir, v)(table).chain else Nil
-    val deltas = chainVersions.map { dv =>
-      val d = deltaDir(stateDir, dv, table)
-      Seq(d) -> spark.read.schema(schema.add(TombCol, BooleanType)).parquet(d)
-        .select(fields :+ col(TombCol) :+ lit(dv).as(VersionCol): _*)
-    }
-    val parts = base ++ deltas
-    if (parts.isEmpty) Some(Array.empty)
-    else {
-      val fs = new org.apache.hadoop.fs.Path(stateDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = parts.flatMap(_._1).map(d =>
-        fs.getContentSummary(new org.apache.hadoop.fs.Path(d)).getLength).sum
-      val tasks = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20))
-      LocalGraph.collectBounded(
-        parts.map(_._2).reduce(_ unionByName _).coalesce(tasks.toInt), cutoff)
-    }
-  }
-
   /** The newest chain row per key (tombstones kept, flagged). */
   private def chainLatest(spark: SparkSession, stateDir: String,
       table: String, chain: Seq[Long], keys: Seq[String]): DataFrame = {
@@ -311,6 +275,21 @@ private[graft] object StateStore {
       }
       .filter(_.nonEmpty)
   }
+
+  /** The data files of `table`'s `buckets` as of `v` (base only, chain
+    * NOT folded), listed on the driver for a local read. */
+  def baseFiles(spark: SparkSession, stateDir: String, v: Long,
+      table: String, buckets: Seq[Int]): Seq[org.apache.hadoop.fs.Path] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ownedBucketDirs(spark, stateDir, v, table, buckets).flatten.flatMap(d =>
+      graft.core.LocalParquet.dataFiles(conf, new org.apache.hadoop.fs.Path(d)))
+  }
+
+  /** The data files of `table`'s delta written at version `dv`. */
+  def deltaFiles(spark: SparkSession, stateDir: String, dv: Long,
+      table: String): Seq[org.apache.hadoop.fs.Path] =
+    graft.core.LocalParquet.dataFiles(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(deltaDir(stateDir, dv, table)))
 
   private def emptyLike(spark: SparkSession, stateDir: String, v: Long,
       table: String): DataFrame = {
@@ -366,17 +345,16 @@ private[graft] object StateStore {
     * reaches `maxChain` the caller compacts instead
     * ([[compactIntoBuckets]]).
     *
-    * Returns None (and removes the empty dir) when the batch wrote ZERO
-    * delta rows — the caller carries the table. Otherwise returns the
-    * appended state AND the delta's row count, both decided from the
-    * written files' parquet footers, driver-side: probing the lazy
-    * inputs with isEmpty first would cost two extra Spark jobs per
-    * table per batch, which the sf1 SLO measured as a real share of the
-    * per-batch floor across a 6-table maintainer like ranks; the row
-    * count feeds the caller's size-triggered compaction. */
+    * Returns the delta's row count, decided from the written files'
+    * parquet footers, driver-side: probing the lazy inputs with isEmpty
+    * first would cost two extra Spark jobs per table per batch, which the
+    * sf1 SLO measured as a real share of the per-batch floor across a
+    * 6-table maintainer like ranks; the row count feeds the caller's
+    * size-triggered compaction. Zero rows removes the empty dir (the
+    * caller carries the table). */
   def writeChainDelta(spark: SparkSession, stateDir: String, v: Long,
       table: String, upserts: DataFrame, tombstoneKeys: DataFrame,
-      keys: Seq[String], prev: TableState): Option[(TableState, Long)] = {
+      keys: Seq[String]): Long = {
     val schema = tableSchema(stateDir, table)
     val tombs = tombstoneKeys.select(
       schema.fields.map { f =>
@@ -395,8 +373,22 @@ private[graft] object StateStore {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true): Unit
-      None
-    } else Some((TableState(prev.buckets, prev.chain :+ v), rows))
+    }
+    rows
+  }
+
+  /** [[writeChainDelta]] of rows a driver-local fold computed: `rows`
+    * hold the table's fields in its recorded order, then the [[TombCol]]
+    * flag. One `part-local-0.snappy.parquet` file, written on the driver
+    * ([[graft.core.LocalParquet]]) — no Spark job and no `_SUCCESS`. */
+  def writeLocalDelta(spark: SparkSession, stateDir: String, v: Long,
+      table: String, rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
+    val schema = StructType(tableSchema(stateDir, table).fields
+      .map(_.copy(nullable = true)) :+ StructField(TombCol, BooleanType))
+    graft.core.LocalParquet.write(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(deltaDir(stateDir, v, table),
+        "part-local-0.snappy.parquet"), schema, rows)
   }
 
   /** Total base rows of `table` as of version `v` (chain NOT folded) —
@@ -405,13 +397,18 @@ private[graft] object StateStore {
     * fraction of the base means the cone ≈ the state (the WCC hub-feed
     * shape), where chaining state-sized deltas only bloats every read's
     * fold — folding immediately is the old full-rewrite cost, which is
-    * optimal there. */
+    * optimal there. The sum stops at the first bucket that takes it past
+    * `upTo` (a point delta's test is settled by one bucket's footer, not
+    * K listings), so a result over `upTo` is only a lower bound. */
   def baseRowCount(spark: SparkSession, stateDir: String, v: Long,
-      table: String): Long = {
-    val man = readManifest(stateDir, v)(table).buckets
-    man.toSeq.sortBy(_._1).map { case (b, o) =>
-      parquetRowCount(spark, bucketDir(stateDir, o, table, b))
-    }.sum
+      table: String, upTo: Long): Long = {
+    val it = readManifest(stateDir, v)(table).buckets.toSeq.sortBy(_._1).iterator
+    var n = 0L
+    while (it.hasNext && n <= upTo) {
+      val (b, o) = it.next()
+      n += parquetRowCount(spark, bucketDir(stateDir, o, table, b))
+    }
+    n
   }
 
   /** Sum of footer row counts under `dir` — driver metadata IO only, no

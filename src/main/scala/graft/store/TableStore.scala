@@ -712,52 +712,14 @@ final class TableTwinStore private (
     }
   }
 
-  /** Append one parquet part file of mutation rows without a Spark job —
-    * parquet-hadoop's Group writer over the exact mutations schema.
-    * Unique file name (first seq + nano tick); dot-prefixed temp is
-    * invisible to Spark readers until the atomic rename. */
+  /** Append one parquet part file of mutation rows without a Spark job
+    * ([[graft.core.LocalParquet]], over the exact mutations schema).
+    * Unique file name (first seq + nano tick). */
   private def writeJournalLocal(batch: Seq[MutationEvent]): Unit = {
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.example.data.simple.SimpleGroup
-    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      """message spark_schema {
-        |  required int64 seq;
-        |  required binary ts (STRING);
-        |  optional binary entity_kind (STRING);
-        |  optional binary entity_id (STRING);
-        |  optional binary event_type (STRING);
-        |  optional binary old_json (STRING);
-        |  optional binary new_json (STRING);
-        |}""".stripMargin)
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    GroupWriteSupport.setSchema(msg, conf)
-    fs.mkdirs(new Path(mutationsPath))
     val name = f"part-local-${batch.head.seq}%012d-${System.nanoTime()}%x.snappy.parquet"
-    val tmp = new Path(mutationsPath, s".$name.tmp")
-    val target = new Path(mutationsPath, name)
-    val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf)
-      .withType(msg)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try batch.foreach { m =>
-      val t = TwinStore.mutationRow(m)
-      val g = new SimpleGroup(msg)
-      g.add("seq", t._1)
-      g.add("ts", t._2)
-      if (t._3 != null) g.add("entity_kind", t._3)
-      if (t._4 != null) g.add("entity_id", t._4)
-      if (t._5 != null) g.add("event_type", t._5)
-      if (t._6 != null) g.add("old_json", t._6)
-      if (t._7 != null) g.add("new_json", t._7)
-      writer.write(g)
-    } finally writer.close()
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"journal append rename failed: $tmp -> $target")
+    graft.core.LocalParquet.write(spark.sparkContext.hadoopConfiguration,
+      new Path(mutationsPath, name), Tables.mutationsSchema,
+      batch.map(m => Row.fromTuple(TwinStore.mutationRow(m))))
   }
 
   private def saveModels(): Unit = {

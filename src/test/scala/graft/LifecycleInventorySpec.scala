@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Repository inventories the design depends on: the change log stays a
   * readable text file, the graph fixpoints keep their checkpoints in a
-  * `Blocks` scope instead of hand-placed releases, and CDC delivery runs
-  * through one sink driver. */
+  * `Blocks` scope instead of hand-placed releases, CDC delivery runs
+  * through one sink driver, and driver-side parquet writes go through one
+  * primitive. */
 class LifecycleInventorySpec extends AnyFunSuite {
 
   private def read(p: java.nio.file.Path): String =
@@ -40,5 +41,18 @@ class LifecycleInventorySpec extends AnyFunSuite {
     assert(batches == 1, s"$batches foreachBatch sites; runSink should own the only one")
     val routes = "def run\\w*Route\\w*".r.findAllIn(src).toSeq
     assert(routes.isEmpty, s"per-route entry points are back: $routes")
+  }
+
+  test("ExampleParquetWriter appears only in core/LocalParquet.scala") {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.filter(_.toString.endsWith(".scala")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).toSeq
+      finally walk.close()
+    val sites = files.filter(p => read(p).contains("ExampleParquetWriter"))
+      .map(p => java.nio.file.Paths.get("src/main/scala").relativize(p).toString
+        .replace(java.io.File.separatorChar, '/'))
+    assert(sites == Seq("graft/core/LocalParquet.scala"),
+      s"driver-side parquet writers: $sites")
   }
 }

@@ -203,6 +203,100 @@ class LocalFoldSpec extends AnyFunSuite {
     }
   }
 
+  /** The state a maintainer holds over `edges` ((source, target) pairs)
+    * and `twins`, recomputed on the driver: degrees per twin, the
+    * UTF-8-least member of each node's undirected component, or the nodes
+    * of the 2-core. */
+  private def recompute(name: String, edges: Iterable[(String, String)],
+      twins: Set[String]): Set[Row] = name match {
+    case "degrees" => twins.map { n =>
+      val out = edges.count(_._1 == n).toLong
+      val in = edges.count(_._2 == n).toLong
+      Row(n, out, in, out + in)
+    }
+    case "components" =>
+      val parent = scala.collection.mutable.Map[String, String]()
+      def find(x: String): String = {
+        val p = parent.getOrElse(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) {
+          if (LocalGraph.utf8Lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+      // a relationship's endpoints are labelled even when the twin is gone
+      (twins ++ edges.flatMap(e => Seq(e._1, e._2))).map(n => Row(n, find(n)))
+    case _ =>
+      var nbrs = edges.filter(e => e._1 != e._2)
+        .flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+        .map { case (n, es) => n -> es.map(_._2).toSet }
+      var peel = nbrs.collect { case (n, ns) if ns.size < 2 => n }.toSet
+      while (peel.nonEmpty) {
+        nbrs = (nbrs -- peel).map { case (n, ns) => n -> (ns -- peel) }
+        peel = nbrs.collect { case (n, ns) if ns.size < 2 => n }.toSet
+      }
+      nbrs.keySet.map(Row(_))
+  }
+
+  test("local and distributed batches alternate on one state dir and read each other's deltas") {
+    val dist = spark.newSession()
+    dist.conf.set(Knob, "0")
+    val max = IncrementalAnalytics.StateCommit.MaxChain
+    assert(feed.size > max)
+    val firstSeq = feed.scanLeft(1L)(_ + _.size)
+    for (((name, op, init), table) <-
+        maintainers.zip(Seq("degrees", "components", "kcore"))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-mixed").toString
+      val stateDir = s"$dir/state"
+      new java.io.File(stateDir).mkdirs()
+      init(stateDir, rels(baseRows))
+      var hits = 0
+      val counted = new IncrementalAnalytics.Maintainer(op.tables,
+        op.local.map(f => (lc, b) => {
+          val r = f(lc, b); if (r.isDefined) hits += 1; r
+        }))(op.fold)
+      // relationship (source, id) -> (source, target), and the twins
+      var edges = baseRows.map { case (id, s, t) => (s, id) -> (s, t) }.toMap
+      var twins = baseRows.flatMap(r => Seq(r._2, r._3)).toSet
+      val mans = feed.indices.map { i =>
+        // even batches fold on the driver, odd ones through Spark
+        val ss = if (i % 2 == 0) spark else dist
+        IncrementalAnalytics.foldBatch(stateDir, counted,
+          batchFrame(ss, s"$dir/batch$i", firstSeq(i), feed(i)), i.toLong)
+        feed(i).foreach {
+          case ("C", id, s, t) => edges += (s, id) -> (s, t)
+          case ("D", id, s, _) => edges -= ((s, id))
+          case ("TC", id, _, _) => twins += id
+          case (_, id, _, _) => twins -= id
+        }
+        val got = IncrementalAnalytics.current(spark, stateDir, table)
+          .collect().toSet
+        val want = recompute(name, edges.values, twins)
+        assert(got == want, s"$name batch $i: state != recompute\n" +
+          s"extra: ${got -- want}\nmissing: ${want -- got}")
+        val deltas = new java.io.File(s"$stateDir/v${i + 1}/rels/delta")
+        if (deltas.isDirectory) {
+          val files = deltas.list().filterNot(_.startsWith(".")).toSet
+          assert(files.contains("_SUCCESS") != (i % 2 == 0),
+            s"$name batch $i: rels delta holds $files")
+        }
+        StateStore.readManifest(stateDir, i + 1L)
+      }
+      assert(hits == (feed.size + 1) / 2,
+        s"$name: $hits local batches, want every even one")
+      // chains grew across both writers until they folded into buckets
+      val mans0 = StateStore.readManifest(stateDir, 0L) +: mans
+      val folds = for {
+        i <- feed.indices
+        (t, ts) <- mans0(i + 1)
+        if ts.chain.isEmpty && ts.buckets != mans0(i)(t).buckets
+      } yield mans0(i)(t).chain.size
+      assert(folds.contains(max - 1), s"$name: no chain reached MaxChain: $folds")
+    }
+  }
+
   test("the driver-side bucket id equals StateStore.bucketOf") {
     val rnd = new scala.util.Random(7)
     val keys = Seq("", "😀", "�", "é", "a😀b", "\u0000") ++
@@ -250,7 +344,9 @@ class LocalFoldSpec extends AnyFunSuite {
       val jobs = jobsOf(IncrementalAnalytics.foldBatch(stateDir, op, batch, 0L))
       assert(StateStore.readManifest(stateDir, 1L).values
         .forall(_.chain.size == 1), s"$name: a table compacted")
-      assert(jobs <= 8, s"$name: a local batch ran $jobs Spark jobs")
+      // the bounded batch collect; state reads and delta writes run on
+      // the driver
+      assert(jobs == 1, s"$name: a local batch ran $jobs Spark jobs")
     }
   }
 
